@@ -55,6 +55,7 @@ def cap_postings(
     df_cap: int,
     observation=None,
     n_ids: int | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Drop keys held by more than `df_cap` ids from a postings DataFrame —
     the boilerplate guard applied before any pair self-join.
@@ -95,10 +96,22 @@ def cap_postings(
     band keys are one-per-(band,id)).  Then df <= n_ids for every key, so
     `n_ids <= df_cap` proves the cap is a no-op WITHOUT any probe job —
     the dominant case below corpus scale pays literally zero.
+
+    `stats` (optional dict) receives the same `dropped_keys` /
+    `dropped_postings` counts from the eagerly materialized hot set: no
+    extra job when nothing (or at most CAP_LITERAL_MAX keys) crosses the
+    cap, one aggregate over the hot set otherwise.  The lazy plans
+    (`observation`, streaming) leave it untouched.
     """
-    if not df_cap:
-        return p
-    if n_ids is not None and n_ids <= df_cap and observation is None:
+
+    def note(keys: int, postings: int) -> None:
+        if stats is not None:
+            stats.update(dropped_keys=keys, dropped_postings=postings)
+
+    if not df_cap or (
+        n_ids is not None and n_ids <= df_cap and observation is None
+    ):
+        note(0, 0)
         return p
     hot = (
         p.groupBy(*key_cols)
@@ -118,8 +131,13 @@ def cap_postings(
         return p.join(
             F.broadcast(hot.select(*key_cols)), key_cols, "left_anti"
         )
-    hot_keys = hot.select(*key_cols).localCheckpoint(eager=True)
-    head = hot_keys.take(CAP_LITERAL_MAX + 1)
+    hot = hot.localCheckpoint(eager=True)
+    head = hot.take(CAP_LITERAL_MAX + 1)
+    if len(head) <= CAP_LITERAL_MAX:
+        note(len(head), sum(r["df"] for r in head))
+    elif stats is not None:
+        r = hot.agg(F.count("*"), F.sum("df")).first()
+        note(r[0], r[1])
     if not head:
         return p
     if len(head) <= CAP_LITERAL_MAX and len(key_cols) == 1:
@@ -131,7 +149,7 @@ def cap_postings(
         return p.filter(
             F.col(k).isNull() | ~F.col(k).isin([r[0] for r in head])
         )
-    return p.join(F.broadcast(hot_keys), key_cols, "left_anti")
+    return p.join(F.broadcast(hot.select(*key_cols)), key_cols, "left_anti")
 
 
 def postings(

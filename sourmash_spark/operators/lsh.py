@@ -99,16 +99,20 @@ def candidate_pairs(
     bands: DataFrame,
     bucket_cap: int = 0,
     sig_id: str = "sig_id",
+    cap_stats: dict | None = None,
 ) -> DataFrame:
     """(sig_id_a, sig_id_b, n_shared_bands) with sig_id_a < sig_id_b.
 
     Self-join on (band_idx, band_key); buckets above `bucket_cap` are
     removed first by a broadcast anti join against the (tiny, usually
-    empty) over-cap bucket set — compare.cap_postings."""
-    if bucket_cap:
-        from .compare import cap_postings
+    empty) over-cap bucket set — compare.cap_postings.  `cap_stats`
+    receives the cap's drop counts (`dropped_keys` buckets holding
+    `dropped_postings` band memberships; see cap_postings' `stats`)."""
+    from .compare import cap_postings
 
-        bands = cap_postings(bands, ["band_idx", "band_key"], bucket_cap)
+    bands = cap_postings(
+        bands, ["band_idx", "band_key"], bucket_cap, stats=cap_stats
+    )
     a = bands.select(
         F.col(sig_id).alias("sig_id_a"), "band_idx", "band_key"
     )

@@ -3,15 +3,18 @@
 code_files --sketch--> signatures --LSH bands--> candidate_pairs
           --exact verify--> edges --connected components--> clusters
 
-Every stage checkpoints to a config-hash-keyed table with lineage +
-per-partition metrics (sources/checkpoint.py); a killed run resumes by
+Every stage checkpoints to a config-hash-keyed table and appends a
+lineage record with its row count and per-file counts, taken from the
+written parquet footers (sources/checkpoint.py); a killed run resumes by
 skipping completed stages.  Stage plans:
 
 * sketch: narrow Arrow-vectorized map, zero shuffle; scales with splits.
 * bands: narrow projection + posexplode, zero shuffle.
 * candidates: ONE shuffle on (band_idx, band_key) under AQE skew-join;
-  `bucket_cap` bounds the worst (boilerplate) buckets and the dropped
-  volume is recorded in lineage.
+  `bucket_cap` bounds the worst (boilerplate) buckets; the candidates
+  lineage record carries the dropped volume (`bucket_cap`: buckets over
+  the cap and their band memberships), taken from the over-cap set the
+  cap's probe already materializes.
 * edges: candidates join signatures twice on sig_id (sort-merge/AQE;
   candidate side is orders of magnitude smaller than all-pairs).
 * clusters: iterative min-label joins; rounds ~ clone-family diameter.
@@ -20,7 +23,6 @@ skipping completed stages.  Stage plans:
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 from dataclasses import dataclass
 
@@ -106,13 +108,16 @@ def run_pipeline(
     if stop_after == "bands":
         return out
 
+    cap: dict = {}
     cands, _ = ckpt.run_stage(
         spark, base_dir, "candidates", ch,
         lambda: lsh_ops.candidate_pairs(
             bands,
             bucket_cap=cfg.bucket_cap,
             sig_id=sid,
+            cap_stats=cap,
         ),
+        lineage={"bucket_cap": cap},
     )
     out["candidates"] = cands
     if stop_after == "candidates":
@@ -304,7 +309,7 @@ def compact_increments(
         if os.path.isdir(tmp):
             shutil.rmtree(tmp)
         df.write.parquet(tmp)  # materializes BEFORE sources are removed
-        n = spark.read.parquet(tmp).count()
+        n = sum(p["rows"] for p in ckpt.partition_metrics(tmp))
         if os.path.isdir(path):
             shutil.rmtree(path)
         os.rename(tmp, path)
@@ -332,7 +337,7 @@ def compact_increments(
             allowMissingColumns=True,
         )
     counts["signatures"] = swap_in(sig_path, sigs)
-    sigs = spark.read.parquet(sig_path)
+    sigs = spark.read.schema(sigs.schema).parquet(sig_path)
 
     if ckpt.is_complete(bands_path):
         bands = spark.read.parquet(bands_path).select(
@@ -355,7 +360,7 @@ def compact_increments(
             spark.read.parquet(edges_inc)
         ).dropDuplicates(["sig_id_a", "sig_id_b"])
     counts["edges"] = swap_in(edges_path, edges)
-    edges = spark.read.parquet(edges_path)
+    edges = spark.read.schema(edges.schema).parquet(edges_path)
 
     clusters_path = ckpt.stage_path(base_dir, "clusters", ch)
     counts["clusters"] = swap_in(
@@ -370,7 +375,6 @@ def compact_increments(
         shutil.rmtree(cands_path)  # stale pair enumeration — derivable
 
     ckpt._append_lineage(
-        spark,
         base_dir,
         [
             {
@@ -379,7 +383,7 @@ def compact_increments(
                 "event": "complete",
                 "n_rows": counts["signatures"],
                 "wall_sec": round(_time.time() - t0, 3),
-                "compacted": json.dumps(counts),
+                "compacted": counts,
             }
         ],
     )

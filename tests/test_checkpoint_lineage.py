@@ -1,0 +1,182 @@
+"""Stage checkpoints keep their lineage without extra Spark jobs: a fresh
+stage runs only its write, the record's counts come from the parquet
+footers, the log is crash-safe and still reads the older parquet rows,
+and the candidates record carries the bucket_cap drop volume."""
+
+from __future__ import annotations
+
+import json
+import os
+import uuid
+
+import pyarrow.parquet as pq
+import pyspark.sql.functions as F
+import pytest
+
+from sourmash_spark.operators import compare
+from sourmash_spark.operators.lsh import candidate_pairs
+from sourmash_spark.params import LSHParams, SketchParams
+from sourmash_spark.pipeline import PipelineConfig, run_pipeline
+from sourmash_spark.sources import checkpoint as ckpt
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"t{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _records(spark, base):
+    return {r.stage: r for r in ckpt.read_lineage(spark, base).collect()}
+
+
+def test_fresh_stage_runs_only_its_write(spark, tmp_path):
+    base = str(tmp_path)
+    build = lambda: spark.range(0, 1000, 1, 4)
+    (out, skipped), n_jobs = _jobs(
+        spark, lambda: ckpt.run_stage(spark, base, "ids", "h0", build)
+    )
+    assert not skipped
+    assert n_jobs == 1  # the write; no count, metrics, lineage or schema job
+    # read back as a schema-inferring read would see it
+    path = ckpt.stage_path(base, "ids", "h0")
+    assert out.schema == spark.read.parquet(path).schema
+
+    (again, skipped), n_jobs = _jobs(
+        spark, lambda: ckpt.run_stage(spark, base, "ids", "h0", build)
+    )
+    assert skipped and n_jobs <= 1
+
+    rec = _records(spark, base)["ids"]
+    assert rec.n_rows == 1000 == again.count()
+    parts = json.loads(rec.partitions)
+    assert len(parts) == 4  # one file per write task
+    assert sum(p["rows"] for p in parts) == rec.n_rows
+
+
+def test_lineage_stays_out_of_stage_dirs(spark, tmp_path):
+    base = str(tmp_path)
+    ckpt.run_stage(spark, base, "ids", "h0", lambda: spark.range(0, 50, 1, 2))
+    path = ckpt.stage_path(base, "ids", "h0")
+    assert not any(f.endswith(".json") for f in os.listdir(path))
+    assert os.listdir(os.path.join(base, "_lineage"))
+    assert pq.read_table(path).num_rows == 50
+    assert spark.read.parquet(path).count() == 50
+
+
+def test_read_lineage_reads_older_parquet_rows(spark, tmp_path):
+    """A _lineage dir holding rows appended by the earlier Spark writer
+    (payload JSON string + ts, parquet) reads alongside new records."""
+    base = str(tmp_path)
+    old = {"stage": "signatures", "config_hash": "h0", "event": "complete",
+           "n_rows": 7, "wall_sec": 1.5,
+           "partitions": json.dumps([{"pid": 0, "rows": 7}])}
+    (
+        spark.createDataFrame([(json.dumps(old),)], "payload string")
+        .withColumn("ts", F.current_timestamp())
+        .coalesce(1).write.mode("append")
+        .parquet(os.path.join(base, "_lineage"))
+    )
+    ckpt.run_stage(spark, base, "ids", "h0", lambda: spark.range(0, 5, 1, 1))
+
+    rows = _records(spark, base)
+    assert set(rows) == {"signatures", "ids"}
+    assert rows["signatures"].n_rows == 7
+    assert json.loads(rows["signatures"].partitions) == [{"pid": 0, "rows": 7}]
+    assert rows["ids"].n_rows == 5
+    assert rows["signatures"].ts is not None and rows["ids"].ts is not None
+    assert rows["ids"].ts >= rows["signatures"].ts
+
+
+def test_interrupted_append_is_invisible(spark, tmp_path, monkeypatch):
+    base = str(tmp_path)
+    ckpt._append_lineage(base, [{"stage": "a", "event": "complete", "n_rows": 1}])
+
+    def crash(src, dst):
+        raise OSError("killed before the rename")
+
+    monkeypatch.setattr(ckpt.os, "replace", crash)
+    with pytest.raises(OSError):
+        ckpt._append_lineage(base, [{"stage": "b", "event": "complete", "n_rows": 2}])
+    monkeypatch.undo()
+    leftovers = os.listdir(os.path.join(base, "_lineage"))
+    assert any(f.startswith(".") for f in leftovers)  # the temp file stays
+    # a truncated temp file from a killed writer is hidden as well
+    with open(os.path.join(base, "_lineage", ".torn.json.tmp"), "w") as f:
+        f.write('{"stage": "c", "ev')
+
+    assert [r.stage for r in ckpt.read_lineage(spark, base).collect()] == ["a"]
+
+
+def _hot_bands(spark):
+    """Band rows with planted hot buckets: (0, 7) is shared by 30 ids and
+    (1, 9) by 12; every other bucket holds one or two ids."""
+    rows = [(i, 0, 7) for i in range(30)] + [(i, 1, 9) for i in range(12)]
+    rows += [(i, 2, i // 2) for i in range(40)]
+    return spark.createDataFrame(rows, "sig_id long, band_idx int, band_key long")
+
+
+def _pandas_drops(bands, cap):
+    sizes = bands.toPandas().groupby(["band_idx", "band_key"]).size()
+    hot = sizes[sizes > cap]
+    return {"dropped_keys": len(hot), "dropped_postings": int(hot.sum())}
+
+
+def test_cap_stats_match_pandas(spark, monkeypatch):
+    bands = _hot_bands(spark)
+    for cap in (10, 20, 40):
+        stats: dict = {}
+        pairs = candidate_pairs(bands, bucket_cap=cap, cap_stats=stats)
+        assert stats == _pandas_drops(bands, cap), cap
+        assert pairs.count() >= 20  # the (2, *) buckets still pair
+    # more hot keys than fit the plan literal: counted by an aggregate
+    monkeypatch.setattr(compare, "CAP_LITERAL_MAX", 1)
+    stats = {}
+    candidate_pairs(bands, bucket_cap=10, cap_stats=stats)
+    assert stats == _pandas_drops(bands, 10) == {
+        "dropped_keys": 2, "dropped_postings": 42,
+    }
+
+
+def test_cap_stats_cost_no_job_when_nothing_is_dropped(spark):
+    bands = _hot_bands(spark)
+    _, plain = _jobs(spark, lambda: candidate_pairs(bands, bucket_cap=100))
+    stats: dict = {}
+    _, with_stats = _jobs(
+        spark, lambda: candidate_pairs(bands, bucket_cap=100, cap_stats=stats)
+    )
+    assert with_stats == plain
+    assert stats == {"dropped_keys": 0, "dropped_postings": 0}
+
+
+def test_candidates_lineage_records_bucket_cap_drops(spark, corpus, tmp_path):
+    cfg = PipelineConfig(
+        sketch=SketchParams(ksize=21, scaled=50),
+        lsh=LSHParams(num_bands=16, band_size=2),
+        jaccard_threshold=0.5,
+        bucket_cap=2,
+    )
+    base = str(tmp_path)
+    df = spark.createDataFrame(corpus.code_files).withColumnRenamed(
+        "file_id", "sig_id"
+    )
+    run_pipeline(spark, df, base, cfg, stop_after="candidates")
+
+    bands = pq.read_table(
+        ckpt.stage_path(base, "bands", cfg.config_hash())
+    ).to_pandas()
+    sizes = bands.groupby(["band_idx", "band_key"]).size()
+    hot = sizes[sizes > cfg.bucket_cap]
+    assert len(hot) > 0  # clone families fill buckets past the cap
+
+    recs = _records(spark, base)
+    assert recs["candidates"].bucket_cap_dropped_keys == len(hot)
+    assert recs["candidates"].bucket_cap_dropped_postings == int(hot.sum())
+    assert recs["bands"].bucket_cap_dropped_keys is None

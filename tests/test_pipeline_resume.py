@@ -3,6 +3,7 @@ recompute of finished stages) — the north rule's checkpoint/lineage gate."""
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -59,10 +60,15 @@ def test_full_pipeline_and_recall(spark, corpus, base_dir):
     )
     assert n_violations == 0
 
-    # lineage rows exist with per-partition metrics
-    lineage = ckpt.read_lineage(spark, base_dir)
-    stages = {r.stage for r in lineage.collect()}
-    assert {"signatures", "candidates", "edges", "clusters"} <= stages
+    # lineage rows exist with per-file metrics summing to the stage size
+    lineage = {r.stage: r for r in ckpt.read_lineage(spark, base_dir).collect()}
+    assert {"signatures", "candidates", "edges", "clusters"} <= set(lineage)
+    sig_rec = lineage["signatures"]
+    assert sig_rec.n_rows == n_sigs
+    assert sum(p["rows"] for p in json.loads(sig_rec.partitions)) == n_sigs
+    assert lineage["candidates"].n_rows == out["candidates"].count()
+    assert lineage["candidates"].bucket_cap_dropped_keys == 0
+    assert lineage["candidates"].bucket_cap_dropped_postings == 0
 
 
 def test_resume_skips_completed_stages(spark, corpus, base_dir):

@@ -43,6 +43,15 @@ def build_corpus(path: str) -> int:
     return n
 
 
+def cal_ok(res: dict, cal_max: float) -> bool:
+    """A level run counts only when BOTH bracketing host probes were taken
+    and read at or below `cal_max`; a missing probe leaves the window
+    unchecked, so the run is rejected."""
+    cal = res.get("host_calibration_sec") or {}
+    vals = [cal.get("before"), cal.get("after")]
+    return None not in vals and max(vals) <= cal_max
+
+
 def run_once(cores: int, corpus_path: str, n_files: int) -> dict:
     from pyspark.sql import functions as F
 
@@ -205,16 +214,10 @@ def main() -> None:
     cal_retries = int(os.environ.get("SCALE_CAL_RETRIES", "3"))
     rejected: list[dict] = []
 
-    def cal_ok(res: dict) -> bool:
-        cal = res.get("host_calibration_sec") or {}
-        vals = [v for v in (cal.get("before"), cal.get("after"))
-                if v is not None]
-        return bool(vals) and max(vals) <= cal_max
-
     def run_level_accepted(cores: int) -> dict | None:
         for _ in range(cal_retries if cal_max else 1):
             res = run_level(cores, corpus_path, n_files)
-            if not cal_max or cal_ok(res):
+            if not cal_max or cal_ok(res, cal_max):
                 return res
             rejected.append(
                 {"cores": cores,
