@@ -1678,8 +1678,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact_marked",
         "lca_classify_murmur",    # lca.py untouched r6
     ]
-    n_tail = max(0, len(q) - 50)
-    tail = [k for k in DEMOTABLE if k in q][:n_tail]
+    return _demote_tail(q, DEMOTABLE)
+
+
+def _demote_tail(q: dict, demotable: list[str], window: int = 50) -> dict:
+    """`q` reordered so the first `len(q) - window` gates of `demotable`
+    sit behind the `window` gates the driver records.  A misspelled name or
+    a list too short to fill that tail would silently leave the order
+    unplanned, so both raise."""
+    unknown = [k for k in demotable if k not in q]
+    if unknown:
+        raise ValueError(f"DEMOTABLE names no registered gate: {unknown}")
+    n_tail = max(0, len(q) - window)
+    tail = list(dict.fromkeys(demotable))[:n_tail]
+    if len(tail) < n_tail:
+        raise ValueError(
+            f"DEMOTABLE fills {len(tail)} of the {n_tail} gates past the "
+            f"{window}-gate driver window"
+        )
     ordered = {k: v for k, v in q.items() if k not in tail}
     ordered.update({k: q[k] for k in tail})
     return ordered

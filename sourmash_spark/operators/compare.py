@@ -17,7 +17,7 @@ Scale levers:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 import pyspark.sql.functions as F
 
 from . import kernels
@@ -26,145 +26,125 @@ from . import kernels
 # (hash/shingle/gram) present in df documents contributes O(df^2) pair rows
 # before any filter — the one remaining quadratic blowup at corpus scale —
 # and a key shared by >10k documents is boilerplate, not evidence of
-# near-duplication.  ON by default; pass df_cap=0 to disable, and use
-# `df_cap_stats` for the dropped-volume lineage.
+# near-duplication.  ON by default; pass df_cap=0 to disable, and pass
+# `stats` to cap_postings / shared_key_pairs for the dropped volume.
 DEFAULT_DF_CAP = 10_000
-
-
-def df_cap_stats(postings_df: DataFrame, df_cap: int, key: str = "hashval") -> DataFrame:
-    """Lineage feed for the cap: (key, df) of every key the cap drops.
-    Callers at scale persist this next to the pair output so 'covered
-    everything' is never silently false."""
-    return (
-        postings_df.groupBy(key)
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > df_cap)
-    )
-
-
-# Hot sets up to this many keys become a plan-literal NOT-IN filter (a
-# narrow, pushdown-able scan predicate) instead of a join.  2048 bigints is
-# ~16 KB of plan literal — far below any plan-size concern, and the common
-# non-empty case (a handful of boilerplate keys) fits with room to spare.
-CAP_LITERAL_MAX = 2048
 
 
 def cap_postings(
     p: DataFrame,
     key_cols: list[str],
     df_cap: int,
-    observation=None,
     n_ids: int | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """Drop keys held by more than `df_cap` ids from a postings DataFrame —
     the boilerplate guard applied before any pair self-join.
 
-    Plan: materialize the OVER-cap key set once (map-side combined count of
-    8-byte keys — the cheapest shuffle there is, and usually an EMPTY
-    result), then pick the cheapest removal plan for its size:
-
-    * empty (the common case — no key crosses the cap): return the postings
-      untouched.  The downstream pair join pays ZERO cap overhead — this is
-      the uncapped join0 plan from tools/bench_pairplans.py, and it closes
-      the ~2x in-suite overhead the r2/r3 judges measured when the cap
-      branch re-exploded the postings even though it dropped nothing.
-    * small (<= CAP_LITERAL_MAX, single key column): a plan-literal NOT-IN
-      filter — a narrow scan predicate, no join, no second read of the
-      postings.  Bounded literal size, so the gather.py:323 isin concern
-      (unbounded literal) doesn't apply.
-    * large or multi-column key: broadcast LEFT ANTI join against the
-      already-materialized hot set (localCheckpoint — the agg runs once,
-      shared between the probe and the join).
-
-    The size probe is ONE driver action on a tiny aggregate at plan-build
-    time.  Callers that must stay fully lazy (streaming plans, or lineage
-    via `observation`) get the original single-pass anti-join plan:
-    `observation` (optional `pyspark.sql.Observation`) receives cap lineage
-    with the action at zero extra cost: `dropped_keys` / `dropped_postings`
-    (silent truncation must be visible — ADVICE r2).  Per-key lineage at
-    scale: persist `df_cap_stats`.
-
-    Worst-case note for adversarial corpora: the hot set is bounded by
-    total_postings / df_cap keys; if that overflows the broadcast budget
-    (only at ~10^8+ hot keys), swap the anti join for a shuffle semi-join
-    on the keep set — correctness is identical.
-
     `n_ids`: number of distinct ids in `p`, valid ONLY when every id
     contributes each key at most once (true for all in-package callers:
     sketch hashes are sets, gram/fingerprint arrays are array_distinct'd,
     band keys are one-per-(band,id)).  Then df <= n_ids for every key, so
-    `n_ids <= df_cap` proves the cap is a no-op WITHOUT any probe job —
-    the dominant case below corpus scale pays literally zero.
+    `n_ids <= df_cap` proves the cap is a no-op and no job runs.
 
-    `stats` (optional dict) receives the same `dropped_keys` /
-    `dropped_postings` counts from the eagerly materialized hot set: no
-    extra job when nothing (or at most CAP_LITERAL_MAX keys) crosses the
-    cap, one aggregate over the hot set otherwise.  The lazy plans
-    (`observation`, streaming) leave it untouched.
+    Otherwise ONE eager probe materializes the over-cap key set
+    (localCheckpoint of a map-side combined count — usually an EMPTY
+    result) and an Observation on it yields the dropped volume with that
+    same action.  An empty hot set returns the postings untouched, so the
+    pair join pays no cap overhead; a non-empty one is removed by a
+    broadcast LEFT ANTI join against the checkpoint, which keeps NULL-key
+    rows.  The hot set is bounded by total_postings / df_cap keys; only an
+    adversarial corpus with ~10^8+ hot keys would outgrow the broadcast
+    budget (swap in a shuffle semi-join on the keep set then — same rows).
+
+    `stats` (optional dict) receives `dropped_keys` (keys over the cap) and
+    `dropped_postings` (the rows they held) — silent truncation must be
+    visible.
     """
-
-    def note(keys: int, postings: int) -> None:
+    if not df_cap or (n_ids is not None and n_ids <= df_cap):
         if stats is not None:
-            stats.update(dropped_keys=keys, dropped_postings=postings)
-
-    if not df_cap or (
-        n_ids is not None and n_ids <= df_cap and observation is None
-    ):
-        note(0, 0)
+            stats.update(dropped_keys=0, dropped_postings=0)
         return p
+    obs = Observation()
     hot = (
         p.groupBy(*key_cols)
         .agg(F.count("*").alias("df"))
         .filter(F.col("df") > df_cap)
-    )
-    if observation is not None:
-        hot = hot.observe(
-            observation,
+        .observe(
+            obs,
             F.count("*").alias("dropped_keys"),
             F.coalesce(F.sum("df"), F.lit(0)).alias("dropped_postings"),
         )
-        return p.join(
-            F.broadcast(hot.select(*key_cols)), key_cols, "left_anti"
-        )
-    if p.isStreaming:
-        return p.join(
-            F.broadcast(hot.select(*key_cols)), key_cols, "left_anti"
-        )
-    hot = hot.localCheckpoint(eager=True)
-    head = hot.take(CAP_LITERAL_MAX + 1)
-    if len(head) <= CAP_LITERAL_MAX:
-        note(len(head), sum(r["df"] for r in head))
-    elif stats is not None:
-        r = hot.agg(F.count("*"), F.sum("df")).first()
-        note(r[0], r[1])
-    if not head:
+        .localCheckpoint(eager=True)
+    )
+    dropped = obs.get
+    if stats is not None:
+        stats.update(dropped)
+    if not dropped["dropped_keys"]:
         return p
-    if len(head) <= CAP_LITERAL_MAX and len(key_cols) == 1:
-        k = key_cols[0]
-        # NULL keys must survive like they do under the left-anti branch
-        # (NOT-IN over a NULL yields NULL → filtered; anti join keeps the
-        # row).  In-package keys are non-null, but external callers must
-        # not see size-dependent NULL behavior (ADVICE r4).
-        return p.filter(
-            F.col(k).isNull() | ~F.col(k).isin([r[0] for r in head])
-        )
     return p.join(F.broadcast(hot.select(*key_cols)), key_cols, "left_anti")
 
 
-def postings(
-    sigs: DataFrame,
-    sig_id: str = "sig_id",
-    df_cap: int = DEFAULT_DF_CAP,
-    n_sigs: int | None = None,
+def shared_key_pairs(
+    postings: DataFrame,
+    key_cols: list[str],
+    id_col: str,
+    df_cap: int,
+    n_ids: int | None = None,
+    size_col: str | None = None,
+    stats: dict | None = None,
+    new_col: str | None = None,
 ) -> DataFrame:
-    """Inverted index: one row per (hashval, sig_id) — the analog of the
-    reference's `sourmash_hashes` table (sqlite_index.py:263-278).  Keys in
-    more than `df_cap` sketches are dropped before any join (broadcast
-    anti join against the over-cap key set — see cap_postings; pass
-    `n_sigs` when known to prove the cap a no-op for free)."""
-    p = sigs.select(sig_id, F.explode("hashes").alias("hashval"))
-    return cap_postings(p, ["hashval"], df_cap, n_ids=n_sigs)
+    """The inverted-index self-join every pair operator shares — the
+    reference's candidate SQL (postings joined on hashval, GROUP BY sketch
+    pair, COUNT; sqlite_index.py:612-618).
+
+    `postings` holds one row per (id, key).  Keys held by more than
+    `df_cap` ids are removed first (cap_postings; `n_ids` and `stats` as
+    there).  Output: (id_a, id_b, n_shared[, size_a, size_b]) with
+    id_a < id_b; pairs sharing no key never materialize.
+
+    `size_col` (a per-id column such as the set size) rides the GROUP KEY,
+    not first() aggregates: it is functionally determined by the id pair,
+    so the groups are unchanged and the aggregate keeps a single count
+    buffer per group.
+
+    `new_col` (a boolean column) keeps only pairs touching a flagged row —
+    the incremental batch x corpus join.  Only flagged rows feed the left
+    side, so pairs of two unflagged ids are never enumerated, and a pair of
+    two flagged ids is counted once.
+    """
+    p = cap_postings(postings, key_cols, df_cap, n_ids=n_ids, stats=stats)
+    cols = {"id": id_col, **({"size": size_col} if size_col else {})}
+    sizes = ["size_a", "size_b"] if size_col else []
+
+    def side(s: str) -> DataFrame:
+        flag = [F.col(new_col).alias(f"new_{s}")] if new_col else []
+        return p.select(
+            *key_cols, *[F.col(c).alias(f"{n}_{s}") for n, c in cols.items()],
+            *flag,
+        )
+
+    a, b = side("a"), side("b")
+    lo = F.col("id_a") < F.col("id_b")
+    if new_col is None:
+        j = a.join(b, key_cols).filter(lo)
+    else:
+        j = (
+            a.filter("new_a")
+            .join(b, key_cols)
+            .filter((F.col("id_a") != F.col("id_b")) & (lo | ~F.col("new_b")))
+            .select(*[
+                F.when(lo, F.col(f"{n}_{x}")).otherwise(F.col(f"{n}_{y}"))
+                .alias(f"{n}_{x}")
+                for n in cols for x, y in (("a", "b"), ("b", "a"))
+            ])
+        )
+    return (
+        j.groupBy("id_a", "id_b", *sizes)
+        .agg(F.count("*").alias("n_shared"))
+        .select("id_a", "id_b", "n_shared", *sizes)
+    )
 
 
 def compare_all_pairs(
@@ -201,8 +181,7 @@ def compare_all_pairs(
     `df_cap` (default DEFAULT_DF_CAP, 0 disables) drops hashes present in
     more than df_cap sketches from the JOIN ONLY — set sizes stay those of
     the full sketches, so capped scores are a lower bound of the true
-    scores (a boilerplate hash never inflates similarity).  Dropped-key
-    lineage: `df_cap_stats(postings(sigs, df_cap=0), df_cap)`.
+    scores (a boilerplate hash never inflates similarity).
 
     Mixed-resolution collections are downsampled to the common (max)
     scaled first — the reference's compare semantics
@@ -250,34 +229,15 @@ def compare_all_pairs(
         # one narrow count (cheaper than the probe's explode+shuffle pass);
         # scale callers pass n_sigs to skip even this
         n_sigs = sigs.count()
-    p = cap_postings(
+    pairs = shared_key_pairs(
         sigs.select(
             F.col(sig_id), F.col("n_hashes"),
             F.explode("hashes").alias("hashval"),
         ),
-        ["hashval"], df_cap, n_ids=n_sigs,
-    )
-    a = p.select(
-        F.col(sig_id).alias("sig_id_a"), F.col("n_hashes").alias("size_a"),
-        "hashval",
-    )
-    b = p.select(
-        F.col(sig_id).alias("sig_id_b"), F.col("n_hashes").alias("size_b"),
-        "hashval",
-    )
-    # sizes ride the GROUP KEY, not first() aggregates: size_a/size_b are
-    # functionally determined by the id pair, so the groups are identical,
-    # and the aggregate keeps a single count buffer per group instead of
-    # count + two first/valueSet trackers
-    pairs = (
-        a.join(b, "hashval")
-        .filter(F.col("sig_id_a") < F.col("sig_id_b"))
-        .groupBy("sig_id_a", "sig_id_b", "size_a", "size_b")
-        .agg(F.count("*").alias("intersect_hashes"))
-        .select(
-            "sig_id_a", "sig_id_b", "intersect_hashes", "size_a", "size_b"
-        )
-    )
+        ["hashval"], sig_id, df_cap, n_ids=n_sigs, size_col="n_hashes",
+    ).withColumnsRenamed({
+        "id_a": "sig_id_a", "id_b": "sig_id_b", "n_shared": "intersect_hashes",
+    })
     inter = F.col("intersect_hashes")
     sa, sb = F.col("size_a"), F.col("size_b")
     if mode == "jaccard":

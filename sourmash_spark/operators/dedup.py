@@ -115,41 +115,24 @@ def minhash_pairs60(
     DEFAULT_DF_CAP, 0 disables) drops hashes present in more than df_cap
     docs from the join — the boilerplate guard against the O(df^2) pair
     blowup; sizes stay full-sketch, so capped jaccard lower-bounds true
-    jaccard.  Lineage: compare.df_cap_stats.  `n_docs` (if known) proves
-    the cap a no-op for free when n_docs <= df_cap (sketch hashes are
-    per-doc distinct); left None it is one narrow count.
+    jaccard.  `n_docs` (if known) proves the cap a no-op for free when
+    n_docs <= df_cap (sketch hashes are per-doc distinct); left None it is
+    one narrow count.
 
     EAGERNESS: with df_cap on and n_docs None, building this plan runs a
     small count (and possibly the cap_postings size probe) at CALL time;
     lazy plan-composition callers pass n_docs or df_cap=0."""
-    from .compare import cap_postings
+    from .compare import shared_key_pairs
 
     if df_cap and n_docs is None:
         n_docs = sketches.count()
-    p = cap_postings(
+    pairs = shared_key_pairs(
         sketches.select(
             F.col(id_col), F.col("n_hashes"),
             F.explode("hashes").alias("hashval"),
         ),
-        ["hashval"], df_cap, n_ids=n_docs,
-    )
-    a = p.select(
-        F.col(id_col).alias("id_a"), F.col("n_hashes").alias("size_a"),
-        "hashval",
-    )
-    b = p.select(
-        F.col(id_col).alias("id_b"), F.col("n_hashes").alias("size_b"),
-        "hashval",
-    )
-    # sizes in the GROUP KEY (functionally determined by the id pair) —
-    # one count buffer per group instead of count + two first() trackers
-    pairs = (
-        a.join(b, "hashval")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count("*").alias("intersect_hashes"))
-        .select("id_a", "id_b", "intersect_hashes", "size_a", "size_b")
-    )
+        ["hashval"], id_col, df_cap, n_ids=n_docs, size_col="n_hashes",
+    ).withColumnRenamed("n_shared", "intersect_hashes")
     return (
         pairs.withColumn(
             "jaccard",
@@ -181,13 +164,12 @@ def ngram_jaccard_pairs(
     `df_cap` (default DEFAULT_DF_CAP, 0 disables) drops grams present in
     more than df_cap docs from the JOIN ONLY — per-doc gram counts stay
     full, so capped jaccard lower-bounds true jaccard (a boilerplate gram
-    never creates O(df^2) pair rows nor inflates similarity).  Lineage:
-    compare.df_cap_stats(grams, df_cap, key="gram").
+    never creates O(df^2) pair rows nor inflates similarity).
 
     EAGERNESS: with df_cap on and n_docs None, building this plan runs a
     small count (and possibly the cap_postings size probe) at CALL time;
     lazy plan-composition callers pass n_docs or df_cap=0."""
-    from .compare import cap_postings
+    from .compare import shared_key_pairs
 
     # per-doc gram count rides the explode as a struct field — no separate
     # count aggregation, no sizes join.  let-binding is load-bearing:
@@ -215,24 +197,9 @@ def ngram_jaccard_pairs(
         )
     if df_cap and n_docs is None:
         n_docs = docs.count()  # narrow; proves the cap a no-op when small
-    g = cap_postings(grams, ["gram"], df_cap, n_ids=n_docs)
-    a = g.select(
-        F.col(id_col).alias("id_a"), F.col("n_grams").alias("size_a"),
-        "gram",
-    )
-    b = g.select(
-        F.col(id_col).alias("id_b"), F.col("n_grams").alias("size_b"),
-        "gram",
-    )
-    # sizes in the GROUP KEY (functionally determined by the id pair) —
-    # one count buffer per group instead of count + two first() trackers
-    pairs = (
-        a.join(b, "gram")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count("*").alias("shared"))
-        .select("id_a", "id_b", "shared", "size_a", "size_b")
-    )
+    pairs = shared_key_pairs(
+        grams, ["gram"], id_col, df_cap, n_ids=n_docs, size_col="n_grams"
+    ).withColumnRenamed("n_shared", "shared")
     return (
         pairs.withColumn(
             "jaccard",
@@ -558,19 +525,14 @@ def substring_dup_pairs(
     window = min_len - k + 1
     if window < 1:
         raise ValueError(f"min_len ({min_len}) must be >= k ({k})")
-    from .compare import cap_postings
+    from .compare import shared_key_pairs
 
     if df_cap and n_docs is None:
         n_docs = docs.count()
     _, fps = _winnow_fp_postings(docs, k, window, id_col, text_col)
-    fps = cap_postings(fps, ["fp"], df_cap, n_ids=n_docs)
-    a = fps.select(F.col(id_col).alias("id_a"), "fp")
-    b = fps.select(F.col(id_col).alias("id_b"), "fp")
     return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").cast("long").alias("n_shared_fps"))
+        shared_key_pairs(fps, ["fp"], id_col, df_cap, n_ids=n_docs)
+        .withColumnRenamed("n_shared", "n_shared_fps")
         .filter(F.col("n_shared_fps") >= min_shared)
     )
 

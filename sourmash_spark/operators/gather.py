@@ -540,18 +540,15 @@ def _gather_rows(
     `strategy`:
     * "auto" (default) — driver-state rounds when the candidate state fits
       the byte bound (one collect + numpy rounds, the fast common case);
-      otherwise fall back to the cluster-side per-round loop
-      (_greedy_rounds_cluster) so the pathological regime RUNS instead of
-      erroring.
-    * "driver" — always driver-state; exceed the bound and it raises the
-      documented error (the pre-r5 behavior).
+      otherwise the cluster-side per-round loop (_greedy_rounds_cluster),
+      so the pathological regime RUNS instead of erroring.
     * "cluster" — always cluster-side; candidate hash arrays never reach
       the driver (no bound check, no collect of arrays).
 
-    Both strategies produce bit-identical results: the row math is the
-    shared _gather_row, the tie-break is (overlap desc, md5 asc, id asc)
-    in both loops."""
-    if strategy not in ("auto", "driver", "cluster"):
+    Both loops produce bit-identical results: the row math is the shared
+    _gather_row, the tie-break is (overlap desc, md5 asc, id asc) in
+    both."""
+    if strategy not in ("auto", "cluster"):
         raise ValueError(f"gather: unknown strategy {strategy!r}")
     min_hashes = max(1, int(threshold_bp / scaled)) if threshold_bp else 1
     if max_driver_bytes is None:
@@ -583,27 +580,12 @@ def _gather_rows(
         .select(sig_id, "match_name", "match_md5", "hashes")
         .localCheckpoint(eager=False)
     )
-    use_cluster = strategy == "cluster"
-    if not use_cluster:
-        est = joined.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.size("hashes")), F.lit(0)).alias("nh"),
-        ).first()
-        est_bytes = int(est["nh"]) * 8
-        if est_bytes > max_driver_bytes:
-            if strategy == "auto":
-                use_cluster = True
-            else:
-                raise ValueError(
-                    f"gather: candidate state ({est['n']} candidates, "
-                    f"~{est_bytes / 1024**2:.0f} MiB of hashes) exceeds "
-                    "the driver "
-                    f"bound ({max_driver_bytes / 1024**2:.0f} MiB). Raise "
-                    "threshold_bp to shrink the candidate set, raise "
-                    "SOURMASH_SPARK_GATHER_MAX_DRIVER_BYTES, or use "
-                    'strategy="auto"/"cluster" for the cluster-side '
-                    "per-round loop."
-                )
+    use_cluster = strategy == "cluster" or (
+        joined.agg(
+            F.coalesce(F.sum(F.size("hashes")), F.lit(0))
+        ).first()[0] * 8
+        > max_driver_bytes
+    )
     if use_cluster:
         orig = np.unique(
             i64_to_u64(np.array(sorted(query_hashes), dtype=np.int64))
@@ -736,10 +718,9 @@ def gather(
     `self.orig_query`, search.py:929).
 
     `strategy`: "auto" (driver-state rounds when the candidate state fits
-    the byte bound, cluster-side per-round loop otherwise), "driver"
-    (pre-r5 behavior: raise past the bound), or "cluster" (candidate hash
-    arrays never reach the driver) — see _gather_rows; results are
-    bit-identical across strategies."""
+    the byte bound, cluster-side per-round loop otherwise) or "cluster"
+    (candidate hash arrays never reach the driver) — see _gather_rows;
+    results are bit-identical across strategies."""
     results, _remaining = _gather_rows(
         db, query_hashes, scaled, ksize, threshold_bp, query_abunds,
         query_md5, sig_id, estimate_ani_ci, strategy=strategy,

@@ -15,8 +15,9 @@ S-curve recall 1-(1-s^r)^b its validity here.
 
 Skew levers (boilerplate shingles / giant repos produce mega-buckets):
 * `bucket_cap` drops band buckets with more than cap members before the
-  pair join (an O(bucket^2) blowup otherwise) — dropped-bucket counts are
-  reported via `bucket_stats` for lineage;
+  pair join (an O(bucket^2) blowup otherwise) — `candidate_pairs`'
+  `cap_stats` receives the dropped buckets and memberships for lineage,
+  and `bucket_stats` gives the full per-bucket size distribution;
 * the pair self-join runs under AQE skew-join splitting;
 * band keys are uniformly distributed by construction (xxhash64), so the
   groupBy itself does not need salting — the cap bounds the worst bucket.
@@ -103,28 +104,17 @@ def candidate_pairs(
 ) -> DataFrame:
     """(sig_id_a, sig_id_b, n_shared_bands) with sig_id_a < sig_id_b.
 
-    Self-join on (band_idx, band_key); buckets above `bucket_cap` are
-    removed first by a broadcast anti join against the (tiny, usually
-    empty) over-cap bucket set — compare.cap_postings.  `cap_stats`
+    Self-join on (band_idx, band_key) — compare.shared_key_pairs; buckets
+    above `bucket_cap` are removed first by its cap probe.  `cap_stats`
     receives the cap's drop counts (`dropped_keys` buckets holding
-    `dropped_postings` band memberships; see cap_postings' `stats`)."""
-    from .compare import cap_postings
+    `dropped_postings` band memberships)."""
+    from .compare import shared_key_pairs
 
-    bands = cap_postings(
-        bands, ["band_idx", "band_key"], bucket_cap, stats=cap_stats
-    )
-    a = bands.select(
-        F.col(sig_id).alias("sig_id_a"), "band_idx", "band_key"
-    )
-    b = bands.select(
-        F.col(sig_id).alias("sig_id_b"), "band_idx", "band_key"
-    )
-    return (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("sig_id_a") < F.col("sig_id_b"))
-        .groupBy("sig_id_a", "sig_id_b")
-        .agg(F.count("*").alias("n_shared_bands"))
-    )
+    return shared_key_pairs(
+        bands, ["band_idx", "band_key"], sig_id, bucket_cap, stats=cap_stats
+    ).withColumnsRenamed({
+        "id_a": "sig_id_a", "id_b": "sig_id_b", "n_shared": "n_shared_bands",
+    })
 
 
 def verify_pairs(

@@ -169,8 +169,8 @@ def incremental_update(
     Stage tables are versioned under ``{stage}={hash}/increment=k`` with
     the union view read back; equivalent to Iceberg MERGE/append.
     """
-    import pyspark.sql.functions as F2
-    from .operators.lsh import band_signatures, candidate_pairs, verify_pairs
+    from .operators.compare import shared_key_pairs
+    from .operators.lsh import band_signatures, verify_pairs
 
     cfg = config or PipelineConfig(SketchParams(), LSHParams())
     ch = cfg.config_hash()
@@ -198,60 +198,48 @@ def incremental_update(
         )
     batch_sigs.write.parquet(f"{inc_path}/increment={k}")
     batch_sigs = spark.read.parquet(f"{inc_path}/increment={k}")
-    all_inc_sigs = spark.read.parquet(inc_path).drop("increment")
+    inc_sigs = spark.read.parquet(inc_path)
 
-    all_sigs = old_sigs.unionByName(all_inc_sigs, allowMissingColumns=True)
-    new_bands = band_signatures(
-        batch_sigs, cfg.lsh, cfg.sketch.scaled, sig_id=sid
+    all_sigs = old_sigs.unionByName(
+        inc_sigs.drop("increment"), allowMissingColumns=True
     )
     # corpus bands: base stage table + per-increment band tables, all read
     # back — increment-proportional work.  Banding is row-wise
     # deterministic, so stored ∪ banded-batch is bit-identical to
     # re-banding all_sigs (which the fallback does for checkpoints that
-    # predate the bands stage).
+    # predate the bands stage, except for the batch written here).
     bands_inc = ckpt.stage_path(base_dir, "bands", ch) + "_inc"
-    new_bands.select(sid, "band_idx", "band_key").write.parquet(
+    band_signatures(
+        batch_sigs, cfg.lsh, cfg.sketch.scaled, sig_id=sid
+    ).select(sid, "band_idx", "band_key").write.parquet(
         f"{bands_inc}/increment={k}"
     )
-    new_bands = spark.read.parquet(f"{bands_inc}/increment={k}")
+    inc_bands = spark.read.parquet(bands_inc)
     bands_path = ckpt.stage_path(base_dir, "bands", ch)
     if ckpt.is_complete(bands_path):
-        old_bands = spark.read.parquet(bands_path).select(
-            sid, "band_idx", "band_key"
-        )
-        all_bands = old_bands.unionByName(
-            spark.read.parquet(bands_inc).drop("increment")
-        )
+        stored_bands = spark.read.parquet(bands_path)
     else:
-        all_bands = band_signatures(
-            all_sigs, cfg.lsh, cfg.sketch.scaled, sig_id=sid
+        stored_bands = band_signatures(
+            old_sigs.unionByName(
+                inc_sigs.filter(F.col("increment") != k).drop("increment"),
+                allowMissingColumns=True,
+            ),
+            cfg.lsh, cfg.sketch.scaled, sig_id=sid,
         )
-
-    # same boilerplate guard as the full pipeline (bucket sizes over the
-    # COMBINED band table, else capped buckets would diverge from a full
-    # recompute)
-    if cfg.bucket_cap:
-        from .operators.lsh import bucket_stats
-
-        ok_buckets = bucket_stats(all_bands).filter(
-            F2.col("bucket_size") <= cfg.bucket_cap
-        ).select("band_idx", "band_key")
-        new_bands = new_bands.join(ok_buckets, ["band_idx", "band_key"])
-        all_bands = all_bands.join(ok_buckets, ["band_idx", "band_key"])
-
-    # pairs touching at least one new signature
-    a = new_bands.select(F2.col(sid).alias("sig_id_a"), "band_idx", "band_key")
-    b = all_bands.select(F2.col(sid).alias("sig_id_b"), "band_idx", "band_key")
-    cands = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F2.col("sig_id_a") != F2.col("sig_id_b"))
-        .select(
-            F2.least("sig_id_a", "sig_id_b").alias("sig_id_a"),
-            F2.greatest("sig_id_a", "sig_id_b").alias("sig_id_b"),
-        )
-        .groupBy("sig_id_a", "sig_id_b")
-        .agg(F2.count("*").alias("n_shared_bands"))
+        inc_bands = inc_bands.filter(F.col("increment") == k)
+    all_bands = stored_bands.select(sid, "band_idx", "band_key").unionByName(
+        inc_bands, allowMissingColumns=True
     )
+
+    # pairs touching at least one new signature, under the same boilerplate
+    # guard as the full pipeline: the batch's band rows are flagged, so the
+    # one cap probe sizes buckets over the COMBINED bands (else capped
+    # buckets would diverge from a full recompute) and its hot set leaves
+    # both sides of the batch x corpus join
+    cands = shared_key_pairs(
+        all_bands.withColumn("_new", F.col("increment").eqNullSafe(k)),
+        ["band_idx", "band_key"], sid, cfg.bucket_cap, new_col="_new",
+    ).withColumnsRenamed({"id_a": "sig_id_a", "id_b": "sig_id_b"})
     new_edges = verify_pairs(
         cands, all_sigs, scaled=cfg.sketch.scaled, ksize=cfg.sketch.ksize,
         threshold=cfg.jaccard_threshold, sig_id=sid,

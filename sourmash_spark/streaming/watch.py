@@ -136,8 +136,11 @@ def stream_ingest(
     `foreachBatch` is the right tool here (not a stateful operator): each
     batch is a bounded increment against persistent stage TABLES, and the
     batch work is itself a multi-stage batch plan.  The streaming
-    checkpoint gives exactly-once batch ids; the stage tables make the
-    work idempotent per increment.
+    checkpoint gives exactly-once batch ids, but the increment is NOT
+    idempotent: `incremental_update` numbers increments by listing the
+    existing `increment=k` dirs, so a micro-batch replayed after a crash
+    (between its writes and the streaming commit) lands as increment k+1
+    and duplicates its signatures.
 
     Returns the StreamingQuery (caller awaits/stops)."""
     from ..pipeline import incremental_update

@@ -1,9 +1,8 @@
 """Regression tests for the round-4 ADVICE findings.
 
-1. cap_postings plan-literal NOT-IN path must keep NULL-key rows exactly
-   like the left-anti-join path does (NOT-IN over NULL yields NULL and
-   filters the row; anti join keeps it) — external callers must not see
-   size-dependent NULL behavior.
+1. cap_postings must keep NULL-key rows (a NOT-IN filter over NULL
+   yields NULL and drops the row; the broadcast anti join keeps it) —
+   external callers must not lose rows to the cap they do not own.
 2. pack_sequences pack_id must use integer division end-to-end: at
    cumulative sums near 2^53 a correctly-rounded double quotient can
    floor into the wrong pack at exact-multiple boundaries.
@@ -17,33 +16,36 @@ import numpy as np
 import pyspark.sql.functions as F
 
 from sourmash_spark.operators.ann import _reseed_empty_cells
-from sourmash_spark.operators.compare import CAP_LITERAL_MAX, cap_postings
+from sourmash_spark.operators.compare import cap_postings
 from sourmash_spark.operators.mix import pack_sequences
 
 
 def test_cap_literal_path_keeps_null_keys(spark):
-    """A NULL key row must survive the cap under BOTH removal plans."""
+    """A NULL-key row survives the cap, with a one- and a two-column key."""
     rows = [(i, 100) for i in range(20)]  # hot key, df=20 > cap
     rows += [(i, 1000 + i) for i in range(20)]  # cool per-doc keys
     rows += [(999, None)]  # the NULL-key row at issue
     p = spark.createDataFrame(rows, "sig_id long, hashval long")
 
-    # small hot set -> literal NOT-IN branch
-    lit = cap_postings(p, ["hashval"], 10).collect()
-    lit_keys = {(r["sig_id"], r["hashval"]) for r in lit}
-    assert (999, None) in lit_keys, "literal path must keep NULL keys"
-    assert not any(k == 100 for _, k in lit_keys)
-    assert len(lit_keys) == 21
+    kept = {(r["sig_id"], r["hashval"]) for r in cap_postings(
+        p, ["hashval"], 10
+    ).collect()}
+    assert (999, None) in kept, "the cap must keep NULL keys"
+    assert not any(k == 100 for _, k in kept)
+    assert len(kept) == 21
 
-    # observation forces the anti-join branch: same surviving set
-    from pyspark.sql import Observation
-
-    anti = cap_postings(
-        p, ["hashval"], 10, observation=Observation("nulltest")
-    ).collect()
-    anti_keys = {(r["sig_id"], r["hashval"]) for r in anti}
-    assert anti_keys == lit_keys
-    assert CAP_LITERAL_MAX >= 20  # the literal branch really was taken
+    # two-column key: (band 0, key 100) is hot; NULL in either column stays
+    p2 = p.withColumn("band_idx", F.lit(0)).unionByName(
+        spark.createDataFrame(
+            [(998, 100, None)], "sig_id long, hashval long, band_idx int"
+        )
+    )
+    kept2 = {(r["sig_id"], r["band_idx"], r["hashval"]) for r in cap_postings(
+        p2, ["band_idx", "hashval"], 10
+    ).collect()}
+    assert {(999, 0, None), (998, None, 100)} <= kept2
+    assert not any(b == 0 and k == 100 for _, b, k in kept2)
+    assert len(kept2) == 22
 
 
 def test_pack_id_integer_division_near_2_53(spark):

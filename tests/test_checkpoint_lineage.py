@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 
 import pyarrow.parquet as pq
@@ -129,20 +130,53 @@ def _pandas_drops(bands, cap):
     return {"dropped_keys": len(hot), "dropped_postings": int(hot.sum())}
 
 
-def test_cap_stats_match_pandas(spark, monkeypatch):
+def test_cap_stats_match_pandas(spark):
     bands = _hot_bands(spark)
     for cap in (10, 20, 40):
         stats: dict = {}
         pairs = candidate_pairs(bands, bucket_cap=cap, cap_stats=stats)
         assert stats == _pandas_drops(bands, cap), cap
         assert pairs.count() >= 20  # the (2, *) buckets still pair
-    # more hot keys than fit the plan literal: counted by an aggregate
-    monkeypatch.setattr(compare, "CAP_LITERAL_MAX", 1)
+
+    # one probe plan at every hot-set size: the same jobs at 0, 2 and 3,000
+    # hot keys, the counts read off the probe itself
+    many = spark.createDataFrame(
+        [(i, 3, i % 3000) for i in range(9000)],
+        "sig_id long, band_idx int, band_key long",
+    )
+    keys = ["band_idx", "band_key"]
+    probe_jobs = []
+    for p, cap in ((bands, 40), (bands, 10), (many, 2)):
+        stats = {}
+        _, n = _jobs(spark, lambda: compare.cap_postings(p, keys, cap, stats=stats))
+        assert stats == _pandas_drops(p, cap), cap
+        probe_jobs.append(n)
+    assert stats["dropped_keys"] == 3000
+    assert len(set(probe_jobs)) == 1 and probe_jobs[0] >= 1, probe_jobs
+
+    # the n_ids proof starts no job at all
     stats = {}
-    candidate_pairs(bands, bucket_cap=10, cap_stats=stats)
-    assert stats == _pandas_drops(bands, 10) == {
-        "dropped_keys": 2, "dropped_postings": 42,
-    }
+    _, n = _jobs(
+        spark, lambda: compare.cap_postings(bands, keys, 40, n_ids=40, stats=stats)
+    )
+    assert n == 0 and stats == {"dropped_keys": 0, "dropped_postings": 0}
+
+
+def test_cap_probe_of_empty_postings_returns(spark):
+    """The probe's Observation must fire on an empty frame, or the driver
+    would wait on it forever."""
+    empty = spark.createDataFrame([], "sig_id long, band_idx int, band_key long")
+    stats: dict = {}
+    done = threading.Thread(
+        target=lambda: compare.cap_postings(
+            empty, ["band_idx", "band_key"], 2, stats=stats
+        ),
+        daemon=True,
+    )
+    done.start()
+    done.join(timeout=120)
+    assert not done.is_alive(), "cap_postings blocked on an empty frame"
+    assert stats == {"dropped_keys": 0, "dropped_postings": 0}
 
 
 def test_cap_stats_cost_no_job_when_nothing_is_dropped(spark):

@@ -1,5 +1,6 @@
 """Document-frequency cap: the boilerplate guard for the inverted-index
-pair joins (compare.postings / dedup.minhash_pairs60 / ngram_jaccard_pairs).
+pair joins (compare.cap_postings, applied by compare.shared_key_pairs for
+compare_all_pairs / dedup.minhash_pairs60 / ngram_jaccard_pairs / ...).
 
 A key shared by df documents yields O(df^2) pair rows before any filter —
 the last quadratic blowup at corpus scale.  These tests prove: (1) the cap
@@ -15,9 +16,8 @@ import pyspark.sql.functions as F
 from sourmash_spark.operators import dedup as dedup_ops
 from sourmash_spark.operators.compare import (
     DEFAULT_DF_CAP,
+    cap_postings,
     compare_all_pairs,
-    df_cap_stats,
-    postings,
 )
 
 BOILER = "copyright license header boilerplate text "
@@ -77,9 +77,16 @@ def test_df_cap_stats_reports_dropped_volume(spark):
             )
         ).alias("gram"),
     )
-    dropped = df_cap_stats(grams, df_cap=10, key="gram").collect()
-    assert dropped, "boilerplate grams must be reported"
-    assert all(r["df"] == 30 for r in dropped if "boilerplate" in r["gram"])
+    stats: dict = {}
+    kept = cap_postings(grams, ["gram"], 10, stats=stats)
+    df = grams.toPandas().groupby("gram").size()
+    hot = df[df > 10]
+    assert any("boilerplate" in g for g in hot.index), "boilerplate is hot"
+    assert (hot == 30).all()  # the shared prefix is in every doc
+    assert stats == {
+        "dropped_keys": len(hot), "dropped_postings": int(hot.sum()),
+    }
+    assert kept.count() == int(df.sum() - hot.sum())
 
 
 def test_default_cap_is_noop_below_cap(spark):
@@ -98,7 +105,10 @@ def test_postings_cap_drops_hot_keys(spark):
     sigs = spark.createDataFrame(
         rows, "sig_id long, hashes array<long>, n_hashes int"
     )
-    p = postings(sigs, df_cap=10)
+    p = cap_postings(
+        sigs.select("sig_id", F.explode("hashes").alias("hashval")),
+        ["hashval"], 10,
+    )
     vals = {r["hashval"] for r in p.collect()}
     assert 100 not in vals  # hot key dropped
     assert len(vals) == 40  # per-doc keys survive
@@ -133,26 +143,23 @@ def test_cap_bounds_max_partition_rows(spark):
 
 
 def test_cap_observation_lineage(spark):
-    """cap_postings wires an Observation that reports dropped-key volume
-    with the action, at no extra job cost (ADVICE r2: silent truncation
-    must be visible)."""
-    from pyspark.sql import Observation
-
-    from sourmash_spark.operators.compare import cap_postings
-
+    """cap_postings reports the dropped-key volume through `stats`, read
+    off an Observation on the probe it runs anyway (ADVICE r2: silent
+    truncation must be visible)."""
     rows = [(i, [100, 1000 + i], 2) for i in range(40)]
     sigs = spark.createDataFrame(
         rows, "sig_id long, hashes array<long>, n_hashes int"
     )
     p = sigs.select("sig_id", F.explode("hashes").alias("hashval"))
-    obs = Observation("df_cap")
-    capped = cap_postings(p, ["hashval"], 10, observation=obs)
+    stats: dict = {}
+    capped = cap_postings(p, ["hashval"], 10, stats=stats)
     assert capped.count() == 40  # hot key 100 dropped, 40 per-doc keys stay
-    assert obs.get["dropped_keys"] == 1
-    assert obs.get["dropped_postings"] == 40
+    assert stats == {"dropped_keys": 1, "dropped_postings": 40}
 
-    # no cap -> passthrough, no lineage required
-    assert cap_postings(p, ["hashval"], 0).count() == 80
+    # no cap -> passthrough, nothing dropped
+    stats = {}
+    assert cap_postings(p, ["hashval"], 0, stats=stats).count() == 80
+    assert stats == {"dropped_keys": 0, "dropped_postings": 0}
 
 
 def test_simhash_blockpair_equals_single_chunk(spark):

@@ -124,3 +124,21 @@ def test_rotation_is_stable():
     import __spark_entry__ as e
 
     assert list(e.queries()) == list(e.queries())
+
+
+def test_demotable_tail_fails_loudly():
+    """A misspelled DEMOTABLE name, or too few names to fill the tail past
+    the window, raises instead of silently shrinking the tail."""
+    import pytest
+
+    import __spark_entry__ as e
+
+    q = {f"g{i}": None for i in range(5)}
+    assert list(e._demote_tail(q, ["g1", "g0"], window=3)) == [
+        "g2", "g3", "g4", "g1", "g0",
+    ]
+    with pytest.raises(ValueError, match="no registered gate"):
+        e._demote_tail(q, ["g1", "g_typo"], window=3)
+    with pytest.raises(ValueError, match="fills 1 of the 2"):
+        e._demote_tail(q, ["g1", "g1"], window=3)
+    e.queries()  # the real DEMOTABLE list passes both checks

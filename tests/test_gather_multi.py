@@ -265,38 +265,55 @@ def test_multigather_timing_column(spark, sigs, oracle_sketches):
         assert da == db
 
 
-def test_gather_driver_state_bound(spark, sigs, oracle_sketches):
+def test_gather_driver_state_bound(spark, sigs, oracle_sketches, monkeypatch):
     """VERDICT r3 #5: the candidate fetch is one materialized pass, and the
     driver-memory bound (candidates x sketch hashes x 8 bytes) is enforced
-    BEFORE any hash array reaches the driver."""
-    from sourmash_spark.operators.gather import _gather_rows
+    BEFORE any hash array reaches the driver: past the bound the sweep runs
+    the cluster-side loop instead of collecting the arrays."""
+    from sourmash_spark.operators import gather as gmod
+
+    loops = []
+    for name in ("_greedy_rounds", "_greedy_rounds_cluster"):
+        real = getattr(gmod, name)
+        monkeypatch.setattr(
+            gmod, name,
+            lambda *a, _f=real, _n=name, **k: loops.append(_n) or _f(*a, **k),
+        )
 
     mh = oracle_sketches[0].copy()
     for m in (10, 30, 45):
         mh.merge(oracle_sketches[m])
     qh = u64_to_i64(np.array(mh.mins, dtype=np.uint64)).tolist()
 
-    # strategy="driver": a 1-byte bound must refuse this many-candidate
-    # sweep with the documented error, not OOM the driver
-    with pytest.raises(ValueError, match="driver bound"):
-        _gather_rows(
-            sigs, qh, PARAMS.scaled, PARAMS.ksize, PARAMS.scaled * 3,
-            None, "", "sig_id", False, max_driver_bytes=1,
-            strategy="driver",
-        )
+    # a 1-byte bound keeps this many-candidate sweep off the driver
+    over, _ = gmod._gather_rows(
+        sigs, qh, PARAMS.scaled, PARAMS.ksize, PARAMS.scaled * 3,
+        None, "", "sig_id", False, max_driver_bytes=1,
+    )
+    assert loops == ["_greedy_rounds_cluster"]
 
     # the default bound admits it and the sweep still gathers correctly
-    results, _rem = _gather_rows(
+    loops.clear()
+    results, _rem = gmod._gather_rows(
         sigs, qh, PARAMS.scaled, PARAMS.ksize, PARAMS.scaled * 3,
         None, "", "sig_id", False,
     )
+    assert loops == ["_greedy_rounds"]
     assert results, "bound must not break the normal path"
+    assert len(over) == len(results)
+
+    with pytest.raises(ValueError, match="unknown strategy"):
+        gmod._gather_rows(
+            sigs, qh, PARAMS.scaled, PARAMS.ksize, PARAMS.scaled * 3,
+            None, "", "sig_id", False, strategy="driver",
+        )
 
 
 def test_gather_cluster_strategy_bit_identical(spark, sigs, oracle_sketches):
     """VERDICT r4 #1: the cluster-side per-round loop must produce rows
-    bit-identical to the driver loop — including when strategy='auto'
-    falls back past a tiny forced max_driver_bytes."""
+    bit-identical to the driver loop (strategy='auto' within the default
+    bound) — including when 'auto' falls back past a tiny forced
+    max_driver_bytes."""
     from sourmash_spark.operators.gather import _gather_rows
 
     mh = oracle_sketches[0].copy()
@@ -306,7 +323,7 @@ def test_gather_cluster_strategy_bit_identical(spark, sigs, oracle_sketches):
 
     driver_res, driver_rem = _gather_rows(
         sigs, qh, PARAMS.scaled, PARAMS.ksize, PARAMS.scaled * 3,
-        None, "qmd5", "sig_id", False, strategy="driver",
+        None, "qmd5", "sig_id", False, strategy="auto",
     )
     cluster_res, cluster_rem = _gather_rows(
         sigs, qh, PARAMS.scaled, PARAMS.ksize, PARAMS.scaled * 3,
@@ -334,7 +351,7 @@ def test_gather_cluster_strategy_edge_cases(spark, sigs, oracle_sketches):
     BOTH strategies (schema intact, no crash)."""
     from sourmash_spark.operators.gather import gather
 
-    for strategy in ("driver", "cluster"):
+    for strategy in ("auto", "cluster"):
         # hashes that no db sketch contains -> prefetch yields no candidates
         out = gather(
             spark, sigs, [3, 5, 7], scaled=PARAMS.scaled,
@@ -364,7 +381,7 @@ def test_gather_cluster_strategy_abund_and_ci(spark, sigs, oracle_sketches):
 
     driver_res, _ = _gather_rows(
         sigs, qh, PARAMS.scaled, PARAMS.ksize, PARAMS.scaled * 3,
-        abunds, "qmd5", "sig_id", True, strategy="driver",
+        abunds, "qmd5", "sig_id", True, strategy="auto",
     )
     cluster_res, _ = _gather_rows(
         sigs, qh, PARAMS.scaled, PARAMS.ksize, PARAMS.scaled * 3,
@@ -396,7 +413,7 @@ def test_gather_cluster_compaction_bit_identical(
 
     driver_res, driver_rem = gmod._gather_rows(
         sigs, qh, PARAMS.scaled, PARAMS.ksize, PARAMS.scaled * 3,
-        None, "qmd5", "sig_id", False, strategy="driver",
+        None, "qmd5", "sig_id", False, strategy="auto",
     )
     cluster_res, cluster_rem = gmod._gather_rows(
         sigs, qh, PARAMS.scaled, PARAMS.ksize, PARAMS.scaled * 3,

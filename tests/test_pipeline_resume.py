@@ -348,3 +348,51 @@ def test_compact_increments_then_ingest(spark, corpus, tmp_path):
     ci = {r.sig_id: r.cluster_id for r in inc["clusters"].collect()}
     cf = {r.sig_id: r.cluster_id for r in full["clusters"].collect()}
     assert ci == cf
+
+
+def test_incremental_update_applies_bucket_cap(spark, corpus, tmp_path):
+    """The increment's candidate join sizes band buckets over base ∪
+    increment, like a full run: with a cap that clone families cross, the
+    edges touching an increment id equal a full recompute's."""
+    import pyarrow.parquet as pq
+
+    from sourmash_spark.pipeline import incremental_update
+
+    cfg = PipelineConfig(
+        sketch=CFG.sketch, lsh=CFG.lsh, jaccard_threshold=0.5, bucket_cap=2
+    )
+    base_a = str(tmp_path / "inc_base")
+    base_b = str(tmp_path / "full_base")
+    pdf = corpus.code_files
+    first = pdf[pdf.file_id < 40]
+    extra = pdf[pdf.file_id >= 40]
+    new_ids = set(extra.file_id)
+
+    def df_of(p):
+        return spark.createDataFrame(p).withColumnRenamed("file_id", "sig_id")
+
+    run_pipeline(spark, df_of(first), base_a, cfg)
+    inc = incremental_update(spark, df_of(extra), base_a, cfg)
+    full = run_pipeline(spark, df_of(pdf), base_b, cfg)
+
+    # the cap really removes buckets holding increment ids
+    bands = pq.read_table(
+        ckpt.stage_path(base_b, "bands", cfg.config_hash())
+    ).to_pandas()
+    sizes = bands.groupby(["band_idx", "band_key"])["sig_id"].agg(list)
+    hot = sizes[sizes.map(len) > cfg.bucket_cap]
+    assert any(new_ids & set(ids) for ids in hot), "cap must bite the batch"
+
+    def touching(edges):
+        return {
+            (r.sig_id_a, r.sig_id_b) for r in edges.collect()
+            if r.sig_id_a in new_ids or r.sig_id_b in new_ids
+        }
+
+    want = touching(full["edges"])
+    assert want, "the increment must form edges"
+    assert touching(inc["edges"]) == want
+    written = spark.read.parquet(
+        ckpt.stage_path(base_a, "edges", cfg.config_hash()) + "_inc"
+    )
+    assert touching(written) == want
