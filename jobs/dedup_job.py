@@ -35,8 +35,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--band-size", type=int, default=2)
     ap.add_argument("--threshold", type=float, default=0.5)
     ap.add_argument("--bucket-cap", type=int, default=500)
-    ap.add_argument("--bucket-signatures", type=int, default=0,
-                    help="bucket the signatures checkpoint by sig_id into N buckets")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -60,7 +58,6 @@ def main(argv: list[str] | None = None) -> int:
         lsh=LSHParams(num_bands=args.bands, band_size=args.band_size),
         jaccard_threshold=args.threshold,
         bucket_cap=args.bucket_cap,
-        bucket_signatures=args.bucket_signatures,
     )
 
     src = (

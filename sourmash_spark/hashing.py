@@ -305,7 +305,7 @@ def canonical_dna_windows(
     views over the batch buffer — no per-kmer work.  Returns
     (canonical_windows uint8[n,k], valid bool[n]) where valid marks windows
     made only of A/C/G/T (invalid ones are skipped, the reference's
-    force=True behavior, signature.rs:274-285)."""
+    `force` mode, signature.rs:274-285)."""
     if arr.size < k:
         return (
             np.empty((0, k), dtype=np.uint8),

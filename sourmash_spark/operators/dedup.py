@@ -1015,9 +1015,10 @@ def exact_substring_update(
     "first" means ingest order — the semantics a daily-ingest deployment
     actually wants.
 
-    Store layout follows `pipeline.incremental_update`'s convention:
-    `{store_dir}/increment=k` parquet subdirs of distinct `_k` keys (the
-    8-byte xxhash64 gram keys on the scale path); each call appends ONLY
+    The store is an increments dir of `sources/checkpoint.py`, the layout
+    `pipeline.incremental_update` uses: one committed increment per call,
+    each holding distinct `_k` keys (the 8-byte xxhash64 gram keys on the
+    scale path); each call appends ONLY
     keys not already stored, so the store stays globally distinct and a
     call's write volume is batch-proportional.  On a real deployment the
     store is an Iceberg table and the append is a MERGE; reading is one
@@ -1028,35 +1029,26 @@ def exact_substring_update(
     batch-addressed write), else an eager localCheckpoint — BEFORE the
     batch's keys are appended to the store, so a failed/abandoned caller
     action can no longer leave the store poisoned with its own batch's
-    keys.  Store increments without a `_SUCCESS` marker (a crashed
-    partial append) are ignored on read and safely overwritten.
+    keys.  An uncommitted store increment (a crashed partial append) is
+    ignored on read and safely overwritten.
     `increment_name` overrides the sequential increment naming so replays
-    of the same batch (streaming at-least-once) target the same path.
+    of the same batch (streaming at-least-once) target the same path; a
+    replay under a committed name is marked against the store without
+    that increment, then replaces it.
     """
-    import os
+    from ..sources import checkpoint as ckpt
 
     L = min_len
     spark = docs_batch.sparkSession
     grams = _doc_grams(docs_batch, L, id_col, text_col, hash_grams)
 
-    incs = []
-    if os.path.isdir(store_dir):
-        incs = sorted(
-            d
-            for d in os.listdir(store_dir)
-            if d.startswith("increment=")
-            and os.path.exists(os.path.join(store_dir, d, "_SUCCESS"))
-        )
+    incs = [
+        n for n in ckpt.committed_increments(store_dir) if n != increment_name
+    ]
     # explicit schema: an increment whose batch brought nothing novel is
     # an empty parquet dir, which schema inference cannot read
     key_schema = f"_k {'long' if hash_grams else 'string'}"
-    stored = (
-        spark.read.schema(key_schema).parquet(
-            *(os.path.join(store_dir, d) for d in incs)
-        )
-        if incs
-        else None
-    )
+    stored = ckpt.read_increments(spark, store_dir, key_schema, incs)
 
     # intra-batch keep-first marking (same shape as the batch operator)
     dup = (
@@ -1101,7 +1093,5 @@ def exact_substring_update(
     if stored is not None:
         novel = novel.join(stored, "_k", "left_anti")
     name = increment_name if increment_name is not None else str(len(incs))
-    novel.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"increment={name}")
-    )
+    ckpt.write_increment(store_dir, name, novel)
     return out

@@ -89,7 +89,7 @@ class MinHash:
         """Canonical DNA path: ASCII-uppercase, hash min(kmer, revcomp)
         per window (signature.rs:268-306, COMPLEMENT encodings.rs:85-101);
         windows containing any non-ACGT byte are skipped — the reference's
-        force=True semantics for N/invalid bases."""
+        `force` mode for N/invalid bases."""
         if isinstance(text, str):
             text = text.encode("utf-8")
         data = bytes(b - 32 if 97 <= b <= 122 else b for b in text)

@@ -6,7 +6,10 @@ code_files --sketch--> signatures --LSH bands--> candidate_pairs
 Every stage checkpoints to a config-hash-keyed table and appends a
 lineage record with its row count and per-file counts, taken from the
 written parquet footers (sources/checkpoint.py); a killed run resumes by
-skipping completed stages.  Stage plans:
+skipping completed stages.  `incremental_update` adds a batch of new files
+as one committed increment of the signatures, bands and edges stages, and
+`compact_increments` folds the increments back into the stage tables; the
+layout and commit rule of both live in sources/checkpoint.py.  Stage plans:
 
 * sketch: narrow Arrow-vectorized map, zero shuffle; scales with splits.
 * bands: narrow projection + posexplode, zero shuffle.
@@ -28,6 +31,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+from pyspark.sql.types import StructType
 
 from .params import LSHParams, SketchParams
 from .sketch import sketch_signatures, with_sha256
@@ -43,16 +47,14 @@ class PipelineConfig:
     jaccard_threshold: float = 0.5
     bucket_cap: int = 200
     sig_id: str = "sig_id"
-    # >0: write the signatures checkpoint as a table bucketed by sig_id
-    # into this many buckets — verify-stage joins then skip the shuffle on
-    # the (big) signatures side
-    bucket_signatures: int = 0
 
     def config_hash(self) -> str:
+        # "|b0" was the signature-bucketing knob (always 0 now); kept so
+        # existing checkpoints resume under the same hash
         blob = (
             f"{self.sketch.config_hash()}|{self.lsh.num_bands}x"
             f"{self.lsh.band_size}|{self.jaccard_threshold}|{self.bucket_cap}"
-            f"|b{self.bucket_signatures}"
+            "|b0"
         )
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
@@ -73,37 +75,17 @@ def run_pipeline(
     cfg = config or PipelineConfig(SketchParams(), LSHParams())
     ch = cfg.config_hash()
     sid = cfg.sig_id
-    keep = keep_cols if keep_cols is not None else [
-        c for c in code_files.columns if c != "content"
-    ]
     out: dict[str, DataFrame] = {}
 
     sigs, _ = ckpt.run_stage(
         spark, base_dir, "signatures", ch,
-        lambda: sketch_signatures(
-            with_sha256(code_files), cfg.sketch,
-            keep_cols=keep + ["sha256"],
-        ),
-        bucket_by=(
-            ([cfg.sig_id], cfg.bucket_signatures)
-            if cfg.bucket_signatures
-            else None
-        ),
+        lambda: _sketch(code_files, cfg, keep_cols),
     )
     out["signatures"] = sigs
     if stop_after == "signatures":
         return out
 
-    # bands persist as their own stage table — the postings/RevIndex
-    # analog (SURVEY §2.1): incremental_update reads them back instead of
-    # re-banding the whole corpus per increment, and a resumed run picks
-    # up after banding.  Narrow table: (sig_id, band_idx, band_key).
-    bands, _ = ckpt.run_stage(
-        spark, base_dir, "bands", ch,
-        lambda: lsh_ops.band_signatures(
-            sigs, cfg.lsh, cfg.sketch.scaled, sig_id=sid
-        ),
-    )
+    bands = _bands_stage(spark, base_dir, cfg, sigs)
     out["bands"] = bands
     if stop_after == "bands":
         return out
@@ -142,12 +124,56 @@ def run_pipeline(
     return out
 
 
+def _sketch(
+    files: DataFrame, cfg: PipelineConfig, keep_cols: list[str] | None
+) -> DataFrame:
+    """Signatures of `files`, keeping `keep_cols` (default: every column
+    but the content) plus the content's sha256."""
+    keep = keep_cols if keep_cols is not None else [
+        c for c in files.columns if c != "content"
+    ]
+    return sketch_signatures(
+        with_sha256(files), cfg.sketch, keep_cols=keep + ["sha256"]
+    )
+
+
+def _bands_stage(
+    spark: SparkSession, base_dir: str, cfg: PipelineConfig, sigs: DataFrame
+) -> DataFrame:
+    """The `bands` stage table — the postings/RevIndex analog (SURVEY
+    §2.1): incremental_update reads it back instead of re-banding the
+    whole corpus per increment, and a resumed run picks up after banding.
+    Narrow table: (sig_id, band_idx, band_key).  `sigs` are the base
+    signatures; a checkpoint written before the stage existed gets it on
+    first use."""
+    bands, _ = ckpt.run_stage(
+        spark, base_dir, "bands", cfg.config_hash(),
+        lambda: lsh_ops.band_signatures(
+            sigs, cfg.lsh, cfg.sketch.scaled, sig_id=cfg.sig_id
+        ),
+    )
+    return bands
+
+
+def _with_increments(
+    spark: SparkSession, base: DataFrame, inc_path: str, names: list[str],
+    schema: StructType | None = None,
+) -> DataFrame:
+    """A base stage table ∪ its named increments (read with `schema`,
+    default the base's)."""
+    inc = ckpt.read_increments(spark, inc_path, schema or base.schema, names)
+    if inc is None:
+        return base
+    return base.unionByName(inc, allowMissingColumns=True)
+
+
 def incremental_update(
     spark: SparkSession,
     new_files: DataFrame,
     base_dir: str,
     config: PipelineConfig | None = None,
     keep_cols: list[str] | None = None,
+    increment_name: str | None = None,
 ) -> dict[str, DataFrame]:
     """Add NEW files to an existing pipeline state without recomputing the
     corpus — the daily-ingest path at 100 TB.
@@ -155,8 +181,8 @@ def incremental_update(
     Work done is proportional to the new data:
     * sketch only the new files (narrow map over the increment);
     * band only the new signatures — the corpus bands are READ BACK from
-      the `bands` stage table (recomputed once as a fallback for
-      checkpoints written before the bands stage existed);
+      the `bands` stage table (written once from the base signatures for
+      checkpoints that predate the bands stage);
     * candidate pairs = batch x (old ∪ all increments) band join — the
       old x old pair space is never re-enumerated, and earlier increments
       are not re-joined either (their pairs were emitted by their own
@@ -166,69 +192,48 @@ def incremental_update(
     * clusters re-converge over (old edges ∪ new edges) — edge tables are
       O(duplicates), tiny next to the corpus.
 
-    Stage tables are versioned under ``{stage}={hash}/increment=k`` with
-    the union view read back; equivalent to Iceberg MERGE/append.
+    The batch lands as increment `increment_name` of the signatures, bands
+    and edges stages, written in that order (sources/checkpoint.py); the
+    edges write commits it, and signatures and bands are read only under
+    names committed there.  The default name is the number of committed
+    increments, so a call that crashed before its commit is overwritten
+    by the next one, not duplicated; a replay under the same name (a
+    streaming batch id) replaces the increment.  Equivalent to an Iceberg
+    MERGE/append per stage.
     """
     from .operators.compare import shared_key_pairs
-    from .operators.lsh import band_signatures, verify_pairs
 
     cfg = config or PipelineConfig(SketchParams(), LSHParams())
     ch = cfg.config_hash()
     sid = cfg.sig_id
-    keep = keep_cols if keep_cols is not None else [
-        c for c in new_files.columns if c != "content"
-    ]
+    sig_inc, bands_inc, edges_inc = (
+        ckpt.increments_path(base_dir, s, ch)
+        for s in ("signatures", "bands", "edges")
+    )
+    done = ckpt.committed_increments(edges_inc)
+    name = increment_name if increment_name is not None else str(len(done))
+    # a replay under a committed name replaces that increment; THIS batch
+    # is the only "new" side of the candidate join, and earlier increments
+    # only ride along as stored rows on the old side
+    done = [n for n in done if n != name]
 
     old_sigs = spark.read.parquet(ckpt.stage_path(base_dir, "signatures", ch))
-    old_edges = spark.read.parquet(ckpt.stage_path(base_dir, "edges", ch))
-
-    batch_sigs = sketch_signatures(
-        with_sha256(new_files), cfg.sketch, keep_cols=keep + ["sha256"]
+    stored_bands = _bands_stage(spark, base_dir, cfg, old_sigs)
+    batch_sigs = ckpt.write_increment(
+        sig_inc, name, _sketch(new_files, cfg, keep_cols)
     )
-    # versioned increments (increment=k subdir per call, partition-style
-    # naming): THIS batch is the only "new" side of the candidate join, so
-    # per-call work is proportional to the batch — earlier increments are
-    # never re-joined (their pairs were emitted by their own calls) and
-    # only ride along as stored rows on the old side.
-    inc_path = ckpt.stage_path(base_dir, "signatures", ch) + "_inc"
-    k = 0
-    if os.path.isdir(inc_path):
-        k = len(
-            [d for d in os.listdir(inc_path) if d.startswith("increment=")]
-        )
-    batch_sigs.write.parquet(f"{inc_path}/increment={k}")
-    batch_sigs = spark.read.parquet(f"{inc_path}/increment={k}")
-    inc_sigs = spark.read.parquet(inc_path)
-
-    all_sigs = old_sigs.unionByName(
-        inc_sigs.drop("increment"), allowMissingColumns=True
+    all_sigs = _with_increments(
+        spark, old_sigs, sig_inc, done + [name], batch_sigs.schema
     )
-    # corpus bands: base stage table + per-increment band tables, all read
-    # back — increment-proportional work.  Banding is row-wise
-    # deterministic, so stored ∪ banded-batch is bit-identical to
-    # re-banding all_sigs (which the fallback does for checkpoints that
-    # predate the bands stage, except for the batch written here).
-    bands_inc = ckpt.stage_path(base_dir, "bands", ch) + "_inc"
-    band_signatures(
+    # banding is row-wise deterministic, so stored ∪ banded-batch is
+    # bit-identical to re-banding all_sigs
+    batch_bands = ckpt.write_increment(bands_inc, name, lsh_ops.band_signatures(
         batch_sigs, cfg.lsh, cfg.sketch.scaled, sig_id=sid
-    ).select(sid, "band_idx", "band_key").write.parquet(
-        f"{bands_inc}/increment={k}"
-    )
-    inc_bands = spark.read.parquet(bands_inc)
-    bands_path = ckpt.stage_path(base_dir, "bands", ch)
-    if ckpt.is_complete(bands_path):
-        stored_bands = spark.read.parquet(bands_path)
-    else:
-        stored_bands = band_signatures(
-            old_sigs.unionByName(
-                inc_sigs.filter(F.col("increment") != k).drop("increment"),
-                allowMissingColumns=True,
-            ),
-            cfg.lsh, cfg.sketch.scaled, sig_id=sid,
-        )
-        inc_bands = inc_bands.filter(F.col("increment") == k)
-    all_bands = stored_bands.select(sid, "band_idx", "band_key").unionByName(
-        inc_bands, allowMissingColumns=True
+    ))
+    all_bands = _with_increments(
+        spark, stored_bands, bands_inc, done
+    ).withColumn("_new", F.lit(False)).unionByName(
+        batch_bands.withColumn("_new", F.lit(True))
     )
 
     # pairs touching at least one new signature, under the same boilerplate
@@ -237,20 +242,17 @@ def incremental_update(
     # buckets would diverge from a full recompute) and its hot set leaves
     # both sides of the batch x corpus join
     cands = shared_key_pairs(
-        all_bands.withColumn("_new", F.col("increment").eqNullSafe(k)),
-        ["band_idx", "band_key"], sid, cfg.bucket_cap, new_col="_new",
+        all_bands, ["band_idx", "band_key"], sid, cfg.bucket_cap,
+        new_col="_new",
     ).withColumnsRenamed({"id_a": "sig_id_a", "id_b": "sig_id_b"})
-    new_edges = verify_pairs(
+    new_edges = ckpt.write_increment(edges_inc, name, lsh_ops.verify_pairs(
         cands, all_sigs, scaled=cfg.sketch.scaled, ksize=cfg.sketch.ksize,
         threshold=cfg.jaccard_threshold, sig_id=sid,
-    )
-    edges_inc = ckpt.stage_path(base_dir, "edges", ch) + "_inc"
-    new_edges.write.mode("append").parquet(edges_inc)
-    all_edges = old_edges.unionByName(
-        spark.read.parquet(edges_inc)
+    ))
+    all_edges = _with_increments(
+        spark, spark.read.parquet(ckpt.stage_path(base_dir, "edges", ch)),
+        edges_inc, done + [name], new_edges.schema,
     ).dropDuplicates(["sig_id_a", "sig_id_b"])
-
-    from .operators import cluster as cluster_ops
 
     clusters = cluster_ops.assign_clusters(all_sigs, all_edges, sig_id=sid)
     return {
@@ -267,97 +269,67 @@ def compact_increments(
 ) -> dict[str, int]:
     """Fold accumulated ingest increments back into the base stage tables
     — the Iceberg-compaction analog.  Months of daily `incremental_update`
-    calls leave one increment=k subdir per call; at cluster scale that is
-    a many-small-files problem for every subsequent scan.  Compaction
-    rewrites signatures/bands/edges as single stage tables (increments
-    folded in), refreshes the clusters stage from the compacted state,
-    removes the _inc dirs, and drops the stale candidates stage (its
-    pair enumeration is superseded by the folded edges).  Subsequent
-    incremental_update calls start from a clean base.
+    calls leave one increment per call and stage; at cluster scale that
+    is a many-small-files problem for every subsequent scan.  Compaction
+    rewrites signatures/bands/edges as single stage tables (the committed
+    increments folded in, the same view `incremental_update` reads),
+    refreshes the clusters stage from the compacted state, removes the
+    _inc dirs (an uncommitted increment with them), and drops the stale
+    candidates stage (its pair enumeration is superseded by the folded
+    edges).  Subsequent incremental_update calls start from a clean base.
 
     Returns {stage: n_rows} for the rewritten stages.  The swap is
     write-to-tmp + rename: crash-safe in the sense that the base table is
-    replaced only after the compacted write (and its _SUCCESS) completes;
+    replaced only after the compacted write (and its commit) completes;
     on a real object store the catalog swap (Iceberg commit) plays this
     role.
     """
     import shutil
     import time as _time
 
-    from .operators import cluster as cluster_ops
-    from .operators.lsh import band_signatures
-
     cfg = config or PipelineConfig(SketchParams(), LSHParams())
     ch = cfg.config_hash()
     sid = cfg.sig_id
     counts: dict[str, int] = {}
 
-    def swap_in(path: str, df: DataFrame) -> int:
+    def swap_in(stage: str, df: DataFrame) -> DataFrame:
+        path = ckpt.stage_path(base_dir, stage, ch)
         tmp = path + "_compacting"
         if os.path.isdir(tmp):
             shutil.rmtree(tmp)
         df.write.parquet(tmp)  # materializes BEFORE sources are removed
-        n = sum(p["rows"] for p in ckpt.partition_metrics(tmp))
+        counts[stage] = sum(p["rows"] for p in ckpt.partition_metrics(tmp))
         if os.path.isdir(path):
             shutil.rmtree(path)
         os.rename(tmp, path)
-        return n
+        return spark.read.schema(df.schema).parquet(path)
 
     t0 = _time.time()
-    sig_path = ckpt.stage_path(base_dir, "signatures", ch)
-    bands_path = ckpt.stage_path(base_dir, "bands", ch)
-    edges_path = ckpt.stage_path(base_dir, "edges", ch)
-    sig_inc, bands_inc, edges_inc = (
-        sig_path + "_inc", bands_path + "_inc", edges_path + "_inc"
+    incs = {
+        s: ckpt.increments_path(base_dir, s, ch)
+        for s in ("signatures", "bands", "edges")
+    }
+    done = ckpt.committed_increments(incs["edges"])
+
+    def base(stage: str) -> DataFrame:
+        return spark.read.parquet(ckpt.stage_path(base_dir, stage, ch))
+
+    sigs = base("signatures")
+    # read (or write, for a pre-bands-stage checkpoint) the base bands
+    # BEFORE the signatures swap folds the increments in
+    bands = _bands_stage(spark, base_dir, cfg, sigs)
+    sigs = swap_in(
+        "signatures", _with_increments(spark, sigs, incs["signatures"], done)
     )
+    swap_in("bands", _with_increments(spark, bands, incs["bands"], done))
+    edges = swap_in("edges", _with_increments(
+        spark, base("edges"), incs["edges"], done
+    ).dropDuplicates(["sig_id_a", "sig_id_b"]))
+    swap_in("clusters", cluster_ops.assign_clusters(sigs, edges, sig_id=sid))
 
-    # a bucket_signatures config registered a catalog table over this
-    # path; the compacted rewrite is plain parquet, so drop the (external,
-    # metadata-only) table — readers fall back to the parquet path
-    sig_table = f"ckpt_signatures_{ch}"
-    if spark.catalog.tableExists(sig_table):
-        spark.sql(f"DROP TABLE IF EXISTS {sig_table}")
-
-    sigs = spark.read.parquet(sig_path)
-    if os.path.isdir(sig_inc):
-        sigs = sigs.unionByName(
-            spark.read.parquet(sig_inc).drop("increment"),
-            allowMissingColumns=True,
-        )
-    counts["signatures"] = swap_in(sig_path, sigs)
-    sigs = spark.read.schema(sigs.schema).parquet(sig_path)
-
-    if ckpt.is_complete(bands_path):
-        bands = spark.read.parquet(bands_path).select(
-            sid, "band_idx", "band_key"
-        )
-        if os.path.isdir(bands_inc):
-            bands = bands.unionByName(
-                spark.read.parquet(bands_inc).drop("increment")
-            )
-    else:
-        # pre-bands-stage checkpoint: upgrade it here
-        bands = band_signatures(
-            sigs, cfg.lsh, cfg.sketch.scaled, sig_id=sid
-        )
-    counts["bands"] = swap_in(bands_path, bands)
-
-    edges = spark.read.parquet(edges_path)
-    if os.path.isdir(edges_inc):
-        edges = edges.unionByName(
-            spark.read.parquet(edges_inc)
-        ).dropDuplicates(["sig_id_a", "sig_id_b"])
-    counts["edges"] = swap_in(edges_path, edges)
-    edges = spark.read.schema(edges.schema).parquet(edges_path)
-
-    clusters_path = ckpt.stage_path(base_dir, "clusters", ch)
-    counts["clusters"] = swap_in(
-        clusters_path, cluster_ops.assign_clusters(sigs, edges, sig_id=sid)
-    )
-
-    for p in (sig_inc, bands_inc, edges_inc):
-        if os.path.isdir(p):
-            shutil.rmtree(p)
+    for inc in incs.values():
+        if os.path.isdir(inc):
+            shutil.rmtree(inc)
     cands_path = ckpt.stage_path(base_dir, "candidates", ch)
     if os.path.isdir(cands_path):
         shutil.rmtree(cands_path)  # stale pair enumeration — derivable

@@ -62,7 +62,7 @@ def _segment_window_hashes(
     masking 8-byte hashes beats gathering k-byte windows.  With
     ``dna=True`` windows are canonical min(kmer, revcomp) and windows
     containing non-ACGT bases are additionally dropped (signature.rs:
-    268-306 / force=True)."""
+    268-306, `force` mode)."""
     empty = np.empty(0, np.uint64)
     if not segments:
         return []

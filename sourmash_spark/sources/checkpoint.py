@@ -1,13 +1,23 @@
-"""Checkpointed stage tables + a stage lineage log — the resumability layer
-required by the north rule (the reference has none; it re-runs, see SURVEY §4).
+"""Checkpointed stage tables, ingest increments and a stage lineage log —
+the resumability layer required by the north rule (the reference has none;
+it re-runs, see SURVEY §4).
 
 Production shape: each stage is an Iceberg table keyed by config hash, written
-with idempotent MERGE; partition-level lineage rows make mid-pipeline restarts
-skip completed work.  In this sandbox (no Iceberg runtime jar) the same
-contract is implemented over parquet directories:
+with idempotent MERGE/append; partition-level lineage rows make mid-pipeline
+restarts skip completed work.  In this sandbox (no Iceberg runtime jar) the
+same contract is implemented over parquet directories, and this module is the
+only code that knows the on-disk layout:
 
 * a stage's output lives at ``{base}/{stage}={config_hash}`` with Spark's
   atomic ``_SUCCESS`` marker — the commit point;
+* an ingest increment of a stage lives at
+  ``{base}/{stage}={config_hash}_inc/increment={name}``, written with
+  overwrite (a replay of the same name replaces it) and committed by its own
+  ``_SUCCESS``.  A caller that writes several stages per increment picks one
+  of them as the commit (the pipeline uses its edges) and reads the others
+  only under the names committed there, so a crash between the writes leaves
+  nothing visible and the re-run overwrites it.  Any other visible entry in
+  an increments dir is an error, not data;
 * every stage run appends one event to ``{base}/_lineage/``: a JSON-lines
   file the driver writes under a dot-prefixed temp name and then renames
   into place, so a reader sees a whole event or none of it.  Parquet rows
@@ -16,8 +26,8 @@ contract is implemented over parquet directories:
   sees it;
 * the bookkeeping starts no Spark job: a record's row count and
   per-file counts come from the parquet footers of the files just written,
-  and a fresh stage is read back with the schema of the frame it wrote
-  (no schema-inference job);
+  and a fresh stage or increment is read back with the schema of the frame
+  it wrote (no schema-inference job);
 * ``run_stage`` skips recompute iff the marker exists (kill the job between
   stages and re-run: finished stages are read back, unfinished re-execute).
 """
@@ -33,10 +43,15 @@ from collections.abc import Callable
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+from pyspark.sql.types import StructType
 
 
 def stage_path(base: str, stage: str, config_hash: str) -> str:
     return os.path.join(base, f"{stage}={config_hash}")
+
+
+def increments_path(base: str, stage: str, config_hash: str) -> str:
+    return stage_path(base, stage, config_hash) + "_inc"
 
 
 def is_complete(path: str) -> bool:
@@ -107,10 +122,9 @@ def read_lineage(spark: SparkSession, base: str) -> DataFrame:
 def partition_metrics(path: str) -> list[dict]:
     """Per-file row counts of a written stage, read from the parquet
     footers (no Spark job) — the skew evidence the north rule asks to
-    measure, not assume.  Spark writes one file per write task (per task
-    and partition value under ``partitionBy``, per task and bucket under
-    ``bucketBy``), so these are the sizes of the write tasks' outputs,
-    not of the splits a later read would plan."""
+    measure, not assume.  Spark writes one file per write task, so these
+    are the sizes of the write tasks' outputs, not of the splits a later
+    read would plan."""
     out = []
     for root, dirs, files in os.walk(path):
         dirs[:] = sorted(filter(_visible, dirs))
@@ -126,15 +140,57 @@ def partition_metrics(path: str) -> list[dict]:
     return out
 
 
+def _write(path: str, df: DataFrame) -> DataFrame:
+    """Overwrite ``path`` with ``df`` and read it back with ``df``'s
+    schema (no inference job)."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def committed_increments(path: str) -> list[str]:
+    """Names ``k`` of the committed ``increment=k`` dirs under ``path`` (a
+    stage's ``_inc`` dir or another increments dir; none if it does not
+    exist).  An increment without
+    ``_SUCCESS`` is a crashed write and is left out.  Raises ValueError
+    on any other visible entry, since a reader would otherwise skip data
+    it cannot place."""
+    if not os.path.isdir(path):
+        return []
+    names = []
+    for d in sorted(filter(_visible, os.listdir(path))):
+        inc = os.path.join(path, d)
+        if not (d.startswith("increment=") and os.path.isdir(inc)):
+            raise ValueError(f"{inc}: not an increment=<name> dir")
+        if is_complete(inc):
+            names.append(d[len("increment="):])
+    return names
+
+
+def write_increment(path: str, name: str, df: DataFrame) -> DataFrame:
+    """Write ``df`` as increment ``name`` under the increments dir ``path``
+    (overwrite: a replay of the same name replaces it); returns it read
+    back."""
+    return _write(os.path.join(path, f"increment={name}"), df)
+
+
+def read_increments(
+    spark: SparkSession, path: str, schema: StructType | str, names: list[str]
+) -> DataFrame | None:
+    """The named increments under ``path`` as one frame read with
+    ``schema`` (an increment may hold no file), or None for no names."""
+    if not names:
+        return None
+    return spark.read.schema(schema).parquet(
+        *(os.path.join(path, f"increment={n}") for n in names)
+    )
+
+
 def run_stage(
     spark: SparkSession,
     base: str,
     stage: str,
     config_hash: str,
     build: Callable[[], DataFrame],
-    partition_by: list[str] | None = None,
-    bucket_by: tuple[list[str], int] | None = None,
-    force: bool = False,
     lineage: dict | None = None,
 ) -> tuple[DataFrame, bool]:
     """Materialize `build()` at the stage path unless already complete.
@@ -143,43 +199,14 @@ def run_stage(
     Reading back (rather than reusing the in-memory plan) makes every stage
     restartable and cuts lineage for downstream stages.
 
-    `bucket_by=(cols, n)` writes a bucketed table (parquet at the stage
-    path, metadata in the session catalog): downstream equi-joins on the
-    bucket columns skip the shuffle on this side — the Spark-native
-    replacement for the reference's on-disk inverted indexes (SURVEY §4).
-    On a real cluster the catalog (Hive/Iceberg) persists the bucketing
-    across jobs; the local session catalog loses it on restart, in which
-    case resume falls back to a plain parquet read (still correct).
-
     `lineage`: extra fields for this run's lineage record; `build()` may
     fill it, since it is read only after the write.
     """
     path = stage_path(base, stage, config_hash)
-    table = f"ckpt_{stage}_{config_hash}"
-    if is_complete(path) and not force:
-        if bucket_by and spark.catalog.tableExists(table):
-            return spark.read.table(table), True
+    if is_complete(path):
         return spark.read.parquet(path), True
     t0 = time.time()
-    df = build()
-    if bucket_by:
-        cols, n = bucket_by
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .option("path", path)
-            .bucketBy(n, *cols)
-            .sortBy(*cols)
-            .saveAsTable(table)
-        )
-        out = spark.read.table(table)
-    else:
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        out = spark.read.schema(df.schema).parquet(path)
+    out = _write(path, build())
     parts = partition_metrics(path)
     _append_lineage(
         base,

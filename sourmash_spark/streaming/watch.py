@@ -135,21 +135,28 @@ def stream_ingest(
 
     `foreachBatch` is the right tool here (not a stateful operator): each
     batch is a bounded increment against persistent stage TABLES, and the
-    batch work is itself a multi-stage batch plan.  The streaming
-    checkpoint gives exactly-once batch ids, but the increment is NOT
-    idempotent: `incremental_update` numbers increments by listing the
-    existing `increment=k` dirs, so a micro-batch replayed after a crash
-    (between its writes and the streaming commit) lands as increment k+1
-    and duplicates its signatures.
+    batch work is itself a multi-stage batch plan.  foreachBatch is
+    AT-LEAST-ONCE — a batch whose writes finished but whose streaming
+    commit did not replays — so the increment is named `b{batch_id:09d}`:
+    a replay of a committed batch is skipped, and a replay after a crash
+    before the increment's commit overwrites it (sources/checkpoint.py),
+    so a batch's signatures are stored once either way.
 
     Returns the StreamingQuery (caller awaits/stops)."""
     from ..pipeline import incremental_update
+    from ..sources import checkpoint as ckpt
+
+    edges_inc = ckpt.increments_path(
+        base_dir, "edges", config.config_hash()
+    )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        name = f"b{batch_id:09d}"
+        if name in ckpt.committed_increments(edges_inc) or batch_df.isEmpty():
+            return  # a replay of a committed batch, or nothing to add
         incremental_update(
-            batch_df.sparkSession, batch_df, base_dir, config
+            batch_df.sparkSession, batch_df, base_dir, config,
+            increment_name=name,
         )
 
     return (
@@ -186,10 +193,10 @@ def stream_substring_ingest(
     * output goes to `{out_dir}/ingest_batch={batch_id}` with
       mode("overwrite") (a plain `spark.read.parquet(out_dir)` sees the
       union, with ingest_batch as a partition column);
-    * the store increment is named `increment=b{batch_id}` and written
+    * the store increment is named `b{batch_id}` and written
       ONLY AFTER the output commit succeeds
       (`exact_substring_update(out_writer=..., increment_name=...)`);
-    * a replay of a fully-committed batch (its increment has _SUCCESS)
+    * a replay of a fully-committed batch (its increment is committed)
       is skipped outright; a replay after a crash BEFORE the store
       append recomputes against the unchanged store — identical rows —
       and overwrites both paths.
@@ -222,12 +229,11 @@ def _substring_batch_handler(
     import os
 
     from ..operators.dedup import exact_substring_update
+    from ..sources import checkpoint as ckpt
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         inc_name = f"b{batch_id:09d}"
-        if os.path.exists(
-            os.path.join(store_dir, f"increment={inc_name}", "_SUCCESS")
-        ):
+        if inc_name in ckpt.committed_increments(store_dir):
             return  # replay of a fully-committed batch
         if batch_df.isEmpty():
             return

@@ -1,7 +1,9 @@
 """Stage checkpoints keep their lineage without extra Spark jobs: a fresh
 stage runs only its write, the record's counts come from the parquet
 footers, the log is crash-safe and still reads the older parquet rows,
-and the candidates record carries the bucket_cap drop volume."""
+the candidates record carries the bucket_cap drop volume, and an ingest
+increment and its compaction read their increments without inference
+jobs."""
 
 from __future__ import annotations
 
@@ -17,7 +19,9 @@ import pytest
 from sourmash_spark.operators import compare
 from sourmash_spark.operators.lsh import candidate_pairs
 from sourmash_spark.params import LSHParams, SketchParams
-from sourmash_spark.pipeline import PipelineConfig, run_pipeline
+from sourmash_spark.pipeline import (
+    PipelineConfig, compact_increments, incremental_update, run_pipeline,
+)
 from sourmash_spark.sources import checkpoint as ckpt
 
 
@@ -214,3 +218,32 @@ def test_candidates_lineage_records_bucket_cap_drops(spark, corpus, tmp_path):
     assert recs["candidates"].bucket_cap_dropped_keys == len(hot)
     assert recs["candidates"].bucket_cap_dropped_postings == int(hot.sum())
     assert recs["bands"].bucket_cap_dropped_keys is None
+
+
+def test_increment_and_compaction_job_counts(spark, corpus, tmp_path):
+    """Increments are written and read back with the written frame's
+    schema, so an ingest and a compaction start no inference job per
+    increment: at most 18 and 12 jobs on the synthetic corpus."""
+    cfg = PipelineConfig(
+        sketch=SketchParams(ksize=21, scaled=50),
+        lsh=LSHParams(num_bands=16, band_size=2),
+        jaccard_threshold=0.5,
+    )
+    base = str(tmp_path)
+    pdf = corpus.code_files
+
+    def df_of(p):
+        return spark.createDataFrame(p).withColumnRenamed("file_id", "sig_id")
+
+    run_pipeline(spark, df_of(pdf[pdf.file_id < 30]), base, cfg)
+    for part in (pdf[(pdf.file_id >= 30) & (pdf.file_id < 45)],
+                 pdf[pdf.file_id >= 45]):
+        batch = df_of(part)
+        _, n_jobs = _jobs(
+            spark,
+            lambda: incremental_update(spark, batch, base, cfg)["clusters"].count(),
+        )
+        assert n_jobs <= 18
+    counts, n_jobs = _jobs(spark, lambda: compact_increments(spark, base, cfg))
+    assert counts["signatures"] == len(pdf)
+    assert n_jobs <= 12

@@ -89,6 +89,22 @@ def test_resume_skips_completed_stages(spark, corpus, base_dir):
     assert os.path.getmtime(os.path.join(sig_path, "_SUCCESS")) == mtime_before
 
 
+def test_config_hash_is_stable():
+    """Existing checkpoints resume: the stage-dir hash of the default and
+    of the deploy job's config (k21, scaled 50, 16x2 bands, cap 500) must
+    not move."""
+    assert PipelineConfig(SketchParams(), LSHParams()).config_hash() == (
+        "61397f16d8eeea44"
+    )
+    deploy = PipelineConfig(
+        sketch=SketchParams(ksize=21, scaled=50),
+        lsh=LSHParams(num_bands=16, band_size=2),
+        jaccard_threshold=0.5,
+        bucket_cap=500,
+    )
+    assert deploy.config_hash() == "ad948cf9d66ffaf7"
+
+
 def test_changed_config_recomputes(spark, corpus, base_dir):
     cfg2 = PipelineConfig(
         sketch=SketchParams(ksize=21, scaled=50),
@@ -138,48 +154,6 @@ def test_incremental_update_equals_full(spark, corpus, tmp_path):
     inc_cl = {r.sig_id: r.cluster_id for r in inc["clusters"].collect()}
     full_cl = {r.sig_id: r.cluster_id for r in full["clusters"].collect()}
     assert inc_cl == full_cl
-
-
-def test_bucketed_signatures_skip_join_shuffle(spark, corpus, tmp_path):
-    """bucket_signatures writes a sig_id-bucketed table; the verify-stage
-    join must then scan it without an Exchange on the signatures side."""
-    import pyspark.sql.functions as F
-    from sourmash_spark.params import LSHParams, SketchParams
-    from sourmash_spark.pipeline import PipelineConfig
-
-    cfg = PipelineConfig(
-        sketch=SketchParams(ksize=21, scaled=50),
-        lsh=LSHParams(num_bands=16, band_size=2),
-        jaccard_threshold=0.5,
-        bucket_signatures=4,
-    )
-    base = str(tmp_path / "bucketed")
-    df = spark.createDataFrame(corpus.code_files).withColumnRenamed(
-        "file_id", "sig_id"
-    )
-    out = run_pipeline(spark, df, base, cfg)
-    assert out["clusters"].count() == len(corpus.code_files)
-
-    # the checkpointed signatures table is bucketed: a self-equi-join on
-    # sig_id plans with zero Exchanges
-    sigs = spark.read.table(f"ckpt_signatures_{cfg.config_hash()}")
-    # force SMJ (a table this small would broadcast, which hides bucketing)
-    j = sigs.alias("l").join(sigs.alias("r").hint("merge"), "sig_id").select(
-        "sig_id", F.col("l.n_hashes")
-    )
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan[:2000]
-    assert "Bucketed: true" in plan
-
-    # results identical to the unbucketed run
-    base2 = str(tmp_path / "plain")
-    cfg2 = PipelineConfig(
-        sketch=cfg.sketch, lsh=cfg.lsh, jaccard_threshold=0.5
-    )
-    out2 = run_pipeline(spark, df, base2, cfg2)
-    a = {(r.sig_id, r.cluster_id) for r in out["clusters"].collect()}
-    b = {(r.sig_id, r.cluster_id) for r in out2["clusters"].collect()}
-    assert a == b
 
 
 def test_stream_ingest_equals_batch_incremental(spark, corpus, tmp_path):
@@ -239,8 +213,9 @@ def test_stream_ingest_equals_batch_incremental(spark, corpus, tmp_path):
 
 def test_incremental_update_without_bands_stage(spark, corpus, tmp_path):
     """Backward compat: a checkpoint written BEFORE the bands stage
-    existed (bands dir absent) must take the re-band fallback and still
-    produce identical edges to the stored-bands path."""
+    existed (bands dir absent) gets the stage written from its base
+    signatures and still produces identical edges to the stored-bands
+    path."""
     import shutil
 
     from sourmash_spark.pipeline import incremental_update
@@ -266,6 +241,7 @@ def test_incremental_update_without_bands_stage(spark, corpus, tmp_path):
 
     with_bands = incremental_update(spark, df_extra, base_a, CFG)
     without_bands = incremental_update(spark, df_extra, base_b, CFG)
+    assert ckpt.is_complete(bands_dir)
 
     ew = {(r.sig_id_a, r.sig_id_b) for r in with_bands["edges"].collect()}
     ewo = {
@@ -396,3 +372,85 @@ def test_incremental_update_applies_bucket_cap(spark, corpus, tmp_path):
         ckpt.stage_path(base_a, "edges", cfg.config_hash()) + "_inc"
     )
     assert touching(written) == want
+
+
+def _split(spark, corpus):
+    pdf = corpus.code_files
+
+    def df_of(p):
+        return spark.createDataFrame(p).withColumnRenamed("file_id", "sig_id")
+
+    return df_of(pdf[pdf.file_id < 40]), df_of(pdf[pdf.file_id >= 40]), df_of(pdf)
+
+
+def _stored_rows(path):
+    return sum(p["rows"] for p in ckpt.partition_metrics(path))
+
+
+def test_stream_ingest_replay_stores_batch_once(spark, corpus, tmp_path):
+    """A micro-batch replayed after its writes but before the streaming
+    commit (the commit log entry deleted) must not store its signatures a
+    second time."""
+    from sourmash_spark.streaming.watch import stream_ingest
+
+    first, extra, _ = _split(spark, corpus)
+    base = str(tmp_path / "base")
+    src = str(tmp_path / "arrivals")
+    stream_ckpt = str(tmp_path / "ckpt")
+    run_pipeline(spark, first, base, CFG, stop_after="edges")
+    extra.write.parquet(src)
+
+    def drain():
+        stream = spark.readStream.schema(extra.schema).parquet(src)
+        stream_ingest(stream, base, CFG, checkpoint_dir=stream_ckpt) \
+            .awaitTermination(120)
+
+    drain()
+    for f in ("0", ".0.crc"):  # the batch's writes happened, its commit did not
+        os.remove(os.path.join(stream_ckpt, "commits", f))
+    drain()
+    sig_inc = ckpt.increments_path(base, "signatures", CFG.config_hash())
+    assert _stored_rows(sig_inc) == extra.count()
+
+
+def test_increment_rerun_after_crash_before_commit(spark, corpus, tmp_path):
+    """An increment whose edges never committed is invisible, and the
+    re-run of the same batch overwrites it instead of adding a second
+    copy of its signatures."""
+    from sourmash_spark.pipeline import incremental_update
+
+    first, extra, both = _split(spark, corpus)
+    base = str(tmp_path / "inc")
+    run_pipeline(spark, first, base, CFG)
+    incremental_update(spark, extra, base, CFG)
+    ch = CFG.config_hash()
+    os.remove(os.path.join(
+        ckpt.increments_path(base, "edges", ch), "increment=0", "_SUCCESS"
+    ))
+
+    inc = incremental_update(spark, extra, base, CFG)
+    n_first, n_extra = first.count(), extra.count()
+    assert inc["signatures"].count() == n_first + n_extra
+    sig_inc = ckpt.increments_path(base, "signatures", ch)
+    assert _stored_rows(sig_inc) == n_extra
+    full = run_pipeline(spark, both, str(tmp_path / "full"), CFG)
+    got = {(r.sig_id_a, r.sig_id_b) for r in inc["edges"].collect()}
+    want = {(r.sig_id_a, r.sig_id_b) for r in full["edges"].collect()}
+    assert got == want
+
+
+def test_increment_rejects_unplaced_files(spark, corpus, tmp_path):
+    """A data file beside the increments (such as the flat edge files an
+    earlier layout appended) fails loudly instead of being skipped."""
+    import re
+
+    from sourmash_spark.pipeline import incremental_update
+
+    first, extra, _ = _split(spark, corpus)
+    base = str(tmp_path / "flat")
+    run_pipeline(spark, first, base, CFG)
+    edges_inc = ckpt.increments_path(base, "edges", CFG.config_hash())
+    spark.read.parquet(ckpt.stage_path(base, "edges", CFG.config_hash())) \
+        .write.parquet(edges_inc)
+    with pytest.raises(ValueError, match=re.escape(edges_inc)):
+        incremental_update(spark, extra, base, CFG)

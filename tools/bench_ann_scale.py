@@ -7,7 +7,7 @@ n_cells ~ N/128 keeps cell population constant), recording wall AND
 candidate-pair counts so the claimed ~linear growth is visible in both.
 
 Prereqs:  python tools/make_sf_big.py 10  (-> testdata_sf1)
-          python tools/make_sf_big.py 30 /root/repo/testdata_sf3
+          python tools/make_sf_big.py 30 testdata_sf3
 
 Writes BENCH/ANN_SCALE.json:
   {"points": [{"sf_dir", "n_embs", "lsh": {t, q, candidates, pairs, wall},
@@ -24,8 +24,11 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = Path(__file__).resolve().parents[1]
+
+sys.path.insert(0, str(ROOT))
 
 import pyspark.sql.functions as F  # noqa: E402
 
@@ -34,10 +37,10 @@ from sourmash_spark.session import get_spark  # noqa: E402
 
 POINTS = [
     ("sf0.1", "/root/testdata/sf0.1"),
-    ("sf1", "/root/repo/testdata_sf1"),
-    ("sf3", "/root/repo/testdata_sf3"),
+    ("sf1", str(ROOT / "testdata_sf1")),
+    ("sf3", str(ROOT / "testdata_sf3")),
 ]
-OUT = "/root/repo/BENCH/ANN_SCALE.json"
+OUT = str(ROOT / "BENCH/ANN_SCALE.json")
 
 
 def _candidate_count_lsh(aug, t, q, dim):

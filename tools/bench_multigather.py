@@ -23,8 +23,11 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = Path(__file__).resolve().parents[1]
+
+sys.path.insert(0, str(ROOT))
 
 import numpy as np  # noqa: E402
 import pyspark.sql.functions as F  # noqa: E402
@@ -32,12 +35,12 @@ import pyspark.sql.functions as F  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 from sourmash_spark.session import get_spark  # noqa: E402
 
-OUT = "/root/repo/BENCH/MULTIGATHER_sf1.json"
+OUT = str(ROOT / "BENCH/MULTIGATHER_sf1.json")
 N_QUERIES = 128
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/testdata_sf1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else str(ROOT / "testdata_sf1")
     if not os.path.exists(f"{sf_dir}/documents.parquet"):
         sys.exit(f"{sf_dir} missing — run tools/make_sf_big.py first")
     from sourmash_spark.operators.gather import multigather

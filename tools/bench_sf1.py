@@ -13,9 +13,12 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
-SF1_DIR = "/root/repo/testdata_sf1"
-OUT = "/root/repo/BENCH/BENCH_sf1.json"
+ROOT = Path(__file__).resolve().parents[1]
+
+SF1_DIR = str(ROOT / "testdata_sf1")
+OUT = str(ROOT / "BENCH/BENCH_sf1.json")
 
 
 def main() -> None:
@@ -27,7 +30,7 @@ def main() -> None:
     env["SPARK_GRAFT_SF_DIR"] = SF1_DIR
     env.setdefault("SPARK_GRAFT_BENCH_REPS", "2")
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, str(ROOT / "bench.py")],
         capture_output=True, text=True, env=env, timeout=3600,
     )
     line = next(

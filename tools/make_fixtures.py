@@ -23,12 +23,15 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+
+sys.path.insert(0, str(ROOT))
 
 from sourmash_spark.hashing import murmur64_fixed, u64_to_i64  # noqa: E402
 from sourmash_spark.oracle import MinHash  # noqa: E402
@@ -81,7 +84,7 @@ def main() -> None:
                 "hashes": pa.array(hash_lists, pa.list_(pa.int64())),
             }
         )
-        out = f"/root/repo/fixtures/murmur_sf{label}.parquet"
+        out = str(ROOT / f"fixtures/murmur_sf{label}.parquet")
         pq.write_table(table, out, compression="zstd")
         print(
             f"{out}: {len(ids)} sketches, "
@@ -164,7 +167,7 @@ def main_protein() -> None:
                 "hashes": pa.array(hash_lists, pa.list_(pa.int64())),
             }
         )
-        out = f"/root/repo/fixtures/protein_sf{label}.parquet"
+        out = str(ROOT / f"fixtures/protein_sf{label}.parquet")
         pq.write_table(table, out, compression="zstd")
         print(
             f"{out}: {len(ids)} sketches, "
@@ -228,7 +231,7 @@ def main_dna() -> None:
                 "hashes": pa.array(hash_lists, pa.list_(pa.int64())),
             }
         )
-        out = f"/root/repo/fixtures/dna_sf{label}.parquet"
+        out = str(ROOT / f"fixtures/dna_sf{label}.parquet")
         pq.write_table(table, out, compression="zstd")
         print(
             f"{out}: {len(ids)} sketches, "

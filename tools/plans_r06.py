@@ -11,12 +11,15 @@ import io
 import os
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+
+sys.path.insert(0, str(ROOT))
 
 SUFFIX = sys.argv[1] if len(sys.argv) > 1 else "before"
 ONLY = set(sys.argv[2:])
-OUT_DIR = "/root/repo/plans/r06"
+OUT_DIR = str(ROOT / "plans/r06")
 os.makedirs(OUT_DIR, exist_ok=True)
 
 

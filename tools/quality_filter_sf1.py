@@ -20,12 +20,15 @@ import os
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = Path(__file__).resolve().parents[1]
 
-SF1_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/testdata_sf1"
+sys.path.insert(0, str(ROOT))
+
+SF1_DIR = sys.argv[1] if len(sys.argv) > 1 else str(ROOT / "testdata_sf1")
 OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else "/tmp/quality_filter_sf1"
-EVIDENCE = "/root/repo/BENCH/QUALITY_FILTER_sf1.json"
+EVIDENCE = str(ROOT / "BENCH/QUALITY_FILTER_sf1.json")
 
 
 def main() -> None:
@@ -45,12 +48,12 @@ def main() -> None:
     t0 = time.time()
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_CPUS", "32")
-    env["PYTHONPATH"] = "/root/repo" + (
+    env["PYTHONPATH"] = str(ROOT) + (
         os.pathsep + env["PYTHONPATH"] if env.get("PYTHONPATH") else ""
     )
     run = subprocess.run(
         [
-            sys.executable, "/root/repo/jobs/quality_filter_job.py",
+            sys.executable, str(ROOT / "jobs/quality_filter_job.py"),
             "--input", docs_path,
             "--output", os.path.join(OUT_DIR, "out"),
             "--benchmark", bench_path,

@@ -11,8 +11,11 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -75,7 +78,7 @@ def main() -> None:
                   f"bands={L.num_bands}x{L.band_size} jaccard>={threshold}",
     }
     print(json.dumps(result))
-    with open("/root/repo/BENCH/BASELINE.md", "a") as f:
+    with open(ROOT / "BENCH/BASELINE.md", "a") as f:
         f.write(f"""
 ## Dup-pair recall (north-rule gate: >= 0.99)
 

@@ -11,8 +11,11 @@ import time
 import duckdb
 import numpy as np
 import pandas as pd
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+
+sys.path.insert(0, str(ROOT))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents "
@@ -119,7 +122,7 @@ def main(sf_dir: str = os.environ.get("REHEARSE_SF", "/root/testdata/sf0.01"), o
             "n_bad": n_bad,
             "gates": results,
         }
-        with open("/root/repo/CORRECTNESS_FULL_LOCAL.json", "w") as f:
+        with open(ROOT / "CORRECTNESS_FULL_LOCAL.json", "w") as f:
             json.dump(out, f, indent=1)
         print("wrote CORRECTNESS_FULL_LOCAL.json")
     spark.stop()

@@ -10,8 +10,11 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+
+sys.path.insert(0, str(ROOT))
 
 N_SMALL = int(os.environ.get("SCALE_N", "8"))
 N_BIG = 4 * N_SMALL
@@ -269,8 +272,8 @@ def main() -> None:
     }
     print(json.dumps(result))
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    out_path = os.environ.get("SCALE_OUT", "/root/repo/BENCH/SCALING.json")
+    os.makedirs(ROOT / "BENCH", exist_ok=True)
+    out_path = os.environ.get("SCALE_OUT", str(ROOT / "BENCH/SCALING.json"))
     # machine-readable twin of the BASELINE.md scaling table (r4): lets the
     # driver/judge diff scaling-efficiency regressions mechanically
     with open(out_path, "w") as f:
@@ -315,7 +318,7 @@ Clusters found (both levels identical): {big["n_clusters"]}.
 Reproduce: `python tools/scaling_bench.py` (env: SCALE_N, SCALE_FILES).
 """)
     # replace only the scaling section; preserve recall/notes sections
-    path = "/root/repo/BENCH/BASELINE.md"
+    path = str(ROOT / "BENCH/BASELINE.md")
     marker = "\n## Notes"
     rest = ""
     if os.path.exists(path):
