@@ -262,31 +262,56 @@ def lsh_bands60(
 
 
 SIMHASH_BITS = 60
+_TILE = 512  # all-pairs tile edge: one tile scores _TILE**2 pairs
 
 
 def simhash(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """60-bit SimHash over word tokens: bit b is the majority vote of bit b
-    across token hash60s.  One explode + one groupBy(doc) with 60 narrow
-    sums — all codegen'd; no UDF."""
-    toks = docs.select(
-        F.col(id_col),
-        F.explode(docops.words(F.col(text_col))).alias("tok"),
-    ).withColumn("h", docops.hash60(F.col("tok")))
-    bit_sums = [
-        F.sum(F.shiftright("h", b).bitwiseAND(F.lit(1))).alias(f"s{b}")
-        for b in range(SIMHASH_BITS)
-    ]
-    agg = toks.groupBy(id_col).agg(F.count("*").alias("n_toks"), *bit_sums)
-    sim = None
-    for b in range(SIMHASH_BITS):
-        bit = F.when(
-            F.col(f"s{b}") * 2 >= F.col("n_toks"), F.lit(1).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        term = bit * F.lit(1 << b).cast("long")
-        sim = term if sim is None else sim + term
-    return agg.select(id_col, sim.alias("simhash"), "n_toks")
+    """60-bit SimHash over word tokens: bit b is the majority vote
+    (2 * ones >= n_toks) of bit b across the token hash60s.  Documents
+    with no token are dropped; rows sharing an id merge their tokens (the
+    oracle's GROUP BY doc_id, a NULL id included).
+
+    Tokenizing stays in the JVM (`docops.words`: Java `lower`, `\\s+`);
+    one shuffle groups the token arrays per id; one mapInArrow kernel
+    hashes each distinct token of the batch (`docops.hash60_py`) and
+    counts the 60 bit votes in numpy.  The id column passes through as
+    Arrow, never through a pandas dtype."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def kernel(batches):
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            words = rb.column("_w")
+            n = pc.list_value_length(words).to_numpy().astype(np.int64)
+            toks = pc.list_flatten(words)
+            vocab = pc.unique(toks)
+            hv = np.fromiter(
+                map(docops.hash60_py, vocab.to_pylist()), np.int64, len(vocab)
+            )
+            h = hv[pc.index_in(toks, vocab).to_numpy()]
+            starts = np.cumsum(n) - n
+            sim = np.zeros(len(n), np.int64)
+            for b in range(SIMHASH_BITS):
+                ones = np.add.reduceat((h >> b) & 1, starts)
+                sim |= (2 * ones >= n).astype(np.int64) << b
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col), pa.array(sim), pa.array(n)],
+                names=[id_col, "simhash", "n_toks"],
+            )
+
+    id_type = docs.schema[id_col].dataType.simpleString()
+    return (
+        docs.select(F.col(id_col), docops.words(F.col(text_col)).alias("_w"))
+        .filter(F.size("_w") > 0)
+        .groupBy(id_col)
+        .agg(F.flatten(F.collect_list("_w")).alias("_w"))
+        .mapInArrow(kernel, f"{id_col} {id_type}, simhash long, n_toks long")
+    )
 
 
 def simhash_pairs(
@@ -294,41 +319,34 @@ def simhash_pairs(
     max_hamming: int = 8,
     id_col: str = "doc_id",
     block_pairs: bool = False,
-    shared_exchange: bool | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
-    """Near-dup pairs by simhash hamming distance (lossless blocking +
-    exact bit_count(xor) verification — output identical either way).
+    """Near-dup pairs (id_a, id_b, hamming), id_a < id_b, within
+    `max_hamming` bits of exact bit_count(xor); rows with a NULL id or
+    simhash pair with nothing.
 
-    `shared_exchange` (default auto = `not sims.is_cached`): route both
-    self-join sides through ONE explicit repartition on the chunk keys so
-    the physical planner reuses the exchange and the (expensive, per-token
-    md5 + 60-bit-sum) simhash aggregate under it executes ONCE instead of
-    once per join side (guide §2.4).  Measured sf0.1: uncached input
-    5.9 s -> 2.1 s.  For an already-cached `sims` the second scan is
-    nearly free and the extra postings exchange only costs (~ +13%
-    measured), hence the auto heuristic.  The repartition uses an explicit
-    partition count (the session's shuffle partitions) because an
-    AQE-coalesced tiny exchange would also serialize the pair-generation
-    join that reuses it.
+    Default plan ("tiled"): (id, simhash) collected sorted by id and
+    broadcast; `spark.range(n_tiles).mapInPandas` scores upper-triangle
+    tiles of _TILE x _TILE pairs with a numpy popcount — N(N-1)/2 pairs,
+    a fixed amount of work per task, no hot key; ~13 ns per pair on 4
+    cores.  At h=12 the single-chunk pigeonhole join it replaced read more
+    rows than that (Σ c(c-1)/2 over its 4.6-bit chunk keys was 1.2x
+    N(N-1)/2 at sf1) at ~125-185 ns per row (sourmash_spark/plans/PLANS.md).
 
-    `block_pairs=False` (single-chunk pigeonhole): split the 60-bit
-    simhash into (max_hamming+1) chunks — two values within `max_hamming`
-    share >= 1 exact chunk, so the join is an equi-join on
-    (chunk_idx, chunk_value).  Bucket population ~ N / 2^(60/(h+1)): fine
-    until N outgrows the chunk width (h=12 -> ~4.6-bit chunks).
+    `block_pairs=True` ("block_join", the HmSearch trade): an index join
+    whose cost is its join size, not N² — faster only when that size is
+    far below N(N-1)/2 (sf1: h=3 wins 4.3 s to 16.6 s, h=5 loses 25.6 s
+    to 16.2 s).  (max_hamming+2) chunks of the 60 bits keyed in PAIRS:
+    h differing bits leave >= 2 chunks untouched, so every true pair
+    shares a key.
 
-    `block_pairs=True` (two-chunk blocking, the HmSearch/multi-index
-    trade): split into (max_hamming+2) chunks and join on PAIRS of chunks
-    — <= h differing bits leave >= 2 untouched chunks, so every true pair
-    still shares a key, while buckets are keyed by ~2x the bits
-    (population ~ N / 2^(2*60/(h+2))).  Costs C(h+2, 2)/(h+1) more posting
-    rows for exponentially smaller buckets — the right side of the trade
-    once N is large (sf1 measured: 67.5s -> single, see BENCH/BASELINE.md).
-    """
-    if block_pairs:
-        n_chunks = max_hamming + 2
-    else:
-        n_chunks = max_hamming + 1
+    `stats` (a dict, filled at call time) receives n, all_pairs
+    (N(N-1)/2), plan and join_rows: 0 for "tiled"; for "block_join"
+    Σ c(c-1)/2 over its keys (c = ids per key; the rows the self-join
+    emits), from one aggregate that runs only when `stats` is passed."""
+    if not block_pairs:
+        return _tiled_pairs(sims, max_hamming, id_col, stats)
+    n_chunks = max_hamming + 2
     if n_chunks > SIMHASH_BITS:
         raise ValueError(
             f"max_hamming {max_hamming} needs {n_chunks} non-empty chunks "
@@ -345,52 +363,56 @@ def simhash_pairs(
         offsets.append(off)
         widths.append(w)
         off += w
-    chunk_exprs = [
-        F.shiftrightunsigned(F.col("simhash"), offsets[i])
-        .bitwiseAND(F.lit((1 << widths[i]) - 1))
-        for i in range(n_chunks)
+
+    def _chunk(col, i):
+        return F.shiftrightunsigned(col, offsets[i]).bitwiseAND(
+            F.lit((1 << widths[i]) - 1)
+        )
+
+    key_pairs = [
+        (i, j) for i in range(n_chunks) for j in range(i + 1, n_chunks)
     ]
-    if block_pairs:
-        keyed = F.array(
-            *[
-                F.struct(
-                    F.lit(i * n_chunks + j).alias("k"),
-                    (
-                        chunk_exprs[i] * F.lit(1 << widths[j])
-                        + chunk_exprs[j]
-                    ).alias("v"),
-                )
-                for i in range(n_chunks)
-                for j in range(i + 1, n_chunks)
-            ]
-        )
-        chunks = sims.select(
-            F.col(id_col),
-            F.col("simhash"),
-            F.explode(keyed).alias("kv"),
-        ).select(
-            id_col, "simhash",
-            F.col("kv.k").alias("chunk_idx"),
-            F.col("kv.v").alias("chunk_val"),
-        )
-    else:
-        chunks = sims.select(
-            F.col(id_col),
-            F.col("simhash"),
-            F.posexplode(F.array(*chunk_exprs)).alias(
-                "chunk_idx", "chunk_val"
-            ),
-        )
-    if shared_exchange is None:
-        shared_exchange = not sims.is_cached
-    if shared_exchange:
-        try:
-            nparts = int(
-                sims.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    keyed = F.array(
+        *[
+            F.struct(
+                F.lit(i * n_chunks + j).alias("k"),
+                (
+                    _chunk(F.col("simhash"), i) * F.lit(1 << widths[j])
+                    + _chunk(F.col("simhash"), j)
+                ).alias("v"),
             )
-        except (TypeError, ValueError):
-            nparts = sims.sparkSession.sparkContext.defaultParallelism
-        chunks = chunks.repartition(nparts, "chunk_idx", "chunk_val")
+            for i, j in key_pairs
+        ]
+    )
+    chunks = sims.select(
+        F.col(id_col),
+        F.col("simhash"),
+        F.explode(keyed).alias("kv"),
+    ).select(
+        id_col, "simhash",
+        F.col("kv.k").alias("chunk_idx"),
+        F.col("kv.v").alias("chunk_val"),
+    )
+    if stats is not None:
+        c = F.col("count")
+        deg = (
+            chunks.groupBy("chunk_idx", "chunk_val").count()
+            .agg(F.sum(c * (c - 1)).alias("s2"), F.sum(c).alias("rows"))
+            .first()
+        )
+        n = (deg["rows"] or 0) // len(key_pairs)
+        stats.update(
+            join_rows=(deg["s2"] or 0) // 2, n=n, all_pairs=n * (n - 1) // 2,
+            plan="block_join",
+        )
+    spark = sims.sparkSession
+    # both join sides reuse this one exchange, so `sims` is evaluated once;
+    # an explicit count: an AQE-coalesced tiny exchange would also
+    # serialize the pair join that reuses it
+    chunks = chunks.repartition(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "chunk_idx", "chunk_val",
+    )
     a = chunks.select(
         F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"),
         "chunk_idx", "chunk_val",
@@ -407,28 +429,14 @@ def simhash_pairs(
     # recomputes the per-key chunk equality from the already-carried
     # sim_a/sim_b bit columns and runs only on rows that survived the
     # hamming filter, so it costs a few shifts on the tiny surviving set.
-
-    def _chunk(col, i):
-        return F.shiftrightunsigned(col, offsets[i]).bitwiseAND(
-            F.lit((1 << widths[i]) - 1)
+    firsts = [
+        F.when(
+            (_chunk(F.col("sim_a"), i) == _chunk(F.col("sim_b"), i))
+            & (_chunk(F.col("sim_a"), j) == _chunk(F.col("sim_b"), j)),
+            F.lit(i * n_chunks + j),
         )
-
-    if block_pairs:
-        shared = [
-            (
-                i * n_chunks + j,
-                (_chunk(F.col("sim_a"), i) == _chunk(F.col("sim_b"), i))
-                & (_chunk(F.col("sim_a"), j) == _chunk(F.col("sim_b"), j)),
-            )
-            for i in range(n_chunks)
-            for j in range(i + 1, n_chunks)
-        ]
-    else:
-        shared = [
-            (i, _chunk(F.col("sim_a"), i) == _chunk(F.col("sim_b"), i))
-            for i in range(n_chunks)
-        ]
-    firsts = [F.when(eq, F.lit(k)) for k, eq in shared]
+        for i, j in key_pairs
+    ]
     first_shared = firsts[0] if len(firsts) == 1 else F.least(*firsts)
     return (
         a.join(b, ["chunk_idx", "chunk_val"])
@@ -443,6 +451,63 @@ def simhash_pairs(
         .filter(first_shared == F.col("chunk_idx"))
         .select("id_a", "id_b", "hamming")
     )
+
+
+def _tiled_pairs(
+    sims: DataFrame, max_hamming: int, id_col: str, stats: dict | None
+) -> DataFrame:
+    """simhash_pairs' tiled plan.  Ids are sorted, so the one predicate
+    id_a < id_b drops the lower half of the diagonal tiles and equal ids.
+    NULL ids are filtered before the collect (a NULL would turn the id
+    column into float64 and round ids above 2^53)."""
+    import numpy as np
+    import pandas as pd
+
+    spark = sims.sparkSession
+    pdf = (
+        sims.select(id_col, "simhash")
+        .filter(F.col(id_col).isNotNull() & F.col("simhash").isNotNull())
+        .toPandas()
+        .sort_values(id_col, kind="stable")
+    )
+    ids = pdf[id_col].to_numpy()
+    vals = pdf["simhash"].to_numpy(np.int64).view(np.uint64)
+    if stats is not None:
+        n = len(ids)
+        stats.update(
+            join_rows=0, n=n, all_pairs=n * (n - 1) // 2, plan="tiled"
+        )
+    rows, cols = np.triu_indices(-(-len(ids) // _TILE))  # tile t's blocks
+    bc = spark.sparkContext.broadcast((ids, vals, rows, cols))
+
+    def kernel(batches):
+        ids, vals, rows, cols = bc.value
+        pop16 = (
+            np.unpackbits(np.arange(1 << 16, dtype="<u2").view(np.uint8))
+            .reshape(-1, 16).sum(axis=1, dtype=np.uint8)
+        )
+        for tiles in batches:
+            for t in tiles["id"].to_numpy():
+                a = slice(rows[t] * _TILE, (rows[t] + 1) * _TILE)
+                b = slice(cols[t] * _TILE, (cols[t] + 1) * _TILE)
+                x = vals[a, None] ^ vals[None, b]
+                d = pop16[x.view(np.uint16)].reshape(*x.shape, 4).sum(
+                    axis=2, dtype=np.uint8
+                )
+                ia, ib = np.nonzero(
+                    (d <= max_hamming) & (ids[a, None] < ids[None, b])
+                )
+                yield pd.DataFrame({
+                    "id_a": ids[a][ia], "id_b": ids[b][ib],
+                    "hamming": d[ia, ib].astype(np.int32),
+                })
+
+    n_tiles = len(rows)
+    id_type = sims.schema[id_col].dataType.simpleString()
+    return spark.range(
+        0, n_tiles, 1,
+        max(1, min(n_tiles, spark.sparkContext.defaultParallelism)),
+    ).mapInPandas(kernel, f"id_a {id_type}, id_b {id_type}, hamming int")
 
 
 def embedding_neardup_pairs(

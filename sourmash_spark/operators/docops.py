@@ -2,13 +2,16 @@
 
 These mirror the sketch engine's semantics with an **SQL-portable hash**:
 ``hash60(s) = int(md5_hex(s)[:15], 16)`` — 60 bits, identical in Spark
-(`conv(substr(md5(s),1,15),16,10)`) and DuckDB
-(`('0x'||substr(md5(s),1,15))::BIGINT`).  The murmur64 path (bit-parity with
+(`conv(substr(md5(s),1,15),16,10)`), DuckDB
+(`('0x'||substr(md5(s),1,15))::BIGINT`) and Python (`hash60_py`, for
+numpy kernels).  The murmur64 path (bit-parity with
 the reference) lives in sketch.py; this path exists so every document-level
 operator has an independent cross-engine oracle.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 import pyspark.sql.functions as F
@@ -74,6 +77,11 @@ def hash60(c: Column) -> Column:
 def hash60_sql(expr: str) -> str:
     """DuckDB rendering of the same function."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
+
+
+def hash60_py(s: str) -> int:
+    """Python rendering of the same function (UTF-8 bytes, as Spark's md5)."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def char_shingles(text: Column, k: int) -> Column:

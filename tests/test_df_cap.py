@@ -164,9 +164,10 @@ def test_cap_observation_lineage(spark):
 
 def test_simhash_blockpair_equals_single_chunk(spark):
     """Two-chunk blocking (HmSearch trade) is lossless: identical pair set
-    to single-chunk pigeonhole at every max_hamming, including h where a
-    naive fixed chunk width would shift past bit 63 (JVM shifts wrap) —
-    verified on simhash values planted at EXACT hamming distances."""
+    to the default tiled all-pairs plan and to a Python brute force at
+    every max_hamming, including h where a naive fixed chunk width would
+    shift past bit 63 (JVM shifts wrap) — verified on simhash values
+    planted at EXACT hamming distances."""
     import random
 
     rng = random.Random(17)
@@ -194,19 +195,26 @@ def test_simhash_blockpair_equals_single_chunk(spark):
             for j in vals
             if i < j and bin(vals[i] ^ vals[j]).count("1") <= h
         }
+        sa, sb = {}, {}
         a = {
             (r["id_a"], r["id_b"], r["hamming"])
-            for r in dedup_ops.simhash_pairs(sims, max_hamming=h).collect()
+            for r in dedup_ops.simhash_pairs(
+                sims, max_hamming=h, stats=sa
+            ).collect()
         }
         b = {
             (r["id_a"], r["id_b"], r["hamming"])
             for r in dedup_ops.simhash_pairs(
-                sims, max_hamming=h, block_pairs=True
+                sims, max_hamming=h, block_pairs=True, stats=sb
             ).collect()
         }
-        assert a == want, h
-        assert b == want, h
+        assert a == want, (h, sa)
+        assert b == want, (h, sb)
         assert a  # planted in-radius pairs exist at every tested h
+        assert sa["plan"] == "tiled", (h, sa)
+        assert sb["plan"] == "block_join", (h, sb)
+        assert sa["n"] == sb["n"] == len(rows)
+        assert sa["all_pairs"] == sb["all_pairs"] == 300
 
 
 def test_compare_rejects_mixed_ksize(spark):

@@ -6,8 +6,10 @@ rotation slice (COVERAGE.md "Gate rotation")."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 R6_NEW_OR_CHANGED = [
     # gates over code paths added or changed in r6 — MUST be driver-visible
@@ -30,8 +32,8 @@ R6_NEW_OR_CHANGED = [
     "mh_compare_mixed_scaled",
     "dedup_ngram_jaccard",
     "dedup_ngram_capped",
-    # dedup.py: window substring marking + island merge; simhash_pairs
-    # first-shared-chunk dedup + shared exchange
+    # dedup.py: window substring marking + island merge; simhash kernel
+    # and simhash_pairs plans (tiled all-pairs; block_pairs chunk-key join)
     "dedup_substring_pairs",
     "dedup_substring_spans",
     "dedup_substring_exact",
@@ -91,7 +93,7 @@ def test_r6_rotation_promotes_at_least_ten():
 
     import __spark_entry__ as e
 
-    r5 = set(json.load(open("/root/repo/CORRECTNESS_r05.json")))
+    r5 = set(json.load(open(REPO / "CORRECTNESS_r05.json")))
     head = list(e.queries())[:50]
     promoted = [g for g in head if g not in r5]
     assert len(promoted) >= 10, promoted
@@ -107,7 +109,7 @@ def test_demoted_gates_were_r5_driver_green():
 
     import __spark_entry__ as e
 
-    r5 = json.load(open("/root/repo/CORRECTNESS_r05.json"))
+    r5 = json.load(open(REPO / "CORRECTNESS_r05.json"))
     r5_green = {
         k for k, v in r5.items()
         if v.get("rows_match") and v.get("hash_match")

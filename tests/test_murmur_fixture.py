@@ -10,11 +10,14 @@ the vectorized Arrow engine (sourmash_spark.sketch.batch_sketch).
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import duckdb
 import pytest
 
 import pyspark.sql.functions as F
+
+REPO = Path(__file__).resolve().parents[1]
 
 FIXTURES = {
     "0.001": "/root/testdata/sf0.001",
@@ -24,7 +27,7 @@ FIXTURES = {
 
 @pytest.mark.parametrize("label", list(FIXTURES))
 def test_fixture_matches_spark_sketches(spark, label):
-    path = f"/root/repo/fixtures/murmur_sf{label}.parquet"
+    path = REPO / "fixtures" / f"murmur_sf{label}.parquet"
     if not os.path.exists(path):
         pytest.skip(f"fixture {path} not generated (run tools/make_fixtures.py)")
     import __spark_entry__ as e
@@ -52,7 +55,7 @@ def test_dna_fixture_matches_spark_sketches(spark, label):
     (scalar oracle add_dna — min(kmer, revcomp), N-windows skipped) must be
     bit-identical to the vectorized batched-N Spark path over the same
     DNA-ized documents (the r4 high-severity fix's branch)."""
-    path = f"/root/repo/fixtures/dna_sf{label}.parquet"
+    path = REPO / "fixtures" / f"dna_sf{label}.parquet"
     if not os.path.exists(path):
         pytest.skip(f"fixture {path} not generated (run tools/make_fixtures.py)")
     import __spark_entry__ as e

@@ -216,9 +216,10 @@ def test_stream_substring_replay_is_idempotent(spark, tmp_path):
 def test_simhash_pairs_dedup_by_construction(spark):
     """The distinct() exchange was replaced by first-shared-chunk
     filtering: a pair matching the chunk join k times must be emitted
-    exactly once, for BOTH blocking modes, with the same row set a
-    distinct() would produce.  Planted values share MANY chunks (small
-    hamming distances) so the multi-match path is actually exercised."""
+    exactly once, by BOTH plans (tiled and block_pairs), with the same row
+    set a distinct() would produce.  Planted values share MANY chunks
+    (small hamming distances) so the multi-match path is actually
+    exercised."""
     import random
 
     rng = random.Random(23)
@@ -253,8 +254,175 @@ def test_simhash_pairs_dedup_by_construction(spark):
         for j in vals
         if i < j and bin(vals[i] ^ vals[j]).count("1") <= 12
     }
-    got_single = {
+    stats: dict = {}
+    got_tiled = {
         tuple(r)
-        for r in dedup_ops.simhash_pairs(sims, max_hamming=12).collect()
+        for r in dedup_ops.simhash_pairs(
+            sims, max_hamming=12, stats=stats
+        ).collect()
     }
-    assert got_single == want
+    assert got_tiled == want
+    assert stats == {"join_rows": 0, "n": 37, "all_pairs": 666, "plan": "tiled"}
+    block: dict = {}
+    got_block = {
+        tuple(r)
+        for r in dedup_ops.simhash_pairs(
+            sims, max_hamming=12, block_pairs=True, stats=block
+        ).collect()
+    }
+    assert got_block == want
+    assert block == {
+        "join_rows": _block_join_rows(vals.values(), 12), "n": 37,
+        "all_pairs": 666, "plan": "block_join",
+    }
+    assert block["join_rows"] > 0
+
+    # a NULL id pairs with nothing and must not turn the other ids into
+    # float64 (ids above 2^53 would round); equal simhashes -> hamming 0
+    big = 2**53 + 1
+    nulls = spark.createDataFrame(
+        [(None, 7, 1), (big, 7, 1), (big + 2, 7, 1), (big + 4, 1 << 40, 1)],
+        "doc_id long, simhash long, n_toks long",
+    )
+    for bp in (False, True):
+        got = {
+            tuple(r)
+            for r in dedup_ops.simhash_pairs(
+                nulls, max_hamming=3, block_pairs=bp
+            ).collect()
+        }
+        assert got == {(big, big + 2, 0)}, bp
+
+    # tiled plan at the tile-size edges; ids are negative and unsorted;
+    # the first rows plant hamming 0, h and h + 1
+    tile, h = dedup_ops._TILE, 12
+    for n in (0, 1, tile - 1, tile, tile + 1):
+        r = random.Random(n)
+        ids = list(range(-(n // 2), n - n // 2))
+        r.shuffle(ids)
+        v = [r.getrandbits(24) for _ in range(n)]
+        if n > 4:
+            v[1] = v[0]
+            v[2] = flip(v[0], h, 1)
+            v[3] = flip(v[0], h + 1, 2)
+        tiled = spark.createDataFrame(
+            [(i, x, 5) for i, x in zip(ids, v)],
+            "doc_id long, simhash long, n_toks long",
+        )
+        stats = {}
+        got = [
+            tuple(x)
+            for x in dedup_ops.simhash_pairs(
+                tiled, max_hamming=h, stats=stats
+            ).collect()
+        ]
+        assert stats["plan"] == "tiled", (n, stats)
+        assert stats["n"] == n
+        assert stats["all_pairs"] == n * (n - 1) // 2
+        hv = dict(zip(ids, v))
+        brute = {
+            (a, b, bin(hv[a] ^ hv[b]).count("1"))
+            for a in ids for b in ids
+            if a < b and bin(hv[a] ^ hv[b]).count("1") <= h
+        }
+        assert len(got) == len(set(got)), n
+        assert set(got) == brute, n
+        if n > 4:
+            near = {(min(ids[0], ids[k]), max(ids[0], ids[k])): d
+                    for k, d in ((1, 0), (2, h))}
+            assert {(a, b): d for a, b, d in got if (a, b) in near} == near
+            assert (min(ids[0], ids[3]), max(ids[0], ids[3])) not in {
+                (a, b) for a, b, _ in got
+            }
+
+
+def _block_join_rows(vals, h):
+    """Σ c(c-1)/2 over simhash_pairs' block_pairs keys (pairs of the h+2
+    evenly split chunks), computed in Python."""
+    from collections import Counter
+
+    n_chunks = h + 2
+    base, rem = divmod(dedup_ops.SIMHASH_BITS, n_chunks)
+    widths = [base + (i < rem) for i in range(n_chunks)]
+    offs = [sum(widths[:i]) for i in range(n_chunks)]
+    cnt = Counter()
+    for v in vals:
+        ch = [(v >> o) & ((1 << w) - 1) for o, w in zip(offs, widths)]
+        for i in range(n_chunks):
+            for j in range(i + 1, n_chunks):
+                cnt[(i, j, ch[i], ch[j])] += 1
+    return sum(c * (c - 1) // 2 for c in cnt.values())
+
+
+def _simhash_60sum(docs, id_col="doc_id", text_col="text"):
+    """The 60-sum SimHash formulation the numpy kernel replaced: explode
+    the tokens, one groupBy with 60 codegen'd bit sums, majority bits.
+    Kept as the reference of dedup_ops.simhash."""
+    toks = docs.select(
+        F.col(id_col),
+        F.explode(docops.words(F.col(text_col))).alias("tok"),
+    ).withColumn("h", docops.hash60(F.col("tok")))
+    bit_sums = [
+        F.sum(F.shiftright("h", b).bitwiseAND(F.lit(1))).alias(f"s{b}")
+        for b in range(dedup_ops.SIMHASH_BITS)
+    ]
+    agg = toks.groupBy(id_col).agg(F.count("*").alias("n_toks"), *bit_sums)
+    sim = None
+    for b in range(dedup_ops.SIMHASH_BITS):
+        bit = F.when(
+            F.col(f"s{b}") * 2 >= F.col("n_toks"), F.lit(1).cast("long")
+        ).otherwise(F.lit(0).cast("long"))
+        term = bit * F.lit(1 << b).cast("long")
+        sim = term if sim is None else sim + term
+    return agg.select(id_col, sim.alias("simhash"), "n_toks")
+
+
+def test_simhash_kernel_matches_60sum_reference(spark):
+    """The mapInArrow simhash kernel is bit-exact with the 60-sum
+    aggregate on edge-case text: empty and whitespace-only documents
+    (dropped), tabs/newlines, NBSP and em space (Java's \\s matches
+    neither, so they stay inside a token), case-mapped Σ/İ/ß, emoji, CJK,
+    a one-word document, duplicate ids (tokens merge), negative ids, a
+    NULL id (one merged row, as GROUP BY keeps it) beside ids above 2^53
+    (exact, not rounded through float64), and enough rows that a
+    partition spans several 512-row Arrow batches."""
+    import random
+
+    planted = [
+        (1, ""),
+        (2, "  \t\n  "),
+        (3, None),
+        (4, "alpha\tbeta\ngamma  delta\r\nepsilon"),
+        (5, "foo\u00a0bar baz\u00a0"),
+        (6, "em\u2003space word em\u2003space"),
+        (7, "ΣΑΣ σας İstanbul STRASSE straße ß"),
+        (8, "emoji 😀 🤖👍 done 漢字 テスト 한국어"),
+        (9, "lonely"),
+        (10, "dup part one"),
+        (10, "dup part two two"),
+        (-3, "negative id text here"),
+        (-4, "Negative ID text HERE"),
+        (None, "null id words"),
+        (None, "more null"),
+    ]
+    r = random.Random(5)
+    vocab = [f"w{i}" for i in range(300)] + ["Σ", "ß", "漢", "😀"]
+    # ~2400 rows over 4 shuffle partitions: every post-shuffle partition
+    # holds more than 512 ids; every id is odd and above 2^53
+    big = [2**53 + 1 + 2 * i for i in range(2400)]
+    filler = [
+        (big[i], " ".join(r.choice(vocab) for _ in range(r.randint(1, 40))))
+        for i in range(2400)
+    ]
+    docs = spark.createDataFrame(planted + filler, "doc_id long, text string")
+    got = {tuple(x) for x in dedup_ops.simhash(docs).collect()}
+    want = {tuple(x) for x in _simhash_60sum(docs).collect()}
+    assert got == want
+    ids = {x[0] for x in got}
+    assert not ids & {1, 2, 3}  # no token -> no row
+    assert {4, 5, 6, 7, 8, 9, 10, -3, -4} <= ids
+    n_toks = {x[0]: x[2] for x in got}
+    assert n_toks[10] == 7 and n_toks[9] == 1
+    assert n_toks[5] == 2  # NBSP is not a separator
+    assert n_toks[None] == 5
+    assert set(big) <= ids
