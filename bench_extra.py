@@ -45,7 +45,7 @@ def main() -> None:
         cosine_topk,
         embedding_neardup_lsh,
         hyperplane_lsh_tables,
-        ivf_assign_literal,
+        ivf_assign,
         neardup_lsh_params,
         perturb_copies,
         semantic_dedup,
@@ -86,7 +86,7 @@ def main() -> None:
     stage(
         "semdedup/cells_only",
         lambda: noop(
-            ivf_assign_literal(
+            ivf_assign(
                 aug,
                 aug.filter(F.col("vec_id") < sd_cells).select(
                     F.col("vec_id").alias("cell"), "embedding"

@@ -1,36 +1,49 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-* `cosine_topk` — brute-force exact top-k per query (the correctness
-  baseline; O(Q*N) with a rank-1 window, fine when Q is small or as the
-  within-bucket verifier).
-* `hyperplane_lsh_buckets` — random-hyperplane (SimHash-for-vectors) LSH:
-  deterministic planes derived from md5 of "p<plane>:d<dim>" (the same
-  hash60 arithmetic DuckDB can evaluate), so both engines and reruns derive
-  identical planes without a stored model.  Components are baked into the
-  plan as double literals — the planes are tiny (n_planes*dim doubles) and
-  constant-folding them keeps the projection pure arithmetic.
-* `hyperplane_lsh_tables` — T independent plane tables of q planes each;
-  a pair is a candidate iff it shares a bucket in ANY table.  This is the
-  banding construction (recall = 1-(1-(1-theta/pi)^q)^T) — the scale path
-  for all-pairs embedding near-dup (`embedding_neardup_lsh`).
-* `lsh_topk` — per-query ANN: bucket the corpus once, probe the query's
-  bucket plus `n_probes` low-margin single-bit flips (multiprobe), exact
-  cosine rank within the probed candidates.
+Every vector primitive has ONE numpy kernel, a mapInArrow pass that sums
+in Spark's HOF fold order (`_np_fold_dots`), so its results are bit-equal
+to the DuckDB renderings below:
 
-Scale notes: bucketing is a narrow projection (no shuffle); the candidate
-stage is an equi-join on (table_idx, bucket) — never a cross join; exact
-verification happens only within buckets.  Plane count bounds bucket sizes
-(2^q expected buckets per table); residual skew (mass near a boundary) is
-handled by AQE skew-join on the bucket join.
+* `_plane_buckets` — random-hyperplane (SimHash-for-vectors) LSH: the
+  sign pattern of the dots against deterministic planes derived from md5
+  of "p<plane>:d<dim>" (the same hash60 arithmetic DuckDB can evaluate,
+  so both engines and reruns derive identical planes without a stored
+  model), one bucket per plane table, and for queries the multiprobe
+  flips.  It serves `hyperplane_lsh_buckets`, `hyperplane_lsh_tables`
+  (T tables of q planes: a pair is a candidate iff it shares a bucket in
+  ANY table, recall = 1-(1-(1-theta/pi)^q)^T), `embedding_neardup_lsh`
+  and both sides of `lsh_topk`.
+* `ivf_assign` — each vector's `n_probe` nearest codebook cells.  It
+  serves both sides of `ivf_topk` and `semantic_dedup`.
+
+Two shared tails: `_near_pairs_by` verifies exact cosine within groups
+(`embedding_neardup_lsh`'s (table, bucket) groups, `semantic_dedup`'s
+cells) and `_rank_probed` ranks probed candidates (`lsh_topk`,
+`ivf_topk`).  `cosine_topk` and `dedup.embedding_neardup_pairs` are the
+brute-force referees; `dot_sql` / `bucket_sql` / `probes_sql` are the
+DuckDB twins of the kernel's arithmetic.
+
+Scale notes: both kernels are narrow (no shuffle) and carry the id and
+vector through as Arrow; candidate stages are equi-joins or groups on the
+bucket or cell — never a cross join; exact verification happens only
+within them.  Plane count bounds bucket sizes (2^q expected buckets per
+table); residual skew (mass near a boundary) is handled by AQE skew-join
+on the bucket join.
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from . import docops
 
@@ -38,7 +51,7 @@ from . import docops
 def plane_component(plane: int, dim: int) -> float:
     """Deterministic pseudo-random plane component in [-0.5, 0.5):
     md5-derived hash60("p<plane>:d<dim>") / 2^60 - 0.5.  Computed in Python
-    and inlined as a literal; the identical expression is renderable in
+    and shipped to the kernel; the identical expression is renderable in
     DuckDB SQL ((('0x'||substr(md5(s),1,15))::BIGINT)::DOUBLE / 2^60 - 0.5),
     and both fold to the same IEEE double."""
     h = int(hashlib.md5(f"p{plane}:d{dim}".encode()).hexdigest()[:15], 16)
@@ -52,70 +65,12 @@ def plane_matrix(n_planes: int, dim: int, plane_offset: int = 0) -> list[list[fl
     ]
 
 
-def _dots_array(vec_col: str, planes: list[list[float]]) -> F.Column:
-    """Array of dot products against EVERY plane in one nested-lambda pass
-    over a 2-D literal matrix.  One expression node regardless of plane
-    count — 48 separate aggregate trees made Catalyst optimization time
-    dominate execution on small inputs.  Fold order per plane:
-    ((0.0+p0)+p1)+... — matched by the SQL twin's list_reduce grouping
-    ((p0+p1)+p2), identical because 0.0+x == x exactly in IEEE."""
-    # the plane matrix goes through ONE F.expr string parsed JVM-side:
-    # F.lit on a nested python list boxes every double through py4j
-    # (~2s of driver time for 48x64 at plan build)
-    matrix = F.expr(
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"{c!r}D" for c in p) + ")" for p in planes
-        )
-        + ")"
-    )
-    return F.transform(
-        matrix,
-        lambda plane: F.aggregate(
-            F.zip_with(
-                F.col(vec_col), plane, lambda x, c: x.cast("double") * c
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-
-
-def _let(col: F.Column, fn) -> F.Column:
-    """Let-binding idiom: evaluate `col` ONCE per row and bind it into `fn`
-    as a lambda variable.  Lambda-bearing expressions are excluded from
-    Spark's common-subexpression elimination, so referencing a dots array
-    48 times would re-run the whole transform 48 times per row (measured
-    10x slowdown) — a lambda variable reference is free."""
-    return F.element_at(F.transform(F.array(col), fn), 1)
-
-
-def _bucket_from_dots(dots: F.Column, n_planes: int, offset: int = 0) -> F.Column:
-    """Bucket id from the sign pattern of dots[offset : offset+n_planes].
-    `dots` MUST be a cheap reference (lambda variable) — see `_let`."""
-    bucket = None
-    for p in range(n_planes):
-        bit = F.when(
-            F.element_at(dots, offset + p + 1) >= 0, F.lit(1).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        term = bit * F.lit(1 << p).cast("long")
-        bucket = term if bucket is None else bucket + term
-    return bucket
-
-
-def _bucket(vec_col: str, planes: list[list[float]]) -> F.Column:
-    return _let(
-        _dots_array(vec_col, planes),
-        lambda d: _bucket_from_dots(d, len(planes)),
-    )
-
-
 def dot_sql(vec_expr: str, comps: list[float]) -> str:
-    """DuckDB rendering of one `_dots_array` element: list_reduce folds
-    ((p0+p1)+p2)... —
-    identical to the Spark aggregate's ((0+p0)+p1)+... because 0.0+x == x
-    exactly in IEEE — over the identical Python double literals, so dot
-    values are bit-equal across engines."""
+    """DuckDB rendering of one hyperplane dot: list_reduce folds
+    ((p0+p1)+p2)... — the sequential order of `_np_fold_dots`' cumsum and
+    of a Spark aggregate's ((0+p0)+p1)+..., because 0.0+x == x exactly in
+    IEEE — over the identical Python doubles, so dot values are bit-equal
+    across engines."""
     lst = "[" + ", ".join(repr(c) for c in comps) + "]"
     return (
         f"list_reduce(list_transform(range(1, {len(comps) + 1}), "
@@ -125,7 +80,8 @@ def dot_sql(vec_expr: str, comps: list[float]) -> str:
 
 
 def bucket_sql(vec_expr: str, planes: list[list[float]]) -> str:
-    """DuckDB rendering of `_bucket` for the correctness oracle."""
+    """DuckDB rendering of one `_plane_buckets` bucket for the
+    correctness oracle."""
     parts = [
         f"(CASE WHEN {dot_sql(vec_expr, comps)} >= 0 THEN {1 << p} ELSE 0 END)"
         for p, comps in enumerate(planes)
@@ -134,8 +90,8 @@ def bucket_sql(vec_expr: str, planes: list[list[float]]) -> str:
 
 
 def probes_sql(vec_expr: str, planes: list[list[float]], n_probes: int) -> str:
-    """DuckDB rendering of `_probe_buckets`: base bucket prepended to the
-    n_probes lowest-(abs(dot), mask) single-bit flips."""
+    """DuckDB rendering of `_plane_buckets`' probe list: base bucket
+    prepended to the n_probes lowest-(abs(dot), mask) single-bit flips."""
     base = bucket_sql(vec_expr, planes)
     margins = ", ".join(
         f"{{'m': abs({dot_sql(vec_expr, comps)}), 'k': {1 << p}::BIGINT}}"
@@ -145,21 +101,6 @@ def probes_sql(vec_expr: str, planes: list[list[float]], n_probes: int) -> str:
         f"list_prepend({base}, "
         f"list_transform(list_slice(list_sort([{margins}]), 1, {n_probes}), "
         f"s -> xor({base}, s.k)))"
-    )
-
-
-def _dot_cols(a: str, b: str, dim: int) -> F.Column:
-    """Dot product of two array columns via zip_with/aggregate (same fold
-    as docops.cosine_similarity's numerator).  An unrolled 64-term
-    element_at chain was measured 3x SLOWER — per-element bounds-checked
-    virtual calls beat the HOF loop only on paper."""
-    del dim  # kept for signature stability; the fold handles any length
-    return F.aggregate(
-        F.zip_with(
-            F.col(a), F.col(b), lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
     )
 
 
@@ -225,7 +166,7 @@ def cosine_topk(
     This is the BRUTE-FORCE baseline: the broadcast crossJoin scans the
     full corpus once per query batch — O(N x Q).  Intended for small query
     sets and as the recall referee; at corpus scale or with a large query
-    table use `hyperplane_lsh_topk` / `ivf_topk` (candidates bounded by
+    table use `lsh_topk` / `ivf_topk` (candidates bounded by
     buckets/cells, never a full scan)."""
     q = F.broadcast(
         queries.select(
@@ -251,6 +192,152 @@ def cosine_topk(
     )
 
 
+def _np_fold_dots(X, P):
+    """Dot products of every row of X against every row of P with Spark's
+    HOF-fold summation ORDER: `aggregate(zip_with(x, c, *), 0.0, +)` is the
+    running sum ((0+x0*c0)+x1*c1)+..., and 0.0+v == v exactly in IEEE, so
+    the fold equals the sequential prefix sum of the per-element products —
+    which is exactly `np.cumsum` (np.add.accumulate, sequential by
+    definition).  A BLAS matmul would sum pairwise and could differ in the
+    last ulp, flipping a sign at a bucket boundary; this path is bit-equal
+    to the column-expression folds (and to the DuckDB oracle's list_reduce,
+    same grouping).  X: (n, d) f64; P: (m, d) f64 → (n, m)."""
+    import numpy as np
+
+    out = np.empty((X.shape[0], P.shape[0]))
+    for j in range(P.shape[0]):
+        out[:, j] = np.cumsum(X * P[j], axis=1)[:, -1]
+    return out
+
+
+def _np_fold_norms(X):
+    """sqrt(fold of squares) — bit-equal to `_norm` (same cumsum argument
+    as _np_fold_dots)."""
+    import numpy as np
+
+    return np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
+
+
+def _vectors(col, dim: int):
+    """(n, dim) float64 matrix of an Arrow list column of vectors.
+    float32 components widen exactly, as the SQL cast to double does.  A
+    null vector, or one whose length is not `dim` (the planes' or the
+    codebook's), fails loudly instead of shifting its neighbours."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if col.null_count or (lens != dim).any():
+        raise ValueError(
+            f"embedding vectors must be non-null and of length {dim}"
+        )
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(col), dim)
+
+
+def _np_near_pairs(ids, X, min_raw, block: int = 256):
+    """All within-group pairs id_a < id_b whose RAW cosine dot/(na*nb) is
+    >= `min_raw` — the numpy verify kernel of `_near_pairs_by`.  `min_raw`
+    must under-shoot the caller's exact threshold (the exact round+compare
+    happens in Spark on the returned dot/na/nb, identical to the
+    column-kernel formula), so this is a lossless pre-filter.  Dots/norms
+    use the fold-order-exact kernels above.  Blocked so per-step memory is
+    O(block^2 * d).
+
+    Returns (id_a, id_b, dot, na, nb) numpy arrays; `ids` MUST be sorted
+    ascending (callers sort).  Pairs are kept on the ids, not on their
+    positions, so a repeated id never pairs with itself."""
+    import numpy as np
+
+    n = len(ids)
+    norms = _np_fold_norms(X)
+    out_a, out_b, out_d, out_na, out_nb = [], [], [], [], []
+    for i0 in range(0, n, block):
+        i1 = min(i0 + block, n)
+        for j0 in range(i0, n, block):
+            j1 = min(j0 + block, n)
+            prod = X[i0:i1, None, :] * X[None, j0:j1, :]
+            dots = np.cumsum(prod, axis=2)[:, :, -1]
+            cos = dots / (norms[i0:i1, None] * norms[None, j0:j1])
+            ii, jj = np.nonzero(cos >= min_raw)
+            gi, gj = ii + i0, jj + j0
+            keep = ids[gi] < ids[gj]
+            gi, gj = gi[keep], gj[keep]
+            out_a.append(ids[gi])
+            out_b.append(ids[gj])
+            out_d.append(dots[ii[keep], jj[keep]])
+            out_na.append(norms[gi])
+            out_nb.append(norms[gj])
+    if not out_a:
+        z = np.empty(0)
+        return z.astype(np.int64), z.astype(np.int64), z, z, z
+    return (
+        np.concatenate(out_a),
+        np.concatenate(out_b),
+        np.concatenate(out_d),
+        np.concatenate(out_na),
+        np.concatenate(out_nb),
+    )
+
+
+# Safety under-shoot for the numpy raw-cosine pre-filter: a pair whose
+# ROUNDED (6-decimal, HALF_UP) cosine meets the threshold has raw cosine
+# within 5e-7 of it; 1e-5 covers that with margin to spare.
+_NEAR_PAIR_TOL = 1e-5
+
+
+def _plane_buckets(
+    embs: DataFrame,
+    n_tables: int,
+    n_planes: int,
+    dim: int | None,
+    n_probes: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The hyperplane kernel: (id, vec, _buckets array<long>).  Table t
+    uses planes [t*q, (t+1)*q); its slice of `_buckets` is the sign-pattern
+    bucket (bit p set iff dot_p >= 0) followed by `n_probes` single-bit
+    flips of its lowest-(|dot|, plane) planes — the multiprobe order that
+    `probes_sql` renders.  One mapInArrow pass, no shuffle: dots in the
+    HOF fold order (`_np_fold_dots`, bit-equal to `dot_sql`); the id and
+    vector pass through as Arrow."""
+    import numpy as np
+    import pyarrow as pa
+
+    if dim is None:
+        dim = _infer_dim(embs, vec_col)
+    P = np.asarray(plane_matrix(n_tables * n_planes, dim), dtype=np.float64)
+    masks = np.left_shift(1, np.arange(n_planes, dtype=np.int64))
+
+    def kernel(batches):
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            n = rb.num_rows
+            dots = _np_fold_dots(_vectors(rb.column(1), dim), P)
+            dots = dots.reshape(n, n_tables, n_planes)
+            b = ((dots >= 0) * masks).sum(axis=2)[:, :, None]
+            if n_probes:
+                # stable sort: equal |dot| keeps the lower plane first
+                low = np.argsort(np.abs(dots), axis=2, kind="stable")
+                b = np.concatenate([b, b ^ masks[low[:, :, :n_probes]]], 2)
+            width = b.shape[1] * b.shape[2]
+            yield rb.append_column(
+                "_buckets",
+                pa.ListArray.from_arrays(
+                    pa.array(np.arange(n + 1, dtype=np.int32) * width),
+                    pa.array(b.ravel()),
+                ),
+            )
+
+    base = embs.select(id_col, vec_col)
+    schema = StructType(
+        base.schema.fields + [StructField("_buckets", ArrayType(LongType()))]
+    )
+    return base.mapInArrow(kernel, schema)
+
+
 def hyperplane_lsh_buckets(
     embs: DataFrame,
     n_planes: int = 8,
@@ -259,12 +346,11 @@ def hyperplane_lsh_buckets(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign each vector a 2^n_planes bucket by the sign pattern of dot
-    products with deterministic hyperplanes.  Narrow projection (planes are
-    plan literals, no shuffle, no driver job when `dim` is given)."""
-    if dim is None:
-        dim = _infer_dim(embs, vec_col)
-    planes = plane_matrix(n_planes, dim)
-    return embs.select(F.col(id_col), _bucket(vec_col, planes).alias("bucket"))
+    products with deterministic hyperplanes.  Narrow (`_plane_buckets`;
+    no shuffle, no driver job when `dim` is given)."""
+    return _plane_buckets(embs, 1, n_planes, dim, 0, id_col, vec_col).select(
+        id_col, F.col("_buckets")[0].alias("bucket")
+    )
 
 
 def hyperplane_lsh_tables(
@@ -278,23 +364,59 @@ def hyperplane_lsh_tables(
     """(id, table_idx, bucket) — T independent plane tables (table t uses
     planes [t*q, (t+1)*q)).  The banding construction for all-pairs
     near-dup: candidate iff same bucket in >= 1 table."""
-    if dim is None:
-        dim = _infer_dim(embs, vec_col)
-    # ALL n_tables*n_planes dots in one pass over the vector (let-bound so
-    # they are computed exactly once per row), then one bucket per table
-    # from its slice of the dots array
-    all_planes = plane_matrix(n_tables * n_planes, dim)
-    buckets = _let(
-        _dots_array(vec_col, all_planes),
-        lambda d: F.array(
-            *[
-                _bucket_from_dots(d, n_planes, t * n_planes)
-                for t in range(n_tables)
-            ]
-        ),
+    tables = _plane_buckets(embs, n_tables, n_planes, dim, 0, id_col, vec_col)
+    return tables.select(
+        id_col, F.posexplode("_buckets").alias("table_idx", "bucket")
     )
-    return embs.select(
-        F.col(id_col), F.posexplode(buckets).alias("table_idx", "bucket")
+
+
+def _near_pairs_by(
+    df: DataFrame,
+    keys: list[str],
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    cap: int = 0,
+) -> DataFrame:
+    """(keys..., id_a, id_b, cosine): every pair id_a < id_b inside one
+    `keys` group whose 6-decimal cosine is >= `threshold`; groups of more
+    than `cap` rows (cap > 0) are skipped.  One exchange groups the rows;
+    per group, `_np_near_pairs` pre-filters on the raw cosine with the
+    lossless `_NEAR_PAIR_TOL` under-shoot, and the exact round + threshold
+    compare runs as a column expression on the returned (dot, na, nb)."""
+    import numpy as np
+    import pandas as pd
+
+    min_raw = threshold - _NEAR_PAIR_TOL
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = ", ".join(
+        [f"{k} {df.schema[k].dataType.simpleString()}" for k in keys]
+        + [f"id_a {id_type}", f"id_b {id_type}"]
+        + ["dot double", "na double", "nb double"]
+    )
+
+    def verify(key, pdf):
+        z = np.empty(0)
+        a, b, d, na, nb = z.astype(np.int64), z.astype(np.int64), z, z, z
+        if len(pdf) >= 2 and not (cap and len(pdf) > cap):
+            pdf = pdf.sort_values(id_col, kind="stable")
+            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            a, b, d, na, nb = _np_near_pairs(
+                pdf[id_col].to_numpy(), X, min_raw
+            )
+        out = {k: np.full(a.size, v) for k, v in zip(keys, key)}
+        out.update(id_a=a, id_b=b, dot=d, na=na, nb=nb)
+        return pd.DataFrame(out)
+
+    return (
+        df.groupBy(*keys)
+        .applyInPandas(verify, schema)
+        .withColumn(
+            "cosine",
+            F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6),
+        )
+        .filter(F.col("cosine") >= threshold)
+        .select(*keys, "id_a", "id_b", "cosine")
     )
 
 
@@ -309,7 +431,7 @@ def embedding_neardup_lsh(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the SCALE path: candidates
-    from a (table_idx, bucket) equi-join over T plane tables, exact cosine
+    share a (table_idx, bucket) in one of T plane tables, exact cosine
     verification within buckets only, distinct pairs.
 
     Recall vs the exact path is 1-(1-(1-theta/pi)^q)^T with theta =
@@ -318,87 +440,22 @@ def embedding_neardup_lsh(
     degenerate buckets (mass on a boundary) with lineage in mind — callers
     at scale should log what was dropped.
 
-    Plan (guide §4.2 shape — batch native math instead of interpreted
-    HOF folds, bit-identical by the cumsum fold-order argument in
-    `_np_fold_dots`): one mapInPandas computes every table bucket per
-    vector in numpy; one exchange groups (table_idx, bucket); within each
-    bucket applyInPandas emits near-pairs (raw-cosine pre-filter with the
-    lossless `_NEAR_PAIR_TOL` under-shoot); the exact 6-decimal round +
-    threshold compare runs as the SAME column expression as before on the
-    returned (dot, na, nb).  A pair found in several buckets emits
-    byte-identical rows (deterministic dots), collapsed by distinct()."""
-    import numpy as np
-    import pandas as pd
-
-    if dim is None:
-        dim = _infer_dim(embs, vec_col)
-    planes = np.asarray(
-        plane_matrix(n_tables * n_planes, dim), dtype=np.float64
-    )
-    masks = np.asarray(
-        [[1 << p for p in range(n_planes)]], dtype=np.int64
-    )
-
-    def bucketize(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            dots = _np_fold_dots(X, planes)  # (n, T*q)
-            bits = (dots >= 0).reshape(len(pdf), n_tables, n_planes)
-            buckets = (bits * masks).sum(axis=2, dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "_buckets": list(buckets),
-                    vec_col: [x for x in X],
-                }
-            )
-
-    tbv = embs.select(id_col, vec_col).mapInPandas(
-        bucketize,
-        f"{id_col} long, _buckets array<long>, {vec_col} array<double>",
+    Plan: `_plane_buckets` computes every table bucket per vector; one
+    exchange groups (table_idx, bucket) and `_near_pairs_by` verifies
+    within each.  A pair found in several buckets emits byte-identical
+    rows (deterministic dots), collapsed by distinct()."""
+    tables = _plane_buckets(
+        embs, n_tables, n_planes, dim, 0, id_col, vec_col
     ).select(
-        id_col,
-        vec_col,
-        F.posexplode("_buckets").alias("table_idx", "bucket"),
-    )
-
-    min_raw = threshold - _NEAR_PAIR_TOL
-
-    def near_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2 or (bucket_cap and n > bucket_cap):
-            return pd.DataFrame(
-                {
-                    "id_a": pd.Series(dtype="int64"),
-                    "id_b": pd.Series(dtype="int64"),
-                    "dot": pd.Series(dtype="float64"),
-                    "na": pd.Series(dtype="float64"),
-                    "nb": pd.Series(dtype="float64"),
-                }
-            )
-        ids = pdf[id_col].to_numpy()
-        X = np.stack(pdf[vec_col].to_numpy())
-        order = np.argsort(ids, kind="stable")
-        ids, X = ids[order], X[order]
-        a, b, d, na, nb = _np_near_pairs(ids, X, min_raw)
-        return pd.DataFrame(
-            {"id_a": a, "id_b": b, "dot": d, "na": na, "nb": nb}
-        )
-
-    pairs = tbv.groupBy("table_idx", "bucket").applyInPandas(
-        near_pairs,
-        "id_a long, id_b long, dot double, na double, nb double",
+        id_col, vec_col, F.posexplode("_buckets").alias("table_idx", "bucket")
     )
     return (
-        pairs.distinct()
-        .withColumn(
-            "cosine",
-            F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6),
+        _near_pairs_by(
+            tables, ["table_idx", "bucket"], threshold, id_col, vec_col,
+            bucket_cap,
         )
-        .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
+        .distinct()
     )
 
 
@@ -446,103 +503,6 @@ def neardup_lsh_params(
     return max(base_tables, t), q
 
 
-def _np_fold_dots(X, P):
-    """Dot products of every row of X against every row of P with Spark's
-    HOF-fold summation ORDER: `aggregate(zip_with(x, c, *), 0.0, +)` is the
-    running sum ((0+x0*c0)+x1*c1)+..., and 0.0+v == v exactly in IEEE, so
-    the fold equals the sequential prefix sum of the per-element products —
-    which is exactly `np.cumsum` (np.add.accumulate, sequential by
-    definition).  A BLAS matmul would sum pairwise and could differ in the
-    last ulp, flipping a sign at a bucket boundary; this path is bit-equal
-    to the column-expression kernels (and to the DuckDB oracle's
-    list_reduce, same grouping).  X: (n, d) f64; P: (m, d) f64 → (n, m)."""
-    import numpy as np
-
-    out = np.empty((X.shape[0], P.shape[0]))
-    for j in range(P.shape[0]):
-        out[:, j] = np.cumsum(X * P[j], axis=1)[:, -1]
-    return out
-
-
-def _np_fold_norms(X):
-    """sqrt(fold of squares) — bit-equal to `_norm` (same cumsum argument
-    as _np_fold_dots)."""
-    import numpy as np
-
-    return np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
-
-
-def _np_near_pairs(ids, X, min_raw, block: int = 256):
-    """All within-group pairs (i < j by id order) whose RAW cosine
-    dot/(na*nb) is >= `min_raw` — the numpy verify kernel shared by
-    semantic_dedup and embedding_neardup_lsh.  `min_raw` must under-shoot
-    the caller's exact threshold (the exact round+compare happens in Spark
-    on the returned dot/na/nb, identical to the column-kernel formula), so
-    this is a lossless pre-filter.  Dots/norms use the fold-order-exact
-    kernels above.  Blocked so per-step memory is O(block^2 * d).
-
-    Returns (id_a, id_b, dot, na, nb) numpy arrays; `ids` MUST be sorted
-    ascending and unique (callers sort)."""
-    import numpy as np
-
-    n = len(ids)
-    norms = _np_fold_norms(X)
-    out_a, out_b, out_d, out_na, out_nb = [], [], [], [], []
-    for i0 in range(0, n, block):
-        i1 = min(i0 + block, n)
-        for j0 in range(i0, n, block):
-            j1 = min(j0 + block, n)
-            prod = X[i0:i1, None, :] * X[None, j0:j1, :]
-            dots = np.cumsum(prod, axis=2)[:, :, -1]
-            cos = dots / (norms[i0:i1, None] * norms[None, j0:j1])
-            ii, jj = np.nonzero(cos >= min_raw)
-            gi, gj = ii + i0, jj + j0
-            keep = gi < gj
-            gi, gj = gi[keep], gj[keep]
-            out_a.append(ids[gi])
-            out_b.append(ids[gj])
-            out_d.append(dots[ii[keep], jj[keep]])
-            out_na.append(norms[gi])
-            out_nb.append(norms[gj])
-    if not out_a:
-        z = np.empty(0)
-        return z.astype(np.int64), z.astype(np.int64), z, z, z
-    return (
-        np.concatenate(out_a),
-        np.concatenate(out_b),
-        np.concatenate(out_d),
-        np.concatenate(out_na),
-        np.concatenate(out_nb),
-    )
-
-
-# Safety under-shoot for the numpy raw-cosine pre-filter: a pair whose
-# ROUNDED (6-decimal, HALF_UP) cosine meets the threshold has raw cosine
-# within 5e-7 of it; 1e-5 covers that with margin to spare.
-_NEAR_PAIR_TOL = 1e-5
-
-
-def _sqdist(a: str, b: str) -> F.Column:
-    """Squared euclidean distance of two array columns — zip_with/aggregate
-    fold (same cross-engine grouping contract as _dot_cols)."""
-    return F.aggregate(
-        F.zip_with(
-            F.col(a),
-            F.col(b),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-# Upper bound on codebook size (cells × dim) for the plan-literal IVF
-# assignment path: ~1M doubles renders to a ~20 MB plan string — well past
-# useful; beyond this the join path (one broadcast of the same data) wins.
-MAX_LITERAL_CODEBOOK_ELEMS = 262_144
-
-
 def ivf_assign(
     embs: DataFrame,
     centroids: DataFrame,
@@ -550,95 +510,59 @@ def ivf_assign(
     vec_col: str = "embedding",
     n_probe: int = 1,
 ) -> DataFrame:
-    """(id, cell, cell_rank): each vector's `n_probe` nearest codebook
-    cells by squared euclidean distance (tie-break on cell id).  The
-    centroid table is a broadcast dimension (IVF codebooks are small —
-    hundreds to tens of thousands of rows)."""
-    cents = F.broadcast(
-        centroids.select(
-            F.col("cell").alias("_cell"), F.col(vec_col).alias("_cv")
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy("_d", "_cell")
-    return (
-        embs.select(id_col, F.col(vec_col).alias("_v"))
-        .crossJoin(cents)
-        .withColumn("_d", _sqdist("_v", "_cv"))
-        .withColumn("cell_rank", F.row_number().over(w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select(id_col, F.col("_cell").alias("cell"), "cell_rank")
-    )
+    """(id, cell, cell_rank, vec): each vector's `n_probe` nearest codebook
+    cells, ranked by (squared euclidean distance, cell id) — a NaN
+    distance (non-finite centroid) ranks last.  The codebook is collected
+    to the driver (IVF codebooks are small: hundreds to tens of thousands
+    of cells) and one mapInArrow pass ranks every cell per vector in
+    numpy, with no join and no shuffle.  Distances sum in the HOF fold
+    order ((0+d0^2)+d1^2)+... (cumsum, see `_np_fold_dots`), bit-equal to
+    the DuckDB oracle's list_reduce.  The id and vector pass through as
+    Arrow, so callers that verify within cells need no join back."""
+    import numpy as np
+    import pyarrow as pa
 
-
-def ivf_assign_literal(
-    embs: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 1,
-) -> DataFrame:
-    """ivf_assign as a NARROW PROJECTION: the codebook is collected to the
-    driver (it is small by definition) and rendered as a JVM-parsed plan
-    literal, so assignment is `transform` over the literal matrix + a
-    sorted take-k — no crossJoin, no shuffle, no window.  Per-element math
-    and the (distance, cell) tie-break match `ivf_assign` exactly (same
-    fold grouping, `array_sort` on struct<d,cell> sorts lexicographically),
-    so the two paths are interchangeable bit-for-bit.
-
-    Guardrails (the literal path is an optimization, not a requirement):
-    non-finite centroid components would render as `inf`/`nan` — not valid
-    SQL literals — and the plan string grows as cells × dim, so codebooks
-    that are non-finite or larger than ``MAX_LITERAL_CODEBOOK_ELEMS``
-    fall back to the join-based ``ivf_assign`` (bit-identical results)."""
     rows = sorted(
-        (
-            (int(r["cell"]), [float(x) for x in r[vec_col]])
-            for r in centroids.select("cell", vec_col).collect()
-        ),
+        (int(r["cell"]), r[vec_col])
+        for r in centroids.select("cell", vec_col).collect()
     )
-    n_elems = sum(len(v) for _, v in rows)
-    usable = n_elems <= MAX_LITERAL_CODEBOOK_ELEMS and all(
-        math.isfinite(x) for _, v in rows for x in v
+    cells = np.asarray([c for c, _ in rows], dtype=np.int32)
+    C = np.asarray([v for _, v in rows], dtype=np.float64)
+    k = min(n_probe, len(rows))
+
+    def kernel(batches):
+        for rb in batches:
+            if not rb.num_rows or not k:
+                continue
+            X = _vectors(rb.column(1), C.shape[1])
+            d = np.empty((len(X), len(C)))
+            for j in range(len(C)):
+                diff = X - C[j]
+                d[:, j] = np.cumsum(diff * diff, axis=1)[:, -1]
+            # stable over cell-ascending columns: (d, cell) order, NaN last
+            top = np.argsort(d, axis=1, kind="stable")[:, :k]
+            out = rb.take(pa.array(np.repeat(np.arange(len(X)), k)))
+            ranks = np.tile(np.arange(1, k + 1, dtype=np.int32), len(X))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    out.column(0),
+                    pa.array(cells[top].ravel()),
+                    pa.array(ranks),
+                    out.column(1),
+                ],
+                names=[id_col, "cell", "cell_rank", vec_col],
+            )
+
+    base = embs.select(id_col, vec_col)
+    schema = StructType(
+        [
+            base.schema[id_col],
+            StructField("cell", IntegerType()),
+            StructField("cell_rank", IntegerType()),
+            base.schema[vec_col],
+        ]
     )
-    if not usable:
-        return ivf_assign(embs, centroids, id_col, vec_col, n_probe)
-    mat = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(repr(x) for x in v) + ")" for _, v in rows
-        )
-        + ")"
-    )
-    cell_ids = F.expr(
-        "array(" + ",".join(str(c) for c, _ in rows) + ")"
-    )
-    dists = F.transform(
-        mat,
-        lambda c: F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                c,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    probes = F.slice(
-        F.array_sort(
-            F.arrays_zip(dists.alias("d"), cell_ids.alias("cell"))
-        ),
-        1,
-        n_probe,
-    )
-    return embs.select(
-        F.col(id_col), F.posexplode(probes).alias("_i", "_p")
-    ).select(
-        id_col,
-        F.col("_p.cell").alias("cell"),
-        (F.col("_i") + 1).cast("int").alias("cell_rank"),
-    )
+    return base.mapInArrow(kernel, schema)
 
 
 def _reseed_empty_cells(newC, empty, X, dmin):
@@ -677,9 +601,9 @@ def train_ivf_codebook(
     as vectorized numpy on the driver — the same train-small/apply-big
     split Spark MLlib's KMeans uses (centers live on the driver between
     iterations there too).  The returned centroid table is tiny
-    (n_cells rows) and feeds the plan-literal / broadcast assignment paths
-    unchanged.  At 10^12 rows, set `sample_fraction` so
-    fraction x N ~ sample_cap; training cost stays constant in N.
+    (n_cells rows) and feeds `ivf_assign` unchanged.  At 10^12 rows, set
+    `sample_fraction` so fraction x N ~ sample_cap; training cost stays
+    constant in N.
 
     Determinism: the sample, the init (hash-ordered spread over the
     sample), tie-breaks (lowest cell id via argmin-first), and empty-cell
@@ -741,6 +665,55 @@ def train_ivf_codebook(
     )
 
 
+def _rank_probed(
+    corpus: DataFrame,
+    queries: DataFrame,
+    key: str,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id: str,
+) -> DataFrame:
+    """(query_id, id, cosine, rank): the shared tail of `lsh_topk` and
+    `ivf_topk`.  Candidates are corpus rows sharing a `key` (bucket or
+    cell) with the query, self-matches on id excluded, one row per
+    (query, id); cosine is dot / (norm x norm) with norms folded once per
+    vector, the same fold as docops.cosine_similarity; rank <= k by
+    (cosine desc, id)."""
+    cs = corpus.select(
+        id_col, key, F.col(vec_col).alias("cv"), _norm(vec_col).alias("_nc")
+    )
+    qs = queries.select(
+        query_id, key, F.col(vec_col).alias("qv"), _norm(vec_col).alias("_nq")
+    )
+    dot = F.aggregate(
+        F.zip_with(
+            F.col("qv"), F.col("cv"),
+            lambda x, y: x.cast("double") * y.cast("double"),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    # equi-join on the key, no broadcast hint: AQE broadcasts the query
+    # side when it fits; with a corpus-sized query table it stays a
+    # shuffle join on the same key
+    scored = (
+        cs.join(qs, key)
+        .filter(F.col(id_col) != F.col(query_id))
+        # a candidate can surface through several probed buckets or cells
+        .dropDuplicates([query_id, id_col])
+        .withColumn(
+            "cosine", F.round(dot / (F.col("_nq") * F.col("_nc")), 6)
+        )
+    )
+    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id, id_col, "cosine", "rank")
+    )
+
+
 def ivf_topk(
     embs: DataFrame,
     queries: DataFrame,
@@ -759,89 +732,18 @@ def ivf_topk(
     `centroids` defaults to the vectors with id < n_cells — a deterministic
     seed codebook (callers at scale supply an offline-trained one, e.g.
     sampled k-means; the operator only needs SOME small centroid dim).
-    Plan: assignment is a NARROW projection against the plan-literal
-    codebook (ivf_assign_literal — no crossJoin, no shuffle, no window);
+    Plan: both sides go through `ivf_assign` (narrow, no crossJoin);
     candidates via equi-join on cell — never a corpus cross join; expected
     candidate fraction ~ n_probe / n_cells of the corpus."""
     if centroids is None:
         centroids = embs.filter(F.col(id_col) < n_cells).select(
             F.col(id_col).alias("cell"), vec_col
         )
-    corpus_cells = ivf_assign_literal(embs, centroids, id_col, vec_col, n_probe=1)
-    query_cells = ivf_assign_literal(
-        queries.withColumnRenamed(query_id, id_col),
-        centroids, id_col, vec_col, n_probe=n_probe,
-    ).withColumnRenamed(id_col, query_id)
-
-    corpus = embs.join(corpus_cells.select(id_col, "cell"), id_col).select(
-        id_col, F.col(vec_col).alias("cv"), "cell", _norm(vec_col).alias("_nc")
+    return _rank_probed(
+        ivf_assign(embs, centroids, id_col, vec_col, 1),
+        ivf_assign(queries, centroids, query_id, vec_col, n_probe),
+        "cell", k, id_col, vec_col, query_id,
     )
-    qs = queries.join(query_cells.select(query_id, "cell"), query_id).select(
-        query_id, F.col(vec_col).alias("qv"), "cell",
-        _norm(vec_col).alias("_nq"),
-    )
-    # equi-join on cell, no broadcast hint: AQE broadcasts the query side
-    # when it fits; with a corpus-sized query table it stays a shuffle
-    # join on the same cell key
-    scored = (
-        corpus.join(qs, "cell")
-        .filter(F.col(id_col) != F.col(query_id))
-        # a candidate may surface through several probed cells
-        .groupBy(query_id, id_col)
-        .agg(
-            F.first("qv").alias("qv"), F.first("cv").alias("cv"),
-            F.first("_nq").alias("_nq"), F.first("_nc").alias("_nc"),
-        )
-        .withColumn(
-            "cosine",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("qv"), F.col("cv"),
-                        lambda x, y: x.cast("double") * y.cast("double"),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                / (F.col("_nq") * F.col("_nc")),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, "cosine", "rank")
-    )
-
-
-def _probe_buckets(
-    vec_col: str, planes: list[list[float]], n_probes: int
-) -> F.Column:
-    """Array of probe buckets: the base bucket plus `n_probes` single-bit
-    flips of the lowest-|margin| planes (multiprobe LSH).  Margin order is
-    (abs(dot), plane) — deterministic and SQL-reproducible.  Dots are
-    let-bound (computed once per row)."""
-
-    def build(d: F.Column) -> F.Column:
-        base = _bucket_from_dots(d, len(planes))
-        margins = F.array(
-            *[
-                F.struct(
-                    F.abs(F.element_at(d, p + 1)).alias("m"),
-                    F.lit(1 << p).cast("long").alias("mask"),
-                )
-                for p in range(len(planes))
-            ]
-        )
-        flips = F.transform(
-            F.slice(F.array_sort(margins), 1, n_probes),
-            lambda s: base.bitwiseXOR(s["mask"]),
-        )
-        return F.concat(F.array(base), flips)
-
-    return _let(_dots_array(vec_col, planes), build)
 
 
 def lsh_topk(
@@ -862,40 +764,16 @@ def lsh_topk(
     exactly once regardless of probe count."""
     if dim is None:
         dim = _infer_dim(embs, vec_col)
-    planes = plane_matrix(n_planes, dim)
-    cb = hyperplane_lsh_buckets(embs, n_planes, dim, id_col, vec_col)
-    corpus = embs.join(cb, id_col).select(
-        id_col, F.col(vec_col).alias("cv"), "bucket"
-    )
-    qs = queries.select(
-        F.col(query_id),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            _probe_buckets(vec_col, planes, n_probes)
-            if n_probes
-            else F.array(_bucket(vec_col, planes))
-        ).alias("bucket"),
-    )
-    # equi-join on bucket, no broadcast hint (AQE decides — see ivf_topk)
-    scored = (
-        corpus.join(qs, "bucket")
-        .filter(F.col(id_col) != F.col(query_id))
-        # a candidate can surface through several probe buckets — collapse
-        # before ranking so rank numbers are unambiguous
-        .groupBy(query_id, id_col)
-        .agg(
-            F.first("qv").alias("qv"), F.first("cv").alias("cv")
+
+    def probed(df, id_, probes):
+        buckets = _plane_buckets(df, 1, n_planes, dim, probes, id_, vec_col)
+        return buckets.select(
+            id_, vec_col, F.explode("_buckets").alias("bucket")
         )
-        .withColumn(
-            "cosine",
-            F.round(docops.cosine_similarity(F.col("qv"), F.col("cv")), 6),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, "cosine", "rank")
+
+    return _rank_probed(
+        probed(embs, id_col, 0), probed(queries, query_id, n_probes),
+        "bucket", k, id_col, vec_col, query_id,
     )
 
 
@@ -921,99 +799,17 @@ def semantic_dedup(
     groupBy(cell), with cell sizes ~ N/n_cells (grow n_cells with N; a
     real deployment feeds k-means centroids via `centroids`).
 
-    Plan (guide §4.2 — batch native math instead of interpreted HOF
-    folds, bit-identical by the cumsum fold-order argument in
-    `_np_fold_dots`): one mapInPandas assigns each vector its nearest
-    cell in numpy (same sqdist fold and (distance, cell) tie-break as
-    ivf_assign_literal); within each cell applyInPandas emits near-pairs
-    (raw-cosine pre-filter with the lossless `_NEAR_PAIR_TOL`
-    under-shoot); the exact 6-decimal round + eps compare and the
-    rank-1 window run as the SAME column expressions as before."""
-    import numpy as np
-    import pandas as pd
-
+    Plan: `ivf_assign` (narrow), then `_near_pairs_by` within each cell;
+    the rank-1 window picks `dup_of`."""
     if centroids is None:
         # deterministic seed codebook, same convention as ivf_topk
         centroids = embs.filter(F.col(id_col) < n_cells).select(
             F.col(id_col).alias("cell"), vec_col
         )
-    crows = sorted(
-        (int(r["cell"]), [float(x) for x in r[vec_col]])
-        for r in centroids.select("cell", vec_col).collect()
+    cells = ivf_assign(embs, centroids, id_col, vec_col).select(
+        id_col, vec_col, "cell"
     )
-    cell_ids = np.asarray([c for c, _ in crows], dtype=np.int64)
-    C = np.asarray([v for _, v in crows], dtype=np.float64)
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # sqdist with the fold's summation order: cumsum of the
-            # per-element squared differences (see _np_fold_dots)
-            d = np.empty((len(pdf), len(cell_ids)))
-            for j in range(len(cell_ids)):
-                diff = X - C[j]
-                d[:, j] = np.cumsum(diff * diff, axis=1)[:, -1]
-            # argmin first-hit == lexicographic (d, cell) min: crows are
-            # cell-ascending, matching ivf_assign_literal's array_sort
-            win = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "cell": cell_ids[win].astype(np.int32),
-                    vec_col: [x for x in X],
-                }
-            )
-
-    v = embs.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} long, cell int, {vec_col} array<double>"
-    )
-
-    min_raw = eps - _NEAR_PAIR_TOL
-
-    def near_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype="int64"),
-                "id_b": pd.Series(dtype="int64"),
-                "cell": pd.Series(dtype="int32"),
-                "dot": pd.Series(dtype="float64"),
-                "na": pd.Series(dtype="float64"),
-                "nb": pd.Series(dtype="float64"),
-            }
-        )
-        if len(pdf) < 2:
-            return empty
-        ids = pdf[id_col].to_numpy()
-        X = np.stack(pdf[vec_col].to_numpy())
-        order = np.argsort(ids, kind="stable")
-        ids, X = ids[order], X[order]
-        a, b, d, na, nb = _np_near_pairs(ids, X, min_raw)
-        return pd.DataFrame(
-            {
-                "id_a": a,
-                "id_b": b,
-                "cell": np.full(a.size, pdf["cell"].iloc[0], dtype=np.int32),
-                "dot": d,
-                "na": na,
-                "nb": nb,
-            }
-        )
-
-    pairs = (
-        v.groupBy("cell")
-        .applyInPandas(
-            near_pairs,
-            "id_a long, id_b long, cell int, dot double, na double, "
-            "nb double",
-        )
-        .withColumn(
-            "cosine",
-            F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6),
-        )
-        .filter(F.col("cosine") >= eps)
-    )
+    pairs = _near_pairs_by(cells, ["cell"], eps, id_col, vec_col)
     w = Window.partitionBy("id_b").orderBy(
         F.desc("cosine"), F.asc("id_a")
     )

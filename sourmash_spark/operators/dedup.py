@@ -973,6 +973,34 @@ def _cut_spans(
     )
 
 
+def _contaminated_spans(
+    docs: DataFrame,
+    bench: DataFrame,
+    min_len: int,
+    id_col: str,
+    text_col: str,
+    bench_text_col: str,
+    hash_grams: bool,
+) -> DataFrame:
+    """(id_col, spans): the merged islands of corpus positions whose
+    L-gram appears in the benchmark's DISTINCT gram keys — the marking
+    shared by `decontaminate_spans` and `decontaminate_removal`."""
+    grams = _doc_grams(docs, min_len, id_col, text_col, hash_grams)
+    bench_keys = (
+        _doc_grams(
+            bench.select(F.lit(0).alias("_bid"), F.col(bench_text_col)),
+            min_len,
+            "_bid",
+            bench_text_col,
+            hash_grams,
+        )
+        .select("_k")
+        .distinct()
+    )
+    marked = grams.join(bench_keys, "_k", "left_semi").select(id_col, "pos")
+    return _merge_marked_to_spans(marked, min_len, id_col)
+
+
 def decontaminate_spans(
     docs: DataFrame,
     bench: DataFrame,
@@ -998,22 +1026,9 @@ def decontaminate_spans(
     exchange at all, cheaper than the dedup variant.
 
     Output: (id_col, span_start, span_end), 1-based inclusive."""
-    grams = _doc_grams(docs, min_len, id_col, text_col, hash_grams)
-    bench_keys = (
-        _doc_grams(
-            bench.select(
-                F.lit(0).alias("_bid"), F.col(bench_text_col)
-            ),
-            min_len,
-            "_bid",
-            bench_text_col,
-            hash_grams,
-        )
-        .select("_k")
-        .distinct()
+    arrays = _contaminated_spans(
+        docs, bench, min_len, id_col, text_col, bench_text_col, hash_grams
     )
-    marked = grams.join(bench_keys, "_k", "left_semi").select(id_col, "pos")
-    arrays = _merge_marked_to_spans(marked, min_len, id_col)
     return arrays.select(id_col, F.explode("spans").alias("s")).select(
         id_col, "s.span_start", "s.span_end"
     )
@@ -1033,20 +1048,9 @@ def decontaminate_removal(
     keep-the-document decontamination policy for corpora too valuable to
     drop whole rows from.  Output: (id_col, n_spans, n_removed,
     text_deduped)."""
-    grams = _doc_grams(docs, min_len, id_col, text_col, hash_grams)
-    bench_keys = (
-        _doc_grams(
-            bench.select(F.lit(0).alias("_bid"), F.col(bench_text_col)),
-            min_len,
-            "_bid",
-            bench_text_col,
-            hash_grams,
-        )
-        .select("_k")
-        .distinct()
+    arrays = _contaminated_spans(
+        docs, bench, min_len, id_col, text_col, bench_text_col, hash_grams
     )
-    marked = grams.join(bench_keys, "_k", "left_semi").select(id_col, "pos")
-    arrays = _merge_marked_to_spans(marked, min_len, id_col)
     return _cut_spans(docs, arrays, id_col, text_col)
 
 

@@ -3,6 +3,7 @@ behavior, and plan shape (equi-join, not cross join)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 
 from sourmash_spark.operators import ann as ann_ops
@@ -181,26 +182,24 @@ def test_ivf_candidates_bounded_by_cells(spark):
     assert cells.count() == embs.count()  # every vector exactly one cell
     sizes = cells.groupBy("cell").count().collect()
     assert len(sizes) <= 8
+    # the codebook reaches the kernel as driver data: no cross join and
+    # no exchange of any kind
     plan = cells._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert "CartesianProduct" not in plan
+    assert "NestedLoopJoin" not in plan
+    assert "Exchange" not in plan
 
 
 def _quantization_error(embs, cents):
     """Mean squared distance of each vector to its assigned centroid."""
-    from sourmash_spark.operators.ann import ivf_assign_literal, _sqdist
+    from sourmash_spark.operators.ann import ivf_assign
 
-    cells = ivf_assign_literal(embs, cents, n_probe=1)
-    joined = (
-        embs.join(cells, "vec_id")
-        .join(
-            F.broadcast(
-                cents.select("cell", F.col("embedding").alias("_cv"))
-            ),
-            "cell",
-        )
-        .select(_sqdist("embedding", "_cv").alias("_d"))
-    )
-    return joined.agg(F.avg("_d")).collect()[0][0]
+    C = {r["cell"]: np.asarray(r["embedding"]) for r in cents.collect()}
+    d = [
+        ((np.asarray(r["embedding"]) - C[r["cell"]]) ** 2).sum()
+        for r in ivf_assign(embs, cents, n_probe=1).collect()
+    ]
+    return float(np.mean(d))
 
 
 def test_trained_codebook_deterministic(spark):
@@ -246,3 +245,90 @@ def test_trained_codebook_beats_seed(spark):
     r_seed, r_trained = recall(seed_cents), recall(trained)
     assert r_trained >= r_seed
     assert r_trained >= 0.9
+
+
+def test_kernel_probes_match_probes_sql(spark):
+    """The hyperplane kernel's probe list (base bucket, then single-bit
+    flips by (|dot|, plane)) equals DuckDB's `probes_sql` on random
+    vectors, with planted equal-|dot| ties: the zero and negative-zero
+    vectors tie every plane at |dot| = 0, and vectors orthogonal to one
+    plane put an exact 0.0 dot on the sign boundary."""
+    import duckdb
+
+    dim, q = 16, 6
+    planes = ann_ops.plane_matrix(q, dim)
+    rng = np.random.RandomState(11)
+    vecs = rng.randn(200, dim).tolist()
+    vecs += [[0.0] * dim, [-0.0] * dim]
+    for p in range(q):
+        v = [0.0] * dim  # c[p][5] * c[p][2] - c[p][2] * c[p][5] == 0
+        v[2], v[5] = planes[p][5], -planes[p][2]
+        vecs.append(v)
+    rows = list(enumerate(vecs))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    for n_probes in (3, q + 2):
+        got = {
+            r["vec_id"]: list(r["_buckets"])
+            for r in ann_ops._plane_buckets(
+                df, 1, q, dim, n_probes, "vec_id", "embedding"
+            ).collect()
+        }
+        probes = ann_ops.probes_sql("embedding", planes, n_probes)
+        want = dict(
+            con.execute(f"SELECT vec_id, {probes} FROM t").fetchall()
+        )
+        assert got == want, n_probes
+        assert len(got[200]) == 1 + min(n_probes, q)
+        # every |dot| ties on the zero vector: flips follow plane order
+        assert got[200][1:] == [
+            got[200][0] ^ (1 << p) for p in range(min(n_probes, q))
+        ]
+
+
+def test_duplicated_id_never_pairs_with_itself(spark):
+    """A vec_id that appears twice (two near-identical vectors) must not
+    pair with itself: no id_a == id_b pair from embedding_neardup_lsh and
+    no vector marked dup_of itself by semantic_dedup — as in the DuckDB
+    twins, which join on a.vec_id < b.vec_id.  Real near-dups still pair."""
+    rng = np.random.RandomState(13)
+    base = rng.randn(30, 16)
+    rows = [(i, base[i].tolist()) for i in range(30)]
+    rows.append((7, (base[7] + 1e-3).tolist()))  # vec_id 7 twice
+    rows.append((100, (base[3] + 1e-3).tolist()))  # a real near-dup of 3
+    embs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    pairs = ann_ops.embedding_neardup_lsh(
+        embs, threshold=0.9, n_tables=4, n_planes=2, dim=16
+    ).collect()
+    assert all(r["id_a"] < r["id_b"] for r in pairs)
+    assert (3, 100) in {(r["id_a"], r["id_b"]) for r in pairs}
+
+    dups = ann_ops.semantic_dedup(embs, n_cells=2, eps=0.9).collect()
+    assert all(r["vec_id"] != r["dup_of"] for r in dups)
+    assert (100, 3) in {(r["vec_id"], r["dup_of"]) for r in dups}
+
+
+def test_kernels_reject_null_and_ragged_vectors(spark):
+    """A null vector, or one whose length is not the planes' or the
+    codebook's, fails both kernels loudly instead of shifting the rows
+    after it onto the wrong components."""
+    import pytest
+
+    bad = {
+        "null": [(0, [1.0, 2.0]), (1, None), (2, [3.0, 4.0])],
+        "ragged": [(0, [1.0, 2.0]), (1, [5.0]), (2, [3.0, 4.0, 6.0])],
+    }
+    cents = spark.createDataFrame(
+        [(0, [0.0, 0.0])], "cell int, embedding array<double>"
+    )
+    for rows in bad.values():
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        for out in (
+            ann_ops.hyperplane_lsh_buckets(df, n_planes=2, dim=2),
+            ann_ops.ivf_assign(df, cents),
+        ):
+            with pytest.raises(Exception, match="non-null and of length 2"):
+                out.collect()

@@ -155,79 +155,69 @@ def test_quality_filter_job_rewrite_stages(spark, tmp_path):
     assert kept[2]["source"] == "b"
 
 
-def test_ivf_assign_literal_matches_join_path(spark):
-    """The plan-literal codebook assignment (narrow projection) is
-    bit-for-bit interchangeable with the broadcast-crossJoin path,
-    including the (distance, cell) tie-break, at n_probe 1 and 2."""
-    rng = np.random.RandomState(5)
-    vecs = rng.randn(60, 8)
+def _bruteforce_cells(vecs, cents, n_probe):
+    """Reference ranking: squared distance summed left to right (the fold
+    order the kernel and the SQL oracle use), then (distance, cell) order
+    with NaN after every number."""
+    out = set()
+    for i, v in enumerate(vecs):
+        d = []
+        for c, cv in cents:
+            s = 0.0
+            for x, y in zip(v, cv):
+                s += (x - y) * (x - y)
+            d.append((np.isnan(s), s, c))
+        for rank, (_, _, c) in enumerate(sorted(d)[:n_probe], 1):
+            out.add((i, c, rank))
+    return out
+
+
+def _assigned(spark, vecs, cents, n_probe):
     embs = spark.createDataFrame(
-        [(i, vecs[i].tolist()) for i in range(60)],
+        [(i, v) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<double>",
     )
-    cents = spark.createDataFrame(
-        [(c, vecs[c].tolist()) for c in range(6)],
-        "cell long, embedding array<double>",
-    )
-    for n_probe in (1, 2):
-        a = {
-            (r["vec_id"], r["cell"], r["cell_rank"])
-            for r in ann_ops.ivf_assign(
-                embs, cents, n_probe=n_probe
-            ).collect()
-        }
-        b = {
-            (r["vec_id"], r["cell"], r["cell_rank"])
-            for r in ann_ops.ivf_assign_literal(
-                embs, cents, n_probe=n_probe
-            ).collect()
-        }
-        assert a == b, n_probe
-
-
-def test_ivf_assign_literal_guardrails_fall_back(spark):
-    """Non-finite centroid components or an oversized codebook make the
-    literal path silently fall back to the join path (same results) rather
-    than rendering an unparseable / multi-MB plan string."""
-    import sourmash_spark.operators.ann as ann_mod
-
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(20, 4)
-    embs = spark.createDataFrame(
-        [(i, vecs[i].tolist()) for i in range(20)],
-        "vec_id long, embedding array<double>",
-    )
-    bad = spark.createDataFrame(
-        [(0, vecs[0].tolist()), (1, [float("nan"), 0.0, 0.0, 0.0]),
-         (2, [float("inf"), 1.0, 1.0, 1.0])],
-        "cell long, embedding array<double>",
-    )
-    got = {
-        (r["vec_id"], r["cell"])
-        for r in ann_ops.ivf_assign_literal(embs, bad).collect()
-    }
-    # NaN distances rank last under the join path's orderBy; every vector
-    # still gets an assignment and the call does not raise
-    assert len(got) == 20
-
-    good = spark.createDataFrame(
-        [(c, vecs[c].tolist()) for c in range(3)],
-        "cell long, embedding array<double>",
-    )
-    old = ann_mod.MAX_LITERAL_CODEBOOK_ELEMS
-    try:
-        ann_mod.MAX_LITERAL_CODEBOOK_ELEMS = 4  # force size fallback
-        a = {
-            (r["vec_id"], r["cell"], r["cell_rank"])
-            for r in ann_ops.ivf_assign_literal(embs, good, n_probe=2).collect()
-        }
-    finally:
-        ann_mod.MAX_LITERAL_CODEBOOK_ELEMS = old
-    b = {
+    cdf = spark.createDataFrame(cents, "cell long, embedding array<double>")
+    return {
         (r["vec_id"], r["cell"], r["cell_rank"])
-        for r in ann_ops.ivf_assign(embs, good, n_probe=2).collect()
+        for r in ann_ops.ivf_assign(embs, cdf, n_probe=n_probe).collect()
     }
-    assert a == b
+
+
+def test_ivf_assign_matches_bruteforce_ranking(spark):
+    """The numpy cell kernel ranks cells by (squared distance, cell id)
+    exactly as a brute-force scalar fold does, at n_probe 1 and 2 —
+    including planted distance ties, which go to the lower cell id."""
+    rng = np.random.RandomState(5)
+    vecs = rng.randn(60, 8).tolist()
+    vecs[0] = [0.0] * 8
+    # cells 9 and 4 are copies of cell 2 (three-way ties at every vector);
+    # cell 7 is cell 3 negated, so the zero vector 0 is equidistant from
+    # both
+    cents = [(c, vecs[c]) for c in (0, 1, 2, 3, 5)]
+    cents += [(9, vecs[2]), (4, vecs[2]), (7, [-x for x in vecs[3]])]
+    for n_probe in (1, 2, 3):
+        got = _assigned(spark, vecs, cents, n_probe)
+        assert got == _bruteforce_cells(vecs, cents, n_probe), n_probe
+        assert len(got) == 60 * n_probe
+    assert {(0, 0, 1), (0, 3, 2), (0, 7, 3)} <= got
+    assert {(2, 2, 1), (2, 4, 2), (2, 9, 3)} <= got
+
+
+def test_ivf_assign_nonfinite_centroids_rank_last(spark):
+    """NaN and inf centroid components still assign every vector: a NaN
+    distance ranks after every finite or infinite one."""
+    rng = np.random.RandomState(7)
+    vecs = rng.randn(20, 4).tolist()
+    cents = [
+        (0, vecs[0]),
+        (1, [float("nan"), 0.0, 0.0, 0.0]),
+        (2, [float("inf"), 1.0, 1.0, 1.0]),
+    ]
+    got = _assigned(spark, vecs, cents, 3)
+    assert got == _bruteforce_cells(vecs, cents, 3)
+    assert {(i, 1, 3) for i in range(20)} <= got
+    assert {c for i, c, rank in got if rank == 1} == {0}
 
 
 def test_exact_dedup_ids_matches_group_report(spark):

@@ -62,9 +62,9 @@ def _candidate_count_lsh(aug, t, q, dim):
 
 def _candidate_count_cells(aug, centroids):
     """Within-cell pair volume for semantic_dedup (sum cell_size^2 / 2)."""
-    from sourmash_spark.operators.ann import ivf_assign_literal
+    from sourmash_spark.operators.ann import ivf_assign
 
-    cells = ivf_assign_literal(aug, centroids, "vec_id", "embedding", 1)
+    cells = ivf_assign(aug, centroids, "vec_id", "embedding", 1)
     return int(
         cells.groupBy("cell")
         .agg(F.count("*").alias("n"))
