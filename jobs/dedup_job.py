@@ -10,7 +10,10 @@ Deploy (rebuild the artifact whenever the package changes —
 
 The job is resumable: re-submitting with the same config skips completed
 stages (config-hash-keyed checkpoint tables + lineage, see
-sourmash_spark/sources/checkpoint.py).  Prints one summary JSON line.
+sourmash_spark/sources/checkpoint.py).  The session is get_spark's, so
+spark-submit's --master and --conf apply.  Prints one summary JSON line
+from the stage lineage (no Spark job), with the effective master and
+shuffle partitions.
 """
 
 from __future__ import annotations
@@ -19,6 +22,43 @@ import argparse
 import json
 import sys
 import time
+
+
+def summarize(spark, base_dir: str, cfg) -> dict:
+    """The run's counts from the latest ``complete`` lineage record of each
+    stage under ``cfg``'s hash — no Spark job, fresh run or resumed.
+    Clusters = signatures − edge-graph vertices + components; a clusters
+    record from before the record carried those counts costs one count
+    job."""
+    from sourmash_spark.sources import checkpoint as ckpt
+
+    ch = cfg.config_hash()
+    latest = {
+        r["stage"]: r for r in ckpt.lineage_records(base_dir)
+        if r.get("config_hash") == ch and r.get("event") == "complete"
+    }
+    clusters = latest["clusters"]
+    if "edge_graph" in clusters:
+        graph = clusters["edge_graph"]
+        n_clusters = (
+            clusters["n_rows"] - graph["vertices"] + graph["components"]
+        )
+    else:  # a record written before it carried the graph counts
+        n_clusters = (
+            spark.read.parquet(ckpt.stage_path(base_dir, "clusters", ch))
+            .select("cluster_id").distinct().count()
+        )
+    return {
+        "config_hash": ch,
+        "n_signatures": latest["signatures"]["n_rows"],
+        "n_candidates": latest["candidates"]["n_rows"],
+        "n_edges": latest["edges"]["n_rows"],
+        "n_clusters": n_clusters,
+        "master": spark.sparkContext.master,
+        "shuffle_partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        ),
+    }
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -37,16 +77,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--bucket-cap", type=int, default=500)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     import pyspark.sql.functions as F
 
-    spark = (
-        SparkSession.builder.appName("sourmash_spark_dedup")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    from sourmash_spark.session import get_spark
+
+    spark = get_spark("sourmash_spark_dedup")
 
     from sourmash_spark.params import LSHParams, SketchParams
     from sourmash_spark.pipeline import PipelineConfig, run_pipeline
@@ -75,13 +110,9 @@ def main(argv: list[str] | None = None) -> int:
         src = src.withColumnRenamed(args.content_col, "content")
 
     t0 = time.time()
-    out = run_pipeline(spark, src, args.output, cfg)
+    run_pipeline(spark, src, args.output, cfg)
     summary = {
-        "config_hash": cfg.config_hash(),
-        "n_signatures": out["signatures"].count(),
-        "n_candidates": out["candidates"].count(),
-        "n_edges": out["edges"].count(),
-        "n_clusters": out["clusters"].select("cluster_id").distinct().count(),
+        **summarize(spark, args.output, cfg),
         "wall_sec": round(time.time() - t0, 2),
         "output": args.output,
     }

@@ -32,7 +32,8 @@ Writes:
     <output>/lineage.parquet    (stage, doc_id) for every dropped row
                                 (segment_dedup stage: docs whose text was
                                 rewritten, no row drop)
-Prints one summary JSON line.
+Prints one summary JSON line.  The session is get_spark's: spark-submit's
+--master and --conf apply; a session already running is used as it is.
 """
 
 from __future__ import annotations
@@ -74,16 +75,11 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     import pyspark.sql.functions as F
 
-    spark = (
-        SparkSession.builder.appName("sourmash_spark_quality_filter")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    from sourmash_spark.session import get_spark
+
+    spark = get_spark("sourmash_spark_quality_filter")
     from sourmash_spark.operators import dedup as dedup_ops
     from sourmash_spark.operators import text as text_ops
 

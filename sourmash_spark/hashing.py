@@ -139,20 +139,6 @@ def _tail_u64(win: np.ndarray, off: int, nbytes: int) -> np.ndarray:
     return out
 
 
-def _rotl64_vec(x: np.ndarray, r: int) -> np.ndarray:
-    r = np.uint64(r)
-    return (x << r) | (x >> np.uint64(64 - int(r)))
-
-
-def _fmix64_vec(k: np.ndarray) -> np.ndarray:
-    k = k ^ (k >> np.uint64(33))
-    k = k * np.uint64(0xFF51AFD7ED558CCD)
-    k = k ^ (k >> np.uint64(33))
-    k = k * np.uint64(0xC4CEB9FE1A85EC53)
-    k = k ^ (k >> np.uint64(33))
-    return k
-
-
 def _rotl64_inplace(x: np.ndarray, r: int, tmp: np.ndarray) -> None:
     np.right_shift(x, np.uint64(64 - r), out=tmp)
     np.left_shift(x, np.uint64(r), out=x)

@@ -23,14 +23,15 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 
-def _driver_union_find(edges, spark=None):
+def _driver_union_find(edges, spark=None, stats: dict | None = None):
     """Small-graph fast path: collect the edge list (two long columns) and
     run union-find with path compression on the driver.  Legitimate at any
     corpus size where the EDGE list is small — edges are O(duplicate
     pairs), orders of magnitude below the corpus — and mirrors how the
     reference holds its comparable state driver-side (CounterGather).
     Accepts either a DataFrame or an already-collected pandas frame (the
-    threshold probe in connected_components collects exactly once)."""
+    threshold probe in connected_components collects exactly once).
+    `stats`, when given, gets the vertex and component counts."""
     import numpy as np
     import pandas as pd
 
@@ -60,6 +61,10 @@ def _driver_union_find(edges, spark=None):
         lab = lab[lab]
         if np.array_equal(lab, old):
             break
+    if stats is not None:
+        # a component's root is the one vertex labelled with itself
+        roots = np.count_nonzero(lab == np.arange(verts.size))
+        stats.update(vertices=int(verts.size), components=int(roots))
     labels = verts[lab]
     out = pd.DataFrame({"sig_id": verts, "cluster_id": labels})
     return spark.createDataFrame(out, "sig_id long, cluster_id long")
@@ -71,6 +76,7 @@ def connected_components(
     dst: str = "sig_id_b",
     max_iter: int = 50,
     driver_threshold: int = 5_000_000,
+    stats: dict | None = None,
 ) -> DataFrame:
     """(sig_id, cluster_id) for every vertex appearing in `edges`;
     cluster_id = min sig_id of the component.  Isolated vertices (no edges)
@@ -79,6 +85,10 @@ def connected_components(
     Hybrid strategy: below `driver_threshold` edges, one collect + exact
     union-find on the driver (eliminates the per-round job latency that
     dominates small graphs); above it, distributed min-label propagation.
+
+    `stats`, when given, gets the edge graph's ``vertices`` and
+    ``components`` (clusters = signatures − vertices + components): free
+    on the driver path, one aggregate on the distributed one.
     """
     # materialize the (small) distinct edge list once — the threshold count
     # and the collect/propagation rounds below must not recompute the
@@ -95,7 +105,9 @@ def connected_components(
         # full collect
         head = e.limit(driver_threshold + 1).toPandas()
         if len(head) <= driver_threshold:
-            return _driver_union_find(head, spark=edges.sparkSession)
+            return _driver_union_find(
+                head, spark=edges.sparkSession, stats=stats
+            )
     # undirected: keep both directions for min-label propagation
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.localCheckpoint(eager=True)
@@ -173,6 +185,11 @@ def connected_components(
             "(graph diameter > ~2**max_iter with pointer-doubling); labels "
             "would be fragmented — raise max_iter"
         )
+    if stats is not None:
+        n_v, n_c = labels.agg(
+            F.count("*"), F.count_if(F.col("v") == F.col("label"))
+        ).first()
+        stats.update(vertices=int(n_v), components=int(n_c))
 
     return labels.select(
         F.col("v").alias("sig_id"), F.col("label").alias("cluster_id")

@@ -45,6 +45,20 @@ GATHER_COLS = [
 ]
 
 
+# driver-state bound of gather's greedy rounds (see _gather_rows)
+MAX_DRIVER_BYTES = 4 * 1024**3
+
+
+def _abund_map(
+    query_hashes: list[int], query_abunds: list[int] | None
+) -> dict | None:
+    """u64 query hash -> abundance, or None for a flat query."""
+    if query_abunds is None:
+        return None
+    u64 = i64_to_u64(np.array(query_hashes, dtype=np.int64)).tolist()
+    return dict(zip(u64, (int(a) for a in query_abunds)))
+
+
 def _bias(n: int, scaled: int) -> float:
     return 1.0 - (1.0 - 1.0 / scaled) ** float(n * scaled) if n else 1.0
 
@@ -519,7 +533,7 @@ def _gather_rows(
     query_md5: str,
     sig_id: str,
     estimate_ani_ci: bool,
-    max_driver_bytes: int | None = None,
+    max_driver_bytes: int = MAX_DRIVER_BYTES,
     strategy: str = "auto",
 ) -> tuple[list[dict], np.ndarray]:
     """Candidate sweep + greedy rounds; returns (GatherResult row dicts,
@@ -534,8 +548,6 @@ def _gather_rows(
     join — never a literal IN-list), the joined result is materialized
     cluster-side once (localCheckpoint), and the byte bound is checked
     with a tiny agg on the checkpoint BEFORE anything reaches the driver.
-    `max_driver_bytes` defaults to SOURMASH_SPARK_GATHER_MAX_DRIVER_BYTES
-    or 4 GiB.
 
     `strategy`:
     * "auto" (default) — driver-state rounds when the candidate state fits
@@ -551,14 +563,6 @@ def _gather_rows(
     if strategy not in ("auto", "cluster"):
         raise ValueError(f"gather: unknown strategy {strategy!r}")
     min_hashes = max(1, int(threshold_bp / scaled)) if threshold_bp else 1
-    if max_driver_bytes is None:
-        import os
-
-        max_driver_bytes = int(
-            os.environ.get(
-                "SOURMASH_SPARK_GATHER_MAX_DRIVER_BYTES", 4 * 1024**3
-            )
-        )
 
     # ordered=False: gather is a set consumer — the greedy loop re-sorts
     # deterministically, so prefetch's presentation sort (a global range
@@ -586,21 +590,11 @@ def _gather_rows(
         ).first()[0] * 8
         > max_driver_bytes
     )
+    orig = np.unique(
+        i64_to_u64(np.array(sorted(query_hashes), dtype=np.int64))
+    )
+    abund_map = _abund_map(query_hashes, query_abunds)
     if use_cluster:
-        orig = np.unique(
-            i64_to_u64(np.array(sorted(query_hashes), dtype=np.int64))
-        )
-        if query_abunds is not None:
-            abund_map = dict(
-                zip(
-                    i64_to_u64(
-                        np.array(query_hashes, dtype=np.int64)
-                    ).tolist(),
-                    [int(a) for a in query_abunds],
-                )
-            )
-        else:
-            abund_map = None
         results, remaining = _greedy_rounds_cluster(
             joined, orig, scaled, ksize, min_hashes, sig_id,
             abund_map=abund_map, estimate_ani_ci=estimate_ani_ci,
@@ -615,22 +609,6 @@ def _gather_rows(
     }
     meta = {r[sig_id]: (r["match_name"], r["match_md5"]) for r in rows}
     md5_of = {k: v[1] for k, v in meta.items()}
-
-    orig = np.unique(
-        i64_to_u64(np.array(sorted(query_hashes), dtype=np.int64))
-    )
-    if query_abunds is not None:
-        abund_map = dict(
-            zip(
-                i64_to_u64(
-                    np.array(query_hashes, dtype=np.int64)
-                ).tolist(),
-                [int(a) for a in query_abunds],
-            )
-        )
-    else:
-        abund_map = None
-
     results, remaining = _greedy_rounds(
         orig, cand_hashes, scaled, ksize, min_hashes, md5_of,
         abund_map=abund_map, estimate_ani_ci=estimate_ani_ci,
@@ -649,15 +627,7 @@ def _unassigned_df(
 ) -> DataFrame:
     """Remaining u64 hashes -> (hashval, abund) DataFrame, abundances
     re-inflated from the original query (minhash.inflate semantics)."""
-    if query_abunds is not None:
-        amap = dict(
-            zip(
-                i64_to_u64(np.array(query_hashes, dtype=np.int64)).tolist(),
-                [int(a) for a in query_abunds],
-            )
-        )
-    else:
-        amap = {}
+    amap = _abund_map(query_hashes, query_abunds) or {}
     from ..hashing import u64_to_i64
 
     rows = [

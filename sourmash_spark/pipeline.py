@@ -21,6 +21,9 @@ layout and commit rule of both live in sources/checkpoint.py.  Stage plans:
 * edges: candidates join signatures twice on sig_id (sort-merge/AQE;
   candidate side is orders of magnitude smaller than all-pairs).
 * clusters: iterative min-label joins; rounds ~ clone-family diameter.
+  The clusters lineage record carries the edge graph's vertex and
+  component counts (`edge_graph`), so the cluster count is
+  n_rows − vertices + components without reading the table.
 """
 
 from __future__ import annotations
@@ -116,9 +119,13 @@ def run_pipeline(
     if stop_after == "edges":
         return out
 
+    graph: dict = {}
     clusters, _ = ckpt.run_stage(
         spark, base_dir, "clusters", ch,
-        lambda: cluster_ops.assign_clusters(sigs, edges, sig_id=sid),
+        lambda: cluster_ops.assign_clusters(
+            sigs, edges, sig_id=sid, stats=graph
+        ),
+        lineage={"edge_graph": graph},
     )
     out["clusters"] = clusters
     return out

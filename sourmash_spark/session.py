@@ -1,10 +1,25 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""The one SparkSession factory: tests, benchmarks, tools and both deploy
+jobs start their session through `get_spark`.
 
-Settings chosen for the 100 TB target, not just local tests:
-* AQE on (runtime coalesce + skew-join splitting — boilerplate shingles and
-  giant repos create skewed band buckets).
-* Arrow execution for pandas UDFs (the sketch stage is Arrow-batched).
-* shuffle partitions sized from the environment (cluster deploys override).
+Settings, and why (AQE, partition coalescing and skew-join splitting
+are Spark's defaults):
+* master / shuffle partitions: ``SOURMASH_SPARK_MASTER`` /
+  ``SOURMASH_SPARK_SHUFFLE_PARTITIONS``, else ``local[$SPARK_GRAFT_CPUS]``
+  with one partition per core.
+* driver memory (``SOURMASH_SPARK_DRIVER_MEM``, 8g): union-find edges,
+  gather state and simhash broadcasts live in the driver heap.  Set only
+  outside spark-submit: it takes effect only at JVM launch.
+* Arrow for pandas conversions, 512 rows per Arrow batch: the batch
+  bounds a Python UDF's memory, 512 × 200 KB (the largest document)
+  ≈ 100 MB in flight.
+* 64 MB broadcast threshold (Spark's is 10 MB): size-lookup and
+  query-side joins broadcast their small side instead of shuffling the
+  corpus side (plans/PLANS.md, "compare / candidate generation").
+* No UI: nothing serves it in tests, benchmarks or batch jobs.
+
+Explicit arguments always apply; under spark-submit its ``--master`` and
+every ``--conf`` win over the defaults above; a running session is
+returned with none of its settings changed.
 """
 
 from __future__ import annotations
@@ -13,7 +28,18 @@ import os
 import shutil
 import tempfile
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+
+def _submitted_conf() -> dict[str, str] | None:
+    """The configuration spark-submit launched this driver with (its
+    ``--master``, ``--conf`` and spark-defaults), or None when the driver
+    is a plain ``python`` process, whose JVM is not started yet."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return dict(SparkConf().getAll())
 
 
 def get_spark(
@@ -22,38 +48,36 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    if SparkContext._active_spark_context is not None:
+        # no options: getOrCreate applies none to the running session
+        return SparkSession.builder.getOrCreate()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SOURMASH_SPARK_MASTER", f"local[{cpus}]")
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SOURMASH_SPARK_SHUFFLE_PARTITIONS", cpus)
-    )
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # rows-per-Arrow-batch bounds UDF memory: 512 * 200KB (max doc)
-        # ~= 100MB worst case per in-flight batch
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.driver.memory", os.environ.get("SOURMASH_SPARK_DRIVER_MEM", "8g"))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Shuffled-hash over sort-merge when the planner's size conditions
-        # hold (guide §3.1): every big equi-join here is an inverted-index
-        # self-join whose sides need no sort order — SMJ pays two large
-        # sorts for nothing.  The AQE threshold additionally rewrites
-        # SMJ->SHJ at runtime per-partition (post-AQE-coalesce partition
-        # sizes, so it is scale-adaptive rather than tuned to one SF).
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SOURMASH_SPARK_SHJ_LOCALMAP", "256m"),
+    conf = {
+        "spark.master": os.environ.get(
+            "SOURMASH_SPARK_MASTER", f"local[{cpus}]"
+        ),
+        "spark.sql.shuffle.partitions": os.environ.get(
+            "SOURMASH_SPARK_SHUFFLE_PARTITIONS", cpus
+        ),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.ui.enabled": "false",
+    }
+    submitted = _submitted_conf()
+    if submitted is None:
+        conf["spark.driver.memory"] = os.environ.get(
+            "SOURMASH_SPARK_DRIVER_MEM", "8g"
         )
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra_conf or {}).items():
+    else:
+        conf = {k: v for k, v in conf.items() if k not in submitted}
+    if master:
+        conf["spark.master"] = master
+    if shuffle_partitions:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -40,6 +40,7 @@ import time
 import uuid
 from collections.abc import Callable
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
@@ -80,30 +81,38 @@ def _append_lineage(base: str, rows: list[dict]) -> None:
     os.replace(tmp, os.path.join(path, name))
 
 
-def read_lineage(spark: SparkSession, base: str) -> DataFrame:
-    """Every lineage record under ``{base}/_lineage``: the JSON events
-    and any parquet rows an earlier version appended.
-    ``bucket_cap_dropped_keys`` / ``bucket_cap_dropped_postings`` (band
-    buckets over the cap and the band memberships they held) are set on
-    ``candidates`` records and null elsewhere."""
+def lineage_records(base: str) -> list[dict]:
+    """Every lineage record under ``{base}/_lineage`` in time order, read
+    on the driver (no Spark job): the JSON events and any parquet rows an
+    earlier version appended (payload JSON + ``ts`` column)."""
     path = os.path.join(base, "_lineage")
     names = (
         sorted(filter(_visible, os.listdir(path))) if os.path.isdir(path) else []
     )
-    payloads = []
+    recs: list[dict] = []
     for n in names:
+        fp = os.path.join(path, n)
         if n.endswith(".json"):
-            with open(os.path.join(path, n)) as f:
-                payloads += [(line.rstrip("\n"),) for line in f if line.strip()]
-    df = spark.createDataFrame(payloads, "payload string").select(
-        "payload",
-        F.timestamp_seconds(
-            F.get_json_object("payload", "$.ts").cast("double")
-        ).alias("ts"),
+            with open(fp) as f:
+                recs += [json.loads(line) for line in f if line.strip()]
+        elif n.endswith(".parquet"):
+            t = pq.read_table(fp, columns=["payload", "ts"])
+            us = t["ts"].cast(pa.timestamp("us"), safe=False).cast(pa.int64())
+            recs += [
+                {**json.loads(p), "ts": u / 1e6}
+                for p, u in zip(t["payload"].to_pylist(), us.to_pylist())
+            ]
+    return sorted(recs, key=lambda r: r["ts"])
+
+
+def read_lineage(spark: SparkSession, base: str) -> DataFrame:
+    """`lineage_records` as a frame.  ``bucket_cap_dropped_keys`` /
+    ``bucket_cap_dropped_postings`` (band buckets over the cap and the
+    band memberships they held) are set on ``candidates`` records and
+    null elsewhere."""
+    df = spark.createDataFrame(
+        [(json.dumps(r),) for r in lineage_records(base)], "payload string"
     )
-    old = [os.path.join(path, n) for n in names if n.endswith(".parquet")]
-    if old:
-        df = spark.read.parquet(*old).select("payload", "ts").unionByName(df)
     return df.select(
         F.get_json_object("payload", "$.stage").alias("stage"),
         F.get_json_object("payload", "$.config_hash").alias("config_hash"),
@@ -111,7 +120,9 @@ def read_lineage(spark: SparkSession, base: str) -> DataFrame:
         F.get_json_object("payload", "$.n_rows").cast("long").alias("n_rows"),
         F.get_json_object("payload", "$.wall_sec").cast("double").alias("wall_sec"),
         F.get_json_object("payload", "$.partitions").alias("partitions"),
-        "ts",
+        F.timestamp_seconds(
+            F.get_json_object("payload", "$.ts").cast("double")
+        ).alias("ts"),
         F.get_json_object("payload", "$.bucket_cap.dropped_keys")
         .cast("long").alias("bucket_cap_dropped_keys"),
         F.get_json_object("payload", "$.bucket_cap.dropped_postings")

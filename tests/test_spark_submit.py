@@ -34,9 +34,13 @@ def test_py_files_deploy_roundtrip():
     spec.loader.exec_module(smoke)
 
     assert smoke.main() == 0
-    with open(os.path.join(repo, "BENCH", "SPARK_SUBMIT_SMOKE.json")) as f:
-        res = json.load(f)
+    with open(smoke.EVIDENCE) as f:
+        res = json.load(f)[f"n_base_{smoke.N_BASE}"]
     # the smoke already asserted submit==resubmit==in-process; re-pin the
     # headline invariants here so a silent smoke regression fails loudly
     assert res["submit"]["n_signatures"] == res["n_files"]
     assert res["submit"]["n_clusters"] == res["inprocess_match"]["n_clusters"]
+    # the deployed session runs under the submitted --master and --conf
+    for s in (res["submit"], res["resubmit"]):
+        assert s["master"] == res["submitted"]["master"]
+        assert s["shuffle_partitions"] == res["submitted"]["shuffle_partitions"]
