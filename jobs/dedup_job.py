@@ -45,7 +45,7 @@ def summarize(spark, base_dir: str, cfg) -> dict:
         )
     else:  # a record written before it carried the graph counts
         n_clusters = (
-            spark.read.parquet(ckpt.stage_path(base_dir, "clusters", ch))
+            ckpt.read_stage(spark, base_dir, "clusters", ch)
             .select("cluster_id").distinct().count()
         )
     return {

@@ -41,6 +41,7 @@ from __future__ import annotations
 import argparse
 import json
 import time
+from functools import reduce
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -76,6 +77,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     import pyspark.sql.functions as F
+    from pyspark.sql import DataFrame, Observation
 
     from sourmash_spark.session import get_spark
 
@@ -86,14 +88,14 @@ def main(argv: list[str] | None = None) -> int:
     t0 = time.time()
     idc, txt = args.id_col, args.text_col
     docs = spark.read.parquet(args.input)
-    n_in = docs.count()
 
     # 1. exact dedup: drop every non-canonical copy.  Array-free per-doc
     # marking (exact_dedup_ids) — mega duplicate groups stay as rows and
     # split under AQE skew-join instead of collecting into one array row.
     marked = dedup_ops.exact_dedup_ids(docs, id_col=idc, text_col=txt)
     dup_ids = marked.filter(~F.col("is_canonical")).select(idc)
-    drops = [dup_ids.withColumn("stage", F.lit("exact_dup"))]
+    # dropped (or rewritten) ids per stage, in stage order
+    drops = {"exact_dup": dup_ids}
     # no broadcast hint: dup_ids is corpus-proportional on a dup-heavy
     # input; AQE broadcasts it when the runtime size fits
     docs1 = docs.join(dup_ids, idc, "left_anti")
@@ -103,7 +105,7 @@ def main(argv: list[str] | None = None) -> int:
         docs1, id_col=idc, text_col=txt, min_words=args.min_words
     )
     bad_q = q.filter(~F.col("passes")).select(idc)
-    drops.append(bad_q.withColumn("stage", F.lit("gopher_quality")))
+    drops["gopher_quality"] = bad_q
     docs2 = docs1.join(bad_q, idc, "left_anti")
 
     # 3. benchmark decontamination
@@ -112,9 +114,7 @@ def main(argv: list[str] | None = None) -> int:
         contaminated = text_ops.decontaminate(
             docs2, bench, n=args.ngram, id_col=idc, text_col=txt
         ).select(idc)
-        drops.append(
-            contaminated.withColumn("stage", F.lit("decontaminate"))
-        )
+        drops["decontaminate"] = contaminated
         docs3 = docs2.join(contaminated, idc, "left_anti")
     else:
         docs3 = docs2
@@ -133,11 +133,7 @@ def main(argv: list[str] | None = None) -> int:
         seg = dedup_ops.repeated_segment_removal(
             docs3, id_col=idc, text_col=txt, min_df=args.segment_min_df
         ).localCheckpoint(eager=False)
-        drops.append(
-            seg.filter(F.col("n_removed") > 0)
-            .select(idc)
-            .withColumn("stage", F.lit("segment_dedup"))
-        )
+        drops["segment_dedup"] = seg.filter(F.col("n_removed") > 0).select(idc)
         docs3 = (
             docs3.drop(txt)
             .join(
@@ -157,10 +153,8 @@ def main(argv: list[str] | None = None) -> int:
             docs3, min_len=args.substring_min_len, id_col=idc,
             text_col=txt, keep="first",
         ).localCheckpoint(eager=False)
-        drops.append(
-            cut.filter(F.col("n_removed") > 0)
-            .select(idc)
-            .withColumn("stage", F.lit("substring_dedup"))
+        drops["substring_dedup"] = (
+            cut.filter(F.col("n_removed") > 0).select(idc)
         )
         docs3 = docs3.drop(txt).join(
             cut.select(idc, F.col("text_deduped").alias(txt)), idc
@@ -181,42 +175,40 @@ def main(argv: list[str] | None = None) -> int:
             if c.startswith("n_") and c not in docs3.columns
         ]
         n_hits = sum(F.col(c) for c in count_cols)
-        drops.append(
-            red.filter(n_hits > 0)
-            .select(idc)
-            .withColumn("stage", F.lit("pii_redacted"))
-        )
+        drops["pii_redacted"] = red.filter(n_hits > 0).select(idc)
         docs3 = red.select(
             idc, *passthrough, F.col("text_redacted").alias(txt)
         )
 
     docs3.write.mode("overwrite").parquet(f"{args.output}/filtered.parquet")
-    lineage = drops[0]
-    for d in drops[1:]:
-        lineage = lineage.unionByName(d)
-    lineage.write.mode("overwrite").parquet(
-        f"{args.output}/lineage.parquet"
-    )
+    dropped = Observation("dropped_by_stage")
+    reduce(DataFrame.unionByName, (
+        d.withColumn("stage", F.lit(stage)) for stage, d in drops.items()
+    )).observe(dropped, *(
+        F.count_if(F.col("stage") == stage).alias(stage) for stage in drops
+    )).write.mode("overwrite").parquet(f"{args.output}/lineage.parquet")
 
-    n_out = spark.read.parquet(f"{args.output}/filtered.parquet").count()
-    by_stage = {
-        r["stage"]: r["n"]
-        for r in spark.read.parquet(f"{args.output}/lineage.parquet")
-        .groupBy("stage")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    print(
-        json.dumps(
-            {
-                "n_in": n_in,
-                "n_out": n_out,
-                "dropped_by_stage": by_stage,
-                "wall_sec": round(time.time() - t0, 2),
-            }
-        )
-    )
+    print(json.dumps({
+        **summarize(args.input, args.output, dropped),
+        "wall_sec": round(time.time() - t0, 2),
+    }))
     return 0
+
+
+def summarize(input_path: str, output: str, dropped) -> dict:
+    """Rows in and out, from the parquet footers, and the rows each stage
+    dropped (stages that dropped none left out), from the ``dropped``
+    Observation on the lineage write — no Spark job."""
+    from sourmash_spark.sources.checkpoint import partition_metrics
+
+    def rows(path: str) -> int:
+        return sum(p["rows"] for p in partition_metrics(path))
+
+    return {
+        "n_in": rows(input_path),
+        "n_out": rows(f"{output}/filtered.parquet"),
+        "dropped_by_stage": {s: n for s, n in dropped.get.items() if n},
+    }
 
 
 if __name__ == "__main__":

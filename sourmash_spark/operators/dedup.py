@@ -1114,10 +1114,7 @@ def exact_substring_update(
     incs = [
         n for n in ckpt.committed_increments(store_dir) if n != increment_name
     ]
-    # explicit schema: an increment whose batch brought nothing novel is
-    # an empty parquet dir, which schema inference cannot read
-    key_schema = f"_k {'long' if hash_grams else 'string'}"
-    stored = ckpt.read_increments(spark, store_dir, key_schema, incs)
+    stored = ckpt.read_increments(spark, store_dir, incs)
 
     # intra-batch keep-first marking (same shape as the batch operator)
     dup = (

@@ -29,12 +29,10 @@ layout and commit rule of both live in sources/checkpoint.py.  Stage plans:
 from __future__ import annotations
 
 import hashlib
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
-from pyspark.sql.types import StructType
 
 from .params import LSHParams, SketchParams
 from .sketch import sketch_signatures, with_sha256
@@ -145,33 +143,23 @@ def _sketch(
 
 
 def _bands_stage(
-    spark: SparkSession, base_dir: str, cfg: PipelineConfig, sigs: DataFrame
+    spark: SparkSession, base_dir: str, cfg: PipelineConfig, sigs: DataFrame,
+    increments: list[str] | tuple[str, ...] = (),
 ) -> DataFrame:
     """The `bands` stage table — the postings/RevIndex analog (SURVEY
-    §2.1): incremental_update reads it back instead of re-banding the
-    whole corpus per increment, and a resumed run picks up after banding.
-    Narrow table: (sig_id, band_idx, band_key).  `sigs` are the base
-    signatures; a checkpoint written before the stage existed gets it on
-    first use."""
-    bands, _ = ckpt.run_stage(
-        spark, base_dir, "bands", cfg.config_hash(),
+    §2.1) — plus its named `increments`: incremental_update reads it back
+    instead of re-banding the whole corpus per increment, and a resumed
+    run picks up after banding.  Narrow table: (sig_id, band_idx,
+    band_key).  `sigs` are the base signatures; a checkpoint written
+    before the stage existed gets it on first use."""
+    ch = cfg.config_hash()
+    ckpt.run_stage(
+        spark, base_dir, "bands", ch,
         lambda: lsh_ops.band_signatures(
             sigs, cfg.lsh, cfg.sketch.scaled, sig_id=cfg.sig_id
         ),
     )
-    return bands
-
-
-def _with_increments(
-    spark: SparkSession, base: DataFrame, inc_path: str, names: list[str],
-    schema: StructType | None = None,
-) -> DataFrame:
-    """A base stage table ∪ its named increments (read with `schema`,
-    default the base's)."""
-    inc = ckpt.read_increments(spark, inc_path, schema or base.schema, names)
-    if inc is None:
-        return base
-    return base.unionByName(inc, allowMissingColumns=True)
+    return ckpt.read_stage(spark, base_dir, "bands", ch, increments)
 
 
 def incremental_update(
@@ -217,6 +205,9 @@ def incremental_update(
         ckpt.increments_path(base_dir, s, ch)
         for s in ("signatures", "bands", "edges")
     )
+    # read before listing increments: the read finishes a committed
+    # compaction, whose folded increments must not count twice
+    old_sigs = ckpt.read_stage(spark, base_dir, "signatures", ch)
     done = ckpt.committed_increments(edges_inc)
     name = increment_name if increment_name is not None else str(len(done))
     # a replay under a committed name replaces that increment; THIS batch
@@ -224,22 +215,19 @@ def incremental_update(
     # only ride along as stored rows on the old side
     done = [n for n in done if n != name]
 
-    old_sigs = spark.read.parquet(ckpt.stage_path(base_dir, "signatures", ch))
-    stored_bands = _bands_stage(spark, base_dir, cfg, old_sigs)
+    stored_bands = _bands_stage(spark, base_dir, cfg, old_sigs, done)
     batch_sigs = ckpt.write_increment(
         sig_inc, name, _sketch(new_files, cfg, keep_cols)
     )
-    all_sigs = _with_increments(
-        spark, old_sigs, sig_inc, done + [name], batch_sigs.schema
+    all_sigs = ckpt.read_stage(
+        spark, base_dir, "signatures", ch, done + [name]
     )
     # banding is row-wise deterministic, so stored ∪ banded-batch is
     # bit-identical to re-banding all_sigs
     batch_bands = ckpt.write_increment(bands_inc, name, lsh_ops.band_signatures(
         batch_sigs, cfg.lsh, cfg.sketch.scaled, sig_id=sid
     ))
-    all_bands = _with_increments(
-        spark, stored_bands, bands_inc, done
-    ).withColumn("_new", F.lit(False)).unionByName(
+    all_bands = stored_bands.withColumn("_new", F.lit(False)).unionByName(
         batch_bands.withColumn("_new", F.lit(True))
     )
 
@@ -252,13 +240,12 @@ def incremental_update(
         all_bands, ["band_idx", "band_key"], sid, cfg.bucket_cap,
         new_col="_new",
     ).withColumnsRenamed({"id_a": "sig_id_a", "id_b": "sig_id_b"})
-    new_edges = ckpt.write_increment(edges_inc, name, lsh_ops.verify_pairs(
+    ckpt.write_increment(edges_inc, name, lsh_ops.verify_pairs(
         cands, all_sigs, scaled=cfg.sketch.scaled, ksize=cfg.sketch.ksize,
         threshold=cfg.jaccard_threshold, sig_id=sid,
     ))
-    all_edges = _with_increments(
-        spark, spark.read.parquet(ckpt.stage_path(base_dir, "edges", ch)),
-        edges_inc, done + [name], new_edges.schema,
+    all_edges = ckpt.read_stage(
+        spark, base_dir, "edges", ch, done + [name]
     ).dropDuplicates(["sig_id_a", "sig_id_b"])
 
     clusters = cluster_ops.assign_clusters(all_sigs, all_edges, sig_id=sid)
@@ -285,76 +272,32 @@ def compact_increments(
     candidates stage (its pair enumeration is superseded by the folded
     edges).  Subsequent incremental_update calls start from a clean base.
 
-    Returns {stage: n_rows} for the rewritten stages.  The swap is
-    write-to-tmp + rename: crash-safe in the sense that the base table is
-    replaced only after the compacted write (and its commit) completes;
-    on a real object store the catalog swap (Iceberg commit) plays this
-    role.
+    Returns {stage: n_rows} for the rewritten stages.  The new tables
+    replace the old ones in one commit (`checkpoint.compact`): a crash at
+    any point leaves the old state or the new one, and the next call
+    finishes a committed swap; on a real object store the catalog swap
+    (Iceberg commit) plays this role.
     """
-    import shutil
-    import time as _time
-
     cfg = config or PipelineConfig(SketchParams(), LSHParams())
     ch = cfg.config_hash()
-    sid = cfg.sig_id
-    counts: dict[str, int] = {}
 
-    def swap_in(stage: str, df: DataFrame) -> DataFrame:
-        path = ckpt.stage_path(base_dir, stage, ch)
-        tmp = path + "_compacting"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        df.write.parquet(tmp)  # materializes BEFORE sources are removed
-        counts[stage] = sum(p["rows"] for p in ckpt.partition_metrics(tmp))
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-        return spark.read.schema(df.schema).parquet(path)
+    def fold(write):
+        done = ckpt.committed_increments(
+            ckpt.increments_path(base_dir, "edges", ch)
+        )
+        base_sigs = ckpt.read_stage(spark, base_dir, "signatures", ch)
+        sigs = write("signatures", ckpt.read_stage(
+            spark, base_dir, "signatures", ch, done
+        ))
+        write("bands", _bands_stage(spark, base_dir, cfg, base_sigs, done))
+        edges = write("edges", ckpt.read_stage(
+            spark, base_dir, "edges", ch, done
+        ).dropDuplicates(["sig_id_a", "sig_id_b"]))
+        write("clusters", cluster_ops.assign_clusters(
+            sigs, edges, sig_id=cfg.sig_id
+        ))
 
-    t0 = _time.time()
-    incs = {
-        s: ckpt.increments_path(base_dir, s, ch)
-        for s in ("signatures", "bands", "edges")
-    }
-    done = ckpt.committed_increments(incs["edges"])
-
-    def base(stage: str) -> DataFrame:
-        return spark.read.parquet(ckpt.stage_path(base_dir, stage, ch))
-
-    sigs = base("signatures")
-    # read (or write, for a pre-bands-stage checkpoint) the base bands
-    # BEFORE the signatures swap folds the increments in
-    bands = _bands_stage(spark, base_dir, cfg, sigs)
-    sigs = swap_in(
-        "signatures", _with_increments(spark, sigs, incs["signatures"], done)
-    )
-    swap_in("bands", _with_increments(spark, bands, incs["bands"], done))
-    edges = swap_in("edges", _with_increments(
-        spark, base("edges"), incs["edges"], done
-    ).dropDuplicates(["sig_id_a", "sig_id_b"]))
-    swap_in("clusters", cluster_ops.assign_clusters(sigs, edges, sig_id=sid))
-
-    for inc in incs.values():
-        if os.path.isdir(inc):
-            shutil.rmtree(inc)
-    cands_path = ckpt.stage_path(base_dir, "candidates", ch)
-    if os.path.isdir(cands_path):
-        shutil.rmtree(cands_path)  # stale pair enumeration — derivable
-
-    ckpt._append_lineage(
-        base_dir,
-        [
-            {
-                "stage": "compact",
-                "config_hash": ch,
-                "event": "complete",
-                "n_rows": counts["signatures"],
-                "wall_sec": round(_time.time() - t0, 3),
-                "compacted": counts,
-            }
-        ],
-    )
-    return counts
+    return ckpt.compact(base_dir, ch, fold, drop=("candidates",))
 
 
 def dup_pair_recall(edges: DataFrame, reference_pairs: DataFrame) -> float:

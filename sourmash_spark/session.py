@@ -5,7 +5,8 @@ Settings, and why (AQE, partition coalescing and skew-join splitting
 are Spark's defaults):
 * master / shuffle partitions: ``SOURMASH_SPARK_MASTER`` /
   ``SOURMASH_SPARK_SHUFFLE_PARTITIONS``, else ``local[$SPARK_GRAFT_CPUS]``
-  with one partition per core.
+  with one partition per core; without ``SPARK_GRAFT_CPUS``, the cores
+  this process may run on (its CPU affinity, what ``nproc`` counts).
 * driver memory (``SOURMASH_SPARK_DRIVER_MEM``, 8g): union-find edges,
   gather state and simhash broadcasts live in the driver heap.  Set only
   outside spark-submit: it takes effect only at JVM launch.
@@ -51,7 +52,9 @@ def get_spark(
     if SparkContext._active_spark_context is not None:
         # no options: getOrCreate applies none to the running session
         return SparkSession.builder.getOrCreate()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
     conf = {
         "spark.master": os.environ.get(
             "SOURMASH_SPARK_MASTER", f"local[{cpus}]"

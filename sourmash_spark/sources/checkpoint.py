@@ -6,7 +6,7 @@ Production shape: each stage is an Iceberg table keyed by config hash, written
 with idempotent MERGE/append; partition-level lineage rows make mid-pipeline
 restarts skip completed work.  In this sandbox (no Iceberg runtime jar) the
 same contract is implemented over parquet directories, and this module is the
-only code that knows the on-disk layout:
+only code that reads, replaces or deletes a stage table:
 
 * a stage's output lives at ``{base}/{stage}={config_hash}`` with Spark's
   atomic ``_SUCCESS`` marker — the commit point;
@@ -18,6 +18,19 @@ only code that knows the on-disk layout:
   only under the names committed there, so a crash between the writes leaves
   nothing visible and the re-run overwrites it.  Any other visible entry in
   an increments dir is an error, not data;
+* a stored table is read with the schema Spark keeps in the footer of
+  each file it writes (``org.apache.spark.sql.parquet.row.metadata``; a
+  0-row write leaves one such file too), so no read starts a
+  schema-inference job.  A dir with no data file is an error;
+* a compaction replaces stage tables in one commit (`compact`): each new
+  table is written to ``{stage}={config_hash}_compacting``, then one
+  marker ``{base}/_compact={config_hash}.json`` (temp name, then
+  ``os.replace``) commits the lot and lists the dirs it supersedes, then
+  the tables are swapped in, those dirs deleted and the marker removed.
+  Every step after the marker can be repeated, and every read through
+  this module first finishes a pending marker, so a crash anywhere leaves
+  either the old tables or the new ones; a ``_compacting`` dir without a
+  marker is discarded by the next compaction;
 * every stage run appends one event to ``{base}/_lineage/``: a JSON-lines
   file the driver writes under a dot-prefixed temp name and then renames
   into place, so a reader sees a whole event or none of it.  Parquet rows
@@ -25,9 +38,7 @@ only code that knows the on-disk layout:
   The log sits outside every stage dir, so a parquet read of a stage never
   sees it;
 * the bookkeeping starts no Spark job: a record's row count and
-  per-file counts come from the parquet footers of the files just written,
-  and a fresh stage or increment is read back with the schema of the frame
-  it wrote (no schema-inference job);
+  per-file counts come from the parquet footers of the files just written;
 * ``run_stage`` skips recompute iff the marker exists (kill the job between
   stages and re-run: finished stages are read back, unfinished re-execute).
 """
@@ -36,6 +47,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Callable
@@ -65,20 +77,26 @@ def _visible(name: str) -> bool:
     return not name.startswith((".", "_"))
 
 
+def _put_json(path: str, records: list[dict]) -> None:
+    """Write ``records`` as JSON lines to ``path``: to a dot-prefixed
+    temp file, then renamed, so an interrupted write leaves only a hidden
+    file behind."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    with open(tmp, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in records)
+    os.replace(tmp, path)
+
+
 def _append_lineage(base: str, rows: list[dict]) -> None:
     """Append one lineage event (one JSON record per row) under
-    ``{base}/_lineage``.  Written to a dot-prefixed temp file, then
-    renamed: an interrupted append leaves only a hidden file behind."""
+    ``{base}/_lineage``."""
     path = os.path.join(base, "_lineage")
     os.makedirs(path, exist_ok=True)
     ns = time.time_ns()
-    ts = ns / 1e9
-    name = f"{ns:020d}-{uuid.uuid4().hex[:12]}.json"
-    tmp = os.path.join(path, f".{name}.tmp")
-    with open(tmp, "w") as f:
-        for r in rows:
-            f.write(json.dumps({**r, "ts": ts}) + "\n")
-    os.replace(tmp, os.path.join(path, name))
+    _put_json(
+        os.path.join(path, f"{ns:020d}-{uuid.uuid4().hex[:12]}.json"),
+        [{**r, "ts": ns / 1e9} for r in rows],
+    )
 
 
 def lineage_records(base: str) -> list[dict]:
@@ -131,11 +149,14 @@ def read_lineage(spark: SparkSession, base: str) -> DataFrame:
 
 
 def partition_metrics(path: str) -> list[dict]:
-    """Per-file row counts of a written stage, read from the parquet
-    footers (no Spark job) — the skew evidence the north rule asks to
-    measure, not assume.  Spark writes one file per write task, so these
-    are the sizes of the write tasks' outputs, not of the splits a later
-    read would plan."""
+    """Per-file row counts of a written stage (or of one parquet file),
+    read from the parquet footers (no Spark job) — the skew evidence the
+    north rule asks to measure, not assume.  Spark writes one file per
+    write task, so these are the sizes of the write tasks' outputs, not of
+    the splits a later read would plan."""
+    if os.path.isfile(path):
+        return [{"file": os.path.basename(path),
+                 "rows": pq.read_metadata(path).num_rows}]
     out = []
     for root, dirs, files in os.walk(path):
         dirs[:] = sorted(filter(_visible, dirs))
@@ -149,6 +170,26 @@ def partition_metrics(path: str) -> list[dict]:
                     }
                 )
     return out
+
+
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType:
+    """The schema Spark stored in the footer of the first data file in
+    the dir ``path``; ValueError naming ``path`` if it holds none."""
+    _, _, files = next(os.walk(path), (path, [], []))
+    files = sorted(filter(_visible, files))
+    meta = files and pq.read_metadata(os.path.join(path, files[0])).metadata
+    if not meta or _SPARK_SCHEMA not in meta:
+        raise ValueError(f"{path}: no data file written by Spark")
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA]))
+
+
+def _read(spark: SparkSession, *paths: str) -> DataFrame:
+    """The dirs ``paths`` as one frame, read with the schema in the last
+    one's footer (no Spark job)."""
+    return spark.read.schema(_footer_schema(paths[-1])).parquet(*paths)
 
 
 def _write(path: str, df: DataFrame) -> DataFrame:
@@ -185,15 +226,100 @@ def write_increment(path: str, name: str, df: DataFrame) -> DataFrame:
 
 
 def read_increments(
-    spark: SparkSession, path: str, schema: StructType | str, names: list[str]
+    spark: SparkSession, path: str, names: list[str]
 ) -> DataFrame | None:
-    """The named increments under ``path`` as one frame read with
-    ``schema`` (an increment may hold no file), or None for no names."""
+    """The named increments under ``path`` as one frame with the last
+    name's schema, or None for no names."""
     if not names:
         return None
-    return spark.read.schema(schema).parquet(
-        *(os.path.join(path, f"increment={n}") for n in names)
+    return _read(spark, *(os.path.join(path, f"increment={n}") for n in names))
+
+
+def read_stage(
+    spark: SparkSession,
+    base: str,
+    stage: str,
+    config_hash: str,
+    increments: list[str] | tuple[str, ...] = (),
+) -> DataFrame:
+    """A stage table plus its named ``increments`` (unioned by name,
+    missing columns null).  Finishes a committed compaction of
+    ``config_hash`` first."""
+    _finish_compaction(base, config_hash)
+    df = _read(spark, stage_path(base, stage, config_hash))
+    inc = read_increments(
+        spark, increments_path(base, stage, config_hash), list(increments)
     )
+    return df if inc is None else df.unionByName(inc, allowMissingColumns=True)
+
+
+def _compact_marker(base: str, config_hash: str) -> str:
+    return os.path.join(base, f"_compact={config_hash}.json")
+
+
+def _rmtree(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+
+
+def _finish_compaction(base: str, config_hash: str) -> None:
+    """Carry out a committed compaction: swap each new table in, delete
+    the superseded dirs, remove the marker.  Each step is safe to repeat."""
+    marker = _compact_marker(base, config_hash)
+    if not os.path.exists(marker):
+        return
+    with open(marker) as f:
+        plan = json.load(f)
+    for stage in plan["swap"]:
+        path = stage_path(base, stage, config_hash)
+        if os.path.isdir(path + "_compacting"):
+            _rmtree(path)
+            os.rename(path + "_compacting", path)
+    for name in plan["delete"]:
+        _rmtree(os.path.join(base, name))
+    os.remove(marker)
+
+
+def compact(
+    base: str,
+    config_hash: str,
+    build: Callable[[Callable[[str, DataFrame], DataFrame]], None],
+    drop: tuple[str, ...] = (),
+) -> dict[str, int]:
+    """Replace stage tables of ``config_hash`` in one commit.
+
+    ``build(write)`` computes the new tables; ``write(stage, df)`` stores
+    one beside the live table and returns it read back, for tables
+    derived from it.  Then one marker commits them: the written stages
+    are swapped in, and their increments and the ``drop`` stages deleted.
+    Returns {stage: n_rows} of the written tables.
+    """
+    _finish_compaction(base, config_hash)
+    for name in os.listdir(base):  # a compaction that crashed uncommitted
+        if name.endswith(f"={config_hash}_compacting"):
+            _rmtree(os.path.join(base, name))
+    t0 = time.time()
+    counts: dict[str, int] = {}
+
+    def write(stage: str, df: DataFrame) -> DataFrame:
+        path = stage_path(base, stage, config_hash) + "_compacting"
+        out = _write(path, df)
+        counts[stage] = sum(p["rows"] for p in partition_metrics(path))
+        return out
+
+    build(write)
+    superseded = [increments_path(base, s, config_hash) for s in counts]
+    superseded += [stage_path(base, s, config_hash) for s in drop]
+    _put_json(_compact_marker(base, config_hash), [{  # the commit
+        "swap": list(counts),
+        "delete": [os.path.basename(p) for p in superseded],
+    }])
+    _append_lineage(base, [{
+        "stage": "compact", "config_hash": config_hash, "event": "complete",
+        "wall_sec": round(time.time() - t0, 3), "compacted": counts,
+    }])
+    _finish_compaction(base, config_hash)
+    return counts
 
 
 def run_stage(
@@ -214,8 +340,9 @@ def run_stage(
     fill it, since it is read only after the write.
     """
     path = stage_path(base, stage, config_hash)
+    _finish_compaction(base, config_hash)
     if is_complete(path):
-        return spark.read.parquet(path), True
+        return _read(spark, path), True
     t0 = time.time()
     out = _write(path, build())
     parts = partition_metrics(path)

@@ -1,9 +1,9 @@
 """Stage checkpoints keep their lineage without extra Spark jobs: a fresh
 stage runs only its write, the record's counts come from the parquet
 footers, the log is crash-safe and still reads the older parquet rows,
-the candidates record carries the bucket_cap drop volume, and an ingest
-increment and its compaction read their increments without inference
-jobs."""
+the candidates record carries the bucket_cap drop volume, and every
+stored read (a resumed stage, an ingest increment, a compaction) takes its
+schema from the parquet footer instead of an inference job."""
 
 from __future__ import annotations
 
@@ -57,7 +57,7 @@ def test_fresh_stage_runs_only_its_write(spark, tmp_path):
     (again, skipped), n_jobs = _jobs(
         spark, lambda: ckpt.run_stage(spark, base, "ids", "h0", build)
     )
-    assert skipped and n_jobs <= 1
+    assert skipped and n_jobs == 0  # the footer holds the schema
 
     rec = _records(spark, base)["ids"]
     assert rec.n_rows == 1000 == again.count()
@@ -221,9 +221,9 @@ def test_candidates_lineage_records_bucket_cap_drops(spark, corpus, tmp_path):
 
 
 def test_increment_and_compaction_job_counts(spark, corpus, tmp_path):
-    """Increments are written and read back with the written frame's
-    schema, so an ingest and a compaction start no inference job per
-    increment: at most 18 and 12 jobs on the synthetic corpus."""
+    """Stored tables and increments are read with the schema in their
+    footers, so an ingest and a compaction start no inference job: at
+    most 15 and 9 jobs on the synthetic corpus."""
     cfg = PipelineConfig(
         sketch=SketchParams(ksize=21, scaled=50),
         lsh=LSHParams(num_bands=16, band_size=2),
@@ -243,7 +243,43 @@ def test_increment_and_compaction_job_counts(spark, corpus, tmp_path):
             spark,
             lambda: incremental_update(spark, batch, base, cfg)["clusters"].count(),
         )
-        assert n_jobs <= 18
+        assert n_jobs <= 15
     counts, n_jobs = _jobs(spark, lambda: compact_increments(spark, base, cfg))
     assert counts["signatures"] == len(pdf)
-    assert n_jobs <= 12
+    assert n_jobs <= 9
+
+
+def test_resume_of_a_finished_pipeline_starts_no_job(spark, corpus, tmp_path):
+    cfg = PipelineConfig(
+        sketch=SketchParams(ksize=21, scaled=50),
+        lsh=LSHParams(num_bands=16, band_size=2),
+    )
+    base = str(tmp_path)
+    df = spark.createDataFrame(corpus.code_files).withColumnRenamed(
+        "file_id", "sig_id"
+    )
+    first = run_pipeline(spark, df, base, cfg)
+    again, n_jobs = _jobs(spark, lambda: run_pipeline(spark, df, base, cfg))
+    assert n_jobs == 0
+    for stage, out in first.items():
+        assert again[stage].schema == out.schema, stage
+    assert again["clusters"].count() == len(corpus.code_files)
+
+
+@pytest.mark.parametrize("rows", [1000, 0])
+def test_read_stage_takes_the_written_schema(spark, tmp_path, rows):
+    """A plain Spark write (no checkpoint call) reads back with its schema
+    and no job, a 0-row frame included."""
+    df = spark.range(0, rows, 1, 3).select(
+        "id", (F.col("id") % 7).cast("int").alias("k"),
+        F.array(F.col("id")).alias("ids"), F.lit("x").alias("s"),
+    )
+    base = str(tmp_path)
+    path = ckpt.stage_path(base, "t", "h0")
+    df.write.parquet(path)
+    got, n_jobs = _jobs(spark, lambda: ckpt.read_stage(spark, base, "t", "h0"))
+    assert n_jobs == 0
+    assert got.schema == spark.read.parquet(path).schema
+    # names and types as written; a file read makes every field nullable
+    assert got.schema.simpleString() == df.schema.simpleString()
+    assert got.count() == rows

@@ -1,7 +1,8 @@
 """The one session factory and the deploy jobs that use it: a running
-session is returned unchanged, an in-process job leaves its caller's
-session as it was, and the dedup job's summary comes from lineage with
-the same counts as `.count()` and no Spark job."""
+session is returned unchanged, a new one defaults to the usable cores, an
+in-process job leaves its caller's session as it was, and both jobs'
+summaries come from footers, lineage and observed metrics with the same
+counts as `.count()` and no Spark job."""
 
 from __future__ import annotations
 
@@ -9,6 +10,8 @@ import importlib.util
 import io
 import json
 import os
+import subprocess
+import sys
 import uuid
 from contextlib import redirect_stdout
 
@@ -79,6 +82,70 @@ def test_quality_filter_job_leaves_session_settings(spark, tmp_path):
         assert spark.conf.getAll == before
     finally:
         spark.conf.unset(key)
+
+
+def test_quality_filter_summary_matches_counts_and_starts_no_job(
+    spark, tmp_path, monkeypatch
+):
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    texts = [" ".join(words[(i + j) % 10] for j in range(60)) + f" doc{i}"
+             for i in range(12)]
+    texts += [texts[0], texts[1], "too short", "also short"]
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    ).repartition(3).write.parquet(src)
+    out = str(tmp_path / "out")
+    job = _job("quality_filter_job")
+    real, jobs = job.summarize, []
+
+    def counted(*a):
+        got, n = _jobs(spark, lambda: real(*a))
+        jobs.append(n)
+        return got
+
+    monkeypatch.setattr(job, "summarize", counted)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        job.main(["--input", src, "--output", out, "--min-words", "5",
+                  "--redact-pii"])
+    got = json.loads(buf.getvalue().splitlines()[-1])
+    assert jobs == [0]
+    lineage = spark.read.parquet(f"{out}/lineage.parquet")
+    assert got["n_in"] == spark.read.parquet(src).count() == len(texts)
+    assert got["n_out"] == spark.read.parquet(f"{out}/filtered.parquet").count()
+    want = {
+        r["stage"]: r["n"]
+        for r in lineage.groupBy("stage").agg(F.count("*").alias("n")).collect()
+    }
+    assert got["dropped_by_stage"] == want
+    # a stage that dropped nothing (no PII in the texts) stays absent
+    assert want["exact_dup"] == 2 and "pii_redacted" not in want
+
+
+def test_get_spark_defaults_to_the_usable_cores():
+    env = {k: v for k, v in os.environ.items() if k not in (
+        "SPARK_GRAFT_CPUS", "SOURMASH_SPARK_MASTER",
+        "SOURMASH_SPARK_SHUFFLE_PARTITIONS", "OMP_NUM_THREADS",
+        "OMP_THREAD_LIMIT", "PYSPARK_GATEWAY_PORT",
+    )}
+    env["PYTHONPATH"] = REPO
+    nproc = subprocess.run(
+        ["nproc"], env=env, capture_output=True, text=True, check=True
+    ).stdout.strip()
+    code = (
+        "from sourmash_spark.session import get_spark\n"
+        "s = get_spark(extra_conf={'spark.driver.memory': '512m'})\n"
+        "print(s.sparkContext.master,"
+        " s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "s.stop()\n"
+    )
+    p = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True,
+        text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    assert p.stdout.split()[-2:] == [f"local[{nproc}]", nproc]
 
 
 def test_dedup_summary_matches_counts_fresh_and_resumed(

@@ -38,6 +38,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from spark_submit_smoke import build_zip  # noqa: E402  (same artifact)
 
 SF1 = os.environ.get("QF_INPUT", os.path.join(REPO, "testdata_sf1"))
+CORES = len(os.sched_getaffinity(0))
+MASTER = os.environ.get("QF_MASTER", f"local[{CORES}]")
 
 
 def main() -> int:
@@ -79,8 +81,8 @@ def main() -> int:
         spark_submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
         cmd = [
             spark_submit,
-            "--master", os.environ.get("QF_MASTER", "local[32]"),
-            "--conf", "spark.sql.shuffle.partitions=32",
+            "--master", MASTER,
+            "--conf", f"spark.sql.shuffle.partitions={CORES}",
             "--conf", "spark.driver.memory=8g",
             "--py-files", zpath,
             driver,
@@ -137,7 +139,7 @@ def main() -> int:
             "inprocess_summary": ref,
             "inprocess_wall_sec": round(wall_ref, 2),
             "counts_match": True,
-            "master": os.environ.get("QF_MASTER", "local[32]"),
+            "master": MASTER,
             "resume_note": (
                 "no kill/resume witness: quality_filter_job is single-pass "
                 "by design; the checkpoint-resume deploy contract is "
