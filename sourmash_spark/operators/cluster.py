@@ -6,15 +6,18 @@ exactly connected components of the graph with edges {similarity >= 1-t}
 /root/reference/src/sourmash/commands.py:416-418, src/sourmash/fig.py:52-79
 — impossible at 10^12 rows).
 
-Implementation: min-label propagation with pointer-doubling
+Implementation: one collect of up to DRIVER_THRESHOLD + 1 edges; an edge
+list that fits is solved on the driver (`_driver_union_find`), a larger
+one by `_label_propagation`: min-label propagation with pointer-doubling
 (each round v takes min(label(v), min over neighbours' labels,
 label(label(v))) — the shortcut jump makes convergence O(log diameter)
-rounds instead of O(diameter), so a 50-round budget covers graphs of
+rounds instead of O(diameter), so MAX_ITER = 50 rounds cover graphs of
 diameter ~2**50).  Each round is two shuffles on sig_id plus one tiny
 label-table self-join; intermediate results are localCheckpoint()ed to
 cut the growing lineage.  GraphFrames is not assumed present.  If the
 round budget is ever exhausted without convergence the function raises
-rather than return silently-fragmented labels.
+rather than return silently-fragmented labels.  Both paths take minima,
+so duplicate edges need no distinct() pass.
 """
 
 from __future__ import annotations
@@ -22,24 +25,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+DRIVER_THRESHOLD = 5_000_000  # most edges solved on the driver
+MAX_ITER = 50  # label-propagation rounds before giving up
 
-def _driver_union_find(edges, spark=None, stats: dict | None = None):
-    """Small-graph fast path: collect the edge list (two long columns) and
-    run union-find with path compression on the driver.  Legitimate at any
-    corpus size where the EDGE list is small — edges are O(duplicate
-    pairs), orders of magnitude below the corpus — and mirrors how the
-    reference holds its comparable state driver-side (CounterGather).
-    Accepts either a DataFrame or an already-collected pandas frame (the
-    threshold probe in connected_components collects exactly once).
-    `stats`, when given, gets the vertex and component counts."""
+
+def _driver_union_find(pdf, spark, stats: dict | None = None) -> DataFrame:
+    """Small-graph path over a collected edge list `pdf` (a pandas frame
+    whose first two columns are the endpoints): labels every vertex with
+    its component's min id on the driver.  Legitimate at any corpus size
+    where the EDGE list is small — edges are O(duplicate pairs), orders of
+    magnitude below the corpus — and mirrors how the reference holds its
+    comparable state driver-side (CounterGather).  `stats`, when given,
+    gets the vertex and component counts."""
     import numpy as np
     import pandas as pd
 
-    if isinstance(edges, pd.DataFrame):
-        pdf = edges
-    else:
-        spark = edges.sparkSession
-        pdf = edges.toPandas()
     a = pdf.iloc[:, 0].to_numpy()
     b = pdf.iloc[:, 1].to_numpy()
     verts = np.unique(np.concatenate([a, b]))
@@ -70,44 +70,13 @@ def _driver_union_find(edges, spark=None, stats: dict | None = None):
     return spark.createDataFrame(out, "sig_id long, cluster_id long")
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "sig_id_a",
-    dst: str = "sig_id_b",
-    max_iter: int = 50,
-    driver_threshold: int = 5_000_000,
-    stats: dict | None = None,
+def _label_propagation(
+    e: DataFrame, max_iter: int = MAX_ITER, stats: dict | None = None
 ) -> DataFrame:
-    """(sig_id, cluster_id) for every vertex appearing in `edges`;
-    cluster_id = min sig_id of the component.  Isolated vertices (no edges)
-    are not emitted — callers union them back with cluster_id = sig_id.
-
-    Hybrid strategy: below `driver_threshold` edges, one collect + exact
-    union-find on the driver (eliminates the per-round job latency that
-    dominates small graphs); above it, distributed min-label propagation.
-
-    `stats`, when given, gets the edge graph's ``vertices`` and
-    ``components`` (clusters = signatures − vertices + components): free
-    on the driver path, one aggregate on the distributed one.
-    """
-    # materialize the (small) distinct edge list once — the threshold count
-    # and the collect/propagation rounds below must not recompute the
-    # upstream candidate+verify joins
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if driver_threshold:
-        # ONE action decides the path AND delivers the edges: collect at
-        # most threshold+1 rows — exactly the bound the driver path would
-        # collect anyway — instead of a count job followed by a second
-        # full collect
-        head = e.limit(driver_threshold + 1).toPandas()
-        if len(head) <= driver_threshold:
-            return _driver_union_find(
-                head, spark=edges.sparkSession, stats=stats
-            )
+    """Distributed path over the edge list `e` (columns a, b): (sig_id,
+    cluster_id) for every vertex, cluster_id = min sig_id of the
+    component.  Raises if `max_iter` rounds do not converge.  `stats`,
+    when given, gets the vertex and component counts (one aggregate)."""
     # undirected: keep both directions for min-label propagation
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.localCheckpoint(eager=True)
@@ -116,7 +85,7 @@ def connected_components(
     # label tables are tiny relative to the corpus and tiny-partition
     # overhead dominates round latency otherwise
     n_edges = sym.count()
-    spark = edges.sparkSession
+    spark = e.sparkSession
     parts = max(
         1,
         min(
@@ -183,7 +152,7 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "(graph diameter > ~2**max_iter with pointer-doubling); labels "
-            "would be fragmented — raise max_iter"
+            "would be fragmented — raise MAX_ITER"
         )
     if stats is not None:
         n_v, n_c = labels.agg(
@@ -196,17 +165,46 @@ def connected_components(
     )
 
 
+def connected_components(
+    edges: DataFrame,
+    src: str = "sig_id_a",
+    dst: str = "sig_id_b",
+    stats: dict | None = None,
+) -> DataFrame:
+    """(sig_id, cluster_id) for every vertex appearing in `edges`;
+    cluster_id = min sig_id of the component.  Isolated vertices (no edges)
+    are not emitted — callers union them back with cluster_id = sig_id.
+
+    One collect of at most DRIVER_THRESHOLD + 1 edges decides the path and
+    delivers the edges: up to DRIVER_THRESHOLD, union-find on the driver;
+    above it, distributed label propagation.  The edge list is a lazy
+    localCheckpoint that the collect fills, so the upstream plan (the
+    candidate + verify joins) runs once on either path.
+
+    `stats`, when given, gets the edge graph's ``vertices`` and
+    ``components`` (clusters = signatures − vertices + components): free
+    on the driver path, one aggregate on the distributed one.
+    """
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = e.localCheckpoint(eager=False)
+    head = e.limit(DRIVER_THRESHOLD + 1).toPandas()
+    if len(head) <= DRIVER_THRESHOLD:
+        return _driver_union_find(head, edges.sparkSession, stats)
+    return _label_propagation(e, stats=stats)
+
+
 def assign_clusters(
     all_sigs: DataFrame,
     edges: DataFrame,
     sig_id: str = "sig_id",
     src: str = "sig_id_a",
     dst: str = "sig_id_b",
-    **cc_kwargs,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Full cluster table over every signature: component label where edges
-    exist, else singleton cluster_id = sig_id (FIXTURES.md §6)."""
-    cc = connected_components(edges, src=src, dst=dst, **cc_kwargs)
+    exist, else singleton cluster_id = sig_id (FIXTURES.md §6).  `stats`
+    as in `connected_components`."""
+    cc = connected_components(edges, src=src, dst=dst, stats=stats)
     return (
         all_sigs.select(F.col(sig_id).alias("sig_id"))
         .join(cc, "sig_id", "left")

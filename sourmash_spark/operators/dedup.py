@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from . import docops
+from . import docops, kernels
 from .compare import DEFAULT_DF_CAP
 
 
@@ -110,37 +110,17 @@ def minhash_pairs60(
     df_cap: int = DEFAULT_DF_CAP,
     n_docs: int | None = None,
 ) -> DataFrame:
-    """All-pairs jaccard over hash60 sketches (inverted-index join, same
-    plan as operators.compare.compare_all_pairs).  `df_cap` (default
-    DEFAULT_DF_CAP, 0 disables) drops hashes present in more than df_cap
-    docs from the join — the boilerplate guard against the O(df^2) pair
-    blowup; sizes stay full-sketch, so capped jaccard lower-bounds true
-    jaccard.  `n_docs` (if known) proves the cap a no-op for free when
-    n_docs <= df_cap (sketch hashes are per-doc distinct); left None it is
-    one narrow count.
+    """All-pairs jaccard over hash60 sketches: `compare.compare_all_pairs`
+    in jaccard mode, ids as (id_a, id_b).  `df_cap` and `n_docs` are its
+    `df_cap` and `n_sigs` (capped jaccard lower-bounds true jaccard; with
+    df_cap on and n_docs None, building the plan runs a small count at
+    CALL time)."""
+    from .compare import compare_all_pairs
 
-    EAGERNESS: with df_cap on and n_docs None, building this plan runs a
-    small count (and possibly the cap_postings size probe) at CALL time;
-    lazy plan-composition callers pass n_docs or df_cap=0."""
-    from .compare import shared_key_pairs
-
-    if df_cap and n_docs is None:
-        n_docs = sketches.count()
-    pairs = shared_key_pairs(
-        sketches.select(
-            F.col(id_col), F.col("n_hashes"),
-            F.explode("hashes").alias("hashval"),
-        ),
-        ["hashval"], id_col, df_cap, n_ids=n_docs, size_col="n_hashes",
-    ).withColumnRenamed("n_shared", "intersect_hashes")
-    return (
-        pairs.withColumn(
-            "jaccard",
-            F.col("intersect_hashes")
-            / (F.col("size_a") + F.col("size_b") - F.col("intersect_hashes")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return compare_all_pairs(
+        sketches, sig_id=id_col, threshold=threshold, mode="jaccard",
+        df_cap=df_cap, n_sigs=n_docs,
+    ).withColumnsRenamed({"sig_id_a": "id_a", "sig_id_b": "id_b"})
 
 
 def ngram_jaccard_pairs(
@@ -200,11 +180,11 @@ def ngram_jaccard_pairs(
     pairs = shared_key_pairs(
         grams, ["gram"], id_col, df_cap, n_ids=n_docs, size_col="n_grams"
     ).withColumnRenamed("n_shared", "shared")
+    jaccard = kernels.jaccard_from_counts(
+        F.col("shared"), F.col("size_a"), F.col("size_b")
+    )
     return (
-        pairs.withColumn(
-            "jaccard",
-            F.col("shared") / (F.col("size_a") + F.col("size_b") - F.col("shared")),
-        )
+        pairs.withColumn("jaccard", jaccard)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "shared", "jaccard")
     )
@@ -218,46 +198,14 @@ def lsh_bands60(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """OPH band keys over hash60 sketches — the SQL-portable twin of
-    operators.lsh.band_signatures (band key = hash60 of the comma-joined
-    range minima instead of xxhash64).  Emits (doc_id, band_idx, band_key);
-    all-empty bands are dropped."""
-    m = num_bands * band_size
-    width = space // m + 1
-    rows = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        # exact long arithmetic (h - h%w == i*w ≡ h//w == i for h >= 0):
-        # float division rounds hashes above 2**53 and can disagree with
-        # the oracle's integer `//` at range boundaries (see operators/lsh)
-        lambda i: F.coalesce(
-            F.array_min(
-                F.filter(
-                    F.col("hashes"),
-                    lambda h: (h - (h % F.lit(width)))
-                    == i.cast("long") * F.lit(width),
-                )
-            ),
-            F.lit(-1).cast("long"),
-        ),
-    )
-    bands = F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda j: F.slice(F.col("_rows"), j * band_size + 1, band_size),
-    )
-    return (
-        sketches.filter(F.col("n_hashes") > 0)
-        .withColumn("_rows", rows)
-        .select(
-            id_col,
-            F.posexplode(bands).alias("band_idx", "band_vals"),
-        )
-        .filter(F.array_max("band_vals") != F.lit(-1).cast("long"))
-        .select(
-            id_col,
-            "band_idx",
-            docops.hash60(
-                F.concat_ws(",", F.col("band_vals").cast("array<string>"))
-            ).alias("band_key"),
-        )
+    operators.lsh.band_signatures: the same `range_min_bands` over
+    [0, space], keyed by hash60 of the comma-joined range minima instead
+    of xxhash64.  Emits (doc_id, band_idx, band_key)."""
+    from .lsh import range_min_bands
+
+    return range_min_bands(
+        sketches, num_bands, band_size, space // (num_bands * band_size) + 1,
+        lambda _, vals: docops.hash60(vals), id_col,
     )
 
 
@@ -765,29 +713,12 @@ def _exact_substring_span_arrays(
     # scale story is per-ingest-increment runs (see exact_substring_spans
     # docstring), and the keys are 64-bit hashes so the window partitioning
     # itself is uniform apart from true duplicate mass.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_k")
     if keep == "first":
-        # keep-one policy: the globally-first occurrence of each
-        # duplicated gram (min (doc_id, pos), the corpus scan order) stays
-        # unmarked, so the first copy of a duplicated region survives
-        marked = (
-            grams.select(
-                F.col(id_col),
-                "pos",
-                F.count("*").over(w).alias("_occ"),
-                F.min(F.struct(F.col(id_col), F.col("pos")))
-                .over(w)
-                .alias("_first"),
-            )
-            .filter(
-                (F.col("_occ") >= 2)
-                & (F.struct(F.col(id_col), F.col("pos")) != F.col("_first"))
-            )
-            .select(id_col, "pos")
-        )
+        marked = _keep_first_marked(grams, id_col)
     else:
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("_k")
         marked = (
             grams.select(
                 F.col(id_col), "pos", F.count("*").over(w).alias("_occ")
@@ -796,6 +727,29 @@ def _exact_substring_span_arrays(
             .select(id_col, "pos")
         )
     return _merge_marked_to_spans(marked, L, id_col)
+
+
+def _keep_first_marked(grams: DataFrame, id_col: str) -> DataFrame:
+    """(id_col, pos) of every gram occurrence but the globally-first one
+    (min (doc_id, pos), the corpus scan order) of each duplicated key, so
+    the first copy of a duplicated region survives — the keep-first
+    marking of `exact_substring_removal` and `exact_substring_update`,
+    one window shuffle on the gram key (see _exact_substring_span_arrays
+    for why a window and not an aggregate + join back)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("_k")
+    here = F.struct(F.col(id_col), F.col("pos"))
+    return (
+        grams.select(
+            F.col(id_col),
+            "pos",
+            F.count("*").over(w).alias("_occ"),
+            F.min(here).over(w).alias("_first"),
+        )
+        .filter((F.col("_occ") >= 2) & (here != F.col("_first")))
+        .select(id_col, "pos")
+    )
 
 
 def _doc_grams(
@@ -1116,21 +1070,7 @@ def exact_substring_update(
     ]
     stored = ckpt.read_increments(spark, store_dir, incs)
 
-    # intra-batch keep-first marking (same shape as the batch operator)
-    dup = (
-        grams.groupBy("_k")
-        .agg(
-            F.count("*").alias("_occ"),
-            F.min(F.struct(F.col(id_col), F.col("pos"))).alias("_first"),
-        )
-        .filter(F.col("_occ") >= 2)
-        .select("_k", "_first")
-    )
-    marked = (
-        grams.join(dup, "_k")
-        .filter(F.struct(F.col(id_col), F.col("pos")) != F.col("_first"))
-        .select(id_col, "pos")
-    )
+    marked = _keep_first_marked(grams, id_col)  # intra-batch
     if stored is not None:
         # any window already in the store is a later copy by definition
         # (duplicate positions across the two marked sets are benign: the

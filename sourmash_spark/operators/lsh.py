@@ -6,7 +6,8 @@ space [0, max_hash] is split into ``num_bands * band_size`` equal ranges;
 each range contributes its minimum hash (or an EMPTY sentinel).  A band =
 ``band_size`` consecutive range-minima, reduced to one 64-bit band key with
 xxhash64.  Two sketches become a candidate pair iff they share >= 1 band
-key at the same band index.
+key at the same band index.  `range_min_bands` builds the bands for any
+hash space and key hash; its hash60 twin is `dedup.lsh_bands60`.
 
 Why range-minima and not positional slices of the sorted sketch: positional
 banding breaks under a single hash insertion (every later position shifts);
@@ -34,21 +35,24 @@ from ..params import LSHParams
 EMPTY_SENTINEL = -1  # never a valid scaled-mode hash (those are >= 0)
 
 
-def band_signatures(
+def range_min_bands(
     sigs: DataFrame,
-    lsh: LSHParams,
-    scaled: int,
+    num_bands: int,
+    band_size: int,
+    width: int,
+    band_key,
     sig_id: str = "sig_id",
 ) -> DataFrame:
-    """(sig_id, band_idx, band_key) — one row per (sketch, band).
+    """(sig_id, band_idx, band_key) — one row per (sketch, non-empty band).
 
-    Narrow projection + one explode; no shuffle.  Rows whose sketch is empty
-    produce all-sentinel bands and are filtered out (an empty sketch should
-    never become a candidate of everything)."""
-    m = lsh.num_bands * lsh.band_size
-    max_hash = max_hash_for_scaled(scaled)  # < 2**63 for scaled >= 2
-    width = max_hash // m + 1
-
+    Range i of ``num_bands * band_size`` covers hashes h with
+    h // width == i; its minimum (or EMPTY_SENTINEL) is one band row, and
+    ``band_size`` consecutive rows make a band.  ``band_key(band_idx,
+    vals)`` reduces a band to its key, ``vals`` being the comma-joined
+    range minima.  Narrow projection + one explode; no shuffle.  Rows whose
+    sketch is empty produce all-sentinel bands and are filtered out (an
+    empty sketch should never become a candidate of everything)."""
+    m = num_bands * band_size
     rows = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
         # range test in exact long arithmetic (h - h % w == i*w ≡ h//w == i
@@ -66,10 +70,10 @@ def band_signatures(
         ),
     )
     bands = F.transform(
-        F.sequence(F.lit(0), F.lit(lsh.num_bands - 1)),
-        lambda j: F.slice(F.col("_rows"), j * lsh.band_size + 1, lsh.band_size),
+        F.sequence(F.lit(0), F.lit(num_bands - 1)),
+        lambda j: F.slice(F.col("_rows"), j * band_size + 1, band_size),
     )
-    out = (
+    return (
         sigs.filter(F.col("n_hashes") > 0)
         .select(F.col(sig_id), F.col("hashes"))
         .withColumn("_rows", rows)
@@ -82,10 +86,28 @@ def band_signatures(
         .select(
             sig_id,
             "band_idx",
-            F.xxhash64(F.col("band_idx"), F.concat_ws(",", F.col("band_vals").cast("array<string>"))).alias("band_key"),
+            band_key(
+                F.col("band_idx"),
+                F.concat_ws(",", F.col("band_vals").cast("array<string>")),
+            ).alias("band_key"),
         )
     )
-    return out
+
+
+def band_signatures(
+    sigs: DataFrame,
+    lsh: LSHParams,
+    scaled: int,
+    sig_id: str = "sig_id",
+) -> DataFrame:
+    """(sig_id, band_idx, band_key): `range_min_bands` over the live hash
+    space [0, max_hash] of `scaled`, keyed by xxhash64(band_idx, vals)."""
+    m = lsh.num_bands * lsh.band_size
+    max_hash = max_hash_for_scaled(scaled)  # < 2**63 for scaled >= 2
+    return range_min_bands(
+        sigs, lsh.num_bands, lsh.band_size, max_hash // m + 1,
+        F.xxhash64, sig_id,
+    )
 
 
 def bucket_stats(bands: DataFrame) -> DataFrame:
@@ -123,45 +145,27 @@ def verify_pairs(
     scaled: int,
     ksize: int = 21,
     threshold: float = 0.0,
-    threshold_col: str = "jaccard",
     sig_id: str = "sig_id",
 ) -> DataFrame:
     """Exact verification of candidate pairs — the edges table
     (FIXTURES.md §5; columns follow PrefetchResult semantics).
 
     Joins candidates back to the signatures to compute exact
-    jaccard/containment/ANI with array kernels (JVM-side).
+    jaccard/containment/ANI with array kernels (JVM-side); `threshold`
+    keeps pairs with jaccard >= threshold.
 
-    With a threshold, candidate pairs are pre-pruned by the score's
+    With a threshold, candidate pairs are pre-pruned by jaccard's
     size-only UPPER BOUND before any hash array is touched: |A∩B| can
-    never exceed min(|A|,|B|), so evaluating the threshold column's
-    formula at inter=min(|A|,|B|) bounds the real score from above
-    (lossless — a pruned pair could not have passed the exact filter;
-    at the boundary inter==min the bound IS the exact score, computed
-    by the same kernel expression, so the comparison is bit-identical).
-    The sizes join broadcasts two narrow (id, size) tables; only
-    surviving pairs reach the array-intersect join — on banded LSH
-    candidates this typically cuts the expensive stage by orders of
-    magnitude (the bucket join is intentionally recall-heavy)."""
+    never exceed min(|A|,|B|), so jaccard at inter=min(|A|,|B|) bounds the
+    real score from above (lossless — a pruned pair could not have passed
+    the exact filter; at the boundary inter==min the bound IS the exact
+    score, computed by the same kernel expression, so the comparison is
+    bit-identical).  Only surviving pairs reach the array-intersect join —
+    on banded LSH candidates this typically cuts the expensive stage by
+    orders of magnitude (the bucket join is intentionally recall-heavy)."""
     from . import kernels
 
-    bound_of = {
-        "jaccard": lambda na, nb, least: kernels.jaccard_from_counts(
-            least, na, nb
-        ),
-        "containment_a_in_b": lambda na, nb, least: (
-            kernels.containment_from_counts(least, na, F.lit(scaled))
-        ),
-        "containment_b_in_a": lambda na, nb, least: (
-            kernels.containment_from_counts(least, nb, F.lit(scaled))
-        ),
-        "max_containment": lambda na, nb, least: (
-            kernels.max_containment_from_counts(
-                least, na, nb, F.lit(scaled)
-            )
-        ),
-    }
-    if threshold > 0.0 and threshold_col in bound_of:
+    if threshold > 0.0:
         za = sigs.select(
             F.col(sig_id).alias("sig_id_a"), F.size("hashes").alias("_na")
         )
@@ -169,7 +173,7 @@ def verify_pairs(
             F.col(sig_id).alias("sig_id_b"), F.size("hashes").alias("_nb")
         )
         na, nb = F.col("_na"), F.col("_nb")
-        ub = bound_of[threshold_col](na, nb, F.least(na, nb))
+        ub = kernels.jaccard_from_counts(F.least(na, nb), na, nb)
         # No broadcast hint: the sizes table has one row PER SIGNATURE, so
         # forcing a broadcast would collect the whole corpus dimension to
         # the driver at 10^12-sig scale.  AQE broadcasts it automatically
@@ -221,5 +225,5 @@ def verify_pairs(
         )
     )
     if threshold > 0.0:
-        out = out.filter(F.col(threshold_col) >= threshold)
+        out = out.filter(F.col("jaccard") >= threshold)
     return out

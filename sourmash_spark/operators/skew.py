@@ -8,10 +8,11 @@ explicitly):
   metrics);
 * `collect_list`-style aggregations over skewed keys (e.g. building the
   postings list of a boilerplate shingle) — `salted_collect` two-phase;
-* joins against a skewed key distribution — AQE skew-join splitting is on
-  by default (session.py); `salted_join` is the manual fallback for
-  engines/paths where AQE can't apply (e.g. aggregations feeding the join
-  prevent AQE stats, or deterministic tests);
+* joins against a skewed key distribution — AQE skew-join splitting is
+  Spark 4.1.2's default, so session.py sets nothing for it; `salted_join`
+  is the manual fallback for engines/paths where AQE can't apply (e.g.
+  aggregations feeding the join prevent AQE stats, or deterministic
+  tests);
 * pathological band buckets — `lsh.candidate_pairs(bucket_cap=...)` caps
   the O(bucket^2) pair blowup *before* any join (the only lever that
   bounds output size, not just shuffle balance).

@@ -78,15 +78,13 @@ class SketchParams:
 
 @dataclass(frozen=True)
 class LSHParams:
-    """Banding params for the candidate stage.  With ``num_bands`` bands of
-    ``band_size`` rows each over the first num_bands*band_size sketch mins,
-    the S-curve capture probability at jaccard s is 1-(1-s^r)^b."""
+    """Banding params for the candidate stage.  The hash space is split
+    into num_bands*band_size equal ranges whose minima are the band rows
+    (operators/lsh.py); with ``num_bands`` bands of ``band_size`` rows
+    each, the S-curve capture probability at jaccard s is 1-(1-s^r)^b."""
 
     num_bands: int = 16
     band_size: int = 2
-    # shingles appearing in more than df_cap documents are dropped from the
-    # postings/banding stage (boilerplate guard); 0 disables.
-    df_cap: int = 0
 
     def capture_probability(self, jaccard: float) -> float:
         return 1.0 - (1.0 - jaccard**self.band_size) ** self.num_bands

@@ -20,7 +20,8 @@ layout and commit rule of both live in sources/checkpoint.py.  Stage plans:
   cap's probe already materializes.
 * edges: candidates join signatures twice on sig_id (sort-merge/AQE;
   candidate side is orders of magnitude smaller than all-pairs).
-* clusters: iterative min-label joins; rounds ~ clone-family diameter.
+* clusters: one collect of the edge list, solved on the driver (label
+  propagation joins past 5M edges; operators/cluster.py).
   The clusters lineage record carries the edge graph's vertex and
   component counts (`edge_graph`), so the cluster count is
   n_rows − vertices + components without reading the table.
@@ -268,7 +269,8 @@ def compact_increments(
     rewrites signatures/bands/edges as single stage tables (the committed
     increments folded in, the same view `incremental_update` reads),
     refreshes the clusters stage from the compacted state, removes the
-    _inc dirs (an uncommitted increment with them), and drops the stale
+    _inc dirs (an uncommitted increment with them; the folded names stay
+    listed in `checkpoint.folded_increments`), and drops the stale
     candidates stage (its pair enumeration is superseded by the folded
     edges).  Subsequent incremental_update calls start from a clean base.
 
@@ -296,6 +298,7 @@ def compact_increments(
         write("clusters", cluster_ops.assign_clusters(
             sigs, edges, sig_id=cfg.sig_id
         ))
+        return done
 
     return ckpt.compact(base_dir, ch, fold, drop=("candidates",))
 

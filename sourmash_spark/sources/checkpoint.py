@@ -25,8 +25,10 @@ only code that reads, replaces or deletes a stage table:
 * a compaction replaces stage tables in one commit (`compact`): each new
   table is written to ``{stage}={config_hash}_compacting``, then one
   marker ``{base}/_compact={config_hash}.json`` (temp name, then
-  ``os.replace``) commits the lot and lists the dirs it supersedes, then
-  the tables are swapped in, those dirs deleted and the marker removed.
+  ``os.replace``) commits the lot and lists the dirs it supersedes and
+  the increments it folds, then the tables are swapped in, the folded
+  names added to ``{base}/_folded={config_hash}.json``, those dirs
+  deleted and the marker removed.
   Every step after the marker can be repeated, and every read through
   this module first finishes a pending marker, so a crash anywhere leaves
   either the old tables or the new ones; a ``_compacting`` dir without a
@@ -262,9 +264,26 @@ def _rmtree(path: str) -> None:
         shutil.rmtree(path)
 
 
+def _folded_path(base: str, config_hash: str) -> str:
+    return os.path.join(base, f"_folded={config_hash}.json")
+
+
+def folded_increments(base: str, config_hash: str) -> list[str]:
+    """Names of the increments that compactions of ``config_hash`` folded
+    into its stage tables — gone from every ``_inc`` dir, so a replayed
+    writer can still tell its increment is stored.  Kept apart from
+    `committed_increments`, which lists only the live increments."""
+    path = _folded_path(base, config_hash)
+    if not os.path.exists(path):
+        return []
+    with open(path) as f:
+        return json.load(f)["names"]
+
+
 def _finish_compaction(base: str, config_hash: str) -> None:
-    """Carry out a committed compaction: swap each new table in, delete
-    the superseded dirs, remove the marker.  Each step is safe to repeat."""
+    """Carry out a committed compaction: swap each new table in, record
+    the folded increment names, delete the superseded dirs, remove the
+    marker.  Each step is safe to repeat."""
     marker = _compact_marker(base, config_hash)
     if not os.path.exists(marker):
         return
@@ -275,6 +294,10 @@ def _finish_compaction(base: str, config_hash: str) -> None:
         if os.path.isdir(path + "_compacting"):
             _rmtree(path)
             os.rename(path + "_compacting", path)
+    folded = folded_increments(base, config_hash)
+    new = [n for n in plan.get("folded", ()) if n not in folded]
+    if new:  # before the deletes that drop the names from the _inc dirs
+        _put_json(_folded_path(base, config_hash), [{"names": folded + new}])
     for name in plan["delete"]:
         _rmtree(os.path.join(base, name))
     os.remove(marker)
@@ -283,16 +306,18 @@ def _finish_compaction(base: str, config_hash: str) -> None:
 def compact(
     base: str,
     config_hash: str,
-    build: Callable[[Callable[[str, DataFrame], DataFrame]], None],
+    build: Callable[[Callable[[str, DataFrame], DataFrame]], list[str]],
     drop: tuple[str, ...] = (),
 ) -> dict[str, int]:
     """Replace stage tables of ``config_hash`` in one commit.
 
-    ``build(write)`` computes the new tables; ``write(stage, df)`` stores
-    one beside the live table and returns it read back, for tables
-    derived from it.  Then one marker commits them: the written stages
-    are swapped in, and their increments and the ``drop`` stages deleted.
-    Returns {stage: n_rows} of the written tables.
+    ``build(write)`` computes the new tables and returns the names of the
+    increments it folds in; ``write(stage, df)`` stores one beside the
+    live table and returns it read back, for tables derived from it.
+    Then one marker commits them: the written stages are swapped in, the
+    folded names kept (`folded_increments`), and the written stages'
+    increments and the ``drop`` stages deleted.  Returns {stage: n_rows}
+    of the written tables.
     """
     _finish_compaction(base, config_hash)
     for name in os.listdir(base):  # a compaction that crashed uncommitted
@@ -307,12 +332,13 @@ def compact(
         counts[stage] = sum(p["rows"] for p in partition_metrics(path))
         return out
 
-    build(write)
+    folded = build(write)
     superseded = [increments_path(base, s, config_hash) for s in counts]
     superseded += [stage_path(base, s, config_hash) for s in drop]
     _put_json(_compact_marker(base, config_hash), [{  # the commit
         "swap": list(counts),
         "delete": [os.path.basename(p) for p in superseded],
+        "folded": list(folded),
     }])
     _append_lineage(base, [{
         "stage": "compact", "config_hash": config_hash, "event": "complete",

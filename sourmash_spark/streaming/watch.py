@@ -13,6 +13,8 @@ num-mode keeps only the bottom-k.
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -137,23 +139,29 @@ def stream_ingest(
     batch is a bounded increment against persistent stage TABLES, and the
     batch work is itself a multi-stage batch plan.  foreachBatch is
     AT-LEAST-ONCE — a batch whose writes finished but whose streaming
-    commit did not replays — so the increment is named `b{batch_id:09d}`:
-    a replay of a committed batch is skipped, and a replay after a crash
-    before the increment's commit overwrites it (sources/checkpoint.py),
-    so a batch's signatures are stored once either way.
+    commit did not replays — so the increment is named
+    `b{query_id}-{batch_id:09d}`, with the query id Spark keeps in the
+    streaming checkpoint (`_stream_id`): a replay of a stored batch is
+    skipped (committed, or folded in by a compaction:
+    `checkpoint.folded_increments`), and a replay after a crash before
+    the increment's commit overwrites it (sources/checkpoint.py), so a
+    batch's signatures are stored once either way.  Batch ids restart at
+    0 under a new ``checkpoint_dir``, but the query id is new there too,
+    so a new stream's batches never match an earlier stream's names.
 
     Returns the StreamingQuery (caller awaits/stops)."""
     from ..pipeline import incremental_update
     from ..sources import checkpoint as ckpt
 
-    edges_inc = ckpt.increments_path(
-        base_dir, "edges", config.config_hash()
-    )
+    ch = config.config_hash()
+    edges_inc = ckpt.increments_path(base_dir, "edges", ch)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        name = f"b{batch_id:09d}"
-        if name in ckpt.committed_increments(edges_inc) or batch_df.isEmpty():
-            return  # a replay of a committed batch, or nothing to add
+        name = f"b{_stream_id(checkpoint_dir)}-{batch_id:09d}"
+        stored = ckpt.committed_increments(edges_inc)
+        stored += ckpt.folded_increments(base_dir, ch)
+        if name in stored or batch_df.isEmpty():
+            return  # a replay of a stored batch, or nothing to add
         incremental_update(
             batch_df.sparkSession, batch_df, base_dir, config,
             increment_name=name,
@@ -165,6 +173,14 @@ def stream_ingest(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def _stream_id(checkpoint_dir: str) -> str:
+    """The query id in ``{checkpoint_dir}/metadata``: Spark writes it when
+    the query is created and keeps it for every restart from that
+    checkpoint."""
+    with open(os.path.join(checkpoint_dir, "metadata")) as f:
+        return json.loads(f.readline())["id"]
 
 
 def stream_substring_ingest(

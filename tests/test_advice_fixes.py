@@ -19,7 +19,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from sourmash_spark.hashing import i64_to_u64, u64_to_i64
-from sourmash_spark.operators.cluster import connected_components
+from sourmash_spark.operators.cluster import _label_propagation
 from sourmash_spark.operators.kernels import downsample_hashes
 from sourmash_spark.operators.setops import downsample_signatures
 from sourmash_spark.sources.sig_json import (
@@ -114,9 +114,9 @@ def test_cc_long_chain_converges_distributed(spark):
     # chain 0-1-2-...-119: diameter 119 >> round budget without doubling
     n = 120
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "sig_id_a long, sig_id_b long"
+        [(i, i + 1) for i in range(n - 1)], "a long, b long"
     )
-    cc = connected_components(edges, driver_threshold=0, max_iter=14)
+    cc = _label_propagation(edges, max_iter=14)
     rows = cc.collect()
     assert len(rows) == n
     assert all(r["cluster_id"] == 0 for r in rows)
@@ -125,7 +125,7 @@ def test_cc_long_chain_converges_distributed(spark):
 def test_cc_raises_on_exhausted_budget(spark):
     n = 40
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "sig_id_a long, sig_id_b long"
+        [(i, i + 1) for i in range(n - 1)], "a long, b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, driver_threshold=0, max_iter=1)
+        _label_propagation(edges, max_iter=1)

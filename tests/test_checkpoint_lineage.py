@@ -283,3 +283,45 @@ def test_read_stage_takes_the_written_schema(spark, tmp_path, rows):
     # names and types as written; a file read makes every field nullable
     assert got.schema.simpleString() == df.schema.simpleString()
     assert got.count() == rows
+
+
+def test_driver_components_collect_once(spark, tmp_path):
+    """`connected_components` on the driver path starts at most 2 jobs and
+    evaluates its upstream once (a mapInPandas tap counts the rows that
+    pass), and its labels and stats equal label propagation's."""
+    import numpy as np
+    import pandas as pd
+
+    from sourmash_spark.operators import cluster
+
+    rng = np.random.default_rng(5)
+    a, b = rng.integers(0, 3000, size=(2, 2500))
+    keep = a < b
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(
+        pd.DataFrame({"sig_id_a": a[keep], "sig_id_b": b[keep]})
+    ).repartition(3).write.parquet(path)
+    tapped = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            tapped.add(len(pdf))
+            yield pdf
+
+    edges = spark.read.parquet(path).mapInPandas(
+        tap, "sig_id_a long, sig_id_b long"
+    )
+    drv: dict = {}
+    labels, n_jobs = _jobs(
+        spark, lambda: cluster.connected_components(edges, stats=drv)
+    )
+    assert n_jobs <= 2
+    assert tapped.value == int(keep.sum())
+    spread: dict = {}
+    want = cluster._label_propagation(
+        spark.read.parquet(path).toDF("a", "b"), stats=spread
+    )
+    assert sorted(map(tuple, labels.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+    assert drv == spread

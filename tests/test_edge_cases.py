@@ -94,6 +94,7 @@ def test_driver_union_find_matches_bfs_on_random_graphs(spark):
     from-scratch BFS on random graphs (chains, stars, and dense blobs all
     arise at these densities)."""
     import numpy as np
+    import pandas as pd
 
     from sourmash_spark.operators.cluster import _driver_union_find
 
@@ -103,13 +104,10 @@ def test_driver_union_find_matches_bfs_on_random_graphs(spark):
         b = rng.integers(0, n, size=m)
         keep = a != b
         a, b = a[keep].tolist(), b[keep].tolist()
-        edges = spark.createDataFrame(
-            list(zip(a, b)), "sig_id_a long, sig_id_b long"
-        )
+        edges = pd.DataFrame({"a": a, "b": b})
         got = {
-            r.sig_id: r.cluster_id for r in _driver_union_find(
-                edges.selectExpr("sig_id_a as a", "sig_id_b as b")
-            ).collect()
+            r.sig_id: r.cluster_id
+            for r in _driver_union_find(edges, spark).collect()
         }
         # BFS reference
         adj: dict[int, set[int]] = {}

@@ -266,19 +266,20 @@ def test_cc_distributed_equals_driver_path(spark, sigs, oracle_sketches):
     }
     dist = {
         r.sig_id: r.cluster_id
-        for r in cluster_ops.assign_clusters(
-            sigs, edges, driver_threshold=0
+        for r in cluster_ops._label_propagation(
+            edges.selectExpr("sig_id_a as a", "sig_id_b as b")
         ).collect()
     }
-    assert drv == dist
+    assert dist
+    assert drv == {v: dist.get(v, v) for v in drv}
 
 
 def test_verify_prefilter_lossless_all_threshold_cols(spark, sigs):
     """The size-bound candidate prune inside verify_pairs must be invisible
-    in the output: for every threshold column, thresholded verify ==
-    unfiltered verify + exact post-filter (the prune keeps any pair whose
-    upper bound — the kernel evaluated at inter=min(|A|,|B|) — clears the
-    threshold, so no true edge can be lost)."""
+    in the output: thresholded verify == unfiltered verify + exact jaccard
+    post-filter (the prune keeps any pair whose upper bound — jaccard at
+    inter=min(|A|,|B|) — clears the threshold, so no true edge can be
+    lost)."""
     import pyspark.sql.functions as F
 
     bands = lsh_ops.band_signatures(sigs, LSH, scaled=PARAMS.scaled)
@@ -286,24 +287,18 @@ def test_verify_prefilter_lossless_all_threshold_cols(spark, sigs):
     ref_all = lsh_ops.verify_pairs(
         cands, sigs, scaled=PARAMS.scaled, ksize=PARAMS.ksize, threshold=0.0
     ).cache()
-    for tcol in (
-        "jaccard",
-        "containment_a_in_b",
-        "containment_b_in_a",
-        "max_containment",
-    ):
-        for t in (0.3, 0.8):
-            got = sorted(
-                map(
-                    tuple,
-                    lsh_ops.verify_pairs(
-                        cands, sigs, scaled=PARAMS.scaled,
-                        ksize=PARAMS.ksize, threshold=t, threshold_col=tcol,
-                    ).collect(),
-                )
+    for t in (0.3, 0.8):
+        got = sorted(
+            map(
+                tuple,
+                lsh_ops.verify_pairs(
+                    cands, sigs, scaled=PARAMS.scaled,
+                    ksize=PARAMS.ksize, threshold=t,
+                ).collect(),
             )
-            want = sorted(
-                map(tuple, ref_all.filter(F.col(tcol) >= t).collect())
-            )
-            assert got == want, (tcol, t, len(got), len(want))
+        )
+        want = sorted(
+            map(tuple, ref_all.filter(F.col("jaccard") >= t).collect())
+        )
+        assert got == want, (t, len(got), len(want))
     ref_all.unpersist()

@@ -387,30 +387,117 @@ def _stored_rows(path):
     return sum(p["rows"] for p in ckpt.partition_metrics(path))
 
 
+def _stored_signatures(spark, base):
+    """Signature rows stored under ``base`` — the stage table plus every
+    increment, committed or not — after finishing a committed compaction."""
+    ch = CFG.config_hash()
+    ckpt.read_stage(spark, base, "signatures", ch)
+    return sum(
+        _stored_rows(path(base, "signatures", ch))
+        for path in (ckpt.stage_path, ckpt.increments_path)
+    )
+
+
+def _drain(spark, tmp_path, base, docs, tag):
+    """Stream ``docs`` into ``base`` from source ``arrivals_{tag}`` under
+    checkpoint dir ``ckpt_{tag}``, to the end; returns the checkpoint dir."""
+    from sourmash_spark.streaming.watch import stream_ingest
+
+    src = str(tmp_path / f"arrivals_{tag}")
+    stream_ckpt = str(tmp_path / f"ckpt_{tag}")
+    if not os.path.isdir(src):
+        docs.write.parquet(src)
+    stream = spark.readStream.schema(docs.schema).parquet(src)
+    stream_ingest(stream, base, CFG, checkpoint_dir=stream_ckpt) \
+        .awaitTermination(120)
+    return stream_ckpt
+
+
+def _stream_once(spark, tmp_path, first, extra):
+    """A base of ``first`` and a drained stream of ``extra``; returns the
+    base dir, the stream's checkpoint dir and a `replay` that drains
+    batch 0 again, as after a crash between its writes and its streaming
+    commit."""
+    base = str(tmp_path / "base")
+    run_pipeline(spark, first, base, CFG, stop_after="edges")
+    stream_ckpt = _drain(spark, tmp_path, base, extra, "a")
+
+    def replay():
+        for f in ("0", ".0.crc"):  # the batch's commit is lost
+            os.remove(os.path.join(stream_ckpt, "commits", f))
+        _drain(spark, tmp_path, base, extra, "a")
+
+    return base, stream_ckpt, replay
+
+
 def test_stream_ingest_replay_stores_batch_once(spark, corpus, tmp_path):
     """A micro-batch replayed after its writes but before the streaming
     commit (the commit log entry deleted) must not store its signatures a
-    second time."""
-    from sourmash_spark.streaming.watch import stream_ingest
+    second time — neither while its increment is live nor after
+    compaction has folded it into the stage tables."""
+    from sourmash_spark.pipeline import compact_increments
 
-    first, extra, _ = _split(spark, corpus)
-    base = str(tmp_path / "base")
-    src = str(tmp_path / "arrivals")
-    stream_ckpt = str(tmp_path / "ckpt")
-    run_pipeline(spark, first, base, CFG, stop_after="edges")
-    extra.write.parquet(src)
-
-    def drain():
-        stream = spark.readStream.schema(extra.schema).parquet(src)
-        stream_ingest(stream, base, CFG, checkpoint_dir=stream_ckpt) \
-            .awaitTermination(120)
-
-    drain()
-    for f in ("0", ".0.crc"):  # the batch's writes happened, its commit did not
-        os.remove(os.path.join(stream_ckpt, "commits", f))
-    drain()
+    first, extra, both = _split(spark, corpus)
+    base, _, replay = _stream_once(spark, tmp_path, first, extra)
+    replay()
     sig_inc = ckpt.increments_path(base, "signatures", CFG.config_hash())
     assert _stored_rows(sig_inc) == extra.count()
+    compact_increments(spark, base, CFG)
+    replay()
+    assert _stored_signatures(spark, base) == both.count()
+
+
+def test_stream_replay_after_crash_past_compaction_marker(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A compaction that crashes right after its marker commits has folded
+    the batch: a replay before and after the compaction is finished stores
+    it once."""
+    from sourmash_spark.pipeline import compact_increments
+    from sourmash_spark.streaming.watch import _stream_id
+
+    first, extra, both = _split(spark, corpus)
+    base, stream_ckpt, replay = _stream_once(spark, tmp_path, first, extra)
+    ch = CFG.config_hash()
+    put = ckpt._put_json
+
+    def crash_after_marker(path, records):
+        put(path, records)
+        if path == ckpt._compact_marker(base, ch):
+            raise RuntimeError("crash after the compaction marker")
+
+    monkeypatch.setattr(ckpt, "_put_json", crash_after_marker)
+    with pytest.raises(RuntimeError, match="compaction marker"):
+        compact_increments(spark, base, CFG)
+    monkeypatch.undo()
+    replay()  # the marker is pending: the batch's increment is still live
+    assert _stored_signatures(spark, base) == both.count()
+    batch0 = f"b{_stream_id(stream_ckpt)}-000000000"
+    assert ckpt.folded_increments(base, ch) == [batch0]
+    replay()  # the compaction is finished: only its record is left
+    assert _stored_signatures(spark, base) == both.count()
+
+
+def test_new_streams_store_every_batch(spark, corpus, tmp_path):
+    """Batch ids restart at 0 under a new checkpoint dir: a second stream
+    into the same base, while the first one's increment is live, and a
+    third after a compaction folded both, store all of their files."""
+    from sourmash_spark.pipeline import compact_increments
+
+    pdf = corpus.code_files
+
+    def df_of(lo, hi):
+        p = pdf[(pdf.file_id >= lo) & (pdf.file_id < hi)]
+        return spark.createDataFrame(p).withColumnRenamed("file_id", "sig_id")
+
+    base = str(tmp_path / "base")
+    run_pipeline(spark, df_of(0, 30), base, CFG, stop_after="edges")
+    _drain(spark, tmp_path, base, df_of(30, 40), "a")
+    _drain(spark, tmp_path, base, df_of(40, 50), "b")
+    assert _stored_signatures(spark, base) == len(pdf[pdf.file_id < 50])
+    compact_increments(spark, base, CFG)
+    _drain(spark, tmp_path, base, df_of(50, pdf.file_id.max() + 1), "c")
+    assert _stored_signatures(spark, base) == len(pdf)
 
 
 def test_increment_rerun_after_crash_before_commit(spark, corpus, tmp_path):

@@ -19,7 +19,7 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 
-from sourmash_spark.operators.cluster import connected_components
+from sourmash_spark.operators.cluster import _label_propagation, connected_components
 from sourmash_spark.params import LSHParams, SketchParams
 from sourmash_spark.pipeline import PipelineConfig, run_pipeline
 from sourmash_spark.session import get_spark
@@ -204,7 +204,7 @@ def test_cc_stats_match_on_both_paths(spark):
     )
     driver, spread = {}, {}
     labels = connected_components(edges, stats=driver)
-    connected_components(edges, driver_threshold=0, stats=spread)
+    _label_propagation(edges.toDF("a", "b"), stats=spread)
     assert driver == spread
     assert driver["vertices"] == labels.count()
     assert driver["components"] == (
