@@ -17,6 +17,15 @@ are Spark's defaults):
   query-side joins broadcast their small side instead of shuffling the
   corpus side (plans/PLANS.md, "compare / candidate generation").
 * No UI: nothing serves it in tests, benchmarks or batch jobs.
+* On local masters, Python workers fork from `worker_daemon`
+  (``spark.python.daemon.module``), with this package's root (the
+  checkout, or the ``--py-files`` zip) first on
+  ``spark.executorEnv.PYTHONPATH`` so the daemon can import it before
+  any task ships it: the daemon imports pyspark from the interpreter's
+  byte-compiled install instead of compiling it from
+  ``$SPARK_HOME/python/lib/pyspark.zip`` in every worker, and forks
+  with the Arrow modules already imported.  Local executors share the
+  driver's files; other masters keep Spark's daemon.
 
 Explicit arguments always apply; under spark-submit its ``--master`` and
 every ``--conf`` win over the defaults above; a running session is
@@ -26,11 +35,12 @@ returned with none of its settings changed.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+# the directory (or --py-files zip) this package is imported from
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _submitted_conf() -> dict[str, str] | None:
@@ -79,6 +89,14 @@ def get_spark(
     if shuffle_partitions:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     conf.update(extra_conf or {})
+    settings = {**(submitted or {}), **conf}
+    if (settings.get("spark.master", "").startswith("local")
+            and "spark.python.daemon.module" not in settings):
+        conf["spark.python.daemon.module"] = "sourmash_spark.worker_daemon"
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(
+            p for p in (_PACKAGE_ROOT, settings.get(key)) if p
+        )
     builder = SparkSession.builder.appName(app_name)
     for k, v in conf.items():
         builder = builder.config(k, v)
@@ -95,18 +113,6 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def add_pyfiles(spark: SparkSession) -> str:
-    """Ship this package to executors — the in-process stand-in for
-    ``spark-submit --py-files sourmash_spark.zip`` on a real cluster."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    tmp = tempfile.mkdtemp(prefix="sourmash_spark_pyfiles_")
-    zip_base = os.path.join(tmp, "sourmash_spark")
-    archive = shutil.make_archive(zip_base, "zip", os.path.dirname(pkg_dir),
-                                  os.path.basename(pkg_dir))
-    spark.sparkContext.addPyFile(archive)
-    return archive
 
 
 def assert_column_constant(df, col: str, value, msg: str):

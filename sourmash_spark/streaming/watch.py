@@ -204,12 +204,14 @@ def stream_substring_ingest(
 
     IDEMPOTENCY (ADVICE r5): foreachBatch is AT-LEAST-ONCE — on
     failure/restart a batch replays — so every batch effect is addressed
-    by batch_id and ordered so replays converge:
+    by the batch's name `b{query_id}-{batch_id:09d}` (the query id Spark
+    keeps in the streaming checkpoint, as in `stream_ingest`) and
+    ordered so replays converge:
 
-    * output goes to `{out_dir}/ingest_batch={batch_id}` with
+    * output goes to `{out_dir}/ingest_batch={name}` with
       mode("overwrite") (a plain `spark.read.parquet(out_dir)` sees the
       union, with ingest_batch as a partition column);
-    * the store increment is named `b{batch_id}` and written
+    * the store increment is named `{name}` and written
       ONLY AFTER the output commit succeeds
       (`exact_substring_update(out_writer=..., increment_name=...)`);
     * a replay of a fully-committed batch (its increment is committed)
@@ -217,9 +219,13 @@ def stream_substring_ingest(
       append recomputes against the unchanged store — identical rows —
       and overwrites both paths.
 
+    Batch ids restart at 0 under a new ``checkpoint_dir``, but the query
+    id is new there too, so several streams can share one store and one
+    output dir.
+
     Returns the StreamingQuery (caller awaits/stops)."""
     handle = _substring_batch_handler(
-        store_dir, out_dir, min_len, id_col, text_col
+        checkpoint_dir, store_dir, out_dir, min_len, id_col, text_col
     )
     return (
         stream_docs.writeStream.foreachBatch(handle)
@@ -230,6 +236,7 @@ def stream_substring_ingest(
 
 
 def _substring_batch_handler(
+    checkpoint_dir: str,
     store_dir: str,
     out_dir: str,
     min_len: int,
@@ -237,23 +244,17 @@ def _substring_batch_handler(
     text_col: str,
 ):
     """The foreachBatch handler of `stream_substring_ingest`, exposed so
-    the at-least-once REPLAY path is directly testable.  NOTE the skip
-    guard keys on batch_id: it protects genuine replays (same checkpoint,
-    same batch content); deleting the checkpoint and reprocessing under
-    reused batch ids is outside the contract, as with any foreachBatch
-    sink."""
-    import os
-
+    the at-least-once REPLAY path is directly testable."""
     from ..operators.dedup import exact_substring_update
     from ..sources import checkpoint as ckpt
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        inc_name = f"b{batch_id:09d}"
+        inc_name = f"b{_stream_id(checkpoint_dir)}-{batch_id:09d}"
         if inc_name in ckpt.committed_increments(store_dir):
             return  # replay of a fully-committed batch
         if batch_df.isEmpty():
             return
-        batch_out = os.path.join(out_dir, f"ingest_batch={batch_id}")
+        batch_out = os.path.join(out_dir, f"ingest_batch={inc_name}")
         exact_substring_update(
             batch_df, store_dir, min_len=min_len,
             id_col=id_col, text_col=text_col,

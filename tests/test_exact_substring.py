@@ -337,6 +337,66 @@ def test_stream_substring_ingest_equals_batch(spark, tmp_path):
     assert got == want
 
 
+def test_substring_streams_share_store_and_output(spark, tmp_path):
+    """Two streams under different checkpoint dirs into one gram store and
+    one output dir: the second stream's batch ids restart at 0, yet it
+    stores and emits every document, with the same rows as a from-scratch
+    keep-first removal; a replay within one stream is still skipped."""
+    import os
+
+    from sourmash_spark.streaming.watch import stream_substring_ingest
+
+    L = 20
+    store = str(tmp_path / "gramstore")
+    out = str(tmp_path / "deduped")
+    schema = "doc_id long, text string"
+
+    def drain(name, ids):
+        src = str(tmp_path / f"src_{name}")
+        ckpt = str(tmp_path / f"ckpt_{name}")
+        if ids:
+            spark.createDataFrame(
+                [(d, CORPUS[d]) for d in ids], schema
+            ).write.mode("append").parquet(src)
+        stream = spark.readStream.schema(schema).parquet(src)
+        stream_substring_ingest(stream, store, ckpt, out, min_len=L) \
+            .awaitTermination(120)
+        return ckpt
+
+    drain("a", [0, 1, 2])
+    ckpt_b = drain("b", [3, 4, 5])
+
+    def rows():
+        return {
+            r["doc_id"]: (r["n_spans"], r["n_removed"], r["text_deduped"])
+            for r in spark.read.parquet(out).collect()
+        }
+
+    def files():
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(out) for f in fs
+        ), sorted(os.listdir(store))
+
+    want = {
+        r["doc_id"]: (r["n_spans"], r["n_removed"], r["text_deduped"])
+        for r in exact_substring_removal(
+            _df(spark), min_len=L, keep="first"
+        ).collect()
+    }
+    got = rows()
+    assert got == want and set(got) == set(CORPUS)
+    assert len([d for d in os.listdir(store)
+                if d.startswith("increment=")]) == 2
+
+    # stream b's batch replays (its commit is lost): nothing is rewritten
+    before = files()
+    for f in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt_b, "commits", f))
+    drain("b", [])
+    assert files() == before
+    assert rows() == want
+
+
 def test_min_len_longer_than_every_doc_is_empty(spark):
     df = _df(spark)
     assert exact_substring_spans(df, min_len=500).count() == 0

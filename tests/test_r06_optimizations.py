@@ -172,13 +172,18 @@ def test_stream_substring_replay_is_idempotent(spark, tmp_path):
 
     store = str(tmp_path / "gramstore")
     out = str(tmp_path / "deduped")
+    ckpt = tmp_path / "ckpt"  # the query id Spark keeps in a checkpoint
+    ckpt.mkdir()
+    (ckpt / "metadata").write_text('{"id":"q1"}\n')
     phrase = "shared boilerplate phrase with plenty of characters"
     rows = [
         (0, f"intro {phrase} middle {phrase} end"),
         (1, "wholly unique text that has nothing repeated at all here"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    handle = _substring_batch_handler(store, out, 30, "doc_id", "text")
+    handle = _substring_batch_handler(
+        str(ckpt), store, out, 30, "doc_id", "text"
+    )
 
     handle(df, 0)
     first = {
@@ -198,13 +203,13 @@ def test_stream_substring_replay_is_idempotent(spark, tmp_path):
     import os
 
     incs = [d for d in os.listdir(store) if d.startswith("increment=")]
-    assert incs == ["increment=b000000000"]
+    assert incs == ["increment=bq1-000000000"]
 
     # crash-before-store-append replay: wipe the increment (as if the
     # append never committed) and replay — recomputes identical rows
     import shutil
 
-    shutil.rmtree(os.path.join(store, "increment=b000000000"))
+    shutil.rmtree(os.path.join(store, "increment=bq1-000000000"))
     handle(df, 0)
     redo = {
         r["doc_id"]: (r["n_removed"], r["text_deduped"])

@@ -13,16 +13,20 @@ import os
 import subprocess
 import sys
 import uuid
+import zipfile
 from contextlib import redirect_stdout
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyspark
 import pyspark.sql.functions as F
 
 from sourmash_spark.operators.cluster import _label_propagation, connected_components
 from sourmash_spark.params import LSHParams, SketchParams
 from sourmash_spark.pipeline import PipelineConfig, run_pipeline
 from sourmash_spark.session import get_spark
+from sourmash_spark.worker_daemon import worker_path
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -210,3 +214,103 @@ def test_cc_stats_match_on_both_paths(spark):
     assert driver["components"] == (
         labels.select(F.countDistinct("cluster_id")).first()[0]
     )
+
+
+def test_workers_import_the_installed_pyspark(spark):
+    lib = os.path.join(os.environ.get("SPARK_HOME", ""), "python", "lib")
+
+    def facts(batches):
+        import __main__
+        import sys
+
+        import pyspark as ps
+
+        for _ in batches:
+            yield pa.RecordBatch.from_pydict({
+                "daemon": [__main__.__spec__.name],
+                "pyspark": [ps.__file__],
+                "path": [list(sys.path) + list(sys.path_importer_cache)],
+            })
+
+    rows = spark.range(8, numPartitions=4).mapInArrow(
+        facts, "daemon string, pyspark string, path array<string>"
+    ).collect()
+    assert len(rows) == 4
+    for r in rows:
+        assert r.daemon == "sourmash_spark.worker_daemon"
+        assert r.pyspark == pyspark.__file__
+        assert not r.pyspark.startswith(lib)
+        # neither on the path nor left as a cached zipimporter
+        assert [p for p in r.path if p.startswith(lib) or ".jar" in p] == []
+
+
+def test_worker_path_keeps_spark_zips_without_a_matching_install(tmp_path):
+    lib = tmp_path / "python" / "lib"
+    lib.mkdir(parents=True)
+    zpath, jar = str(lib / "pyspark.zip"), str(tmp_path / "core.jar")
+    site = os.path.dirname(os.path.dirname(pyspark.__file__))
+    home = str(tmp_path)
+
+    def write(path, files):
+        with zipfile.ZipFile(path, "w") as z:
+            for name, text in files.items():
+                z.writestr(name, text)
+
+    def fake_pyspark(version):
+        write(zpath, {
+            "pyspark/__init__.py": "",
+            "pyspark/version.py": f'__version__: str = "{version}"\n',
+        })
+
+    fake_pyspark(pyspark.__version__)
+    assert worker_path([zpath, site], home) == [site]
+    # no installed pyspark, another version, or a zip outside Spark's lib
+    assert worker_path([zpath], home) == [zpath]
+    elsewhere = str(tmp_path / "elsewhere")
+    assert worker_path([zpath, site], elsewhere) == [zpath, site]
+    assert worker_path([zpath, site], "") == [zpath, site]
+    fake_pyspark("0.0.1")
+    assert worker_path([zpath, site], home) == [zpath, site]
+    # a jar goes only when it holds no Python file
+    write(jar, {"org/apache/X.class": ""})
+    assert worker_path([jar, site], home) == [site]
+    write(jar, {"pyspark/__init__.py": ""})
+    assert worker_path([jar, site], home) == [jar, site]
+
+
+def test_workers_import_the_package_without_the_checkout(tmp_path):
+    """A driver whose cwd and PYTHONPATH lack the checkout (it finds the
+    package only through its own sys.path) still runs a Python UDF: the
+    worker daemon gets the package root from the session."""
+    env = {k: v for k, v in os.environ.items() if k not in (
+        "SPARK_GRAFT_CPUS", "SOURMASH_SPARK_MASTER",
+        "SOURMASH_SPARK_SHUFFLE_PARTITIONS", "PYSPARK_GATEWAY_PORT",
+    )}
+    env["PYTHONPATH"] = ""
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "import pyarrow as pa\n"
+        "from sourmash_spark.session import get_spark\n"
+        "def facts(batches):\n"
+        "    import __main__, sourmash_spark\n"
+        "    for _ in batches:\n"
+        "        yield pa.RecordBatch.from_pydict({\n"
+        "            'daemon': [__main__.__spec__.name],\n"
+        "            'package': [sourmash_spark.__file__]})\n"
+        "s = get_spark(master='local[2]',"
+        " extra_conf={'spark.driver.memory': '512m'})\n"
+        "r = s.range(2, numPartitions=1).mapInArrow("
+        "facts, 'daemon string, package string').first()\n"
+        "print(r.daemon, r.package)\n"
+        "s.stop()\n"
+    )
+    p = subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=str(tmp_path),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    assert p.stdout.split()[-2:] == [
+        "sourmash_spark.worker_daemon",
+        os.path.join(REPO, "sourmash_spark", "__init__.py"),
+    ]

@@ -75,9 +75,7 @@ def main() -> None:
             os.path.abspath(__file__))), "testdata_sf1")
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(
-        "make_sf_big", master="local[32]", shuffle_partitions=32
-    )
+    spark = get_spark("make_sf_big")
     spark.sparkContext.setLogLevel("ERROR")
     copies = _copies(spark, factor)
 
