@@ -1,4 +1,4 @@
-"""Signature set operations — `sig merge/intersect/subtract`, downsample,
+"""Signature set operations — `sig merge/intersect`, downsample,
 flatten, abundance filters (reference: minhash.rs:432-516,
 sig/__main__.py:459-923) as DataFrame transforms.
 
@@ -66,12 +66,6 @@ def intersect_signatures(sigs: DataFrame, group_cols: list[str]) -> DataFrame:
     ).withColumn("n_hashes", F.size("hashes").cast("int"))
 
 
-def subtract_hashes(a: Column, b: Column) -> Column:
-    """Set difference (sig subtract / remove_many, minhash.rs:406-430) —
-    array_except preserves order of `a`, hence stays unsigned-sorted."""
-    return F.array_except(a, b)
-
-
 def flatten(sigs: DataFrame) -> DataFrame:
     """Drop abundances (minhash.py:721-738)."""
     return sigs.withColumn(
@@ -122,16 +116,6 @@ def downsample_signatures(sigs: DataFrame, new_scaled: int) -> DataFrame:
         .withColumn("n_hashes", F.size("hashes").cast("int"))
         .withColumn("scaled", F.lit(new_scaled).cast("long"))
         .drop("_z")
-    )
-
-
-def downsample_num(sigs: DataFrame, new_num: int) -> DataFrame:
-    """Keep the `new_num` smallest (num-mode downsample, minhash.py:678-687).
-    Scaled-mode arrays are non-negative & sorted, so slice() is correct."""
-    return (
-        sigs.withColumn("hashes", F.slice("hashes", 1, new_num))
-        .withColumn("abunds", F.slice("abunds", 1, new_num))
-        .withColumn("n_hashes", F.size("hashes").cast("int"))
     )
 
 

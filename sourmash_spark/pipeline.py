@@ -18,8 +18,10 @@ layout and commit rule of both live in sources/checkpoint.py.  Stage plans:
   lineage record carries the dropped volume (`bucket_cap`: buckets over
   the cap and their band memberships), taken from the over-cap set the
   cap's probe already materializes.
-* edges: candidates join signatures twice on sig_id (sort-merge/AQE;
-  candidate side is orders of magnitude smaller than all-pairs).
+* edges: candidates join the signatures once per side on sig_id
+  (sort-merge/AQE; the candidate side is far smaller than all-pairs);
+  the size-only jaccard bound filters the joined rows before the
+  array-intersect kernel.
 * clusters: one collect of the edge list, solved on the driver (label
   propagation joins past 5M edges; operators/cluster.py).
   The clusters lineage record carries the edge graph's vertex and

@@ -222,8 +222,9 @@ def test_candidates_lineage_records_bucket_cap_drops(spark, corpus, tmp_path):
 
 def test_increment_and_compaction_job_counts(spark, corpus, tmp_path):
     """Stored tables and increments are read with the schema in their
-    footers, so an ingest and a compaction start no inference job: at
-    most 15 and 9 jobs on the synthetic corpus."""
+    footers, and verify_pairs joins each side's signatures once, so the
+    edges stage starts at most 3 jobs, an ingest at most 14 and a
+    compaction at most 9 on the synthetic corpus."""
     cfg = PipelineConfig(
         sketch=SketchParams(ksize=21, scaled=50),
         lsh=LSHParams(num_bands=16, band_size=2),
@@ -235,7 +236,14 @@ def test_increment_and_compaction_job_counts(spark, corpus, tmp_path):
     def df_of(p):
         return spark.createDataFrame(p).withColumnRenamed("file_id", "sig_id")
 
-    run_pipeline(spark, df_of(pdf[pdf.file_id < 30]), base, cfg)
+    first = df_of(pdf[pdf.file_id < 30])
+    run_pipeline(spark, first, base, cfg, stop_after="candidates")
+    _, n_jobs = _jobs(
+        spark,
+        lambda: run_pipeline(spark, first, base, cfg, stop_after="edges"),
+    )
+    assert n_jobs <= 3
+    run_pipeline(spark, first, base, cfg)
     for part in (pdf[(pdf.file_id >= 30) & (pdf.file_id < 45)],
                  pdf[pdf.file_id >= 45]):
         batch = df_of(part)
@@ -243,7 +251,7 @@ def test_increment_and_compaction_job_counts(spark, corpus, tmp_path):
             spark,
             lambda: incremental_update(spark, batch, base, cfg)["clusters"].count(),
         )
-        assert n_jobs <= 15
+        assert n_jobs <= 14
     counts, n_jobs = _jobs(spark, lambda: compact_increments(spark, base, cfg))
     assert counts["signatures"] == len(pdf)
     assert n_jobs <= 9

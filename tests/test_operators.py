@@ -279,26 +279,35 @@ def test_verify_prefilter_lossless_all_threshold_cols(spark, sigs):
     in the output: thresholded verify == unfiltered verify + exact jaccard
     post-filter (the prune keeps any pair whose upper bound — jaccard at
     inter=min(|A|,|B|) — clears the threshold, so no true edge can be
-    lost)."""
+    lost).  Also on a signatures table that repeats an id: every
+    (row, row) match is one output row at every threshold."""
     import pyspark.sql.functions as F
 
     bands = lsh_ops.band_signatures(sigs, LSH, scaled=PARAMS.scaled)
     cands = lsh_ops.candidate_pairs(bands).localCheckpoint(eager=True)
-    ref_all = lsh_ops.verify_pairs(
-        cands, sigs, scaled=PARAMS.scaled, ksize=PARAMS.ksize, threshold=0.0
-    ).cache()
-    for t in (0.3, 0.8):
-        got = sorted(
-            map(
-                tuple,
-                lsh_ops.verify_pairs(
-                    cands, sigs, scaled=PARAMS.scaled,
-                    ksize=PARAMS.ksize, threshold=t,
-                ).collect(),
+    repeated = spark.createDataFrame(
+        [(1, [1, 2, 3, 4]), (1, [1, 2, 3, 5]), (2, [1, 2, 3, 4])],
+        "sig_id long, hashes array<long>",
+    )
+    one_pair = spark.createDataFrame(
+        [(1, 2, 1)], "sig_id_a long, sig_id_b long, n_shared_bands long"
+    )
+    for c, s in ((cands, sigs), (one_pair, repeated)):
+        ref_all = lsh_ops.verify_pairs(
+            c, s, scaled=PARAMS.scaled, ksize=PARAMS.ksize, threshold=0.0
+        ).cache()
+        for t in (0.3, 0.8):
+            got = sorted(
+                map(
+                    tuple,
+                    lsh_ops.verify_pairs(
+                        c, s, scaled=PARAMS.scaled,
+                        ksize=PARAMS.ksize, threshold=t,
+                    ).collect(),
+                )
             )
-        )
-        want = sorted(
-            map(tuple, ref_all.filter(F.col("jaccard") >= t).collect())
-        )
-        assert got == want, (t, len(got), len(want))
-    ref_all.unpersist()
+            want = sorted(
+                map(tuple, ref_all.filter(F.col("jaccard") >= t).collect())
+            )
+            assert got == want, (t, len(got), len(want))
+        ref_all.unpersist()

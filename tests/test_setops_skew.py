@@ -137,31 +137,6 @@ def test_num_mode_jaccard_kernel(spark, corpus):
     assert v == pytest.approx(4 / 5)
 
 
-def test_salted_collect_and_join(spark):
-    from sourmash_spark.operators import skew
-
-    # skewed: one key owns 90% of rows
-    rows = [("hot", i) for i in range(900)] + [
-        (f"k{i}", i) for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, "k string, v int")
-    got = {
-        r["k"]: sorted(r["vs"])
-        for r in skew.salted_collect(df, "k", "v", n_salts=8).collect()
-    }
-    assert got["hot"] == list(range(900))
-    assert got["k5"] == [5]
-
-    small = spark.createDataFrame(
-        [("hot", "H"), ("k5", "F")], "k string, tag string"
-    )
-    sj = skew.salted_join(df, small, "k", n_salts=8)
-    plain = df.join(small, "k")
-    assert sorted(map(tuple, sj.select("k", "v", "tag").collect())) == sorted(
-        map(tuple, plain.select("k", "v", "tag").collect())
-    )
-
-
 def test_lsh_tune():
     from sourmash_spark.params import LSHParams
 

@@ -117,6 +117,8 @@ def main() -> int:
             raise RuntimeError(
                 f"submit failed rc={p.returncode}\n{p.stdout[-3000:]}\n{p.stderr[-3000:]}"
             )
+        # the work dir is random per run: keep the evidence file stable
+        summary["output"] = os.path.relpath(summary["output"], work)
         return summary, cost
 
     first, cost1 = submit()
