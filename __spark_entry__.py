@@ -250,9 +250,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def mh_compare_mixed_scaled(spark, sf_dir):
         """Mixed-resolution compare: even docs sketched at scaled=16, odd
-        docs at scaled=64; the engine downsamples all to the common max
-        (64) before pairing — must equal the oracle sketched at 64
-        directly (downsample algebra, minhash.rs:777-798)."""
+        docs at scaled=64; the fine half is filtered inline to the
+        scaled=64 hash bound before `minhash_pairs60` pairs them — must
+        equal the oracle sketched at 64 directly (downsample algebra,
+        minhash.rs:777-798).  The frames carry no `scaled` column, so
+        this gate does not reach `setops.downsample_signatures`;
+        tests/test_setops_skew.py::test_compare_mixed_scaled_downsamples
+        covers that branch of `compare_all_pairs`."""
         fine = _sketch60(spark, sf_dir).filter(F.col("doc_id") % 2 == 0)
         fine = fine.select(
             "doc_id",

@@ -169,7 +169,7 @@ def main() -> None:
 
     # many-query gather (r5): 32 composite queries decomposed in parallel
     # via applyInPandas — the per-round regression track for the gather
-    # family (full 128-query sf1 distribution: tools/bench_multigather.py)
+    # family (the r5 128-query sf1 distribution: BENCH/MULTIGATHER_sf1.json)
     def q_multigather():
         from sourmash_spark.operators.gather import multigather
 

@@ -401,15 +401,9 @@ def multigather(
     threshold_bp: int = 0,
     query_id: str = "query_id",
     sig_id: str = "sig_id",
-    timing: bool = False,
 ) -> DataFrame:
     """Gather for MANY queries at once (reference `multigather`,
     commands.py:1124-1386) — the distributed form.
-
-    `timing=True` appends a `gather_wall_ms` column: wall-clock of that
-    query's greedy decomposition inside its applyInPandas group (same
-    value on every row of the query) — the per-query latency distribution
-    for capacity planning at many-query scale.
 
     Stage 1 (cluster): broadcast query postings -> one hash equi-join ->
     per-(query, subject) overlap counts filtered by threshold — candidate
@@ -484,13 +478,9 @@ def multigather(
             T.StructField("average_containment_ani", T.DoubleType()),
             T.StructField("max_containment_ani", T.DoubleType()),
         ]
-        + ([T.StructField("gather_wall_ms", T.DoubleType())] if timing else [])
     )
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        import time as _time
-
-        t0 = _time.perf_counter()
         qid = pdf[query_id].iloc[0]
         qh = np.asarray(pdf["query_hashes"].iloc[0], dtype=np.int64)
         query = i64_to_u64(qh)
@@ -509,13 +499,10 @@ def multigather(
             np.unique(query), cmap, scaled, ksize, min_hashes, md5_of,
             abund_map=abund_map,
         )
-        wall_ms = (_time.perf_counter() - t0) * 1000.0
         for r in rows:
             r[query_id] = qid
             r[sig_id] = r.pop("sig_id")
             r["name"] = name_of[int(r[sig_id])]
-            if timing:
-                r["gather_wall_ms"] = wall_ms
         return pd.DataFrame(
             rows, columns=[f.name for f in out_schema.fields]
         )

@@ -57,7 +57,6 @@ from collections.abc import Callable
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
 from pyspark.sql.types import StructType
 
 
@@ -123,31 +122,6 @@ def lineage_records(base: str) -> list[dict]:
                 for p, u in zip(t["payload"].to_pylist(), us.to_pylist())
             ]
     return sorted(recs, key=lambda r: r["ts"])
-
-
-def read_lineage(spark: SparkSession, base: str) -> DataFrame:
-    """`lineage_records` as a frame.  ``bucket_cap_dropped_keys`` /
-    ``bucket_cap_dropped_postings`` (band buckets over the cap and the
-    band memberships they held) are set on ``candidates`` records and
-    null elsewhere."""
-    df = spark.createDataFrame(
-        [(json.dumps(r),) for r in lineage_records(base)], "payload string"
-    )
-    return df.select(
-        F.get_json_object("payload", "$.stage").alias("stage"),
-        F.get_json_object("payload", "$.config_hash").alias("config_hash"),
-        F.get_json_object("payload", "$.event").alias("event"),
-        F.get_json_object("payload", "$.n_rows").cast("long").alias("n_rows"),
-        F.get_json_object("payload", "$.wall_sec").cast("double").alias("wall_sec"),
-        F.get_json_object("payload", "$.partitions").alias("partitions"),
-        F.timestamp_seconds(
-            F.get_json_object("payload", "$.ts").cast("double")
-        ).alias("ts"),
-        F.get_json_object("payload", "$.bucket_cap.dropped_keys")
-        .cast("long").alias("bucket_cap_dropped_keys"),
-        F.get_json_object("payload", "$.bucket_cap.dropped_postings")
-        .cast("long").alias("bucket_cap_dropped_postings"),
-    )
 
 
 def partition_metrics(path: str) -> list[dict]:

@@ -38,8 +38,9 @@ def _jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _records(spark, base):
-    return {r.stage: r for r in ckpt.read_lineage(spark, base).collect()}
+def _records(base):
+    """The latest lineage record of each stage, as a dict."""
+    return {r["stage"]: r for r in ckpt.lineage_records(base)}
 
 
 def test_fresh_stage_runs_only_its_write(spark, tmp_path):
@@ -59,11 +60,11 @@ def test_fresh_stage_runs_only_its_write(spark, tmp_path):
     )
     assert skipped and n_jobs == 0  # the footer holds the schema
 
-    rec = _records(spark, base)["ids"]
-    assert rec.n_rows == 1000 == again.count()
-    parts = json.loads(rec.partitions)
+    rec = _records(base)["ids"]
+    assert rec["n_rows"] == 1000 == again.count()
+    parts = rec["partitions"]
     assert len(parts) == 4  # one file per write task
-    assert sum(p["rows"] for p in parts) == rec.n_rows
+    assert sum(p["rows"] for p in parts) == rec["n_rows"]
 
 
 def test_lineage_stays_out_of_stage_dirs(spark, tmp_path):
@@ -91,13 +92,13 @@ def test_read_lineage_reads_older_parquet_rows(spark, tmp_path):
     )
     ckpt.run_stage(spark, base, "ids", "h0", lambda: spark.range(0, 5, 1, 1))
 
-    rows = _records(spark, base)
+    rows = _records(base)
     assert set(rows) == {"signatures", "ids"}
-    assert rows["signatures"].n_rows == 7
-    assert json.loads(rows["signatures"].partitions) == [{"pid": 0, "rows": 7}]
-    assert rows["ids"].n_rows == 5
-    assert rows["signatures"].ts is not None and rows["ids"].ts is not None
-    assert rows["ids"].ts >= rows["signatures"].ts
+    assert rows["signatures"]["n_rows"] == 7
+    assert json.loads(rows["signatures"]["partitions"]) == [{"pid": 0, "rows": 7}]
+    assert rows["ids"]["n_rows"] == 5
+    assert rows["signatures"]["ts"] is not None and rows["ids"]["ts"] is not None
+    assert rows["ids"]["ts"] >= rows["signatures"]["ts"]
 
 
 def test_interrupted_append_is_invisible(spark, tmp_path, monkeypatch):
@@ -117,7 +118,7 @@ def test_interrupted_append_is_invisible(spark, tmp_path, monkeypatch):
     with open(os.path.join(base, "_lineage", ".torn.json.tmp"), "w") as f:
         f.write('{"stage": "c", "ev')
 
-    assert [r.stage for r in ckpt.read_lineage(spark, base).collect()] == ["a"]
+    assert [r["stage"] for r in ckpt.lineage_records(base)] == ["a"]
 
 
 def _hot_bands(spark):
@@ -214,10 +215,11 @@ def test_candidates_lineage_records_bucket_cap_drops(spark, corpus, tmp_path):
     hot = sizes[sizes > cfg.bucket_cap]
     assert len(hot) > 0  # clone families fill buckets past the cap
 
-    recs = _records(spark, base)
-    assert recs["candidates"].bucket_cap_dropped_keys == len(hot)
-    assert recs["candidates"].bucket_cap_dropped_postings == int(hot.sum())
-    assert recs["bands"].bucket_cap_dropped_keys is None
+    recs = _records(base)
+    assert recs["candidates"]["bucket_cap"] == {
+        "dropped_keys": len(hot), "dropped_postings": int(hot.sum()),
+    }
+    assert "bucket_cap" not in recs["bands"]
 
 
 def test_increment_and_compaction_job_counts(spark, corpus, tmp_path):

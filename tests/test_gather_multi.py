@@ -227,44 +227,6 @@ def test_gather_with_unassigned_matches_separate_calls(
     assert both_un.count() > 0  # composite query leaves a remainder here
 
 
-def test_multigather_timing_column(spark, sigs, oracle_sketches):
-    """timing=True appends gather_wall_ms (per-query greedy-loop wall,
-    constant within a query) without changing any result value."""
-    import pyspark.sql.functions as F
-
-    from sourmash_spark.operators.gather import multigather
-
-    queries_df = (
-        sigs.filter(F.col("sig_id") < 8)
-        .select(
-            F.floor(F.col("sig_id") / 2).cast("long").alias("query_id"),
-            F.explode("hashes").alias("h"),
-        )
-        .groupBy("query_id")
-        .agg(F.array_sort(F.collect_set("h")).alias("hashes"))
-    )
-    plain = multigather(
-        queries_df, sigs, scaled=PARAMS.scaled, ksize=PARAMS.ksize,
-        threshold_bp=3 * PARAMS.scaled,
-    ).collect()
-    timed = multigather(
-        queries_df, sigs, scaled=PARAMS.scaled, ksize=PARAMS.ksize,
-        threshold_bp=3 * PARAMS.scaled, timing=True,
-    ).collect()
-    assert "gather_wall_ms" not in plain[0].asDict()
-    assert len(timed) == len(plain)
-    per_q = {}
-    for r in timed:
-        assert r["gather_wall_ms"] > 0.0
-        per_q.setdefault(r["query_id"], set()).add(r["gather_wall_ms"])
-    assert all(len(v) == 1 for v in per_q.values())  # constant per query
-    key = lambda r: (r["query_id"], r["gather_result_rank"])  # noqa: E731
-    for a, b in zip(sorted(plain, key=key), sorted(timed, key=key)):
-        da, db = a.asDict(), b.asDict()
-        db.pop("gather_wall_ms")
-        assert da == db
-
-
 def test_gather_driver_state_bound(spark, sigs, oracle_sketches, monkeypatch):
     """VERDICT r3 #5: the candidate fetch is one materialized pass, and the
     driver-memory bound (candidates x sketch hashes x 8 bytes) is enforced

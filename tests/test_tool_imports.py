@@ -23,7 +23,7 @@ import pytest
 ROOT = Path(__file__).resolve().parents[1]
 SCRIPTS = sorted(
     [*ROOT.glob("tools/*.py"), *ROOT.glob("jobs/*.py")]
-    + [ROOT / n for n in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
+    + [ROOT / n for n in ("bench.py", "__spark_entry__.py")]
 )
 
 
