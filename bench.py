@@ -1,5 +1,6 @@
 """Bench harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1)
-on local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
+on local[$SPARK_GRAFT_CPUS] (unset: `get_spark`'s default, the usable
+cores).  Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...},
  "sf": ..., "sigs_per_sec": ...}
 """
@@ -39,7 +40,7 @@ def host_calibration() -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
     cal_before = host_calibration()
 
     import pyspark.sql.functions as F
@@ -57,9 +58,10 @@ def main() -> None:
     )
 
     spark = get_spark(
-        "sourmash_spark_bench", master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
+        "sourmash_spark_bench", master=cpus and f"local[{cpus}]",
+        shuffle_partitions=cpus and int(cpus),
     )
+    cpus = int(cpus) if cpus else spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
 
     P = entrymod.MURMUR_PARAMS

@@ -147,8 +147,8 @@ def main(argv: list[str] | None = None) -> int:
         # and the rewrite join both derive from docs3
         docs3 = docs3.localCheckpoint(eager=True)
         # checkpoint `cut` too (ADVICE r5): it feeds BOTH the lineage
-        # union and the text rewrite join — without this the whole
-        # stride-1 gram-marking plan executes twice at write time
+        # union and the text rewrite join — without this the
+        # mark-and-cut kernel pass executes twice at write time
         cut = dedup_ops.exact_substring_removal(
             docs3, min_len=args.substring_min_len, id_col=idc,
             text_col=txt, keep="first",

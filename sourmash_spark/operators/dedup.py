@@ -666,153 +666,418 @@ def repeated_segment_removal(
     )
 
 
-def _exact_substring_span_arrays(
-    docs: DataFrame,
-    min_len: int,
-    id_col: str,
-    text_col: str,
-    hash_grams: bool,
-    keep: str = "all",
+_WINDOW_CHUNK = 1 << 16  # gram windows a kernel hashes and looks up at a time
+
+
+def _ipc(table) -> bytes:
+    import pyarrow as pa
+
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as w:
+        w.write_table(table)
+    return sink.getvalue().to_pybytes()
+
+
+def _unipc(buf):
+    import pyarrow as pa
+
+    return pa.ipc.open_stream(buf).read_all()
+
+
+def _distinct_keys(t):
+    """One row per distinct `_k` of the Arrow table `t` (columns `_k`,
+    `_c` and any of `_b`, `_id`, `_pos`): `_c` summed and clipped at 2,
+    and the smallest (`_id`, `_pos`), NULL ids first as Spark orders
+    them."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not t.num_rows:
+        return t
+    k = t.column("_k").combine_chunks()
+    ints = pa.types.is_integer(k.type)
+    if ints and "_id" not in t.column_names:
+        order = np.argsort(k.to_numpy())  # 3x Arrow's multi-key sort
+    else:
+        order = pc.sort_indices(
+            t,
+            sort_keys=[
+                (c, "ascending") for c in ("_k", "_id", "_pos")
+                if c in t.column_names
+            ],
+            null_placement="at_start",
+        )
+    t = t.take(order)
+    k = t.column("_k").combine_chunks()
+    new = np.ones(len(k), bool)
+    if ints:
+        kn = k.to_numpy()
+        new[1:] = kn[1:] != kn[:-1]
+    else:
+        new[1:] = pc.not_equal(k[1:], k[:-1]).to_numpy(zero_copy_only=False)
+    starts = np.flatnonzero(new)
+    c = np.add.reduceat(t.column("_c").to_numpy().astype(np.int64), starts)
+    t = t.take(pa.array(starts))
+    return t.set_column(
+        t.column_names.index("_c"), "_c",
+        pa.array(np.minimum(c, 2).astype(np.int8)),
+    )
+
+
+def _partition_keys(P: int):
+    """int32 `_b` values, one per partition p < P, that Spark's hash
+    partitioning (pmod of Murmur3 hashInt, seed 42) sends to partition p,
+    so `repartition(P, "_b")` puts bucket p alone in partition p; P
+    buckets hashed as themselves would share partitions unevenly."""
+    import numpy as np
+
+    n = 8 * P
+    while True:
+        v = np.arange(n, dtype=np.uint32)
+        with np.errstate(over="ignore"):
+            k = v * np.uint32(0xCC9E2D51)
+            k = ((k << np.uint32(15)) | (k >> np.uint32(17))) * np.uint32(
+                0x1B873593
+            )
+            h = np.uint32(42) ^ k
+            h = ((h << np.uint32(13)) | (h >> np.uint32(19))) * np.uint32(
+                5
+            ) + np.uint32(0xE6546B64)
+            h ^= np.uint32(4)
+            h ^= h >> np.uint32(16)
+            h *= np.uint32(0x85EBCA6B)
+            h ^= h >> np.uint32(13)
+            h *= np.uint32(0xC2B2AE35)
+            h ^= h >> np.uint32(16)
+        part = np.mod(h.view(np.int32).astype(np.int64), P)
+        found, first = np.unique(part, return_index=True)
+        if len(found) == P:
+            return v[first].astype(np.int32)
+        n *= 2
+
+
+def _gram_counts(
+    docs: DataFrame, L: int, text_col: str, hash_grams: bool,
+    id_col: str | None = None,
 ) -> DataFrame:
-    """(id_col, spans) — per-doc maximal duplicated spans as a sorted array
-    of struct<span_start:long, span_end:long> (1-based char positions,
-    inclusive).  Shared core of `exact_substring_spans` / `_removal`.
+    """(_b int, _p binary): one row per (Arrow batch, bucket), where the
+    bucket is the window's xxhash64 mod `spark.sql.shuffle.partitions`
+    (P; `_b` is its `_partition_keys` value) and `_p` is an Arrow IPC
+    table of the bucket's distinct gram keys `_k` (the xxhash64, or the
+    gram's bytes) with their counts `_c` clipped at 2 and, given
+    `id_col`, each key's first (`_id`, `_pos`).  A gram repeated
+    throughout the corpus is one entry per batch."""
+    P = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    part_key = _partition_keys(P)
+    chunk = _WINDOW_CHUNK
 
-    A character is covered iff it lies inside SOME substring of length
-    >= min_len that occurs at >= 2 positions in the corpus (intra-doc
-    repeats count, as in Lee et al. 2022's ExactSubstr definition): every
-    length-L window of such a substring is itself duplicated, and
-    conversely every duplicated L-window IS such a substring — so the
-    union of duplicated L-windows equals exactly the duplicated-substring
-    character set, and merging overlapping/adjacent marked windows yields
-    the maximal spans a suffix array would find.
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
 
-    Plan: one stride-1 posexplode (O(total chars) rows — same order as the
-    input, the price of EXACT substring semantics; the approximate path is
-    `substring_dup_pairs`' winnowing), one map-side-combined count per
-    gram key for the duplicated set, a key equi-join back (AQE broadcasts
-    the dup set when small), then ONE shuffle of only the MARKED positions
-    on doc_id with a pure-column fold doing the island merge.  With
-    `hash_grams=True` (scale default) the two gram exchanges carry 8-byte
-    xxhash64 keys, not L-byte strings; a false mark needs a 64-bit
-    collision (same declared trade as repeated_segment_removal).
-    """
-    L = min_len
-    grams = _doc_grams(docs, L, id_col, text_col, hash_grams)
+        for rb in batches:
+            lay = docops.utf8_rows(rb.column(0))
+            parts = []
+            for row, j, start, nb in docops.gram_windows(lay, L, chunk):
+                h = docops.gram_hashes(lay[0], start, nb)
+                cols = {
+                    "_b": pa.array((h.view(np.uint64) % P).astype(np.int32)),
+                    "_k": pa.array(h) if hash_grams
+                    else docops.gram_bytes(lay[0], start, nb),
+                    "_c": pa.array(np.ones(len(h), np.int8)),
+                }
+                if id_col is not None:
+                    cols["_id"] = rb.column(1).take(pa.array(row))
+                    cols["_pos"] = pa.array(j - lay[3][row] + 1)
+                parts.append(_distinct_keys(pa.table(cols)))
+            if not parts:
+                continue
+            t = _distinct_keys(pa.concat_tables(parts))
+            t = t.take(np.argsort(t.column("_b").to_numpy(), kind="stable"))
+            b = t.column("_b").to_numpy()
+            cut = np.flatnonzero(np.diff(b)) + 1
+            lo = np.concatenate(([0], cut))
+            hi = np.concatenate((cut, [len(b)]))
+            body = t.drop_columns(["_b"])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(part_key[b[lo]]),
+                    pa.array(
+                        [_ipc(body.slice(x, y - x)) for x, y in zip(lo, hi)],
+                        pa.binary(),
+                    ),
+                ],
+                names=["_b", "_p"],
+            )
+
+    cols = [text_col] + ([id_col] if id_col is not None else [])
+    return docs.select(*cols).mapInArrow(kernel, "_b int, _p binary")
+
+
+def _merged_keys(
+    counts: DataFrame, min_count: int, key_type: str | None = None
+) -> DataFrame:
+    """The keys of `_gram_counts` rows counted at least `min_count` (1 or
+    2) times corpus-wide: one shuffle of the bucket rows on `_b`, then
+    one merge per partition.  With `key_type` ("long", or "string" for
+    gram bytes) one `_k` row per key; otherwise one row per partition,
+    (_n keys, _bytes, _p): `_p` is the IPC table of its keys (and first
+    occurrences), NULL when `_bytes` alone is over the broadcast bound."""
+    import pyarrow as pa
+
+    spark = counts.sparkSession
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    limit = _broadcast_limit(spark)
+
+    def kernel(batches):
+        import pyarrow.compute as pc
+
+        parts = [
+            _unipc(p.as_buffer()) for rb in batches for p in rb.column("_p")
+        ]
+        if not parts:
+            return
+        t = _distinct_keys(pa.concat_tables(parts))
+        t = t.filter(pc.greater_equal(t.column("_c"), min_count))
+        t = t.drop_columns(["_c"])
+        if key_type is not None:
+            k = t.column("_k").combine_chunks()
+            yield pa.RecordBatch.from_arrays(
+                [k if key_type == "long" else k.cast(pa.string())],
+                names=["_k"],
+            )
+            return
+        p = _ipc(t)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([t.num_rows], pa.int64()),
+                pa.array([len(p)], pa.int64()),
+                pa.array([p if len(p) <= limit else None], pa.binary()),
+            ],
+            names=["_n", "_bytes", "_p"],
+        )
+
+    schema = (
+        f"_k {key_type}" if key_type else "_n long, _bytes long, _p binary"
+    )
+    return counts.repartition(P, "_b").mapInArrow(kernel, schema)
+
+
+def _broadcast_limit(spark) -> int:
+    """The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, 0
+    when it is negative (broadcasts off)."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return max(int(conf.autoBroadcastJoinThreshold()), 0)
+
+
+def _broadcast_keys(spark, table, n: int, nbytes: int, what: str):
+    """Broadcast the key set `table` (`_k` and, for keep-first, `_id`,
+    `_pos`) sorted by key, or None when it is empty.  A set of more than
+    `spark.sql.autoBroadcastJoinThreshold` bytes raises instead."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    limit = _broadcast_limit(spark)
+    if nbytes > limit:
+        raise ValueError(
+            f"exact-substring dedup: the {what} gram-key set ({n:,} keys, "
+            f"{nbytes:,} bytes) exceeds spark.sql.autoBroadcastJoinThreshold "
+            f"({limit:,} bytes); run exact_substring_update once per "
+            "ingest increment instead of one pass over the whole corpus"
+        )
+    if table is None or not table.num_rows:
+        return None
+    k = table.column("_k")
+    if not pa.types.is_integer(k.type):
+        table = table.set_column(0, "_k", k.cast(pa.large_binary()))
+    table = table.take(pc.sort_indices(table, sort_keys=[("_k", "ascending")]))
+    return spark.sparkContext.broadcast(_ipc(table))
+
+
+def _collect_keys(merged: DataFrame, what: str):
+    """Collect the `_merged_keys` payload rows and broadcast their key
+    set (`_broadcast_keys`)."""
+    import pyarrow as pa
+
+    rows = [r for r in merged.collect() if r["_n"]]
+    n = sum(r["_n"] for r in rows)
+    nbytes = sum(r["_bytes"] for r in rows)
+    parts = [_unipc(bytes(r["_p"])) for r in rows if r["_p"] is not None]
+    table = pa.concat_tables(parts) if parts else None
+    return _broadcast_keys(merged.sparkSession, table, n, nbytes, what)
+
+
+def _covered(j, L: int, row_cp):
+    """Characters covered by the marked windows that start at code points
+    `j` (distinct, each `L` long and inside one row; ``row_cp`` holds each
+    row's first code point and the total), and their maximal runs cut at
+    row starts: (cov, row, span_start, span_end), 1-based inclusive
+    positions in the row."""
+    import numpy as np
+
+    ncp = int(row_cp[-1])
+    diff = np.zeros(ncp + 1, np.int32)
+    diff[j] += 1
+    diff[j + L] -= 1
+    cov = np.cumsum(diff[:-1]) > 0
+    edge = np.zeros(ncp + 1, bool)
+    edge[row_cp] = True
+    c = np.concatenate(([False], cov, [False]))
+    s = np.flatnonzero(cov & (~c[:-2] | edge[:-1]))
+    e = np.flatnonzero(cov & (~c[2:] | edge[1:]))
+    row = np.searchsorted(row_cp, s, side="right") - 1
+    return cov, row, s - row_cp[row] + 1, e - row_cp[row] + 1
+
+
+def _lookup(keys_set, keys):
+    """Index of each of `keys` in the sorted key set (a numpy int64 array
+    or an Arrow binary array), -1 where absent."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if isinstance(keys_set, np.ndarray):
+        i = np.minimum(np.searchsorted(keys_set, keys), len(keys_set) - 1)
+        return np.where(keys_set[i] == keys, i, -1)
+    return pc.index_in(keys, value_set=keys_set).fill_null(-1).to_numpy()
+
+
+def _is_first(ids, row, pos, firsts, i):
+    """Whether each window (its row's id, its `pos`) is its key's first
+    occurrence `firsts[i]` (`_id`, `_pos`); NULL ids equal each other."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    a = ids.take(pa.array(row))
+    b = firsts.column("_id").take(pa.array(i))
+    same = pc.or_(
+        pc.fill_null(pc.equal(a, b), False),
+        pc.and_(a.is_null(), b.is_null()),
+    )
+    return same.to_numpy(zero_copy_only=False) & (
+        pos == firsts.column("_pos").take(pa.array(i)).to_numpy()
+    )
+
+
+def _cut_text(text, layout, cov):
+    """`text` (an Arrow string array with `docops.utf8_rows` layout)
+    without its covered code points `cov`, as a rebuilt Arrow array."""
+    import numpy as np
+    import pyarrow as pa
+
+    data, off, cp, _, valid = layout
+    keep = np.ones(len(data), bool)
+    keep[cp[0]:] = np.repeat(~cov, np.diff(cp))
+    kept = np.concatenate(([0], np.cumsum(keep)))
+    wide = pa.types.is_large_string(text.type)
+    return pa.Array.from_buffers(
+        text.type, len(text),
+        [
+            pa.py_buffer(np.packbits(valid, bitorder="little"))
+            if text.null_count else None,
+            pa.py_buffer(kept[off].astype(np.int64 if wide else np.int32)),
+            pa.py_buffer(data[keep]),
+        ],
+        null_count=text.null_count,
+    )
+
+
+def _mark_and_cut(
+    docs: DataFrame, L: int, id_col: str, text_col: str, hash_grams: bool,
+    key_sets: list, spans: bool,
+) -> DataFrame:
+    """The exact-substring family's one per-character pass: a mapInArrow
+    kernel marks every L-window of a row whose key is in one of the
+    broadcast `key_sets` (pairs of a `_broadcast_keys` result and
+    keep_first: a keep-first set leaves the key's first (`_id`, `_pos`)
+    unmarked), covers the characters of the marked windows and cuts their
+    maximal runs at row ends.  Each row is marked and cut on its own
+    text.  Emits (id, span_start, span_end) per span when `spans`, else
+    (id, n_spans, n_removed, text_deduped) per row; a NULL text gives a
+    NULL text and zero counts."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    chunk = _WINDOW_CHUNK
+    sets = [(bc, first) for bc, first in key_sets if bc is not None]
+    names = (
+        ["span_start", "span_end"] if spans
+        else ["n_spans", "n_removed", "text_deduped"]
+    )
+    schema = StructType([docs.schema[id_col]] + [
+        StructField(n, StringType() if n == "text_deduped" else LongType())
+        for n in names
+    ])
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        looks = []
+        for bc, first in sets:
+            t = _unipc(bc.value)
+            k = t.column("_k").combine_chunks()
+            looks.append((k.to_numpy() if hash_grams else k, t, first))
+        for rb in batches:
+            ids, text = rb.column(0), rb.column(1)
+            lay = docops.utf8_rows(text)
+            data, _, _, row_cp, _ = lay
+            marked = [np.zeros(0, np.int64)]
+            for row, j, start, nb in (
+                docops.gram_windows(lay, L, chunk) if looks else ()
+            ):
+                keys = (
+                    docops.gram_hashes(data, start, nb) if hash_grams
+                    else docops.gram_bytes(data, start, nb)
+                )
+                hit = np.zeros(len(j), bool)
+                for k, t, first in looks:
+                    i = _lookup(k, keys)
+                    m = i >= 0
+                    if first:
+                        at = np.flatnonzero(m)
+                        pos = j[at] - row_cp[row[at]] + 1
+                        m[at[_is_first(ids, row[at], pos, t, i[at])]] = False
+                    hit |= m
+                marked.append(j[hit])
+            cov, row, s, e = _covered(np.concatenate(marked), L, row_cp)
+            if spans:
+                if len(row):
+                    yield pa.RecordBatch.from_arrays(
+                        [ids.take(pa.array(row)), pa.array(s), pa.array(e)],
+                        names=[id_col] + names,
+                    )
+                continue
+            removed = np.concatenate(([0], np.cumsum(cov)))[row_cp]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids,
+                    pa.array(np.bincount(row, minlength=len(text)), pa.int64()),
+                    pa.array(np.diff(removed), pa.int64()),
+                    _cut_text(text, lay, cov) if len(row) else text,
+                ],
+                names=[id_col] + names,
+            )
+
+    return docs.select(id_col, text_col).mapInArrow(kernel, schema)
+
+
+def _exact_substring(
+    docs: DataFrame, min_len: int, id_col: str, text_col: str,
+    hash_grams: bool, keep: str, spans: bool,
+) -> DataFrame:
+    """`exact_substring_spans` (`spans=True`) / `_removal`: collect and
+    broadcast the corpus' duplicated gram keys, then mark and cut."""
     if keep not in ("all", "first"):
         raise ValueError(f"keep must be 'all' or 'first', got {keep!r}")
-    # Occurrence marking as WINDOW functions over the gram key instead of
-    # a count-aggregate + join back: the join's probe side re-ran the
-    # whole stride-1 explode + hash (the operator's dominant cost) a
-    # second time, because the grams plan fed both the aggregate and the
-    # probe.  One window shuffle marks positions in a single gram pass —
-    # measured ~30% faster at sf0.1 and removes an O(total chars) explode
-    # at every scale.  Trade (documented): a pathologically hot gram key
-    # (mega boilerplate) lands its occurrences in ONE window task — a
-    # linear, disk-spillable straggler, acceptable for an operator whose
-    # scale story is per-ingest-increment runs (see exact_substring_spans
-    # docstring), and the keys are 64-bit hashes so the window partitioning
-    # itself is uniform apart from true duplicate mass.
-    if keep == "first":
-        marked = _keep_first_marked(grams, id_col)
-    else:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("_k")
-        marked = (
-            grams.select(
-                F.col(id_col), "pos", F.count("*").over(w).alias("_occ")
-            )
-            .filter(F.col("_occ") >= 2)
-            .select(id_col, "pos")
-        )
-    return _merge_marked_to_spans(marked, L, id_col)
-
-
-def _keep_first_marked(grams: DataFrame, id_col: str) -> DataFrame:
-    """(id_col, pos) of every gram occurrence but the globally-first one
-    (min (doc_id, pos), the corpus scan order) of each duplicated key, so
-    the first copy of a duplicated region survives — the keep-first
-    marking of `exact_substring_removal` and `exact_substring_update`,
-    one window shuffle on the gram key (see _exact_substring_span_arrays
-    for why a window and not an aggregate + join back)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_k")
-    here = F.struct(F.col(id_col), F.col("pos"))
-    return (
-        grams.select(
-            F.col(id_col),
-            "pos",
-            F.count("*").over(w).alias("_occ"),
-            F.min(here).over(w).alias("_first"),
-        )
-        .filter((F.col("_occ") >= 2) & (here != F.col("_first")))
-        .select(id_col, "pos")
+    if min_len < 1:
+        raise ValueError(f"min_len must be >= 1, got {min_len}")
+    first = keep == "first"
+    counts = _gram_counts(
+        docs, min_len, text_col, hash_grams, id_col if first else None
     )
-
-
-def _doc_grams(
-    docs: DataFrame, L: int, id_col: str, text_col: str, hash_grams: bool
-) -> DataFrame:
-    """(id_col, pos, _k): every stride-1 L-gram with its 1-based position
-    and join key (xxhash64 on the scale path, raw string as the exactness
-    baseline) — the shared feed of the exact-substring family."""
-    return docs.select(
-        F.col(id_col),
-        F.posexplode(docops.char_shingles(F.col(text_col), L)).alias(
-            "pos0", "g"
-        ),
-    ).select(
-        id_col,
-        (F.col("pos0") + 1).cast("long").alias("pos"),
-        (F.xxhash64("g") if hash_grams else F.col("g")).alias("_k"),
-    )
-
-
-def _merge_marked_to_spans(
-    marked: DataFrame, L: int, id_col: str
-) -> DataFrame:
-    """(id_col, spans): merge marked window positions [p, p+L-1] into
-    maximal disjoint spans.
-
-    Gaps-and-islands via window functions (ADVICE r5 / VERDICT r5 #3):
-    positions sorted per doc, a new island starts when the position gap
-    exceeds L (window [p, p+L-1] then neither overlaps nor touches the
-    previous span), islands reduce to (min, max+L-1).  Marked positions
-    therefore NEVER concentrate into one per-doc array — the old
-    collect_list + concat/slice fold built an O(marked)-element buffer
-    per doc and did O(marked x spans) array copies, a memory cliff for a
-    mostly-duplicated giant document.  Only the final (small) span
-    structs are collected per doc.  Exchanges: ONE shuffle on id_col —
-    the window's partitioning also satisfies both downstream groupBys
-    (hash(id) clusters (id, island)), so no further exchange.  Duplicate
-    (id, pos) rows are benign (same island, same min/max) — the
-    incremental path relies on that."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev = F.lag("pos").over(w)
-    new_island = F.when(
-        prev.isNull() | (F.col("pos") > prev + L), F.lit(1)
-    ).otherwise(F.lit(0))
-    islands = marked.select(
-        F.col(id_col),
-        F.col("pos"),
-        F.sum(new_island)
-        .over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        .alias("_island"),
-    )
-    spans = islands.groupBy(id_col, "_island").agg(
-        F.min("pos").cast("long").alias("span_start"),
-        (F.max("pos") + (L - 1)).cast("long").alias("span_end"),
-    )
-    return spans.groupBy(id_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct("span_start", "span_end"))
-        ).alias("spans")
+    dup = _collect_keys(_merged_keys(counts, 2), "duplicated")
+    return _mark_and_cut(
+        docs, min_len, id_col, text_col, hash_grams, [(dup, first)], spans
     )
 
 
@@ -826,33 +1091,47 @@ def exact_substring_spans(
 ) -> DataFrame:
     """EXACT duplicated-substring spans — the suffix-array substring-dedup
     semantic (Lee et al. 2022, "Deduplicating Training Data Makes Language
-    Models Better") as a distributed DataFrame plan: every maximal span of
+    Models Better") as a distributed plan: every maximal span of
     characters covered by a substring of length >= `min_len` that occurs
     at >= 2 positions anywhere in the corpus (all copies reported,
     intra-document repeats included).
 
-    Identical output set to a suffix-array scan at the same min_len: the
-    L-window df>=2 marking is a lossless reformulation (see
-    `_exact_substring_span_arrays`), not an approximation — unlike
-    `substring_dup_pairs`, which trades winnowing sparsity for recall-1
-    DETECTION only.  Cost is O(total corpus chars) exploded rows; at
-    100 TB run it per-partition-pruned ingest increment, not the full
-    corpus, or use the winnowing path for candidate discovery first.
+    Identical output set to a suffix-array scan at the same min_len:
+    every length-L window of a duplicated substring is itself duplicated,
+    and every duplicated L-window IS such a substring, so the union of
+    duplicated L-windows (df >= 2 corpus-wide) is exactly the
+    duplicated-substring character set — a lossless reformulation, not an
+    approximation like `substring_dup_pairs`' winnowing.  Each row is
+    marked and cut on its own text (rows sharing an id, or with a NULL
+    id, are not merged); the grams count corpus-wide.
+
+    Plan (numpy mapInArrow kernels over Arrow buffers; no per-gram JVM
+    row): `_gram_counts` hashes every L-code-point window (xxhash64 seed
+    42, bit-equal to Spark's `xxhash64(substring(text, pos, L))`) and
+    emits one row per (Arrow batch, bucket) with the bucket's distinct
+    keys and clipped counts; one shuffle of those rows and a per-key merge
+    give the duplicated keys, which the driver collects and broadcasts —
+    a hot gram is one entry per batch, so no task is sized by one key.
+    `_mark_and_cut` then marks, covers and cuts each batch.  One bound:
+    the duplicated key set must fit `spark.sql.autoBroadcastJoinThreshold`
+    (8 bytes per key hashed), or a ValueError names its size — run
+    `exact_substring_update` per ingest increment past that.  With
+    `hash_grams=True` (the default) a false mark needs a 64-bit
+    collision; `hash_grams=False` keys on the gram bytes (exact, the
+    DuckDB gates' path).
 
     `keep="all"` (default) marks every copy of a duplicated region;
-    `keep="first"` leaves the globally-first occurrence (min (doc_id,
-    pos)) unmarked so one copy survives removal — ExactSubstr's keep-one
-    policy.
+    `keep="first"` leaves the globally-first occurrence (the smallest
+    (id, pos), NULL ids first, as Spark orders them) unmarked so one copy
+    survives removal — ExactSubstr's keep-one policy.  Rows sharing an id
+    share that exemption.
 
     Output: (id_col, span_start, span_end) — 1-based inclusive char
     positions, one row per maximal span.
     """
-    arrays = _exact_substring_span_arrays(
-        docs, min_len, id_col, text_col, hash_grams, keep
+    return _exact_substring(
+        docs, min_len, id_col, text_col, hash_grams, keep, spans=True
     )
-    return arrays.select(
-        id_col, F.explode("spans").alias("s")
-    ).select(id_col, "s.span_start", "s.span_end")
 
 
 def exact_substring_removal(
@@ -864,95 +1143,23 @@ def exact_substring_removal(
     keep: str = "all",
 ) -> DataFrame:
     """Cut every duplicated span found by `exact_substring_spans` out of
-    the text (all copies removed by default; `keep="first"` preserves the
-    globally-first copy of each duplicated gram) and reassemble the
-    remainder in order.  Docs with no duplicated spans pass through
-    unchanged.
+    its row's text (all copies removed by default; `keep="first"`
+    preserves the globally-first copy of each duplicated gram) and
+    reassemble the remainder in order, in the same kernel pass that marks
+    the row (the kernel rebuilds the Arrow string buffer).  Rows with no
+    duplicated span pass through unchanged; a NULL text stays NULL.
 
-    Reassembly is a pure-column fold over the per-doc sorted span array
-    (substring concatenation of the inter-span gaps) — no second shuffle
-    beyond the span aggregation itself, and the full `docs` side never
-    moves: spans join back to the narrow (id, text) projection.
-
-    Output: (id_col, n_spans, n_removed, text_deduped)."""
-    arrays = _exact_substring_span_arrays(
-        docs, min_len, id_col, text_col, hash_grams, keep
-    )
-    return _cut_spans(docs, arrays, id_col, text_col)
-
-
-def _cut_spans(
-    docs: DataFrame, arrays: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Splice each doc's text around its sorted disjoint `spans` array —
-    a pure-column fold over the inter-span gaps; docs absent from
-    `arrays` pass through unchanged.  Output: (id_col, n_spans,
-    n_removed, text_deduped)."""
-    text = F.col(text_col)
-    spans = F.coalesce(
-        F.col("spans"),
-        F.array().cast("array<struct<span_start:long,span_end:long>>"),
-    )
-    acc0 = F.struct(
-        F.lit(1).cast("long").alias("pos"), F.lit("").alias("out")
-    )
-    kept = F.aggregate(
-        spans,
-        acc0,
-        lambda acc, s: F.struct(
-            (s["span_end"] + 1).alias("pos"),
-            F.concat(
-                acc["out"],
-                F.substring(text, acc["pos"], s["span_start"] - acc["pos"]),
-            ).alias("out"),
-        ),
-        lambda acc: F.concat(
-            acc["out"],
-            F.substring(text, acc["pos"], F.length(text) - acc["pos"] + 1),
-        ),
-    )
-    return (
-        docs.select(id_col, text_col)
-        .join(arrays, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.size(spans).cast("long").alias("n_spans"),
-            F.aggregate(
-                spans,
-                F.lit(0).cast("long"),
-                lambda acc, s: acc + s["span_end"] - s["span_start"] + 1,
-            ).alias("n_removed"),
-            kept.alias("text_deduped"),
-        )
+    Output: (id_col, n_spans, n_removed, text_deduped), one row per input
+    row."""
+    return _exact_substring(
+        docs, min_len, id_col, text_col, hash_grams, keep, spans=False
     )
 
 
-def _contaminated_spans(
-    docs: DataFrame,
-    bench: DataFrame,
-    min_len: int,
-    id_col: str,
-    text_col: str,
-    bench_text_col: str,
-    hash_grams: bool,
-) -> DataFrame:
-    """(id_col, spans): the merged islands of corpus positions whose
-    L-gram appears in the benchmark's DISTINCT gram keys — the marking
-    shared by `decontaminate_spans` and `decontaminate_removal`."""
-    grams = _doc_grams(docs, min_len, id_col, text_col, hash_grams)
-    bench_keys = (
-        _doc_grams(
-            bench.select(F.lit(0).alias("_bid"), F.col(bench_text_col)),
-            min_len,
-            "_bid",
-            bench_text_col,
-            hash_grams,
-        )
-        .select("_k")
-        .distinct()
-    )
-    marked = grams.join(bench_keys, "_k", "left_semi").select(id_col, "pos")
-    return _merge_marked_to_spans(marked, min_len, id_col)
+def _bench_keys(bench: DataFrame, L: int, text_col: str, hash_grams: bool):
+    """The benchmark's distinct gram keys, collected and broadcast."""
+    counts = _gram_counts(bench, L, text_col, hash_grams)
+    return _collect_keys(_merged_keys(counts, 1), "benchmark")
 
 
 def decontaminate_spans(
@@ -968,23 +1175,19 @@ def decontaminate_spans(
     a corpus document covered by a length->= `min_len` substring that
     appears VERBATIM anywhere in the benchmark table.  The span-level
     complement of `text.decontaminate` (which drops whole documents on
-    word-n-gram overlap): same window-marking machinery as
-    `exact_substring_spans`, but a position is marked by membership of its
-    L-gram in the benchmark gram set instead of by corpus df>=2.
+    word-n-gram overlap): the same kernels as `exact_substring_spans`,
+    but a window is marked by membership of its L-gram in the benchmark's
+    distinct gram keys instead of by corpus df>=2.
 
-    Plan: corpus grams are the same stride-1 posexplode; the benchmark
-    side reduces to DISTINCT gram keys (tiny vs the corpus — benchmarks
-    are fixed-size), so the marking join is a semi-join Spark/AQE
-    broadcasts; islands merge in one marked-rows-only shuffle.  Scale is
-    O(corpus chars) map work + a broadcast probe — no corpus-keyed
-    exchange at all, cheaper than the dedup variant.
+    Plan: the benchmark's distinct keys (benchmarks are small and
+    fixed-size) are collected and broadcast under the same bound as the
+    duplicated set; the corpus side is one narrow mark-and-cut pass with
+    no exchange at all.
 
     Output: (id_col, span_start, span_end), 1-based inclusive."""
-    arrays = _contaminated_spans(
-        docs, bench, min_len, id_col, text_col, bench_text_col, hash_grams
-    )
-    return arrays.select(id_col, F.explode("spans").alias("s")).select(
-        id_col, "s.span_start", "s.span_end"
+    keys = _bench_keys(bench, min_len, bench_text_col, hash_grams)
+    return _mark_and_cut(
+        docs, min_len, id_col, text_col, hash_grams, [(keys, False)], True
     )
 
 
@@ -1002,10 +1205,10 @@ def decontaminate_removal(
     keep-the-document decontamination policy for corpora too valuable to
     drop whole rows from.  Output: (id_col, n_spans, n_removed,
     text_deduped)."""
-    arrays = _contaminated_spans(
-        docs, bench, min_len, id_col, text_col, bench_text_col, hash_grams
+    keys = _bench_keys(bench, min_len, bench_text_col, hash_grams)
+    return _mark_and_cut(
+        docs, min_len, id_col, text_col, hash_grams, [(keys, False)], False
     )
-    return _cut_spans(docs, arrays, id_col, text_col)
 
 
 def exact_substring_update(
@@ -1038,14 +1241,24 @@ def exact_substring_update(
     "first" means ingest order — the semantics a daily-ingest deployment
     actually wants.
 
+    Plan: the batch's `_gram_counts` rows (checkpointed, read twice) give
+    the intra-batch duplicated keys with their first occurrences
+    (collected and broadcast, as in `exact_substring_removal`) and the
+    batch's distinct keys as `_k` rows — the operator's only per-gram JVM
+    rows.  A semi-join of those rows with the store finds the keys seen
+    before (collected and broadcast: every occurrence is marked); one
+    mark-and-cut pass cuts the batch.  Both collected sets have the
+    `spark.sql.autoBroadcastJoinThreshold` bound of `exact_substring_spans`.
+
     The store is an increments dir of `sources/checkpoint.py`, the layout
     `pipeline.incremental_update` uses: one committed increment per call,
     each holding distinct `_k` keys (the 8-byte xxhash64 gram keys on the
-    scale path); each call appends ONLY
-    keys not already stored, so the store stays globally distinct and a
-    call's write volume is batch-proportional.  On a real deployment the
-    store is an Iceberg table and the append is a MERGE; reading is one
-    columnar scan of a single 8-byte column.
+    scale path, the gram strings with `hash_grams=False`); each call
+    appends ONLY keys not already stored (an anti-join), so the store
+    stays globally distinct and a call's write volume is
+    batch-proportional.  On a real deployment the store is an Iceberg
+    table and the append is a MERGE; reading is one columnar scan of a
+    single column.
 
     COMMIT ORDER (ADVICE r5): the removal output is materialized — via
     `out_writer(out)` when given (e.g. the streaming sink's
@@ -1062,27 +1275,29 @@ def exact_substring_update(
     from ..sources import checkpoint as ckpt
 
     L = min_len
+    if L < 1:
+        raise ValueError(f"min_len must be >= 1, got {L}")
     spark = docs_batch.sparkSession
-    grams = _doc_grams(docs_batch, L, id_col, text_col, hash_grams)
+    counts = _gram_counts(
+        docs_batch, L, text_col, hash_grams, id_col
+    ).localCheckpoint(eager=False)
+    keys = _merged_keys(counts, 1, "long" if hash_grams else "string")
 
     incs = [
         n for n in ckpt.committed_increments(store_dir) if n != increment_name
     ]
     stored = ckpt.read_increments(spark, store_dir, incs)
 
-    marked = _keep_first_marked(grams, id_col)  # intra-batch
+    sets = [(_collect_keys(_merged_keys(counts, 2), "duplicated"), True)]
     if stored is not None:
         # any window already in the store is a later copy by definition
-        # (duplicate positions across the two marked sets are benign: the
-        # island-merge fold re-extends the same span and moves on)
-        marked = marked.unionByName(
-            grams.join(stored, "_k", "left_semi").select(id_col, "pos")
-        )
-    out = _cut_spans(
-        docs_batch,
-        _merge_marked_to_spans(marked, L, id_col),
-        id_col,
-        text_col,
+        seen = keys.join(stored, "_k", "left_semi").toArrow()
+        sets.append((
+            _broadcast_keys(spark, seen, seen.num_rows, seen.nbytes, "stored"),
+            False,
+        ))
+    out = _mark_and_cut(
+        docs_batch, L, id_col, text_col, hash_grams, sets, spans=False
     )
 
     # 1. commit the removal OUTPUT first (write or eager checkpoint) —
@@ -1095,9 +1310,7 @@ def exact_substring_update(
 
     # 2. only then append the batch's NOVEL keys to the store; overwrite
     # makes a replay targeting the same increment_name idempotent
-    novel = grams.select("_k").distinct()
-    if stored is not None:
-        novel = novel.join(stored, "_k", "left_anti")
+    novel = keys if stored is None else keys.join(stored, "_k", "left_anti")
     name = increment_name if increment_name is not None else str(len(incs))
     ckpt.write_increment(store_dir, name, novel)
     return out

@@ -41,16 +41,19 @@ def test_mega_duplicated_doc_spans(spark):
     assert out[0]["n_removed"] == len(giant)
 
 
-def test_island_merge_matches_fold_reference(spark):
-    """The window gaps-and-islands merge must equal the old fold: random
-    marked position sets, reference merge in Python."""
+def test_island_merge_matches_fold_reference():
+    """The mark-and-cut kernel's run derivation (`dedup._covered`) must
+    equal the old fold: random marked window sets over 20 rows, one
+    shared code-point axis, reference merge in Python."""
     rng = np.random.default_rng(7)
     L = 5
-    rows = []
+    width = 200 + L  # every row long enough for its last window
+    row_cp = np.arange(21) * width
+    js = []
     expected = {}
     for doc in range(20):
         pos = sorted(set(rng.integers(1, 200, size=rng.integers(1, 40))))
-        rows += [(doc, int(p)) for p in pos]
+        js += [row_cp[doc] + p - 1 for p in pos]
         spans = []
         for p in pos:
             if spans and p <= spans[-1][1] + 1:
@@ -58,16 +61,23 @@ def test_island_merge_matches_fold_reference(spark):
             else:
                 spans.append([p, p + L - 1])
         expected[doc] = [tuple(s) for s in spans]
-    marked = spark.createDataFrame(rows, "doc_id long, pos long")
-    got = {
-        r["doc_id"]: [
-            (s["span_start"], s["span_end"]) for s in r["spans"]
-        ]
-        for r in dedup_ops._merge_marked_to_spans(
-            marked, L, "doc_id"
-        ).collect()
-    }
+    cov, row, start, end = dedup_ops._covered(
+        np.array(js, np.int64), L, row_cp
+    )
+    got = {}
+    for r, s, e in zip(row.tolist(), start.tolist(), end.tolist()):
+        got.setdefault(r, []).append((s, e))
     assert got == expected
+    assert cov.sum() == sum(
+        e - s + 1 for spans in expected.values() for s, e in spans
+    )
+    # runs stop at row ends even when the next row starts covered
+    cov, row, start, end = dedup_ops._covered(
+        np.array([5, 10]), 5, np.array([0, 10, 20])
+    )
+    assert (row.tolist(), start.tolist(), end.tolist()) == (
+        [0, 1], [6, 1], [10, 5]
+    )
 
 
 def _old_greedy_rounds(query, cands, min_hashes, md5_of):

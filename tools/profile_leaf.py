@@ -183,11 +183,10 @@ def leaves(spark, sf_dir: str) -> tuple[dict, Callable[..., None]]:
         return d2.join(contaminated, "doc_id", "left_anti")
 
     def dup_grams():
-        grams = dedup_ops._doc_grams(docs(), 40, "doc_id", "text", True)
-        return (
-            grams.groupBy("_k").agg(F.count("*").alias("_occ"))
-            .filter(F.col("_occ") >= 2)
-        )
+        # the duplicate-set phase: bucketed gram counts merged per key,
+        # one row per partition (what exact_substring_removal collects)
+        counts = dedup_ops._gram_counts(docs(), 40, "text", True)
+        return dedup_ops._merged_keys(counts, 2)
 
     def emb_neardup_lsh():
         a, t, q, _ = aug()
