@@ -208,9 +208,10 @@ def main() -> None:
         "ngram_jaccard",
         lambda: dedup_ops.ngram_jaccard_pairs(docs, n=3, threshold=0.2).count(),
     )
-    # exact suffix-array-substring removal (late r5): stride-1 hashed-gram
-    # marking + island merge + fold reassembly — O(total chars) rows,
-    # the linear-cost exact complement to the winnowing approximation
+    # exact duplicated-substring removal: numpy kernels count the hashed
+    # grams, collect and broadcast the duplicated keys, then one
+    # mark-and-cut pass per document — the exact complement to the
+    # winnowing approximation
     # NOTE: collect()[0][0], not .agg(...).count() — Spark's one-row-plan
     # rule knows a grouping-less aggregate returns exactly one row and
     # constant-folds a count() on top of it, skipping the whole operator
@@ -363,9 +364,10 @@ def main() -> None:
         },
     }
     # two-scale block (VERDICT r3 #4): when this is the default sf0.1 run
-    # and a committed sf1 measurement exists (tools/bench_sf1.py), embed it
-    # plus the per-query 10x-data ratios so scale-up regressions diff
-    # mechanically from ONE json
+    # and a committed sf1 measurement exists, embed it plus the per-query
+    # 10x-data ratios so scale-up regressions diff mechanically from ONE
+    # json.  The sf1 measurement is this script's line at sf1:
+    #   SPARK_GRAFT_SF_DIR=<sf1 dir> python bench.py > BENCH/BENCH_sf1.json
     sf1_path = os.path.join(os.path.dirname(__file__), "BENCH", "BENCH_sf1.json")
     if sf_dir.rstrip("/").endswith("sf0.1") and os.path.exists(sf1_path):
         try:

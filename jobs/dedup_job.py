@@ -70,7 +70,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--content-col", default="content")
     ap.add_argument("--ksize", type=int, default=21)
     ap.add_argument("--scaled", type=int, default=50)
-    ap.add_argument("--num", type=int, default=0)
     ap.add_argument("--bands", type=int, default=16)
     ap.add_argument("--band-size", type=int, default=2)
     ap.add_argument("--threshold", type=float, default=0.5)
@@ -87,9 +86,7 @@ def main(argv: list[str] | None = None) -> int:
     from sourmash_spark.pipeline import PipelineConfig, run_pipeline
 
     cfg = PipelineConfig(
-        sketch=SketchParams(
-            ksize=args.ksize, scaled=args.scaled, num=args.num
-        ),
+        sketch=SketchParams(ksize=args.ksize, scaled=args.scaled),
         lsh=LSHParams(num_bands=args.bands, band_size=args.band_size),
         jaccard_threshold=args.threshold,
         bucket_cap=args.bucket_cap,

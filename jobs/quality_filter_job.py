@@ -32,8 +32,9 @@ Writes:
     <output>/lineage.parquet    (stage, doc_id) for every dropped row
                                 (segment_dedup stage: docs whose text was
                                 rewritten, no row drop)
-Prints one summary JSON line.  The session is get_spark's: spark-submit's
---master and --conf apply; a session already running is used as it is.
+Prints one summary JSON line, with the effective master and shuffle
+partitions.  The session is get_spark's: spark-submit's --master and
+--conf apply; a session already running is used as it is.
 """
 
 from __future__ import annotations
@@ -189,16 +190,17 @@ def main(argv: list[str] | None = None) -> int:
     )).write.mode("overwrite").parquet(f"{args.output}/lineage.parquet")
 
     print(json.dumps({
-        **summarize(args.input, args.output, dropped),
+        **summarize(spark, args.input, args.output, dropped),
         "wall_sec": round(time.time() - t0, 2),
     }))
     return 0
 
 
-def summarize(input_path: str, output: str, dropped) -> dict:
-    """Rows in and out, from the parquet footers, and the rows each stage
+def summarize(spark, input_path: str, output: str, dropped) -> dict:
+    """Rows in and out, from the parquet footers, the rows each stage
     dropped (stages that dropped none left out), from the ``dropped``
-    Observation on the lineage write — no Spark job."""
+    Observation on the lineage write, and the session's effective master
+    and shuffle partitions — no Spark job."""
     from sourmash_spark.sources.checkpoint import partition_metrics
 
     def rows(path: str) -> int:
@@ -208,6 +210,10 @@ def summarize(input_path: str, output: str, dropped) -> dict:
         "n_in": rows(input_path),
         "n_out": rows(f"{output}/filtered.parquet"),
         "dropped_by_stage": {s: n for s, n in dropped.get.items() if n},
+        "master": spark.sparkContext.master,
+        "shuffle_partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        ),
     }
 
 

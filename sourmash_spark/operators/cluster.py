@@ -167,11 +167,10 @@ def _label_propagation(
 
 def connected_components(
     edges: DataFrame,
-    src: str = "sig_id_a",
-    dst: str = "sig_id_b",
     stats: dict | None = None,
 ) -> DataFrame:
-    """(sig_id, cluster_id) for every vertex appearing in `edges`;
+    """(sig_id, cluster_id) for every vertex appearing in `edges`
+    (sig_id_a, sig_id_b);
     cluster_id = min sig_id of the component.  Isolated vertices (no edges)
     are not emitted — callers union them back with cluster_id = sig_id.
 
@@ -185,7 +184,9 @@ def connected_components(
     ``components`` (clusters = signatures − vertices + components): free
     on the driver path, one aggregate on the distributed one.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = edges.select(
+        F.col("sig_id_a").alias("a"), F.col("sig_id_b").alias("b")
+    )
     e = e.localCheckpoint(eager=False)
     head = e.limit(DRIVER_THRESHOLD + 1).toPandas()
     if len(head) <= DRIVER_THRESHOLD:
@@ -196,17 +197,14 @@ def connected_components(
 def assign_clusters(
     all_sigs: DataFrame,
     edges: DataFrame,
-    sig_id: str = "sig_id",
-    src: str = "sig_id_a",
-    dst: str = "sig_id_b",
     stats: dict | None = None,
 ) -> DataFrame:
     """Full cluster table over every signature: component label where edges
     exist, else singleton cluster_id = sig_id (FIXTURES.md §6).  `stats`
     as in `connected_components`."""
-    cc = connected_components(edges, src=src, dst=dst, stats=stats)
+    cc = connected_components(edges, stats=stats)
     return (
-        all_sigs.select(F.col(sig_id).alias("sig_id"))
+        all_sigs.select("sig_id")
         .join(cc, "sig_id", "left")
         .select(
             "sig_id",

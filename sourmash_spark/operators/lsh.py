@@ -98,7 +98,6 @@ def band_signatures(
     sigs: DataFrame,
     lsh: LSHParams,
     scaled: int,
-    sig_id: str = "sig_id",
 ) -> DataFrame:
     """(sig_id, band_idx, band_key): `range_min_bands` over the live hash
     space [0, max_hash] of `scaled`, keyed by xxhash64(band_idx, vals)."""
@@ -106,7 +105,7 @@ def band_signatures(
     max_hash = max_hash_for_scaled(scaled)  # < 2**63 for scaled >= 2
     return range_min_bands(
         sigs, lsh.num_bands, lsh.band_size, max_hash // m + 1,
-        F.xxhash64, sig_id,
+        F.xxhash64,
     )
 
 
@@ -121,7 +120,6 @@ def bucket_stats(bands: DataFrame) -> DataFrame:
 def candidate_pairs(
     bands: DataFrame,
     bucket_cap: int = 0,
-    sig_id: str = "sig_id",
     cap_stats: dict | None = None,
 ) -> DataFrame:
     """(sig_id_a, sig_id_b, n_shared_bands) with sig_id_a < sig_id_b.
@@ -133,7 +131,7 @@ def candidate_pairs(
     from .compare import shared_key_pairs
 
     return shared_key_pairs(
-        bands, ["band_idx", "band_key"], sig_id, bucket_cap, stats=cap_stats
+        bands, ["band_idx", "band_key"], "sig_id", bucket_cap, stats=cap_stats
     ).withColumnsRenamed({
         "id_a": "sig_id_a", "id_b": "sig_id_b", "n_shared": "n_shared_bands",
     })
@@ -145,7 +143,6 @@ def verify_pairs(
     scaled: int,
     ksize: int = 21,
     threshold: float = 0.0,
-    sig_id: str = "sig_id",
 ) -> DataFrame:
     """Exact verification of candidate pairs — the edges table
     (FIXTURES.md §5; columns follow PrefetchResult semantics).
@@ -166,10 +163,10 @@ def verify_pairs(
     from . import kernels
 
     sa = sigs.select(
-        F.col(sig_id).alias("sig_id_a"), F.col("hashes").alias("_ha")
+        F.col("sig_id").alias("sig_id_a"), F.col("hashes").alias("_ha")
     )
     sb = sigs.select(
-        F.col(sig_id).alias("sig_id_b"), F.col("hashes").alias("_hb")
+        F.col("sig_id").alias("sig_id_b"), F.col("hashes").alias("_hb")
     )
     ha, hb = F.col("_ha"), F.col("_hb")
     pairs = (

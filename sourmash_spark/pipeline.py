@@ -50,7 +50,13 @@ class PipelineConfig:
     lsh: LSHParams
     jaccard_threshold: float = 0.5
     bucket_cap: int = 200
-    sig_id: str = "sig_id"
+
+    def __post_init__(self):
+        if not self.sketch.scaled:
+            raise ValueError(
+                "range-min banding needs a scaled hash space: "
+                "num-mode sketches are not supported by the pipeline"
+            )
 
     def config_hash(self) -> str:
         # "|b0" was the signature-bucketing knob (always 0 now); kept so
@@ -68,7 +74,6 @@ def run_pipeline(
     code_files: DataFrame,
     base_dir: str,
     config: PipelineConfig | None = None,
-    keep_cols: list[str] | None = None,
     stop_after: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline; returns the stage DataFrames.
@@ -78,12 +83,11 @@ def run_pipeline(
     """
     cfg = config or PipelineConfig(SketchParams(), LSHParams())
     ch = cfg.config_hash()
-    sid = cfg.sig_id
     out: dict[str, DataFrame] = {}
 
     sigs, _ = ckpt.run_stage(
         spark, base_dir, "signatures", ch,
-        lambda: _sketch(code_files, cfg, keep_cols),
+        lambda: _sketch(code_files, cfg),
     )
     out["signatures"] = sigs
     if stop_after == "signatures":
@@ -100,7 +104,6 @@ def run_pipeline(
         lambda: lsh_ops.candidate_pairs(
             bands,
             bucket_cap=cfg.bucket_cap,
-            sig_id=sid,
             cap_stats=cap,
         ),
         lineage={"bucket_cap": cap},
@@ -113,7 +116,7 @@ def run_pipeline(
         spark, base_dir, "edges", ch,
         lambda: lsh_ops.verify_pairs(
             cands, sigs, scaled=cfg.sketch.scaled, ksize=cfg.sketch.ksize,
-            threshold=cfg.jaccard_threshold, sig_id=sid,
+            threshold=cfg.jaccard_threshold,
         ),
     )
     out["edges"] = edges
@@ -123,23 +126,17 @@ def run_pipeline(
     graph: dict = {}
     clusters, _ = ckpt.run_stage(
         spark, base_dir, "clusters", ch,
-        lambda: cluster_ops.assign_clusters(
-            sigs, edges, sig_id=sid, stats=graph
-        ),
+        lambda: cluster_ops.assign_clusters(sigs, edges, stats=graph),
         lineage={"edge_graph": graph},
     )
     out["clusters"] = clusters
     return out
 
 
-def _sketch(
-    files: DataFrame, cfg: PipelineConfig, keep_cols: list[str] | None
-) -> DataFrame:
-    """Signatures of `files`, keeping `keep_cols` (default: every column
-    but the content) plus the content's sha256."""
-    keep = keep_cols if keep_cols is not None else [
-        c for c in files.columns if c != "content"
-    ]
+def _sketch(files: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Signatures of `files`, keeping every column but the content, plus
+    the content's sha256."""
+    keep = [c for c in files.columns if c != "content"]
     return sketch_signatures(
         with_sha256(files), cfg.sketch, keep_cols=keep + ["sha256"]
     )
@@ -158,9 +155,7 @@ def _bands_stage(
     ch = cfg.config_hash()
     ckpt.run_stage(
         spark, base_dir, "bands", ch,
-        lambda: lsh_ops.band_signatures(
-            sigs, cfg.lsh, cfg.sketch.scaled, sig_id=cfg.sig_id
-        ),
+        lambda: lsh_ops.band_signatures(sigs, cfg.lsh, cfg.sketch.scaled),
     )
     return ckpt.read_stage(spark, base_dir, "bands", ch, increments)
 
@@ -170,7 +165,6 @@ def incremental_update(
     new_files: DataFrame,
     base_dir: str,
     config: PipelineConfig | None = None,
-    keep_cols: list[str] | None = None,
     increment_name: str | None = None,
 ) -> dict[str, DataFrame]:
     """Add NEW files to an existing pipeline state without recomputing the
@@ -203,7 +197,6 @@ def incremental_update(
 
     cfg = config or PipelineConfig(SketchParams(), LSHParams())
     ch = cfg.config_hash()
-    sid = cfg.sig_id
     sig_inc, bands_inc, edges_inc = (
         ckpt.increments_path(base_dir, s, ch)
         for s in ("signatures", "bands", "edges")
@@ -220,7 +213,7 @@ def incremental_update(
 
     stored_bands = _bands_stage(spark, base_dir, cfg, old_sigs, done)
     batch_sigs = ckpt.write_increment(
-        sig_inc, name, _sketch(new_files, cfg, keep_cols)
+        sig_inc, name, _sketch(new_files, cfg)
     )
     all_sigs = ckpt.read_stage(
         spark, base_dir, "signatures", ch, done + [name]
@@ -228,7 +221,7 @@ def incremental_update(
     # banding is row-wise deterministic, so stored ∪ banded-batch is
     # bit-identical to re-banding all_sigs
     batch_bands = ckpt.write_increment(bands_inc, name, lsh_ops.band_signatures(
-        batch_sigs, cfg.lsh, cfg.sketch.scaled, sig_id=sid
+        batch_sigs, cfg.lsh, cfg.sketch.scaled
     ))
     all_bands = stored_bands.withColumn("_new", F.lit(False)).unionByName(
         batch_bands.withColumn("_new", F.lit(True))
@@ -240,18 +233,18 @@ def incremental_update(
     # buckets would diverge from a full recompute) and its hot set leaves
     # both sides of the batch x corpus join
     cands = shared_key_pairs(
-        all_bands, ["band_idx", "band_key"], sid, cfg.bucket_cap,
+        all_bands, ["band_idx", "band_key"], "sig_id", cfg.bucket_cap,
         new_col="_new",
     ).withColumnsRenamed({"id_a": "sig_id_a", "id_b": "sig_id_b"})
     ckpt.write_increment(edges_inc, name, lsh_ops.verify_pairs(
         cands, all_sigs, scaled=cfg.sketch.scaled, ksize=cfg.sketch.ksize,
-        threshold=cfg.jaccard_threshold, sig_id=sid,
+        threshold=cfg.jaccard_threshold,
     ))
     all_edges = ckpt.read_stage(
         spark, base_dir, "edges", ch, done + [name]
     ).dropDuplicates(["sig_id_a", "sig_id_b"])
 
-    clusters = cluster_ops.assign_clusters(all_sigs, all_edges, sig_id=sid)
+    clusters = cluster_ops.assign_clusters(all_sigs, all_edges)
     return {
         "signatures": all_sigs,
         "edges": all_edges,
@@ -297,9 +290,7 @@ def compact_increments(
         edges = write("edges", ckpt.read_stage(
             spark, base_dir, "edges", ch, done
         ).dropDuplicates(["sig_id_a", "sig_id_b"]))
-        write("clusters", cluster_ops.assign_clusters(
-            sigs, edges, sig_id=cfg.sig_id
-        ))
+        write("clusters", cluster_ops.assign_clusters(sigs, edges))
         return done
 
     return ckpt.compact(base_dir, ch, fold, drop=("candidates",))

@@ -100,7 +100,8 @@ def attach_best_match(
 ) -> DataFrame:
     """Per-batch best-only search of running sketches against a signatures
     table (the reference's periodic SBT search, best-only) — intended for
-    use inside foreachBatch."""
+    use inside foreachBatch.  Equal similarities go to the lowest sig_id,
+    so the match is the same on every run."""
     from ..operators.search import search_many
     from pyspark.sql import Window
 
@@ -116,7 +117,9 @@ def attach_best_match(
         scaled=scaled,
         query_id="query_id",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("similarity"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("similarity"), F.col("sig_id")
+    )
     return (
         hits.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)

@@ -217,3 +217,25 @@ def test_streaming_watch_checkpoint_restart(spark, corpus, tmp_path):
         mh = s if mh is None else (mh.merge(s) or mh)
     got = i64_to_u64(np.array(final["hashes"], dtype=np.int64)).tolist()
     assert got == mh.mins
+
+
+def test_attach_best_match_breaks_ties_on_lowest_sig_id(spark):
+    """Query `q` shares 4 of 6 hashes with sig_ids 9, 5 and 7 (jaccard
+    4/6 each, a three-way tie) and 2 with sig_id 1; the best match is the
+    lowest tied id on every partitioning of the db."""
+    from sourmash_spark.streaming.watch import attach_best_match
+
+    q = [1, 2, 3, 4]
+    db_rows = [(9, q + [10, 11]), (1, [1, 2]), (7, q + [12, 13]),
+               (5, q + [14, 15])]
+    sketches = spark.createDataFrame(
+        [("q", q, len(q))], "key string, hashes array<long>, n_hashes int"
+    )
+    for n_parts in (1, 3, 4):
+        db = spark.createDataFrame(
+            [(i, h, len(h)) for i, h in db_rows],
+            "sig_id long, hashes array<long>, n_hashes int",
+        ).repartition(n_parts)
+        best = attach_best_match(sketches, db).collect()
+        assert [(r["query_id"], r["sig_id"]) for r in best] == [("q", 5)]
+        assert best[0]["similarity"] == pytest.approx(4 / 6)

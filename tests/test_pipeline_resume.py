@@ -105,6 +105,14 @@ def test_config_hash_is_stable():
     assert deploy.config_hash() == "ad948cf9d66ffaf7"
 
 
+def test_num_mode_config_raises():
+    """Range-min banding splits the scaled hash space into ranges; a
+    num-mode sketch has none (max_hash 0: every band empty, no pair ever
+    found), so the config refuses it."""
+    with pytest.raises(ValueError, match="scaled hash space"):
+        PipelineConfig(SketchParams(scaled=0, num=100), LSHParams())
+
+
 def test_changed_config_recomputes(spark, corpus, base_dir):
     cfg2 = PipelineConfig(
         sketch=SketchParams(ksize=21, scaled=50),

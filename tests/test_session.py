@@ -21,6 +21,7 @@ import pandas as pd
 import pyarrow as pa
 import pyspark
 import pyspark.sql.functions as F
+import pytest
 
 from sourmash_spark.operators.cluster import _label_propagation, connected_components
 from sourmash_spark.params import LSHParams, SketchParams
@@ -125,6 +126,9 @@ def test_quality_filter_summary_matches_counts_and_starts_no_job(
     assert got["dropped_by_stage"] == want
     # a stage that dropped nothing (no PII in the texts) stays absent
     assert want["exact_dup"] == 2 and "pii_redacted" not in want
+    # the session the job ran under (the test session: a running session
+    # is used as it is)
+    assert (got["master"], got["shuffle_partitions"]) == ("local[4]", 4)
 
 
 def test_get_spark_defaults_to_the_usable_cores():
@@ -196,6 +200,17 @@ def test_dedup_summary_matches_counts_fresh_and_resumed(
                 + "\n" for r in recs
             )
     assert summarize(spark, base, cfg) == want
+
+
+def test_dedup_job_rejects_num(capsys):
+    """The pipeline has no num mode (range-min bands need a scaled hash
+    space), so the job has no --num flag: argparse refuses it."""
+    with pytest.raises(SystemExit) as exc:
+        _job("dedup_job").main(
+            ["--input", "in", "--output", "out", "--num", "100"]
+        )
+    assert exc.value.code == 2
+    assert "unrecognized arguments: --num 100" in capsys.readouterr().err
 
 
 def test_cc_stats_match_on_both_paths(spark):

@@ -1,7 +1,11 @@
 """Scaling-efficiency evidence for the north rule: run the identical
 sketch+pipeline job at local[N] and local[4N] on the same input and report
 throughput at both plus efficiency (sandbox stand-in for an N vs 4N
-executor cluster).  Writes BENCH/BASELINE.md.
+executor cluster).  N defaults to a quarter of the usable cores, so 4N
+still fits the host; SCALE_N overrides it.  Writes BENCH/BASELINE.md.
+
+Each level runs in a CPU-pinned child: `scaling_bench.py <cores> <corpus
+dir> <n_files>`.
 """
 
 from __future__ import annotations
@@ -16,8 +20,6 @@ ROOT = Path(__file__).resolve().parents[1]
 
 sys.path.insert(0, str(ROOT))
 
-N_SMALL = int(os.environ.get("SCALE_N", "8"))
-N_BIG = 4 * N_SMALL
 N_BASE = int(os.environ.get("SCALE_FILES", "3000"))
 
 
@@ -44,6 +46,14 @@ def build_corpus(path: str) -> int:
     with open(os.path.join(path, "done"), "w") as f:
         f.write(str(n))
     return n
+
+
+def levels(usable: int, override: str | None) -> tuple[int, int]:
+    """(N, 4N): N is `override` (SCALE_N) when set, else a quarter of the
+    `usable` cores (at least 1) — a 4N level past the usable cores
+    measures oversubscription, not scaling."""
+    n = int(override) if override else max(1, usable // 4)
+    return n, 4 * n
 
 
 def cal_ok(res: dict, cal_max: float) -> bool:
@@ -150,13 +160,11 @@ def run_level(cores: int, corpus_path: str, n_files: int) -> dict:
     the honest stand-in for an N-executor allocation."""
     import subprocess
 
-    env = dict(os.environ)
-    env["SCALE_RUN_CORES"] = str(cores)
-    env["SCALE_RUN_NFILES"] = str(n_files)
-    env["SCALE_RUN_CORPUS"] = corpus_path
+    cpus = ",".join(map(str, sorted(os.sched_getaffinity(0))[:cores]))
     out = subprocess.run(
-        ["taskset", "-c", f"0-{cores - 1}", sys.executable, __file__],
-        env=env, capture_output=True, text=True,
+        ["taskset", "-c", cpus, sys.executable, __file__,
+         str(cores), corpus_path, str(n_files)],
+        capture_output=True, text=True,
         timeout=int(os.environ.get("SCALE_LEVEL_TIMEOUT", "1800")),
     )
     for line in reversed(out.stdout.splitlines()):
@@ -166,14 +174,14 @@ def run_level(cores: int, corpus_path: str, n_files: int) -> dict:
 
 
 def main() -> None:
-    if os.environ.get("SCALE_RUN_CORES"):
-        res = run_once(
-            int(os.environ["SCALE_RUN_CORES"]),
-            os.environ["SCALE_RUN_CORPUS"],
-            int(os.environ["SCALE_RUN_NFILES"]),
-        )
-        print(json.dumps(res))
+    if len(sys.argv) == 4:  # one pinned level (run_level)
+        cores, corpus, n = sys.argv[1:]
+        print(json.dumps(run_once(int(cores), corpus, int(n))))
         return
+
+    n_small, n_big = levels(
+        len(os.sched_getaffinity(0)), os.environ.get("SCALE_N")
+    )
 
     corpus_path = os.environ.get("SCALE_CORPUS", "/tmp/scaling_corpus")
     n_files = build_corpus(corpus_path)
@@ -230,23 +238,23 @@ def main() -> None:
             )
         return None
 
-    n_acc = {N_SMALL: 0, N_BIG: 0}
+    n_acc = {n_small: 0, n_big: 0}
     for _ in range(rounds):
-        for cores in (N_SMALL, N_BIG):
+        for cores in (n_small, n_big):
             res = run_level_accepted(cores)
             if res is not None:
                 n_acc[cores] += 1
-                if cores == N_SMALL:
+                if cores == n_small:
                     small = merge(small, res)
                 else:
                     big = merge(big, res)
     calibration_accepted = (not cal_max) or (
-        n_acc[N_SMALL] > 0 and n_acc[N_BIG] > 0
+        n_acc[n_small] > 0 and n_acc[n_big] > 0
     )
     if not small or not big:
         sys.exit(
             f"no calibration-accepted runs at one level "
-            f"(accepted small={n_acc[N_SMALL]} big={n_acc[N_BIG]}, "
+            f"(accepted small={n_acc[n_small]} big={n_acc[n_big]}, "
             f"{len(rejected)} rejected; cal_max={cal_max}) — "
             "no ratio to report"
         )
@@ -265,7 +273,7 @@ def main() -> None:
         "scaling_efficiency_pipeline": eff_pipeline,
         "calibration": {
             "cal_max_sec": cal_max or None,
-            "accepted_runs": {"small": n_acc[N_SMALL], "big": n_acc[N_BIG]},
+            "accepted_runs": {"small": n_acc[n_small], "big": n_acc[n_big]},
             "rejected_runs": rejected,
             "accepted": calibration_accepted,
         },
@@ -280,8 +288,8 @@ def main() -> None:
         json.dump(
             {
                 **result,
-                "n_small_cores": N_SMALL,
-                "n_big_cores": N_BIG,
+                "n_small_cores": n_small,
+                "n_big_cores": n_big,
                 "rounds": rounds,
                 "target_efficiency": 0.8,
             },
@@ -305,7 +313,7 @@ for an N vs 4N executor cluster.  Input read with row-group splits;
 Python UDF workers warmed before timing (cold-start excluded at both
 levels equally).
 
-| metric | local[{N_SMALL}] (N) | local[{N_BIG}] (4N) | scaling efficiency |
+| metric | local[{n_small}] (N) | local[{n_big}] (4N) | scaling efficiency |
 |---|---|---|---|
 | sketch throughput (sigs/sec) | {small["sketch_sigs_per_sec"]} | {big["sketch_sigs_per_sec"]} | **{eff_sketch}** |
 | sketch wall (sec) | {small["sketch_wall_sec"]} | {big["sketch_wall_sec"]} | |
@@ -315,7 +323,8 @@ levels equally).
 Target: efficiency >= 0.8 between N and 4N (BASELINE.json).
 Clusters found (both levels identical): {big["n_clusters"]}.
 
-Reproduce: `python tools/scaling_bench.py` (env: SCALE_N, SCALE_FILES).
+Reproduce: `python tools/scaling_bench.py` (N = usable cores // 4, at
+least 1; env: SCALE_N overrides N, SCALE_FILES sets the base files).
 """)
     # replace only the scaling section; preserve recall/notes sections
     path = str(ROOT / "BENCH/BASELINE.md")
